@@ -28,17 +28,18 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 import checks  # noqa: E402
-import fixtures  # noqa: E402
 import stats  # noqa: E402
 
 # A run measures whole passes: max(1, round(seconds / pass_s)) of them,
 # where pass_s is a pass's nominal length on a 4-core box. The op count is
 # therefore fixed by --seconds, not by how fast the code is.
 WORKLOADS = {
-    "clv_daily": {"pass_s": 25, "days": 4, "setup_reps": 2},
-    "query_mix": {"pass_s": 25, "sf": 0.01, "setup_reps": 1, "fixture_reps": 3},
+    "clv_daily": {"pass_s": 25, "days": 6, "setup_reps": 2},
+    "query_mix": {"pass_s": 25, "setup_reps": 2},
 }
-GRAPH_QUERIES = {"q_closeness", "q_sssp", "q_kcore"}
+# the repository's sf0.01 test corpus (TESTDATA.md), copied unchanged
+CORPUS = os.path.join(HERE, "corpus")
+GRAPH_QUERIES = {"q_pagerank", "q_closeness", "q_sssp", "q_kcore", "q_hits", "q_communities"}
 HEAP = "3g"
 JVM_TIMEOUT_S = 165
 ADD_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
@@ -46,7 +47,7 @@ ADD_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "j
              "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar"]
 
 # the end-to-end metrics BENCHMARK.json lists; the record line has more
-END_TO_END = ["setup_s", "op_p50_cpu_s", "op_tail_cpu_s", "pass_cpu_s", "peak_live_heap_mb"]
+END_TO_END = ["setup_s", "op_p50_cpu_s", "op_tail_cpu_s", "pass_cpu_s"]
 SPANS = ["pipeline.day", "io.max_id", "sim", "io.append", "io.read_snapshot", "rfm",
          "firewall", "clv.fit", "clv.score", "entry.build", "entry.action", "blocks.release"]
 ROOT_SPANS = {"pipeline.day", "entry.query"}
@@ -175,7 +176,7 @@ def pass_sums(ops, key="seconds"):
     return [sums[p] for p in sorted(sums)]
 
 
-def end_to_end(raw, fixture_reps):
+def end_to_end(raw):
     ops = [o for o in raw["ops"] if not o["traced"]]
     reps = raw["setup_reps"]
     m = {}
@@ -183,15 +184,15 @@ def end_to_end(raw, fixture_reps):
                                ("_cpu_s", "cpu_seconds", raw["session_ready_cpu_s"])):
         lat = [o[key] for o in ops]
         tail, level = stats.tail(lat)
-        fixtures_s = statistics.median([f[key] for f in fixture_reps]) if fixture_reps else 0.0
-        m["setup" + suffix] = (start + statistics.median([r[key] for r in reps]) + fixtures_s,
-                               1 + len(reps))
+        m["setup" + suffix] = (start + statistics.median([r[key] for r in reps]), 1 + len(reps))
         m["op_p50" + suffix] = (statistics.median(lat), len(lat))
         m["op_tail" + suffix] = (tail, len(lat))
         m["pass" + suffix] = (statistics.median(pass_sums(ops, key)), len({o["pass"] for o in ops}))
     # set-up is reported in CPU seconds like the other end-to-end times
     m["setup_wall_s"], m["setup_s"] = m["setup_s"], m.pop("setup_cpu_s")
-    m["peak_live_heap_mb"] = (raw["peak_live_heap_mb"], len(ops))
+    # heap in use after each of the collector's own collections
+    heap = raw["heap_after_gc_mb"]
+    m["peak_heap_mb"] = (max(heap, default=0.0), len(heap))
     return {k: {"value": v, "unit": "MB" if k.endswith("_mb") else "s", "samples": n}
             for k, (v, n) in m.items()}, level
 
@@ -227,10 +228,11 @@ def per_layer(raw):
                for p in {o["pass"] for o in raw["ops"]}}
     plain = [v for p, v in by_pass.items() if p not in traced_passes]
     add("trace.overhead.s", statistics.median([by_pass[p] for p in traced_passes[1:]]) - statistics.median(plain))
+    acc["jvm.live_heap.mb"] = max(o["counters"]["jvm.live_heap.bytes"] for o in ops.values()) / 2**20
     units = {f"{s}.s": "s" for s in SPANS}
     units.update({name: unit for name, unit, _ in COUNTERS.values()})
     units.update({"trace.residual.s": "s", "trace.overhead.s": "s", "driver_gap.s": "s",
-                  "graph.build.s": "s", "graph.jobs": "count"})
+                  "graph.build.s": "s", "graph.jobs": "count", "jvm.live_heap.mb": "MB"})
     return {k: {"value": acc.get(k, 0.0), "unit": u, "samples": len(ops)} for k, u in units.items()}
 
 
@@ -272,41 +274,38 @@ def main():
         args = ["--workload", a.workload, "--seed", str(a.seed), "--work", work,
                 "--setup-reps", str(w["setup_reps"]), "--trace", str(a.trace),
                 "--passes", str(passes)]
-        fixture_reps, data = [], ""
+        data = ""
         if a.workload == "clv_daily":
             args += ["--days", str(w["days"])]
         else:
-            data = os.path.join(work, "data")
-            for _ in range(w["fixture_reps"]):
-                t0, c0 = time.perf_counter(), time.process_time()
-                fixtures.write(data, w["sf"], a.seed)
-                fixture_reps.append({"seconds": time.perf_counter() - t0,
-                                     "cpu_seconds": time.process_time() - c0})
+            data = CORPUS
             args += ["--data", data, "--queries", os.path.join(HERE, "query_mix.txt")]
         steal0 = cpu_ticks()
         raw = run_jvm(classpath, work, args, cpus)
         steal1 = cpu_ticks()
         failures = {i: o["error"] for i, o in enumerate(raw["ops"]) if o["error"]}
+        t0 = time.perf_counter()
         for i, reason in checks.run_all(raw, data).items():
             failures.setdefault(i, reason)
+        checks_s = time.perf_counter() - t0
         if a.trace:
             metrics, level = per_layer(raw), None
         else:
-            metrics, level = end_to_end(raw, fixture_reps)
+            metrics, level = end_to_end(raw)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     record = {
         "env": {"workload": a.workload, "seed": a.seed, "trace": a.trace, "nproc": cpus,
                 "heap_max_mb": raw["heap_max_mb"], "spark_version": raw["spark_version"],
                 "spark_cores": raw["cpus"], "git_commit": git_commit(), "source_fingerprint": fp,
-                "sizes": {k: v for k, v in w.items() if k in ("days", "sf")} | (
-                    {"queries": len({o["name"] for o in raw["ops"]})}
-                    if a.workload == "query_mix" else {}),
+                "sizes": ({"days": w["days"]} if a.workload == "clv_daily" else
+                          {"corpus": "sf0.01", "queries": len({o["name"] for o in raw["ops"]})}),
                 "passes": passes, "ops": len(raw["ops"]), "tail_level": level,
                 # share of the box's CPU time taken by the hypervisor while the JVM ran
                 "cpu_steal_share": (steal1[1] - steal0[1]) / max(1, steal1[0] - steal0[0])},
         "setup": {"jvm_start_s": raw["jvm_start_s"], "jvm_start_cpu_s": raw["session_ready_cpu_s"],
-                  "reps": raw["setup_reps"], "fixture_reps": fixture_reps},
+                  "reps": raw["setup_reps"]},
+        "checks_s": checks_s,
         "metrics": metrics,
         "failures": {raw["ops"][i]["name"] + f"#{i}": r for i, r in sorted(failures.items())},
     }

@@ -1,10 +1,14 @@
 package perfbench
 
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import javax.management.{Notification, NotificationEmitter}
+import javax.management.openmbean.CompositeData
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import com.sun.management.GarbageCollectionNotificationInfo
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Blocks, Pipeline, Sessions, SparkEntry}
@@ -61,7 +65,7 @@ object Harness {
       Map("seconds" -> s, "cpu_seconds" -> (cpuNs() - c0) / 1e9)
     }
     raw("setup_reps") = setupReps
-    var liveHeap = 0L
+    HeapAfterGc.reset()
 
     val ops = mutable.ArrayBuffer[Op]()
     var probe: Option[Probe] = None
@@ -84,16 +88,20 @@ object Harness {
         })
         val cpu = (cpuNs() - c0) / 1e9
         val t1Ms = System.currentTimeMillis()
-        liveHeap = math.max(liveHeap, liveHeapBytes())
         val after = probe.filter(_ => traced).map(_.snapshot()).getOrElse(Map.empty)
         err.foreach(e => System.err.println(s"[perfbench] op $name failed: $e"))
+        // after each op of the first traced pass (the one its layer figures
+        // come from), the heap the session keeps, after a full collection;
+        // no other pass forces one
+        val liveHeap = if (traced && p == 0) Map("jvm.live_heap.bytes" -> liveHeapBytes())
+          else Map.empty
         ops += Op(p, traced, name, t0Ms, t1Ms, s, cpu, err,
-          after.map { case (k, v) => k -> (v - before.getOrElse(k, 0L)) })
+          after.map { case (k, v) => k -> (v - before.getOrElse(k, 0L)) } ++ liveHeap)
         ops.size - 1
       }
       if (traced) probe.foreach(_.detach())
     }
-    raw("peak_live_heap_mb") = liveHeap.toDouble / (1 << 20)
+    raw("heap_after_gc_mb") = HeapAfterGc.samples.map(_.toDouble / (1 << 20))
     raw("ops") = ops.map(op => Map("pass" -> op.pass, "traced" -> op.traced, "name" -> op.name, "start_ms" -> op.startMs, "end_ms" -> op.endMs,
       "seconds" -> op.seconds, "cpu_seconds" -> op.cpuSeconds, "error" -> op.error,
       "counters" -> op.counters))
@@ -110,15 +118,34 @@ object Harness {
   }
 
   /** CPU time of the whole JVM (every thread: tasks, driver, GC, JIT). */
-  private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+  private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
   def cpuNs(): Long = os.getProcessCpuTime
 
-  /** Heap still in use after a full collection: what the session retains. */
+  /** Heap in use after a full collection: what the session keeps. */
   def liveHeapBytes(): Long = {
     System.gc()
     val rt = Runtime.getRuntime
     rt.totalMemory - rt.freeMemory
+  }
+
+  /** Heap in use right after each of the collector's own collections
+    * during the timed passes, from its notifications. */
+  object HeapAfterGc {
+    private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    private val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    def reset(): Unit = seen.clear()
+    def samples: Seq[Long] = seen.asScala.toSeq.map(_.longValue)
+    for (gc <- ManagementFactory.getGarbageCollectorMXBeans.asScala)
+      gc.asInstanceOf[NotificationEmitter].addNotificationListener(
+        (n: Notification, _: AnyRef) =>
+          if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+            val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+            val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
+              .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+            seen.add(used)
+          }, null, null)
   }
 
   def timed[T](body: => T): (T, Double) = {
@@ -253,31 +280,35 @@ object Harness {
     * first time when it is timed. */
   val WarmUp: Seq[String] = Seq("q_filter_project")
 
-  /** A fixed list of distinct SparkEntry queries, run in list order. An op
+  /** Distinct SparkEntry queries, run in the order of query_mix.txt. An op
     * builds one, writes its result to parquet (the sink run.py checks
-    * against the DuckDB oracle) and releases its blocks. The order is not
-    * drawn from the seed: a query's cost depends on how warm the JVM is when
-    * it runs, so a seeded order moved the per-op figures by up to a third
-    * between seeds; the seed makes the input tables. */
+    * against the DuckDB oracle) and releases its blocks. */
   final class QueryMix(spark: SparkSession, o: Opts) extends Workload {
     private val fns = o.queries.map(n => n -> SparkEntry.queries.getOrElse(n,
       sys.error(s"query $n is not in SparkEntry.queries")))
+
+    private def run(fn: (SparkSession, String) => DataFrame, out: Path, pr: Option[Probe]): Unit =
+      Probe.span(pr, "entry.query") {
+        val df = Probe.span(pr, "entry.build")(fn(spark, o.data))
+        try Probe.span(pr, "entry.action")(df.write.parquet(out.toString))
+        finally Probe.span(pr, "blocks.release")(Blocks.releaseAll(spark))
+      }
+
     require(WarmUp.forall(w => !o.queries.contains(w)), "warm-up queries must not be in the mix")
 
-    def setup(): Unit = for (name <- WarmUp) {
-      SparkEntry.queries(name)(spark, o.data).write.format("noop").mode("overwrite").save()
-      Blocks.releaseAll(spark)
+    private var setups = 0
+
+    def setup(): Unit = {
+      setups += 1
+      for (name <- WarmUp)
+        run(SparkEntry.queries(name), o.work.resolve(s"warm-up-$setups").resolve(name), None)
     }
 
     def pass(p: Int, dataPass: Int, traced: Boolean, pr: Option[Probe])(
         op: (String, () => Unit) => Int): Unit = {
       for ((name, fn) <- fns) {
         val out = o.work.resolve("results").resolve(f"p$p%02d").resolve(name)
-        val opIdx = op(name, () => Probe.span(pr, "entry.query") {
-          val df = Probe.span(pr, "entry.build")(fn(spark, o.data))
-          try Probe.span(pr, "entry.action")(df.write.parquet(out.toString))
-          finally Probe.span(pr, "blocks.release")(Blocks.releaseAll(spark))
-        })
+        val opIdx = op(name, () => run(fn, out, pr))
         checks += Map("kind" -> "oracle", "op" -> opIdx, "query" -> name, "dir" -> out.toString,
           "sql" -> SparkEntry.oracleSql.get(name), "traced" -> traced)
       }
