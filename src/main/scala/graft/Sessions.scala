@@ -11,6 +11,7 @@ object Sessions {
             logLevel: String = "WARN"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      // the engine's native codegen functions; their only registration
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -78,11 +79,6 @@ object Sessions {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.storage.BlockManager",
       org.apache.logging.log4j.Level.ERROR)
-    // engine extension functions (native codegen expressions)
-    graft.clv.Hyp2f1Expression.register(spark)
-    graft.similarity.VecOps.register(spark)
-    graft.dedup.DedupKernels.register(spark)
-    graft.text.TextNorm.register(spark)
     registerMetricsLogger(spark)
     spark
   }

@@ -153,7 +153,6 @@ object ClvModel {
     * the fitted params ride as literals (7 doubles).
     */
   def score(returning: DataFrame, model: FittedClvModel): DataFrame = {
-    Hyp2f1Expression.register(returning.sparkSession)
     val gg = model.gg
     def predict(t: Column): Column =
       expectedPurchasesCol(model.bg, t, col("frequency"), col("recency"), col("t"))

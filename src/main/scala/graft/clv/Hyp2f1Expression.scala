@@ -30,19 +30,3 @@ case class Hyp2f1Expression(first: Expression, second: Expression,
       newThird: Expression, newFourth: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
 }
-
-object Hyp2f1Expression {
-
-  /** Register `hyp2f1` in a session's function registry so it is callable
-    * via `call_function("hyp2f1", ...)` — the extension-function route that
-    * avoids poking at Column internals.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.Registry.once(spark)(
-      "hyp2f1",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 4, "hyp2f1(a, b, c, z) takes 4 arguments")
-        Hyp2f1Expression(exprs(0), exprs(1), exprs(2), exprs(3))
-      },
-      "built-in")
-}

@@ -62,7 +62,6 @@ object Dedup {
     * cost one scan, zero shuffles.
     */
   def minhashSignatures(docs: DataFrame, numHashes: Int = 64, k: Int = 3): DataFrame = {
-    DedupKernels.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("minhash_sig", col("text"), lit(k), lit(numHashes)).as("signature"))
   }
@@ -192,7 +191,6 @@ object Dedup {
     * terminal action — Bench/Verify release via Blocks.releaseAll.
     */
   def shingleSets(docs: DataFrame, k: Int = 3): DataFrame = {
-    DedupKernels.register(docs.sparkSession)
     docs.select(col("doc_id"), shingleHashSet(col("text"), k).as("sh"))
       .localCheckpoint()
   }
@@ -217,8 +215,7 @@ object Dedup {
     * count OBSERVED on the checkpoint action (guide §3.1): broadcast while
     * it provably fits, shuffled-hash beyond (no sort, no broadcast cap). */
   private def sigAttachHint(obs: Observation): String =
-    if (Observe.metric(obs, "n").getOrElse(Long.MaxValue) <= (4L << 20))
-      "BROADCAST" else "SHUFFLE_HASH"
+    Observe.joinHint(Observe.metric(obs, "n").getOrElse(Long.MaxValue))
 
   /** Exact n-gram Jaccard verification over candidate pairs only (the
     * expensive exact measure runs on the tiny LSH-filtered set, not n²).
@@ -269,7 +266,6 @@ object Dedup {
     * escape hatch as LSH applies if a prefix shingle floods.
     */
   def setSimJoinPrefix(docs: DataFrame, threshold: Double, k: Int = 3): DataFrame = {
-    DedupKernels.register(docs.sparkSession)
     val sets = docs.select(col("doc_id"), shingleHashSet(col("text"), k).as("sh"))
       .localCheckpoint()
     val tokens = sets.select(col("doc_id"), size(col("sh")).as("len"),
@@ -411,7 +407,6 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming <= 7,
       s"simhashNearDuplicates: maxHamming must be in [0, 7] (got $maxHamming) — " +
         "64/(d+1)-bit chunk buckets stop pruning beyond that radius")
-    DedupKernels.register(docs.sparkSession)
     val nChunks = maxHamming + 1
     // distribute 64 bits as evenly as possible; first (64 % nChunks) chunks
     // get the extra bit. offsets/widths are tiny literals baked in the plan.

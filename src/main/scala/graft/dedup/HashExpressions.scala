@@ -235,59 +235,6 @@ object DedupKernels {
     }
     c
   }
-
-  /** Register `minhash_sig` and `simhash64` in a session's registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.Registry.once(spark)(
-      "minhash_sig",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "minhash_sig(text, k, numHashes)")
-        MinHashSignatureExpression(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "simhash64",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "simhash64(text)")
-        SimHash64Expression(exprs(0))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "shingle_hashes",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "shingle_hashes(text, k)")
-        ShingleHashesExpression(exprs(0), exprs(1))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "minhash_from_hashes",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "minhash_from_hashes(hashes, numHashes)")
-        MinHashFromHashesExpression(exprs(0), exprs(1))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "winnow_fp",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "winnow_fp(text, k, w)")
-        WinnowFingerprintExpression(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "lanes_equal",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "lanes_equal(sig_a, sig_b)")
-        LanesEqualExpression(exprs(0), exprs(1))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "sorted_inter_size",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "sorted_inter_size(a, b)")
-        SortedInterSizeExpression(exprs(0), exprs(1))
-      },
-      "built-in")
-  }
 }
 
 case class LanesEqualExpression(left: Expression, right: Expression)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Sources
-import graft.similarity.{Ann, VecOps}
+import graft.similarity.Ann
 
 /** Marketing-analytics + retrieval-fusion family: the question surface a
   * CLV warehouse answers AFTER the reference's feature/score tables exist
@@ -439,7 +439,6 @@ object Analytics {
     // live on two ≤50-row frames. L2 derives from the same three native
     // vec_dot products the oracle uses, so doubles match bit-for-bit.
     "q_rrf_fusion" -> ((s, dir) => {
-      VecOps.register(s)
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
       def scored = e.filter(col("vec_id") > 0).crossJoin(broadcast(q))
@@ -483,7 +482,6 @@ object Analytics {
     // broadcasts back and scoring is a shuffle-free projection through
     // native vec_dot; the final roll-up is bounded by |labels|.
     "q_embed_centroid" -> ((s, dir) => {
-      VecOps.register(s)
       val e = t(s, dir, "embeddings")
       val cent = e
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))

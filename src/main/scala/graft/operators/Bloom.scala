@@ -174,8 +174,6 @@ object Bloom {
     */
   def filterMightContain(df: DataFrame, key: Column, bloom: BloomBits): DataFrame = {
     val id = BloomModels.put(bloom)
-    graft.functions.Registry.once(df.sparkSession)(
-      "graft_bloom_contains", BloomModels.factory, "built-in")
     val out = df.where(
       call_function("graft_bloom_contains", key.cast(LongType), lit(id)))
     BloomModels.remove(id)

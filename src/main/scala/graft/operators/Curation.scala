@@ -370,7 +370,6 @@ object Curation {
     // exact| ≤ 0.25, measured err 0.023/0.005/0.079 at sf0.001/0.01/0.1
     // vs 64-lane σ≈0.05 (OverlapProbe).
     "q_source_overlap" -> ((s, dir) => {
-      graft.dedup.DedupKernels.register(s)
       val d = t(s, dir, "documents").where(col("source").isin("src0", "src1"))
       val est = d.select(col("source"),
           posexplode(call_function("minhash_sig", col("text"), lit(3), lit(64)))
@@ -453,7 +452,6 @@ object Curation {
     // engines compute identical score doubles (same formula structure),
     // ties break on doc_id.
     "q_hybrid_search" -> ((s, dir) => {
-      graft.similarity.VecOps.register(s)
       import graft.similarity.Ann
       val emb = t(s, dir, "embeddings")
       val joined = bm25Scores(t(s, dir, "documents"))

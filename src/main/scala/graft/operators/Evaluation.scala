@@ -156,7 +156,6 @@ object Evaluation {
     // q_hybrid_search shape); the metric arithmetic then runs on ≤ 2k
     // rows — a broadcast join of two bounded frames into ONE output row.
     "q_ranking_metrics" -> ((s, dir) => {
-      graft.similarity.VecOps.register(s)
       import graft.similarity.Ann
       val emb = t(s, dir, "embeddings")
       val joined = Curation.bm25Scores(t(s, dir, "documents"))

@@ -106,7 +106,7 @@ object Graph {
     // the edge side never moves; beyond that, shuffled-hash — node-sized
     // exchange, no sort, no 8 GB/512M-row broadcast cap, the edge side
     // stays on its checkpoint partitioning either way.
-    val rankHint = if (n <= (4L << 20)) "BROADCAST" else "SHUFFLE_HASH"
+    val rankHint = Observe.joinHint(n)
     var ranks = nodes.select(col("node"), lit(1.0 / n).as("pr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val rounds = scala.collection.mutable.ArrayBuffer(ranks)
@@ -437,7 +437,7 @@ object Graph {
       // deliberately (guide §3.1): broadcast the node-sized active set
       // while it provably fits so the edge table never moves per round,
       // shuffled-hash beyond the bound
-      val aHint = if (counts.head <= (4L << 20)) "BROADCAST" else "SHUFFLE_HASH"
+      val aHint = Observe.joinHint(counts.head)
       val filtered = edges
         .join(active.withColumnRenamed("node", "u").hint(aHint), Seq("u"), "left_semi")
         .join(active.withColumnRenamed("node", "v").hint(aHint), Seq("v"), "left_semi")
@@ -454,7 +454,7 @@ object Graph {
       round += 1
     }
     val converged = if (counts.head == counts.tail.head) 1L else 0L
-    val finalHint = if (counts.head <= (4L << 20)) "BROADCAST" else "SHUFFLE_HASH"
+    val finalHint = Observe.joinHint(counts.head)
     val coreEdges = edges
       .join(active.withColumnRenamed("node", "u").hint(finalHint), Seq("u"), "left_semi")
       .join(active.withColumnRenamed("node", "v").hint(finalHint), Seq("v"), "left_semi")
@@ -512,9 +512,7 @@ object Graph {
       .select(col("node"), col("node").as("label"))
       .observe(nObs, count(lit(1)).as("n"))
       .localCheckpoint()
-    val labHint =
-      if (Observe.metric(nObs, "n").getOrElse(Long.MaxValue) <= (4L << 20))
-        "BROADCAST" else "SHUFFLE_HASH"
+    val labHint = Observe.joinHint(Observe.metric(nObs, "n").getOrElse(Long.MaxValue))
     val changes = Vector.newBuilder[Long]
     for (_ <- 1 to rounds) {
       val cObs = Observation()
@@ -782,9 +780,7 @@ object Graph {
     val lab = labels.select(col("node"), col("label"))
       .observe(lObs, count(lit(1)).as("n"))
       .localCheckpoint()
-    val labHint =
-      if (Observe.metric(lObs, "n").getOrElse(Long.MaxValue) <= (4L << 20))
-        "BROADCAST" else "SHUFFLE_HASH"
+    val labHint = Observe.joinHint(Observe.metric(lObs, "n").getOrElse(Long.MaxValue))
     val e = und
       .join(lab.select(col("node").as("u"), col("label").as("lu")).hint(labHint), Seq("u"))
       .join(lab.select(col("node").as("v"), col("label").as("lv")).hint(labHint), Seq("v"))
@@ -1072,7 +1068,7 @@ object Graph {
     // back to shuffled-hash (node-sized exchange, no sort, no broadcast cap).
     var prevNf: Long = seedIds.length.toLong
     while (k <= rounds && !done) {
-      val frontHint = if (prevNf <= (4L << 20)) "BROADCAST" else "SHUFFLE_HASH"
+      val frontHint = Observe.joinHint(prevNf)
       val frontier = state.where(anyNew)
         .select(col("node"), col("new").as("bits"))
       val orAggs = chunkIdx.map(i => bit_or(col("bits")(i)).as(s"b$i"))
@@ -1180,13 +1176,12 @@ object Graph {
     // past the bound (no sort, no broadcast cap)
     var frontN = 1L
     var reachedN = 1L
-    def hintFor(n: Long) = if (n <= (4L << 20)) "BROADCAST" else "SHUFFLE_HASH"
     while (k <= rounds && !exhausted) {
       val obs = Observation()
-      val next = frontier.hint(hintFor(frontN))
+      val next = frontier.hint(Observe.joinHint(frontN))
         .join(sym, col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
-        .join(dist.select(col("node").as("seen")).hint(hintFor(reachedN)),
+        .join(dist.select(col("node").as("seen")).hint(Observe.joinHint(reachedN)),
           col("node") === col("seen"), "left_anti")
         .select(col("node"), lit(k.toLong).as("dist"))
       val merged = dist.unionAll(next)
@@ -1315,7 +1310,7 @@ object Graph {
     val maxSide = math.max(
       Observe.metric(eObs, "nc").getOrElse(Long.MaxValue),
       Observe.metric(eObs, "np").getOrElse(Long.MaxValue))
-    val vecHint = if (maxSide <= (4L << 20)) "BROADCAST" else "SHUFFLE_HASH"
+    val vecHint = Observe.joinHint(maxSide)
     var hub = e.select(col("c")).distinct()
       .select(col("c"), lit(1L).cast(dec).as("h"))
     var auth = e.groupBy("p").agg(count(lit(1)).cast(dec).as("a"))

@@ -168,7 +168,6 @@ object LlmQueries {
     // the same Winkler variant (0.7 boost gate, prefix≤4, scale 0.1), so
     // the gate is an exact per-pair hash match at 4 decimals.
     "q_record_linkage" -> ((s, dir) => {
-      graft.text.StringSimilarity.register(s)
       val block = org.apache.spark.sql.expressions.Window
         .partitionBy(col("p_brand")).orderBy(col("p_partkey"))
       t(s, dir, "part")
@@ -200,7 +199,6 @@ object LlmQueries {
       // candidate = doc-minus-last-two-tokens shape (the shared prefix is
       // nearly the whole document). Values are bitwise-unchanged; the
       // DuckDB oracle still recomputes the unbounded distance itself.
-      graft.text.StringSimilarity.register(s)
       val toks = TextOps.tokens(col("text"))
       val banded = call_function("lev_banded", col("text"),
         concat_ws(" ", slice(toks, lit(1), greatest(size(toks) - 2, lit(1)))),
@@ -851,7 +849,6 @@ object LlmQueries {
     // stance); the corpus path is the LSH-bucketed candidate pruning
     // the dedup family already implements.
     "q_dbscan" -> ((s, dir) => {
-      graft.similarity.VecOps.register(s)
       val minPts = 5L
       val samp = t(s, dir, "embeddings").where(col("vec_id") < 200L)
         .select(col("vec_id"), col("embedding"),
@@ -1345,7 +1342,6 @@ object LlmQueries {
     // pinned exactly by the oracle. At 100 TB this runs on LSH candidates
     // like verifyJaccard; the planted pairs are the SQL-expressible anchor.
     "q_containment_exact" -> ((s, dir) => {
-      graft.dedup.DedupKernels.register(s)
       val d = withPlantedNearDups(docs(s, dir))
       val sets = d.select(col("doc_id"),
         Dedup.shingleHashSet(col("text"), 3).as("sh"))
@@ -1542,7 +1538,6 @@ object LlmQueries {
     // bounds_ok), so a tokenizer or kernel regression breaks the oracle.
     "q_fingerprint" -> ((s, dir) => {
       val k = 3; val w = 4
-      graft.dedup.DedupKernels.register(s)
       val toks = TextOps.tokens(col("text"))
       docs(s, dir)
         .select(col("doc_id"),
@@ -2233,7 +2228,6 @@ object LlmQueries {
     // micro-units in BIGINT before the mean (the linkPrediction
     // discipline — no float-sum order anywhere).
     "q_silhouette" -> ((s, dir) => {
-      graft.similarity.VecOps.register(s)
       val probes = t(s, dir, "embeddings").where(col("vec_id") < 5L)
         .select(collect_list(struct(col("vec_id").as("pid"),
           col("embedding").as("pv"))).as("ps"))
@@ -2282,7 +2276,6 @@ object LlmQueries {
     // 10 bins of width 0.2 over [−1, 1] with the boundary decided on the
     // r6-ROUNDED cosine so a ±1-ulp dot difference cannot flip a bin.
     "q_cosine_hist" -> ((s, dir) => {
-      graft.similarity.VecOps.register(s)
       val samp = t(s, dir, "embeddings").where(col("vec_id") < 200L)
         .select(col("vec_id"), col("embedding"),
           sqrt(Ann.dot(col("embedding"), col("embedding"))).as("nrm"))
@@ -2322,7 +2315,6 @@ object LlmQueries {
     // one ×d explode scan partial-aggregates to the d-bounded dimension
     // frame; no joins, no pairs.
     "q_embed_anisotropy" -> ((s, dir) => {
-      graft.similarity.VecOps.register(s)
       val withNorm = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
           sqrt(Ann.dot(col("embedding"), col("embedding"))).as("nrm"))

@@ -62,7 +62,6 @@ object Ranks {
       out: String, buckets: Int = 256): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 16),
       s"buckets must be in [2, 65536]: $buckets")
-    registerKernel(df)
     val cols = df.columns.map(col).toIndexedSeq
     // localCheckpoint: the frame feeds the boundary aggregate's broadcast
     // subtree, the offset aggregate's broadcast subtree, AND the ranking
@@ -122,7 +121,6 @@ object Ranks {
       nOut: String = null, checkpoint: Boolean = true): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 16),
       s"buckets must be in [2, 65536]: $buckets")
-    registerKernel(df)
     val cols = df.columns.map(col).toIndexedSeq
     // checkpoint = false when `df` is a bare scan/projection: the boundary
     // and offset subtrees then re-run a cheap column-pruned parquet read
@@ -209,7 +207,6 @@ object Ranks {
     */
   def globalRanksOnly(df: DataFrame, keys: Seq[(Column, String)],
       tie: Column, buckets: Int = 256): DataFrame = {
-    registerKernel(df)
     require(keys.nonEmpty, "globalRanksOnly needs at least one sort key")
     require(buckets >= 2 && buckets <= (1 << 16),
       s"buckets must be in [2, 65536]: $buckets")
@@ -354,18 +351,6 @@ object Ranks {
     */
   private def bucketOf(bnds: Column, v: Column): Column =
     coalesce(call_function("graft_bucket_of", bnds, v), lit(0))
-
-  /** Register the bucket-search kernel (once per session; the builder is
-    * stateless).
-    */
-  private def registerKernel(df: DataFrame): Unit =
-    graft.functions.Registry.once(df.sparkSession)(
-      "graft_bucket_of",
-      { exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        require(exprs.length == 2, "graft_bucket_of(bnds, v)")
-        BucketOfExpression(exprs(0), exprs(1))
-      },
-      "built-in")
 
   /** One `max(when(lane = i, rank))` pivot aggregate per requested key. */
   private def rankAggs(keys: Seq[(Column, String)]): Seq[Column] =

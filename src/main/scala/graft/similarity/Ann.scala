@@ -35,10 +35,9 @@ object Ann {
 
   /** Elementwise dot product of two array columns via the native codegen
     * expression (DotProductExpression — registered as `vec_dot`); the HOF
-    * form it replaces paid an interpreted lambda per element. Callers going
-    * through the DataFrame entry points below get registration for free;
-    * ad-hoc Column use needs `VecOps.register(spark)` (graft.Sessions does
-    * it at session build).
+    * form it replaces paid an interpreted lambda per element. Resolves in
+    * any session built with `spark.sql.extensions=graft.GraftExtensions`
+    * (as [[graft.Sessions.local]] builds them).
     */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
@@ -54,7 +53,6 @@ object Ann {
     * and a cluster-wide sort at 100 TB.
     */
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int = 10): DataFrame = {
-    VecOps.register(corpus.sparkSession)
     val session = corpus.sparkSession
     import session.implicits._
     val c = corpus.select(col("vec_id"), col("embedding"),
@@ -98,7 +96,6 @@ object Ann {
     * correctness oracle, not the 100 TB path.
     */
   def bruteForcePairs(slice: DataFrame, threshold: Double): DataFrame = {
-    VecOps.register(slice.sparkSession)
     val a = slice.select(col("vec_id").as("id_a"), col("embedding").as("vec_a"))
     val b = slice.select(col("vec_id").as("id_b"), col("embedding").as("vec_b"))
     a.join(broadcast(b), col("id_a") < col("id_b"))
@@ -114,7 +111,6 @@ object Ann {
     */
   def bruteForcePairsAgainst(probes: DataFrame, corpus: DataFrame,
       threshold: Double): DataFrame = {
-    VecOps.register(corpus.sparkSession)
     val a = probes.select(col("vec_id").as("id_a"), col("embedding").as("vec_a"))
     val b = corpus.select(col("vec_id").as("id_b"), col("embedding").as("vec_b"))
     b.join(broadcast(a), col("id_a") < col("id_b"))
@@ -150,7 +146,6 @@ object Ann {
     */
   def lshTopK(corpus: DataFrame, probes: DataFrame, k: Int = 10,
       tables: Int = 4, bits: Int = 12, dim: Int = 64, seed: Long = 42L): DataFrame = {
-    VecOps.register(corpus.sparkSession)
     def withBuckets(df: DataFrame, idAs: String, vecAs: String): DataFrame =
       df.select(col("vec_id").as(idAs), col("embedding").as(vecAs),
           posexplode(lshBuckets(col("embedding"), tables, bits, dim, seed)))
@@ -206,7 +201,6 @@ object Ann {
     // slice(arr, -(nprobe>nlist), …) would silently return ZERO cells —
     // clamp so "probe extra cells to be safe" degrades to exhaustive
     val probeCells = math.min(nprobe, nlist)
-    VecOps.register(corpus.sparkSession)
     val centers = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
     if (nlist > LiteralNlistMax)
       return ivfTopKWithCenters(corpus, probes, centers, k, probeCells)
@@ -262,11 +256,7 @@ object Ann {
   def pqTopK(corpus: DataFrame, probes: DataFrame, k: Int = 10, m: Int = 8,
       ksub: Int = 16, seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): DataFrame = {
-    val spark = corpus.sparkSession
-    VecOps.register(spark)
     val codebooks = pqCodebooks(corpus, m, ksub, seed, sampleFraction, maxIter)
-    graft.functions.Registry.once(spark)(
-      "graft_ivf_cells", IvfModels.factory, "built-in")
     val (recon, pqIds) = pqRecon(codebooks)
     val c = corpus.select(col("vec_id"), recon.as("recon"))
     // eager analysis embedded the m codebook models — release promptly
@@ -295,14 +285,10 @@ object Ann {
       nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
       seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): DataFrame = {
-    val spark = corpus.sparkSession
-    VecOps.register(spark)
     val coarse = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
     val codebooks = pqCodebooks(corpus, m, ksub, seed, sampleFraction, maxIter)
     val probeCells = math.min(nprobe, coarse.length)
     val coarseId = IvfModels.put(new IvfModel(coarse))
-    graft.functions.Registry.once(spark)(
-      "graft_ivf_cells", IvfModels.factory, "built-in")
     val (recon, pqIds) = pqRecon(codebooks)
     val c = corpus.select(col("vec_id"),
       element_at(call_function("graft_ivf_cells",
@@ -452,14 +438,8 @@ object Ann {
     */
   private[graft] def ivfTopKWithCenters(corpus: DataFrame, probes: DataFrame,
       centers: Array[Array[Double]], k: Int, nprobe: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    VecOps.register(spark)
     val probeCells = math.min(nprobe, centers.length)
     val modelId = IvfModels.put(new IvfModel(centers))
-    // same stateless-registration contract as graft_lang_score: the model
-    // id rides as a literal, so concurrent queries cannot race
-    graft.functions.Registry.once(spark)(
-      "graft_ivf_cells", IvfModels.factory, "built-in")
     val c = corpus.select(col("vec_id"), col("embedding"),
       element_at(call_function("graft_ivf_cells",
         col("embedding"), lit(modelId), lit(1)), 1).as("cell"))
@@ -509,8 +489,6 @@ object Ann {
     * assignment (column `v`: the embedding as array<double>).
     */
   def kmeansLloyd(corpus: DataFrame, k: Int, iters: Int): (Array[Array[Double]], DataFrame) = {
-    val spark = corpus.sparkSession
-    VecOps.register(spark)
     val pts = corpus.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     var centers: Array[Array[Double]] =
@@ -520,8 +498,6 @@ object Ann {
     require(centers.length == k, s"kmeans: corpus has fewer than $k points")
     for (_ <- 1 to iters) {
       val modelId = IvfModels.put(new IvfModel(centers))
-      graft.functions.Registry.once(spark)(
-        "graft_ivf_cells", IvfModels.factory, "built-in")
       val sums = pts
         .select(element_at(call_function("graft_ivf_cells",
           col("v"), lit(modelId), lit(1)), 1).as("cell"),
@@ -539,8 +515,6 @@ object Ann {
       centers = next
     }
     val modelId = IvfModels.put(new IvfModel(centers))
-    graft.functions.Registry.once(spark)(
-      "graft_ivf_cells", IvfModels.factory, "built-in")
     val assigned = pts.select(col("vec_id"), col("v"),
       element_at(call_function("graft_ivf_cells",
         col("v"), lit(modelId), lit(1)), 1).as("cell"))
@@ -586,12 +560,8 @@ object Ann {
   private[graft] def semDedupParts(corpus: DataFrame, nlist: Int = 16,
       threshold: Double = 0.99, seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): (DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    VecOps.register(spark)
     val centers = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
     val modelId = IvfModels.put(new IvfModel(centers))
-    graft.functions.Registry.once(spark)(
-      "graft_ivf_cells", IvfModels.factory, "built-in")
     val assigned = corpus.select(col("vec_id"), col("embedding"),
         element_at(call_function("graft_ivf_cells",
           col("embedding"), lit(modelId), lit(1)), 1).as("cell"))
@@ -625,7 +595,6 @@ object Ann {
     */
   def cosineNearDuplicates(corpus: DataFrame, threshold: Double = 0.95,
       tables: Int = 4, bits: Int = 12, dim: Int = 64, seed: Long = 42L): DataFrame = {
-    VecOps.register(corpus.sparkSession)
     // materialized: both self-join sides read the bucketed rows from
     // blocks — otherwise each branch re-runs tables×bits hyperplane dot
     // products per vector (no exchange reuse once AQE broadcasts a side)
@@ -667,7 +636,6 @@ object Ann {
     * shuffle beyond the bounded top-k heap merge.
     */
   def maxSimTopK(emb: DataFrame, probeMaxId: Long, m: Int, k: Int): DataFrame = {
-    VecOps.register(emb.sparkSession)
     val c = emb.select(col("vec_id"), col("embedding"))
     val p = emb.where(col("vec_id") < probeMaxId)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
@@ -782,7 +750,6 @@ object Ann {
     * cross-engine.
     */
   def lof(emb: DataFrame, maxId: Long, k: Int): DataFrame = {
-    VecOps.register(emb.sparkSession)
     def r6(c: Column): Column =
       graft.functions.ColumnOps.floorD(
     c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)

@@ -109,31 +109,6 @@ object VecOps {
     }
     acc
   }
-
-  /** Register `vec_dot` + `vec_maxsim` in a session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.Registry.once(spark)(
-      "vec_dot",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "vec_dot(a, b) takes 2 arguments")
-        DotProductExpression(exprs(0), exprs(1))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "vec_maxsim",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "vec_maxsim(a, b, m) takes 3 arguments")
-        MaxSimExpression(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "vec_qdot",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "vec_qdot(a, b, shift) takes 3 arguments")
-        QdotExpression(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-  }
 }
 
 case class QdotExpression(first: Expression, second: Expression,

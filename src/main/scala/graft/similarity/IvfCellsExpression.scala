@@ -66,9 +66,8 @@ final class IvfModel(val centers: Array[Array[Double]]) extends Serializable {
   */
 object IvfModels extends graft.ModelRegistry[IvfModel]("IvfModel") {
 
-  /** Expression factory for `graft_ivf_cells(vec, modelId, nprobe)` —
-    * shared by the Ann temp-function registration and
-    * [[graft.GraftExtensions]].
+  /** Expression factory for `graft_ivf_cells(vec, modelId, nprobe)`,
+    * registered by [[graft.GraftExtensions]].
     */
   val factory: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>

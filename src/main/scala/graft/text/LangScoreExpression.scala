@@ -74,8 +74,8 @@ final class LangModel(val langs: Array[String],
   */
 object LangModels extends graft.ModelRegistry[LangModel]("LangModel") {
 
-  /** Expression factory for `graft_lang_score(text, modelId)` — shared by
-    * the TextOps temp-function registration and [[graft.GraftExtensions]].
+  /** Expression factory for `graft_lang_score(text, modelId)`, registered
+    * by [[graft.GraftExtensions]].
     */
   val factory: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>

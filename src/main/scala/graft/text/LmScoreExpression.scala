@@ -60,8 +60,8 @@ final class LmModel(table: java.util.HashMap[String, java.lang.Long],
   */
 object LmModels extends graft.ModelRegistry[LmModel]("LmModel") {
 
-  /** Expression factory for `graft_lm_logcount(text, modelId)` — shared by
-    * the TextOps temp-function registration and [[graft.GraftExtensions]].
+  /** Expression factory for `graft_lm_logcount(text, modelId)`, registered
+    * by [[graft.GraftExtensions]].
     * The model id must be a literal so the model resolves at analysis time
     * and concurrent queries cannot race on registry contents.
     */

@@ -50,16 +50,4 @@ object TextNorm {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
-
-  /** Register `graft_nfc` in a session's function registry (the
-    * Sessions.local companion to the GraftExtensions injection).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.Registry.once(spark)(
-      "graft_nfc",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_nfc(text) takes 1 argument")
-        NfcNormalizeExpression(exprs(0))
-      },
-      "built-in")
 }

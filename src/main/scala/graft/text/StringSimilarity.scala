@@ -138,23 +138,6 @@ object StringSimilarity {
     }
     if (prev(m) <= band) prev(m) else -1
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.Registry.once(spark)(
-      "jaro_winkler",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "jaro_winkler(a, b)")
-        JaroWinklerExpression(exprs(0), exprs(1))
-      },
-      "built-in")
-    graft.functions.Registry.once(spark)(
-      "lev_banded",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "lev_banded(a, b, band)")
-        LevBandedExpression(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
-  }
 }
 
 case class JaroWinklerExpression(left: Expression, right: Expression)

@@ -164,7 +164,6 @@ object TextOps {
     * O(tokens) monotonic-deque sliding min) — per-row, shuffle-free.
     */
   def fingerprint(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
-    graft.dedup.DedupKernels.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("winnow_fp", col("text"), lit(k), lit(w)).as("fingerprint"))
   }
@@ -276,12 +275,6 @@ object TextOps {
     */
   def langId(docs: DataFrame, train: DataFrame, n: Int = 3): DataFrame = {
     val modelId = LangModels.put(trainLangModel(train, n))
-    val spark = docs.sparkSession
-    // stateless, idempotent registration: the factory reads the model id
-    // from its literal argument, so concurrent langId calls (each with
-    // their own id) cannot race on registry contents
-    graft.functions.Registry.once(spark)(
-      "graft_lang_score", LangModels.factory, "built-in")
     val scored = docs.select(col("doc_id"), col("lang").as("lang_true"),
         call_function("graft_lang_score", col("text"), lit(modelId)).as("lang_pred"))
       .where(col("lang_pred").isNotNull)
@@ -305,7 +298,6 @@ object TextOps {
     */
   def lmScore(docs: DataFrame, train: DataFrame, n: Int = 3,
               keep: Seq[String] = Nil): DataFrame = {
-    val spark = docs.sparkSession
     // vocab-bounded: at most the distinct-gram count of the training set
     val counts = train.select(explode(charNgrams(col("text"), n)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c")).collect()
@@ -317,8 +309,6 @@ object TextOps {
     }
     val model = new LmModel(table, total, n)
     val modelId = LmModels.put(model)
-    graft.functions.Registry.once(spark)(
-      "graft_lm_logcount", LmModels.factory, "built-in")
     // L stays declarative with the SAME normalization/windowing as the
     // kernel, so the decomposition's terms match the oracle verbatim
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
@@ -412,13 +402,10 @@ object TextOps {
   }
 
   /** Subword-count column under a trained [[BpeModel]] via the codegen
-    * kernel; registration + prompt registry release, the lmScore contract.
+    * kernel; prompt registry release, the lmScore contract.
     */
   def bpeTokenCounts(docs: DataFrame, model: BpeModel): DataFrame = {
-    val spark = docs.sparkSession
     val modelId = BpeModels.put(model)
-    graft.functions.Registry.once(spark)(
-      "graft_bpe_count", BpeModels.factory, "built-in")
     val scored = docs.withColumn("n_subwords",
       call_function("graft_bpe_count", col("text"), lit(modelId)))
     BpeModels.remove(modelId)
@@ -441,7 +428,6 @@ object TextOps {
     * selected docs, llr unrounded, ordered by the selection key.
     */
   def dsirSelect(docs: DataFrame, target: DataFrame, k: Int, n: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
     def build(train: DataFrame): (Long, Double) = {
       val counts = train.select(explode(charNgrams(col("text"), n)).as("g"))
         .groupBy("g").agg(count(lit(1)).as("c")).collect()
@@ -456,8 +442,6 @@ object TextOps {
     }
     val (tId, tLnNV) = build(target)
     val (sId, sLnNV) = build(docs)
-    graft.functions.Registry.once(spark)(
-      "graft_lm_logcount", LmModels.factory, "built-in")
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
     val nGrams = greatest(length(norm) - (n - 1), lit(1)).cast("long").cast("double")
     def avgLl(id: Long, lnNV: Double): Column =

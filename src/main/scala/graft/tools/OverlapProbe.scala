@@ -12,7 +12,6 @@ import graft.io.Sources
 object OverlapProbe {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
-    graft.dedup.DedupKernels.register(spark)
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val d = Sources.table(spark, s"/root/testdata/$sf", "documents")
         .where(col("source").isin("src0", "src1"))

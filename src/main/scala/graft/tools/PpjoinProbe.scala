@@ -12,7 +12,6 @@ import graft.io.Sources
 object PpjoinProbe {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
-    graft.dedup.DedupKernels.register(spark)
     val threshold = 0.8
     val k = 3
     val docs = Sources.table(spark, "/root/testdata/sf0.1", "documents")

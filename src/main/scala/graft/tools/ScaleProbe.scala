@@ -303,9 +303,6 @@ object ScaleProbe {
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
       val nVecs = corpus16.count()
-      graft.similarity.VecOps.register(spark)
-      graft.functions.Registry.once(spark)("graft_ivf_cells",
-        graft.similarity.IvfModels.factory, "built-in")
       val rng = new scala.util.Random(42L)
       val dim = 64
       // untimed warmup assignment (r15 verdict #3): JIT the kernel + the
@@ -454,7 +451,6 @@ object ScaleProbe {
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
-      graft.similarity.VecOps.register(spark)
       val q = corpus.where(col("vec_id") === 1).select(col("embedding").as("qv"))
       def scored = corpus.where(col("vec_id") > 1).crossJoin(broadcast(q))
         .select(col("vec_id"),

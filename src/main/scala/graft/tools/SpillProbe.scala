@@ -53,8 +53,6 @@ object SpillProbe {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dedup.DedupKernels.register(spark)
-    graft.text.TextNorm.register(spark)
 
     val memSpilled = new AtomicLong; val diskSpilled = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

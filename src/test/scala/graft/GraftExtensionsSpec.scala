@@ -1,7 +1,60 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
+
 /** The extensions hook must make every native function SQL-callable. */
 class GraftExtensionsSpec extends SparkSpec {
+
+  private val names = GraftExtensions.functions.map(_._1)
+
+  test("the table names each native function once") {
+    assert(names.size == 20)
+    assert(names.distinct == names)
+  }
+
+  test("every table entry is registered in the session and in newSession()") {
+    val fresh = spark.newSession()
+    for (name <- names) {
+      assert(spark.catalog.functionExists(name), name)
+      assert(fresh.catalog.functionExists(name), s"$name in newSession()")
+    }
+  }
+
+  test("each builder rejects a wrong argument count with its arity message") {
+    for ((name, usage, builder) <- GraftExtensions.functions) {
+      val signature = usage.takeWhile(_ != ' ')
+      assert(signature.startsWith(name + "("), usage)
+      for (wrong <- Seq(0, 5)) {
+        val e = intercept[IllegalArgumentException](builder(Seq.fill(wrong)(Literal(1L))))
+        assert(e.getMessage.startsWith(s"requirement failed: $signature"),
+          s"$name with $wrong args: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("jaro_winkler and minhash_from_hashes resolve in a fresh session") {
+    val r = spark.newSession().sql(
+      """SELECT jaro_winkler('martha', 'marhta') AS jw,
+        |  size(minhash_from_hashes(array(1L, 2L, 3L), 8)) AS m""".stripMargin).first()
+    assert(math.abs(r.getAs[Double]("jw") - 0.9611111111111111) < 1e-9)
+    assert(r.getAs[Int]("m") == 8)
+  }
+
+  test("every call_function literal in src/main is a table entry or a Spark built-in") {
+    import scala.jdk.CollectionConverters._
+    val call = "call_function\\(\"(\\w+)\"".r
+    val files = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val called = files.flatMap(f =>
+      call.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1))).toSet
+    assert(called.contains("hyp2f1"), "scan found no native calls")
+    val unknown = called.filterNot(n =>
+      names.contains(n) || FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(unknown.isEmpty, s"call_function names outside the table: $unknown")
+  }
 
   test("extension functions are callable from SQL") {
     val r = spark.sql(

@@ -129,7 +129,6 @@ class DedupSpec extends SparkSpec {
     // shingle-hash set must reproduce minhash_sig exactly (same seed-42
     // base hashes, same lane re-mix, min is order-independent) — else the
     // q_ngram_jaccard single-scan pipeline silently changes its candidates
-    graft.dedup.DedupKernels.register(spark)
     val both = docs.select(col("doc_id"),
         call_function("minhash_sig", col("text"), lit(3), lit(64)).as("txt"),
         call_function("minhash_from_hashes",
@@ -261,7 +260,6 @@ class DedupSpec extends SparkSpec {
   test("lanes_equal and sorted_inter_size kernels match their HOF/builtin forms") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    DedupKernels.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (1 to 200).map { i =>
       val a = Seq.fill(64)(rnd.nextInt(8).toLong)

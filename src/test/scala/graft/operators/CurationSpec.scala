@@ -287,7 +287,6 @@ class CurationSpec extends SparkSpec {
     // union-sketch identity: a source unioned with ITSELF estimates J=1
     // (elementwise min of identical signatures ⇒ every lane agrees)
     import org.apache.spark.sql.functions._
-    graft.dedup.DedupKernels.register(spark)
     val d = graft.io.Sources.table(spark, sf, "documents")
       .where(col("source") === "src0")
     val lanes = d.select(

@@ -605,7 +605,6 @@ class AnnSpec extends SparkSpec {
 
   test("vec_maxsim kernel is bit-identical to the HOF formulation") {
     import spark.implicits._
-    VecOps.register(spark)
     val rnd = new scala.util.Random(7)
     val dim = 64; val m = 8; val subLen = dim / m
     val rows = (1 to 64).map { i =>

@@ -41,7 +41,6 @@ class StringSimilaritySpec extends SparkSpec {
   }
 
   test("codegen path agrees with the kernel") {
-    StringSimilarity.register(spark)
     import spark.implicits._
     val pairs = Seq(("martha", "marhta"), ("hot gear", "large plate"),
       ("cold widget", "cold widget"), ("", "x")).toDF("a", "b")
@@ -107,7 +106,6 @@ class StringSimilaritySpec extends SparkSpec {
       val b = (0 until rnd.nextInt(8)).map(_ => word()).mkString(" ")
       (a, b)
     }
-    StringSimilarity.register(spark)
     val df = pairs.toDF("a", "b")
       .select(levenshtein(col("a"), col("b"), 100).as("builtin"),
         call_function("lev_banded", col("a"), col("b"), lit(100)).as("kernel"))
