@@ -108,7 +108,7 @@ object BetaGeo {
     require(java.lang.Double.isFinite(f0),
       "BG/NBD fit: non-finite objective at init — check that T >= recency >= 0 " +
         "(is the asOfDate earlier than the data?)")
-    val sol = NelderMead.minimize(negLogLikelihood(_, obs, penalizer), x0)
+    val sol = NelderMead.minimize("BG/NBD", negLogLikelihood(_, obs, penalizer), x0)
     BetaGeoParams(math.exp(sol(0)), math.exp(sol(1)), math.exp(sol(2)), math.exp(sol(3)))
   }
 
@@ -159,7 +159,7 @@ object BetaGeo {
       val x0 = Array.fill(4)(0.1)
       require(java.lang.Double.isFinite(objective(x0)),
         "BG/NBD fitDistributed: non-finite objective at init")
-      val sol = NelderMead.minimize(objective, x0)
+      val sol = NelderMead.minimize("BG/NBD", objective, x0)
       BetaGeoParams(math.exp(sol(0)), math.exp(sol(1)), math.exp(sol(2)), math.exp(sol(3)))
     } finally rdd.unpersist()
   }

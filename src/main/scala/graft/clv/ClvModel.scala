@@ -99,9 +99,11 @@ object ClvModel {
         col("x"), col("tx"), col("big"), col("m"))
       .agg(count(lit(1)).cast("double").as("w"), grouping_id().as("gid"))
     // sorted collect: deterministic FP summation order (bit-reproducible
-    // params); limit doubles as the bounded-driver routing test
-    val cap = 2 * maxDriverRows.toInt + 1
-    val rows = gs.sort("gid", "x", "tx", "big", "m").limit(cap + 1).collect()
+    // params); the limit doubles as the bounded-driver routing test — it
+    // always reaches row maxDriverRows + 1 of whichever slice overflows
+    val rows = gs.sort("gid", "x", "tx", "big", "m")
+      .limit(2 * maxDriverRows.toInt + 2).collect()
+    val (bgRows, ggRows) = rows.partition(_.getLong(5) == 1L)
     // The two models are independent; overlap them on two threads — the
     // Gamma-Gamma loop rides a Future while this thread runs BG/NBD —
     // halving the one serial driver section the query has (the r8 driver
@@ -111,20 +113,20 @@ object ClvModel {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    if (rows.length > cap) {
+    if (bgRows.length > maxDriverRows || ggRows.length > maxDriverRows) {
       // degenerate compressed cardinality: per-model bounded/treeAggregate
       // routing (each fitFeatures re-compresses and caps independently;
       // their Spark jobs run concurrently from the two threads)
-      val ggF = Future(GammaGamma.fitFeatures(returning, "frequency", "monetary", penalizer))
-      val bg = BetaGeo.fitFeatures(returning, "frequency", "recency", "t", penalizer)
+      val ggF = Future(GammaGamma.fitFeatures(returning, "frequency", "monetary",
+        penalizer, maxDriverRows))
+      val bg = BetaGeo.fitFeatures(returning, "frequency", "recency", "t",
+        penalizer, maxDriverRows)
       FittedClvModel(bg, Await.result(ggF, Duration.Inf))
     } else {
-      val bgObs = rows.iterator.filter(_.getLong(5) == 1L)
+      val bgObs = bgRows
         .map(r => BetaGeo.Obs(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(4)))
-        .toArray
-      val ggObs = rows.iterator.filter(_.getLong(5) == 6L)
+      val ggObs = ggRows
         .map(r => GammaGamma.Obs(r.getDouble(0), r.getDouble(3), r.getDouble(4)))
-        .toArray
       val ggF = Future(GammaGamma.fit(ggObs, penalizer))
       FittedClvModel(BetaGeo.fit(bgObs, penalizer), Await.result(ggF, Duration.Inf))
     }

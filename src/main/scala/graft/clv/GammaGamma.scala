@@ -72,7 +72,7 @@ object GammaGamma {
     require(java.lang.Double.isFinite(f0),
       "Gamma-Gamma fit: non-finite objective at init — check that frequency > 0 " +
         "and monetary > 0 on the fit slice")
-    val sol = NelderMead.minimize(negLogLikelihood(_, obs, penalizer), x0)
+    val sol = NelderMead.minimize("Gamma-Gamma", negLogLikelihood(_, obs, penalizer), x0)
     GammaGammaParams(math.exp(sol(0)), math.exp(sol(1)), math.exp(sol(2)))
   }
 
@@ -119,7 +119,7 @@ object GammaGamma {
       val x0 = Array.fill(3)(0.1)
       require(java.lang.Double.isFinite(objective(x0)),
         "Gamma-Gamma fitDistributed: non-finite objective at init")
-      val sol = NelderMead.minimize(objective, x0)
+      val sol = NelderMead.minimize("Gamma-Gamma", objective, x0)
       GammaGammaParams(math.exp(sol(0)), math.exp(sol(1)), math.exp(sol(2)))
     } finally rdd.unpersist()
   }

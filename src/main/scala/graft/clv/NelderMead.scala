@@ -10,10 +10,16 @@ package graft.clv
   *
   * Standard coefficients (reflect 1, expand 2, contract 0.5, shrink 0.5);
   * initial simplex uses scipy's 5% relative perturbation per coordinate.
+  *
+  * A fit that reaches `maxIter` before both spreads fall under tolerance
+  * throws instead of returning the best vertex — `lifetimes` raises
+  * ConvergenceError in the same case.
   */
 object NelderMead {
 
+  /** @param model names the fit in the non-convergence error. */
   def minimize(
+      model: String,
       f: Array[Double] => Double,
       x0: Array[Double],
       maxIter: Int = 2000,
@@ -32,23 +38,26 @@ object NelderMead {
       v
     }
     val fv = simplex.map(f)
-
-    var iter = 0
-    while (iter < maxIter) {
-      // sort vertices by objective
+    // spreads of the simplex around vertex 0 (the best, once sorted)
+    def xSpread: Double = (1 to n).map { i =>
+      (0 until n).map(j => math.abs(simplex(i)(j) - simplex(0)(j))).max
+    }.foldLeft(0.0)(math.max)
+    def fSpread: Double = math.abs(fv(n) - fv(0))
+    // sort vertices by objective, then test convergence on both spreads
+    def sortedConverged(): Boolean = {
       val order = fv.indices.sortBy(fv)
       val sx = order.map(simplex).toArray
       val sf = order.map(fv).toArray
       Array.copy(sx, 0, simplex, 0, n + 1)
       Array.copy(sf, 0, fv, 0, n + 1)
+      xSpread <= xatol && fSpread <= fatol
+    }
 
-      // convergence: spread of simplex + objective values
-      val xSpread = (1 to n).map { i =>
-        (0 until n).map(j => math.abs(simplex(i)(j) - simplex(0)(j))).max
-      }.foldLeft(0.0)(math.max)
-      val fSpread = math.abs(fv(n) - fv(0))
-      if (xSpread <= xatol && fSpread <= fatol) return simplex(0)
-
+    var iter = 0
+    while (!sortedConverged()) {
+      if (iter == maxIter) throw new IllegalStateException(
+        s"$model fit did not converge in $maxIter Nelder-Mead iterations: " +
+          s"x spread $xSpread (xatol $xatol), f spread $fSpread (fatol $fatol)")
       val centroid = Array.tabulate(n)(j => (0 until n).map(simplex(_)(j)).sum / n)
       def combine(c: Double, v: Array[Double]): Array[Double] =
         Array.tabulate(n)(j => centroid(j) + c * (centroid(j) - v(j)))
@@ -81,6 +90,6 @@ object NelderMead {
       }
       iter += 1
     }
-    simplex(fv.indices.minBy(fv))
+    simplex(0)
   }
 }

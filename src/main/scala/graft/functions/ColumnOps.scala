@@ -3,7 +3,18 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Expression-level helpers for higher-order-function pipelines.
+/** Expression-level helpers: the shared rounding vocabulary and
+  * let-binding for higher-order-function pipelines.
+  *
+  * Rounding contract. Oracle-checked queries round half-up with a 1e-6
+  * bias, `floor(x·10^k + 0.500001) / 10^k`, and the DuckDB oracle
+  * SQL spells the same rule (`FLOOR(x * 100 + 0.500001) / 100`), so both
+  * engines run the same IEEE ops and .xx5 boundaries land identically;
+  * the bias absorbs summation-order noise. Neither engine's ROUND is used:
+  * their tie modes differ. [[r2]]/[[r4]]/[[r6]] floor through [[floorD]]
+  * (exact at every magnitude, a double result); [[cents]] floors with
+  * plain `floor` and keeps Spark's LONG, the integer money unit that
+  * exact sums and moments aggregate.
   *
   * Spark evaluates interpreted HOF lambdas per element, and a lambda BODY
   * that references an outer expression re-evaluates that expression on
@@ -38,6 +49,20 @@ object ColumnOps {
     */
   def floorD(c: Column): Column =
     when(abs(c) < lit(4.0e18), floor(c).cast("double")).otherwise(c)
+
+  /** Half-up to 2 / 4 / 6 decimals: floorD(c·10^k + 0.500001) / 10^k. */
+  def r2(c: Column): Column =
+    floorD(c * lit(100.0) + lit(0.500001)) / lit(100.0)
+  def r4(c: Column): Column =
+    floorD(c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
+  def r6(c: Column): Column =
+    floorD(c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
+
+  /** Integer cents (LONG) of a 2-dp money amount, half-up:
+    * floor(c·100 + 0.500001). Plain `floor`, not floorD: money stays far
+    * below the 2^63 saturation bound. */
+  def cents(c: Column): Column =
+    floor(c * lit(100.0) + lit(0.500001)).cast("long")
 
   /** EXACT decimal(38,0) of an integer-valued double (the floorD output).
     * Spark's Cast(Double → Decimal) routes through `Double.toString` —

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources
+import graft.io.Sources.{table => t}
 import graft.similarity.Ann
+import graft.functions.ColumnOps
+import graft.functions.ColumnOps.{r2, r4, r6}
 
 /** Marketing-analytics + retrieval-fusion family: the question surface a
   * CLV warehouse answers AFTER the reference's feature/score tables exist
@@ -20,21 +22,6 @@ import graft.similarity.Ann
   * never gather on one task.
   */
 object Analytics {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
-
-  private def r2(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(100.0) + lit(0.500001)) / lit(100.0)
-
-  private def r4(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
-
-  private def r6(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
 
   /** Pinned "today" for RFM-style recency — one month past the fixture's
     * max(o_orderdate) (2001-08-01); the reference's CURRENT_DATE() trap
@@ -201,8 +188,7 @@ object Analytics {
     // the single float division. At 100 TB every shuffle is customer-keyed
     // and the matrix never exceeds |tiers|².
     "q_segment_migration" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val split = lit("1998-05-01").cast("date")
       def snap(pred: Column, name: String) = t(s, dir, "orders").where(pred)
         .groupBy(col("o_custkey").as("customer_id"))
@@ -402,8 +388,7 @@ object Analytics {
           datediff(lit(SegAsOf).cast("date"), to_date(max(col("o_orderdate"))))
             .cast("double").as("rec"),
           count(lit(1)).cast("double").as("freq"),
-          (sum(floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long")).cast("double") / lit(100.0)
+          (sum(ColumnOps.cents(col("o_totalprice"))).cast("double") / lit(100.0)
             / count(lit(1)).cast("double")).as("mon"))
       val cuts = feats.agg(
         expr("percentile(rec, array(0.2,0.4,0.6,0.8))").as("rc"),
@@ -520,8 +505,7 @@ object Analytics {
     // row count rides the bucket-offset aggregate's 1-row sibling and
     // broadcasts back for the top-decile cut.
     "q_gini" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val perCust = t(s, dir, "orders")
         .groupBy(col("o_custkey")).agg(sum(cents).as("x"))
       // checkpointed: referenced by the moment aggregate AND the
@@ -624,8 +608,7 @@ object Analytics {
     // customer-key shuffle + one equi-join; the global/nation moment
     // frames (1 + ≤25 rows) broadcast back onto the customer frame.
     "q_theil_index" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val perCust = t(s, dir, "orders")
         .groupBy(col("o_custkey")).agg(sum(cents).as("x"))
         .where(col("x") > 0)
@@ -760,8 +743,7 @@ object Analytics {
     // ranking window + ordered cumsum on it (the q_quantile_normalize
     // stance), three threshold rows via conditional min.
     "q_pareto_8020" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(cents).as("m"))
@@ -804,8 +786,7 @@ object Analytics {
     // cross-engine; the oracle's NTILE is provably the same tiling
     // (RanksSpec pins rank ≡ row_number, ntileOf ≡ NTILE semantics).
     "q_lorenz" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(cents).as("m"))
@@ -872,8 +853,7 @@ object Analytics {
     // one division per row, zero float-order risk anywhere. One orders
     // scan, broadcast customer dim, two ≤|groups| aggregates.
     "q_hhi" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val joined = t(s, dir, "orders")
         .join(broadcast(t(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))),
@@ -915,8 +895,7 @@ object Analytics {
       val li = t(s, dir, "lineitem")
         .withColumn("yr", year(to_date(col("l_shipdate"))))
         .where(col("yr").isin(1997, 1998))
-      val cents = floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("l_extendedprice"))
       val qty = floor(col("l_quantity") + lit(0.500001)).cast("long")
       val byPy = li.groupBy(col("l_partkey").as("pk"), col("yr"))
         .agg(sum(cents).as("v"), sum(qty).as("q"))
@@ -950,8 +929,7 @@ object Analytics {
     // aggregate, closed-form slope/r²; flat price or flat quantity
     // abstains NULL.
     "q_elasticity" -> ((s, dir) => {
-      val cents = floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("l_extendedprice"))
       val qty = floor(col("l_quantity") + lit(0.500001)).cast("long")
       val u = cents.cast("double") / qty.cast("double")
       val xq = floor(log(u) * lit(1000000.0)).cast("long")
@@ -1284,8 +1262,7 @@ object Analytics {
     // of two 20-row frames is already free). Cents BIGINT end-to-end;
     // the Jaccard is the single float division.
     "q_topk_churn" -> ((s, dir) => {
-      val cents = floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("l_extendedprice"))
       val cut = lit("1998-01-01").cast("date")
       val pp = t(s, dir, "lineitem")
         .groupBy(col("l_partkey").as("part"),
@@ -1384,8 +1361,7 @@ object Analytics {
     // and the two rank-equi-joins live on that CUSTOMER-bounded frame,
     // never raw orders.
     "q_quantile_normalize" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val cut = lit("1998-01-01").cast("date")
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources
+import graft.io.Sources.{table => t}
 import graft.text.TextOps
+import graft.functions.ColumnOps
+import graft.functions.ColumnOps.{r2, r4, r6}
 
 /** Corpus-curation operator family: the selection / shaping stages a
   * training-data pipeline runs AFTER cleaning and dedup — chunking long
@@ -23,19 +25,6 @@ import graft.text.TextOps
   * generalization of that selection surface.
   */
 object Curation {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
-
-  private def r2(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(100.0) + lit(0.500001)) / lit(100.0)
-  private def r4(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
-  private def r6(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
 
   /** Chunk size / stride for q_doc_chunk (tokens). 64/48 → 25% overlap,
     * the common context-window packing shape. */

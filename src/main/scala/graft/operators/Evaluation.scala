@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources
+import graft.io.Sources.{table => t}
 import graft.text.TextOps
+import graft.functions.ColumnOps.{r4, r6}
 
 /** Evaluation + data-contract operator family: the measurement layer a
   * training-data pipeline runs over its OWN outputs — retrieval-quality
@@ -21,17 +22,6 @@ import graft.text.TextOps
   * rankings/violations) and the plan gates.
   */
 object Evaluation {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
-
-  private def r4(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
-
-  private def r6(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
 
   /** Binned (score, label) frame shared by the ROC / PR / calibration
     * evaluators: the stop-ratio "english-ness" score rounded to 4 decimals

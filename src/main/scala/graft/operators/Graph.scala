@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.{Blocks, Observe}
 import graft.io.Sources
+import graft.functions.ColumnOps.r6
 
 /** Link-graph centrality: fixed-iteration PageRank (Page et al. 1999) —
   * the graph-quality signal web-corpus curation ranks URLs with (Common
@@ -701,9 +702,6 @@ object Graph {
         sum(when(tail, 1L).otherwise(0L)).as("n_tail"),
         sum(when(tail, floor(log(col("d").cast("double") / lit(1.5))
           * lit(1000000.0)).cast("long")).otherwise(0L)).as("lsum_micro"))
-      def r6(x: Column): Column =
-        graft.functions.ColumnOps.floorD(
-    x * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
       g.select(col("n_nodes"), col("sum_degree"), col("max_degree"),
         col("n_tail"), col("lsum_micro"),
         when(col("lsum_micro") > 0L,
@@ -744,9 +742,6 @@ object Graph {
         .select(col("n_all"), explode(array(ks.map(k =>
           struct(lit(k).as("k"), col(s"n$k").as("nn"),
             col(s"e$k").as("ne"))): _*)).as("r"))
-      def r6(x: Column): Column =
-        graft.functions.ColumnOps.floorD(
-    x * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
       rows.select(col("r.k").as("k"), col("n_all"),
           col("r.nn").as("n_rich"), col("r.ne").as("e_rich"),
           when(col("r.nn") > 1L,
@@ -803,9 +798,7 @@ object Graph {
     base.crossJoin(broadcast(d2))
       .select(col("m").as("n_edges"), col("e_intra").as("n_intra_edges"),
         col("n_communities"), col("sum_d").as("degree_total"),
-        (graft.functions.ColumnOps.floorD(
-    q * lit(1000000.0) + lit(0.500001)) / lit(1000000.0))
-          .as("modularity"))
+        r6(q).as("modularity"))
   }
 
   /** Degree assortativity coefficient (Newman, PRL 2002 eq. 4) of an
@@ -1323,9 +1316,6 @@ object Graph {
     }
     val aTot = auth.agg(sum(col("a")).as("t"))
     val hTot = hub.agg(sum(col("h")).as("t"))
-    def r6(x: Column): Column =
-      graft.functions.ColumnOps.floorD(
-    x * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
     auth.crossJoin(broadcast(aTot))
       .select(lit("auth").as("side"), col("p").as("node"),
         r6(col("a").cast("double") / col("t").cast("double")).as("score"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources
+import graft.io.Sources.{table => t}
 
 /** Incremental-maintenance operator family: the MERGE/upsert, SCD-2
   * history, and batch-vs-corpus incremental-dedup shapes that turn the
@@ -20,9 +20,6 @@ import graft.io.Sources
   * the minimum number of shuffles and with the big side never moving.
   */
 object Incremental {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
 
   /** Snapshot/delta boundary for q_merge_upsert: orders strictly before
     * the cutoff form the base snapshot, the rest are the change batch. */

@@ -3,11 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.io.Sources
+import graft.io.Sources.{table => t}
 import graft.text.TextOps
 import graft.dedup.Dedup
 import graft.similarity.Ann
 import graft.multimodal.Multimodal
+import graft.functions.ColumnOps
+import graft.functions.ColumnOps.{r2, r4, r6}
 
 /** Harness entries for the training-data-pipeline operator families
   * (dedup / similarity / text analysis / multimodal) over
@@ -24,9 +26,6 @@ import graft.multimodal.Multimodal
   */
 object LlmQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
-
   /** documents scan fanned out to the session's full parallelism: the local
     * testdata is one parquet file → one input task, which would serialize
     * the CPU-heavy per-row signature/trigram work onto a single core. One
@@ -36,17 +35,6 @@ object LlmQueries {
     */
   private def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
-
-  private def r2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(100.0) + lit(0.500001)) / lit(100.0)
-  private def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
-
-  private def r4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
 
   /** k-means geometry for q_kmeans (clusters / Lloyd iterations / dim). */
   val KmeansK = 8
@@ -2160,7 +2148,7 @@ object LlmQueries {
         .select(col("source"), col("text"))
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("source"),
-          explode(graft.functions.ColumnOps.bind(TextOps.tokens(col("text"))) {
+          explode(ColumnOps.bind(TextOps.tokens(col("text"))) {
             toks => transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
               i => concat_ws(" ", slice(toks, i + 1, lit(n))))
           }).as("gram"))

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.io.Sources
+import graft.io.Sources.{table => t}
 import graft.text.TextOps
+import graft.functions.ColumnOps
+import graft.functions.ColumnOps.{r2, r4, r6}
 
 /** The standard relational operator surface (SURVEY §2.2–§2.8) expressed
   * over the testdata star schema, one named query per operator family, each
@@ -23,23 +25,6 @@ import graft.text.TextOps
   * projections sit directly on the parquet scan so pushdown applies.
   */
 object Relational {
-
-  /** Portable 2/4-dp rounding: floor(x*scale + 0.500001)/scale, computed with
-    * the same IEEE ops in Spark and the DuckDB oracle so boundary values
-    * (.xx5) round identically; the epsilon absorbs sum-order noise.
-    */
-  private def r2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(100.0) + lit(0.500001)) / lit(100.0)
-  private def r4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
-  private def r6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -84,8 +69,7 @@ object Relational {
       // exact-cents sums (r13 discipline): a corpus-sized double sum is
       // summation-order-dependent, and past ~1e13 its ulp rivals the r2
       // grid — the q_rollup failure mode at 10× data
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       t(s, dir, "orders").agg(
         max(col("o_custkey")).as("max_cust"),
         count(lit(1)).as("n_rows"),
@@ -114,10 +98,9 @@ object Relational {
         // quantity is integer-valued, so its double sum is exact as-is.
         .agg(
           r2(sum(col("l_quantity"))).as("sum_qty"),
-          r2(sum(floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-            .cast("long")).cast("double") / lit(100.0)).as("sum_base_price"),
-          r2(sum((floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-              .cast("long") *
+          r2(sum(ColumnOps.cents(col("l_extendedprice"))).cast("double")
+            / lit(100.0)).as("sum_base_price"),
+          r2(sum((ColumnOps.cents(col("l_extendedprice")) *
             (lit(10000L) - floor(col("l_discount") * lit(10000.0)
               + lit(0.500001)).cast("long"))).cast("decimal(38,0)"))
             .cast("double") / lit(1000000.0)).as("sum_disc_price"),
@@ -137,8 +120,8 @@ object Relational {
         // exact-cents sum — the q_rollup r13 discipline (5-cell sums over
         // a corpus-sized double column are order-dependent past ~sf1)
         .agg(count(lit(1)).as("n_orders"),
-          (sum(floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long")).cast("double") / lit(100.0)).as("revenue"))
+          (sum(ColumnOps.cents(col("o_totalprice"))).cast("double")
+            / lit(100.0)).as("revenue"))
         .orderBy("c_mktsegment")
     }),
 
@@ -237,8 +220,7 @@ object Relational {
     // ranking tasks, the only ordered window over an aggregate-bounded
     // offsets frame, per-segment counts a 5-row broadcast.
     "q_window_ntile" -> ((s, dir) => {
-      val cents = floor(col("c_acctbal") * lit(100.0) + lit(0.500001))
-        .cast(LongType)
+      val cents = ColumnOps.cents(col("c_acctbal"))
       val base = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("segment"),
           cents.as("v"))
@@ -349,8 +331,8 @@ object Relational {
         // of rows is aggregation-order-dependent — one rollup cell crossed
         // the 0.01 grid at 10× corpus; per-row cents + BIGINT sum is exact
         .agg(count(lit(1)).as("n"),
-          (sum(floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long")).cast("double") / lit(100.0)).as("revenue"))
+          (sum(ColumnOps.cents(col("o_totalprice"))).cast("double")
+            / lit(100.0)).as("revenue"))
         .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
     }),
 
@@ -370,8 +352,8 @@ object Relational {
         .groupBy(year(col("o_orderdate")).cast(LongType).as("o_year"))
         .pivot("o_orderstatus", Seq("F", "O", "P"))
         // exact-cents sum — the q_rollup r13 discipline
-        .agg(r2(sum(floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-          .cast("long")).cast("double") / lit(100.0)))
+        .agg(r2(sum(ColumnOps.cents(col("o_totalprice"))).cast("double")
+          / lit(100.0)))
         .orderBy("o_year")
     }),
 
@@ -383,8 +365,8 @@ object Relational {
         // sum_price in exact cents (r13); qty sums and the small-magnitude
         // discount mean are order-exact already (integer-valued / tiny Σ)
         .agg(r2(sum(col("l_quantity"))).as("sum_qty"),
-          r2(sum(floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-            .cast("long")).cast("double") / lit(100.0)).as("sum_price"),
+          r2(sum(ColumnOps.cents(col("l_extendedprice"))).cast("double")
+            / lit(100.0)).as("sum_price"),
           r4(avg(col("l_discount"))).as("avg_disc"))
         .unpivot(Array(col("l_returnflag")),
           Array(col("sum_qty"), col("sum_price"), col("avg_disc")),
@@ -419,8 +401,8 @@ object Relational {
           col("o_orderstatus"), col("o_orderpriority"))
         // exact-cents sum — the q_rollup r13 discipline
         .agg(count(lit(1)).as("n"),
-          (sum(floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long")).cast("double") / lit(100.0)).as("revenue"))
+          (sum(ColumnOps.cents(col("o_totalprice"))).cast("double")
+            / lit(100.0)).as("revenue"))
         .orderBy(col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first)
     }),

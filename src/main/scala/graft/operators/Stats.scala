@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources
+import graft.io.Sources.{table => t}
+import graft.functions.ColumnOps
+import graft.functions.ColumnOps.{r2, r4, r6}
 
 /** Inferential-statistics operator family — the hypothesis-testing layer a
   * data pipeline runs over its own segments before trusting a difference:
@@ -28,21 +30,6 @@ import graft.io.Sources
   * D = 0) and the bounded-frame plan shapes.
   */
 object Stats {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
-
-  private def r2c(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(100.0) + lit(0.500001)) / lit(100.0)
-
-  private def r4(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
-
-  private def r6(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
 
   /** q_prop_ztest conversion threshold: a user whose purchase-event total
     * reaches these integer cents ($500) counts as a high-value conversion. */
@@ -193,8 +180,7 @@ object Stats {
     // 9 rows map-side; expected mass log10(1+1/d) enters only in the
     // final quadratic form. Same bounded shape as q_chi_square.
     "q_benford" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val digit = substring(cents.cast("string"), 1, 1).cast("long")
       val cells = t(s, dir, "orders").where(col("o_totalprice") > 0)
         .groupBy(digit.as("d")).agg(count(lit(1)).as("c"))
@@ -259,8 +245,7 @@ object Stats {
         .select(
           when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
             .otherwise(1L).as("g"),
-          floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long").as("v"))
+          ColumnOps.cents(col("o_totalprice")).as("v"))
       val hist = o.groupBy("v").agg(
         sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ca"),
         sum(when(col("g") === 1L, 1L).otherwise(0L)).as("cb"))
@@ -292,8 +277,7 @@ object Stats {
     // exact integers.
     "q_regression" -> ((s, dir) => {
       val xL = col("l_quantity").cast("long")
-      val yL = floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val yL = ColumnOps.cents(col("l_extendedprice"))
       val rows = t(s, dir, "lineitem").select(
         col("l_returnflag").as("flag"), xL.as("x"), yL.as("y"),
         xL.cast("decimal(18,0)").as("xd"), yL.cast("decimal(18,0)").as("yd"))
@@ -324,7 +308,7 @@ object Stats {
     // so both engines add the 5 terms in the same sequence — structural
     // parity (the q_changepoint discipline), not rounded-away.
     "q_anova" -> ((s, dir) => {
-      val v = floor(col("c_acctbal") * lit(100.0) + lit(0.500001)).cast("long")
+      val v = ColumnOps.cents(col("c_acctbal"))
       val g = t(s, dir, "customer")
         .select(col("c_mktsegment").as("seg"), v.as("v"),
           v.cast("decimal(18,0)").as("vd"))
@@ -354,7 +338,7 @@ object Stats {
       val ssw = col("syy").cast("double") - col("tcum")
       val f = (ssb / (kD - 1)) / (ssw / (nD - kD))
       cum.select(col("k"), col("nn").as("n"),
-        r2c(ssb).as("ss_between"), r2c(ssw).as("ss_within"),
+        r2(ssb).as("ss_between"), r2(ssw).as("ss_within"),
         r6(ssb / (ssb + ssw)).as("eta_sq"), r4(f).as("f_stat"))
     }),
 
@@ -370,8 +354,7 @@ object Stats {
     "q_mann_whitney" -> ((s, dir) => {
       val o = t(s, dir, "orders").where(col("o_orderkey") % 20 === 0)
         .select(arm(col("o_custkey")).as("g"),
-          floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long").as("v"))
+          ColumnOps.cents(col("o_totalprice")).as("v"))
       val hist = o.groupBy("v").agg(
         sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ca"),
         sum(when(col("g") === 1L, 1L).otherwise(0L)).as("cb"))
@@ -410,8 +393,7 @@ object Stats {
     "q_gk_gamma" -> ((s, dir) => {
       val cells = t(s, dir, "lineitem")
         .select(col("l_quantity").cast("long").as("q"),
-          floor(col("l_discount") * lit(100.0) + lit(0.500001))
-            .cast("long").as("d"))
+          ColumnOps.cents(col("l_discount")).as("d"))
         .groupBy("q", "d").agg(count(lit(1)).as("n"))
       val a = cells.select(col("q").as("qa"), col("d").as("da"),
         col("n").as("na"))
@@ -463,8 +445,7 @@ object Stats {
       val o = t(s, dir, "orders").where(col("o_orderkey") % 20 === 0)
         .select((col("o_orderpriority") === "1-URGENT" ||
           col("o_orderpriority") === "2-HIGH").cast("long").as("g"),
-          floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long").as("v"))
+          ColumnOps.cents(col("o_totalprice")).as("v"))
       val hist = o.groupBy("v").agg(
         sum(when(col("g") === 0L, 1L).otherwise(0L)).as("c1"),
         sum(when(col("g") === 1L, 1L).otherwise(0L)).as("c2"))
@@ -497,7 +478,7 @@ object Stats {
       val zR = r6(z)
       g.select(col("n1").as("n_1"), col("n2").as("n_2"),
         (d(col("ab2")) / lit(2.0)).as("ab_stat"),
-        when(ok, r2c(e)).as("ab_expected"),
+        when(ok, r2(e)).as("ab_expected"),
         zR.as("z_stat"),
         coalesce((abs(zR) > lit(1.959963984540054)).cast("long"), lit(0L))
           .as("scale_differs_95"))
@@ -519,8 +500,7 @@ object Stats {
     "q_jonckheere" -> ((s, dir) => {
       val o = t(s, dir, "orders").where(col("o_orderkey") % 20 === 0)
         .select(substring(col("o_orderpriority"), 1, 1).cast("long").as("g"),
-          floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long").as("v"))
+          ColumnOps.cents(col("o_totalprice")).as("v"))
       val cCols = (1 to 5).map(k =>
         sum(when(col("g") === k.toLong, 1L).otherwise(0L)).as(s"c$k"))
       val hist = o.groupBy("v").agg(cCols.head, cCols.tail: _*)
@@ -572,8 +552,7 @@ object Stats {
       val o = t(s, dir, "orders").where(col("o_orderkey") % 20 === 0)
         .select((col("o_orderpriority") === "1-URGENT" ||
           col("o_orderpriority") === "2-HIGH").cast("long").as("g"),
-          floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-            .cast("long").as("v"))
+          ColumnOps.cents(col("o_totalprice")).as("v"))
       val hist = o.groupBy("v").agg(
         sum(when(col("g") === 0L, 1L).otherwise(0L)).as("c1"),
         sum(when(col("g") === 1L, 1L).otherwise(0L)).as("c2"))
@@ -622,7 +601,7 @@ object Stats {
       val wR = when(ok, r6(wStat))
       g.select(col("n1").as("n_1"), col("n2").as("n_2"),
         when(ok, r6(phat)).as("p_hat"), wR.as("w_stat"),
-        when(ok, r2c(dfS)).as("df"),
+        when(ok, r2(dfS)).as("df"),
         coalesce((abs(wR) > lit(1.959963984540054)).cast("long"), lit(0L))
           .as("reject_95"))
     }),
@@ -685,7 +664,7 @@ object Stats {
     // q_mad_outliers zero-guard discipline. Everything else is a fixed
     // float sequence over the four exact integers.
     "q_prop_ztest" -> ((s, dir) => {
-      val cents = floor(col("value") * lit(100.0) + lit(0.500001)).cast("long")
+      val cents = ColumnOps.cents(col("value"))
       val byUser = t(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", cents)
@@ -730,8 +709,7 @@ object Stats {
     "q_spearman" -> ((s, dir) => {
       val rows = t(s, dir, "lineitem").where(col("l_orderkey") % 20 === 0)
         .select(col("l_quantity").cast("long").as("x"),
-          floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-            .cast("long").as("y"))
+          ColumnOps.cents(col("l_extendedprice")).as("y"))
       def rank2(df: DataFrame, v: String): DataFrame = {
         val hist = df.groupBy(v).agg(count(lit(1)).as("c"))
         val w = BoundedWindow.ordered(col(v), col(v))
@@ -778,8 +756,7 @@ object Stats {
     // selected split is part of the operator contract, deterministic on
     // both engines.
     "q_tree_split" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val o = t(s, dir, "orders").select(cents.as("cents"),
         month(to_date(col("o_orderdate"))).cast("long").as("mon"),
         dayofweek(to_date(col("o_orderdate"))).cast("long").as("dow"),
@@ -848,8 +825,7 @@ object Stats {
     // median table broadcast back; everything after the second groupBy is
     // schema-bounded (k = 5 priorities).
     "q_levene" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val o = t(s, dir, "orders")
         .select(col("o_orderpriority").as("grp"), cents.as("v"))
       val med = o.groupBy("grp").agg(
@@ -885,7 +861,7 @@ object Stats {
       // return inside the r2 idiom; dollars² keeps the rounded value well
       // inside 2^53 at any plausible SF
       cum.select(col("k"), col("nn").as("n"),
-        r2c(ssb / 40000.0).as("ss_between"), r2c(ssw / 40000.0).as("ss_within"),
+        r2(ssb / 40000.0).as("ss_between"), r2(ssw / 40000.0).as("ss_within"),
         r4(f).as("f_stat"))
     }),
 
@@ -904,8 +880,7 @@ object Stats {
     // exact in doubles). Constant series ⇒ denominator 0 ⇒ both engines
     // abstain with NULL (the q_spearman zero-guard discipline).
     "q_kendall_tau" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(count(lit(1)).as("x"), sum(cents).as("y"))
@@ -957,10 +932,8 @@ object Stats {
     // (scaled headroom documented vs q_levene's same discipline).
     "q_partial_corr" -> ((s, dir) => {
       val x = col("l_quantity").cast("long")
-      val y = floor(col("l_extendedprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
-      val z = floor(col("l_discount") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val y = ColumnOps.cents(col("l_extendedprice"))
+      val z = ColumnOps.cents(col("l_discount"))
       val li = t(s, dir, "lineitem").select(x.as("x"), y.as("y"), z.as("z"),
         y.cast("decimal(19,0)").as("yd"))
       val g = li.agg(
@@ -1084,8 +1057,7 @@ object Stats {
     // the |d| histogram + one cumulative window over distinct |d| values —
     // the q_mann_whitney shape exactly.
     "q_wilcoxon_signed" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val split = lit("1998-01-01").cast("date")
       val inA = col("o_orderdate") < split
       val per = t(s, dir, "orders")
@@ -1135,8 +1107,7 @@ object Stats {
     // r6-PINNED slope (both engines see bit-identical slope before the
     // residual median), the q_power_analysis pinning discipline.
     "q_theil_sen" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       // localCheckpoint: the calendar-bounded daily frame feeds BOTH pair
       // sides, the median's broadcast subtree, and the residual pass —
       // without it each re-runs the full orders scan + aggregate
@@ -1194,8 +1165,7 @@ object Stats {
     // identical doubles, so p-values, the p-ranking, and the prefix rule
     // agree exactly; the reported floats are r6-rounded.
     "q_bh_fdr" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val cells = t(s, dir, "orders")
         .select(col("o_orderpriority").as("prio"), cents.as("v"),
           cents.cast("decimal(19,0)").as("vd"))
@@ -1246,7 +1216,7 @@ object Stats {
       val kStar = max(when(col("p") <= col("crit"), col("rn"))
         .otherwise(lit(0))).over(BoundedWindow.whole(col("prio")))
       ranked.select(col("prio"), col("n"),
-        r2c(col("m") / 100.0).as("mean_total"),
+        r2(col("m") / 100.0).as("mean_total"),
         r4(col("z")).as("z_stat"), r6(col("p")).as("p_value"),
         r6(col("crit")).as("bh_crit"),
         (col("rn") <= kStar).cast("long").as("reject_fdr_05"))
@@ -1272,8 +1242,7 @@ object Stats {
     // covariate (var x = 0) abstains with NULL θ/adjustment — the
     // q_spearman zero-guard discipline.
     "q_cuped" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val split = lit("1998-01-01").cast("date")
       val per = t(s, dir, "orders")
         .select(col("o_custkey"), cents.as("v"),
@@ -1309,11 +1278,11 @@ object Stats {
       val varRed = covXY * covXY / (varX * varY)
       m.select(col("n"), col("na").as("n_a"), col("nb").as("n_b"),
         when(varX > 0, r6(theta)).as("theta"),
-        r2c(d(col("sya")) / d(col("na")) / 100.0).as("mean_a_raw"),
-        r2c(d(col("syb")) / d(col("nb")) / 100.0).as("mean_b_raw"),
-        when(varX > 0, r2c(adj(col("sya"), col("sxa"), col("na")) / 100.0))
+        r2(d(col("sya")) / d(col("na")) / 100.0).as("mean_a_raw"),
+        r2(d(col("syb")) / d(col("nb")) / 100.0).as("mean_b_raw"),
+        when(varX > 0, r2(adj(col("sya"), col("sxa"), col("na")) / 100.0))
           .as("mean_a_adj"),
-        when(varX > 0, r2c(adj(col("syb"), col("sxb"), col("nb")) / 100.0))
+        when(varX > 0, r2(adj(col("syb"), col("sxb"), col("nb")) / 100.0))
           .as("mean_b_adj"),
         when(varX > 0 && varY > 0, r6(varRed)).as("var_reduction"))
     }),
@@ -1329,8 +1298,7 @@ object Stats {
     // large-sample SE √(Σ s²ᵢ/nᵢ) are one float sequence over exact
     // integers.
     "q_diff_in_diff" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val split = lit("1998-01-01").cast("date")
       val cells = t(s, dir, "orders")
         .select(arm(col("o_custkey")).as("g"),
@@ -1370,11 +1338,11 @@ object Stats {
         (col("m_a_post") - col("m_a_pre"))
       val z = did / sqrt(col("se2_micro").cast("double") / lit(1000000.0))
       g.select(col("n"),
-        r2c(col("m_a_pre") / 100.0).as("mean_a_pre"),
-        r2c(col("m_a_post") / 100.0).as("mean_a_post"),
-        r2c(col("m_b_pre") / 100.0).as("mean_b_pre"),
-        r2c(col("m_b_post") / 100.0).as("mean_b_post"),
-        r2c(did / 100.0).as("did_estimate"),
+        r2(col("m_a_pre") / 100.0).as("mean_a_pre"),
+        r2(col("m_a_post") / 100.0).as("mean_a_post"),
+        r2(col("m_b_pre") / 100.0).as("mean_b_pre"),
+        r2(col("m_b_post") / 100.0).as("mean_b_post"),
+        r2(did / 100.0).as("did_estimate"),
         r6(z).as("z_stat"),
         (abs(z) > 1.959963984540054).cast("long").as("reject_95"))
     }),
@@ -1391,7 +1359,7 @@ object Stats {
     // run the identical sequence. The pair frame is a broadcast self-join
     // of the 5-row group table — schema-bounded, never corpus-bounded.
     "q_tukey_hsd" -> ((s, dir) => {
-      val v = floor(col("c_acctbal") * lit(100.0) + lit(0.500001)).cast("long")
+      val v = ColumnOps.cents(col("c_acctbal"))
       val g = t(s, dir, "customer")
         .select(col("c_mktsegment").as("seg"), v.as("v"),
           v.cast("decimal(18,0)").as("vd"))
@@ -1434,8 +1402,8 @@ object Stats {
       a.join(broadcast(b), col("seg_a") < col("seg_b"))
         .crossJoin(broadcast(msw))
         .select(col("seg_a"), col("seg_b"),
-          r2c(col("ma") / 100.0).as("mean_a"), r2c(col("mb") / 100.0).as("mean_b"),
-          r2c((col("ma") - col("mb")) / 100.0).as("mean_diff"),
+          r2(col("ma") / 100.0).as("mean_a"), r2(col("mb") / 100.0).as("mean_b"),
+          r2((col("ma") - col("mb")) / 100.0).as("mean_diff"),
           r4(qStat).as("q_stat"),
           // coalesce 0: an abstained (NULL) q must read not-significant on
           // both engines (the oracle's CASE already falls to ELSE 0)
@@ -1564,8 +1532,7 @@ object Stats {
     // pinned anchor), one bounded aggregate — no single-partition Window
     // (the r9 swap-in, now code).
     "q_kendall_w" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(cents).as("m"), count(lit(1)).as("f"),
@@ -1610,7 +1577,7 @@ object Stats {
     // user-keyed shuffle; each SMD is a closed-form float and the flag
     // compares the r6-rounded value so it cannot flip cross-engine.
     "q_covariate_balance" -> ((s, dir) => {
-      val cents = floor(col("value") * lit(100.0) + lit(0.500001)).cast("long")
+      val cents = ColumnOps.cents(col("value"))
       val byUser = t(s, dir, "events").groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_ev"),
           sum((col("event_type") === "purchase").cast("long")).as("n_pur"),
@@ -1704,8 +1671,8 @@ object Stats {
       val se = sqrt(varHat)
       val ok = col("m") > 0L
       g.select(col("n_true"), col("n1"), col("n2"), col("m"),
-        when(ok, r2c(nHat)).as("n_hat"),
-        when(ok, r2c(se)).as("se"),
+        when(ok, r2(nHat)).as("n_hat"),
+        when(ok, r2(se)).as("se"),
         coalesce((when(ok, abs(nHat - col("n_true").cast("double"))) <=
           lit(1.959963984540054) * se).cast("long"), lit(0L))
           .as("covers_truth"))
@@ -1724,7 +1691,7 @@ object Stats {
     // closed-form float over exact integers. One user-keyed shuffle; the
     // totals attach as a broadcast 1-row aggregate.
     "q_jackknife" -> ((s, dir) => {
-      val cents = floor(col("value") * lit(100.0) + lit(0.500001)).cast("long")
+      val cents = ColumnOps.cents(col("value"))
       val byUser = t(s, dir, "events").groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", cents)
           .otherwise(0L)).as("x"),
@@ -1771,8 +1738,7 @@ object Stats {
     "q_group_sequential" -> ((s, dir) => {
       val cuts = Seq("2024-01-07", "2024-01-13", "2024-01-19", "2024-01-25")
       val bounds = Seq(4.877, 3.357, 2.680, 2.290, 2.031)
-      val cents = floor(col("value") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("value"))
       val lookIdx = cuts.zipWithIndex.foldRight(lit(5L)) {
         case ((d, i), rest) =>
           when(to_date(col("ts")) < lit(d).cast("date"), (i + 1).toLong)
@@ -1835,8 +1801,7 @@ object Stats {
     // count broadcasts back from a 1-row aggregate — no single-partition
     // Window (the r9 swap-in, now code).
     "q_trimmed_mean" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(cents).as("m"))
@@ -1863,11 +1828,11 @@ object Stats {
       val winsSumG = col("sum_trim") + col("lo_cut") * (loG - 1L) +
         col("hi_cut") * (col("n_customers") - hiG)
       g.select(col("n_customers"), col("n_trim"),
-        r2c(col("sum_all").cast("double") / col("n_customers") / lit(100.0))
+        r2(col("sum_all").cast("double") / col("n_customers") / lit(100.0))
           .as("raw_mean"),
-        r2c(col("sum_trim").cast("double") / col("n_trim") / lit(100.0))
+        r2(col("sum_trim").cast("double") / col("n_trim") / lit(100.0))
           .as("trimmed_mean"),
-        r2c(winsSumG.cast("double") / col("n_customers") / lit(100.0))
+        r2(winsSumG.cast("double") / col("n_customers") / lit(100.0))
           .as("winsorized_mean"))
     }),
 
@@ -1886,7 +1851,7 @@ object Stats {
     // q_ab_ttest unit-of-randomization discipline.
     "q_delta_method" -> ((s, dir) => {
       val ev = t(s, dir, "events")
-      val cents = floor(col("value") * lit(100.0) + lit(0.500001)).cast("long")
+      val cents = ColumnOps.cents(col("value"))
       val byUser = ev.groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", cents)
           .otherwise(0L)).as("x"),
@@ -1954,8 +1919,7 @@ object Stats {
     // the χ²₂ 95% line (5.991) on the ROUNDED d² so it cannot flip
     // cross-engine. Top-20 by (d², custkey) keeps output bounded.
     "q_mahalanobis" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(count(lit(1)).as("f"), sum(cents).as("m"))
@@ -2084,8 +2048,7 @@ object Stats {
     // Ties break by custkey identically on both engines (documented
     // operator convention; spend cents make real ties rare).
     "q_cramer_von_mises" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val per = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(cents).as("v"))
@@ -2402,8 +2365,7 @@ object Stats {
     // Differences are exact integer cents; percentile's midpoint
     // interpolation is an exactly-representable .5 average of two ints.
     "q_hodges_lehmann" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2418,7 +2380,7 @@ object Stats {
           expr("percentile(d, 0.5)").as("hl"))
         .crossJoin(broadcast(counts))
         .select(col("n_a"), col("n_b"), col("n_pairs"),
-          r2c(col("hl") / lit(100.0)).as("hl_shift_dollars"))
+          r2(col("hl") / lit(100.0)).as("hl_shift_dollars"))
     }),
 
     // ---- distance correlation (r11) ---------------------------------------
@@ -2436,8 +2398,7 @@ object Stats {
     // Abstains (NULL) when either marginal distance variance is zero
     // (constant series / single day).
     "q_dcor" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("x"), count(lit(1)).as("y"))
@@ -2601,8 +2562,7 @@ object Stats {
     // micro-units first. τ² = 0 (homogeneous groups) collapses every
     // estimate to the grand mean — the honest degenerate answer.
     "q_eb_shrinkage" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val cells = t(s, dir, "orders")
         .select(col("o_orderpriority").as("prio"), cents.as("v"),
           cents.cast("decimal(19,0)").as("vd"))
@@ -2625,10 +2585,10 @@ object Stats {
       // shrink weight
       val tot = tot0
         .withColumn("ssw_t",
-          graft.functions.ColumnOps.toDec38(graft.functions.ColumnOps.floorD(
+          ColumnOps.toDec38(ColumnOps.floorD(
             d(col("ssq")) - d(col("sv")) * d(col("sv")) / d(col("n")))))
         .withColumn("sbm_t",
-          graft.functions.ColumnOps.toDec38(graft.functions.ColumnOps.floorD(
+          ColumnOps.toDec38(ColumnOps.floorD(
             d(col("n")) * (d(col("sv")) / d(col("n")) - gm)
             * (d(col("sv")) / d(col("n")) - gm))))
         .withColumn("ssw", sum(col("ssw_t")).over(wAll))
@@ -2642,8 +2602,8 @@ object Stats {
       val b = try_divide(sigw / d(col("n")), sigw / d(col("n")) + tau2)
       val shrunk = m + (lit(1.0) - coalesce(b, lit(1.0))) * (mj - m)
       tot.select(col("prio"), col("n"),
-          r2c(mj / 100.0).as("raw_mean_dollars"),
-          r2c(shrunk / 100.0).as("shrunk_mean_dollars"),
+          r2(mj / 100.0).as("raw_mean_dollars"),
+          r2(shrunk / 100.0).as("shrunk_mean_dollars"),
           r6(coalesce(b, lit(1.0))).as("shrink_weight"),
           r6(tau2 / 10000.0).as("tau2_dollars2"))
         .orderBy("prio")
@@ -2711,8 +2671,7 @@ object Stats {
     // linkPrediction discipline). Weekday = (day − 1995-01-01) mod 7 —
     // engine-neutral, no locale. Reject line: χ²₀.₀₅,₆ = 12.591587243744.
     "q_kruskal_wallis" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2760,8 +2719,7 @@ object Stats {
     // Σ R_j² accumulation is order-independent with no quantization;
     // χ²_F = 12/(bk(k+1))·ΣR_j² − 3b(k+1) vs the same χ²₀.₀₅,₆ line.
     "q_friedman" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2805,8 +2763,7 @@ object Stats {
     // the predicted order up to reversal). One shuffle to the daily
     // frame; everything after lives on the ≤7-row weekday frame.
     "q_page_trend" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2837,7 +2794,7 @@ object Stats {
       val ok = col("b") >= 2L && col("k") >= 3L
       val z = when(ok, (col("l") - el) / sqrt(vl))
       g.select(col("b").as("n_weeks"), col("k").as("k_days"),
-        r2c(col("l")).as("l_stat"), r2c(el).as("l_expected"),
+        r2(col("l")).as("l_stat"), r2(el).as("l_expected"),
         r6(z).as("z_stat"),
         coalesce((abs(r6(z)) > lit(1.959963984540054)).cast("long"),
           lit(0L)).as("reject_95"))
@@ -2853,8 +2810,7 @@ object Stats {
     // labels cut on the r6-ROUNDED |δ| so a 1-ulp difference cannot
     // relabel.
     "q_cliffs_delta" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2888,8 +2844,7 @@ object Stats {
     // micro-units before the 14-cell sum; E = 0 abstains via try_divide
     // (≡ DuckDB /). Same χ²₀.₀₅,₆ reject line.
     "q_mood_median" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2937,8 +2892,7 @@ object Stats {
     // ints. Work is pairs × K ≈ 366·200 rows — calendar-bounded.
     "q_permutation_test" -> ((s, dir) => {
       val K = 200
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2961,7 +2915,7 @@ object Stats {
           count(lit(1)).as("k_perms"),
           sum((abs(col("sp")) >= abs(col("s_obs"))).cast("long")).as("exceed"))
       pv.select(col("n_pairs"), col("k_perms"),
-        r2c(col("s_obs").cast("double") / col("n_pairs").cast("double")
+        r2(col("s_obs").cast("double") / col("n_pairs").cast("double")
           / 100.0).as("mean_diff_dollars"),
         r6((col("exceed") + 1L).cast("double") /
           (col("k_perms") + 1L).cast("double")).as("p_value"),
@@ -2981,8 +2935,7 @@ object Stats {
     // asymptotic χ²₂-based 5% line (3.0 for large N, documented). The
     // md5 arms make it an A/A: the honest expected answer is no reject.
     "q_hotelling" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(count(lit(1)).as("f"), sum(cents).as("m"))
@@ -3028,7 +2981,7 @@ object Stats {
       val t2 = naD * nbD / nD * quad
       val fStat = (nD - 3) / (lit(2.0) * (nD - 2)) * t2
       gagg.select(col("na").as("n_a"), col("nb").as("n_b"),
-        r6(df0).as("diff_orders"), r2c(dm0 / 100.0).as("diff_spend"),
+        r6(df0).as("diff_orders"), r2(dm0 / 100.0).as("diff_spend"),
         r6(t2).as("t2"), r6(fStat).as("f_stat"),
         coalesce((r6(fStat) > lit(3.0)).cast("long"), lit(0L))
           .as("reject_05"))
@@ -3043,8 +2996,7 @@ object Stats {
     // s² > 0 (§2.13 — DuckDB's LN hard-errors at 0); the ≤5-cell ln sum
     // follows the q_chi_square small-frame precedent.
     "q_bartlett" -> ((s, dir) => {
-      val v = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val v = ColumnOps.cents(col("o_totalprice"))
       val cells = t(s, dir, "orders")
         .groupBy(col("o_orderpriority").as("prio"))
         .agg(count(lit(1)).as("ni"), sum(v).as("si"),
@@ -3157,8 +3109,7 @@ object Stats {
     // against 0.787, compared on the ROUNDED value. (On TPC-H-ish spend
     // the honest answer is a rejection — spend is right-skewed.)
     "q_anderson_darling" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val feats = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("custkey"))
         .agg(sum(cents).as("x"))
@@ -3197,8 +3148,8 @@ object Stats {
       val a2m = a2 * (lit(1.0) + lit(0.75) / gnD +
         lit(2.25) / (gnD * gnD))
       g.select(col("n").as("n_customers"),
-        r2c(col("mu") / 100.0).as("mean_spend"),
-        r2c(col("sd") / 100.0).as("sd_spend"),
+        r2(col("mu") / 100.0).as("mean_spend"),
+        r2(col("sd") / 100.0).as("sd_spend"),
         r6(a2).as("a2"), r6(a2m).as("a2_mod"),
         coalesce((r6(a2m) > lit(0.787)).cast("long"), lit(0L))
           .as("reject_05"))

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources
+import graft.io.Sources.{table => t}
+import graft.functions.ColumnOps
+import graft.functions.ColumnOps.{r2, r4, r6}
 
 /** Time-series analytics family: exponential smoothing over the daily
   * revenue series, time-range window frames over the event log, and
@@ -13,21 +15,6 @@ import graft.io.Sources
   * firewall is the static cousin of the outlier check).
   */
 object Timeseries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Sources.table(s, dir, name)
-
-  private def r2(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(100.0) + lit(0.500001)) / lit(100.0)
-
-  private def r4(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
-
-  private def r6(c: Column): Column =
-    graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
 
   /** Gumbel method-of-moments constants (q_gumbel_max), computed ONCE here
     * and embedded as the SAME double literals in both the Spark plan and
@@ -157,8 +144,7 @@ object Timeseries {
     // α=0.2/β=0.1 arithmetic, so level/trend agree bit-for-bit before the
     // one rounding. Forecasts are the linear extrapolation level + h·trend.
     "q_holt_trend" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(datediff(to_date(col("o_orderdate")),
           lit("1995-01-01").cast("date")).as("x"))
@@ -281,8 +267,7 @@ object Timeseries {
     // continuity-corrected z = (S ∓ 1)/√Var. S and every variance term
     // are exact BIGINTs; z is one closed-form float both engines replay.
     "q_mann_kendall" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -320,8 +305,7 @@ object Timeseries {
     // invariant, and S plus every variance term stay exact BIGINT; z is
     // the same continuity-corrected closed float.
     "q_mk_seasonal" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -368,8 +352,7 @@ object Timeseries {
     // Bartels' exact H0 variance is a closed form of N. Both windows run
     // over the calendar-bounded daily frame.
     "q_bartels_rank" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -422,8 +405,7 @@ object Timeseries {
     // compose of exact integers. Degenerate frames (< 12 blocks, zero
     // variance) abstain NULL.
     "q_gumbel_max" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val blocks = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -464,8 +446,7 @@ object Timeseries {
     // subexpression inside the trend/seasonal updates is the SAME ops on
     // both sides, so parity is structural; r4/r6 absorb nothing but ulps.
     "q_holt_winters" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(datediff(to_date(col("o_orderdate")),
           lit("1995-01-01").cast("date")).as("x"))
@@ -650,7 +631,7 @@ object Timeseries {
     // division and the median midpoint — deterministic single ops, no
     // summation-order drift anywhere.
     "q_seasonal_decompose" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001)).cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -680,8 +661,7 @@ object Timeseries {
     // ≤14-row calibration frame, exact BIGINT everything; the one float
     // is the coverage share.
     "q_conformal_forecast" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -730,8 +710,7 @@ object Timeseries {
     // are exact BIGINT/decimal-38 moment algebra and each strength is a
     // closed-form float over exact integers.
     "q_seasonal_strength" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -782,7 +761,7 @@ object Timeseries {
     // q_corr_stats precedent). Everything after the daily aggregate
     // rides windows on the calendar-bounded frame.
     "q_changepoint" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001)).cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -818,8 +797,7 @@ object Timeseries {
     // significance p ≈ 2·exp(−6K²/(n³+n²)) (Pettitt's approximation,
     // clamped to 1) and its 5% flag on the ROUNDED p.
     "q_pettitt" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -862,8 +840,7 @@ object Timeseries {
     // neighbour is not an extremum); z is one closed-form float, n < 3
     // abstains NULL.
     "q_turning_points" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -920,8 +897,7 @@ object Timeseries {
     // engines run the identical final float sequence. Denominator is the
     // full-series Σ(r−m)² (the standard ACF normalization).
     "q_acf" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -970,8 +946,7 @@ object Timeseries {
     // after it with NULL on both engines (NULL arithmetic propagates
     // identically through the recursion).
     "q_pacf" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1052,8 +1027,7 @@ object Timeseries {
     // (constant series, < q+1 days) abstain NULL.
     "q_variance_ratio" -> ((s, dir) => {
       val q = 5
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1096,8 +1070,7 @@ object Timeseries {
     // sequence identical cross-engine; the clip censuses are exact
     // BIGINTs off strict comparisons against the fence literals.
     "q_winsorize" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1141,8 +1114,7 @@ object Timeseries {
     // Σ|naive-1 error| is BIGINT-exact, so every output float is a single
     // division over exact integers — no accumulation order exists.
     "q_forecast" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1184,8 +1156,7 @@ object Timeseries {
     // only float per row is ONE division over exact integers, so the hash
     // oracle is exact.
     "q_drawdown" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1266,8 +1237,7 @@ object Timeseries {
     // both window passes and all aggregates live on ≤ 4×|days| rows —
     // bounded by the CALENDAR, not the corpus.
     "q_hurst" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1341,8 +1311,7 @@ object Timeseries {
     // division + sqrt over two exact integers. Revenue cents are > 0 on
     // any observed day, so the relative denominators are safe.
     "q_theil_u" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1386,8 +1355,7 @@ object Timeseries {
     // q_changepoint structural-parity discipline — identical float
     // sequence, no reordering to diverge).
     "q_page_hinkley" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg((sum(cents).cast("double") / lit(1000000.0)).as("x"))
@@ -1424,8 +1392,7 @@ object Timeseries {
     // pass, one global aggregate.
     "q_ljung_box" -> ((s, dir) => {
       val h = 7
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1476,8 +1443,7 @@ object Timeseries {
     // Standard tuning k = 0.5σ slack, h = 5σ alarm; top 10 days by the
     // r6-ROUNDED two-sided statistic with a day tie-break.
     "q_cusum" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1530,8 +1496,7 @@ object Timeseries {
     // (<2-day) calendar. One shuffle to the calendar-bounded daily frame;
     // the moment row broadcasts back.
     "q_durbin_watson" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1557,12 +1522,12 @@ object Timeseries {
             col("b") * col("tt").cast("double"))
         .withColumn("d", col("e") - lag(col("e"), 1).over(w))
       val terms = resid.select(col("n"), col("b"),
-        graft.functions.ColumnOps.toDec38(
-          graft.functions.ColumnOps.floorD(col("e") * col("e") + lit(0.500001)))
+        ColumnOps.toDec38(
+          ColumnOps.floorD(col("e") * col("e") + lit(0.500001)))
           .as("den_t"),
         when(col("d").isNotNull,
-          graft.functions.ColumnOps.toDec38(
-          graft.functions.ColumnOps.floorD(col("d") * col("d") + lit(0.500001))))
+          ColumnOps.toDec38(
+          ColumnOps.floorD(col("d") * col("d") + lit(0.500001))))
           .as("num_t"))
       val g = terms.groupBy(col("n"), col("b"))
         .agg(sum(col("num_t")).as("num"), sum(col("den_t")).as("den"))
@@ -1591,8 +1556,7 @@ object Timeseries {
     // to-rounded so it cannot flip cross-engine. Degenerate frames
     // (n ≤ 2, flat calendar) drop to empty output identically.
     "q_cooks_distance" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1618,8 +1582,8 @@ object Timeseries {
           col("rev").cast("double") - col("a") -
             col("b") * col("tt").cast("double"))
         .withColumn("u",
-          graft.functions.ColumnOps.toDec38(
-          graft.functions.ColumnOps.floorD(col("e") * col("e") + lit(0.500001))))
+          ColumnOps.toDec38(
+          ColumnOps.floorD(col("e") * col("e") + lit(0.500001))))
       val rss = resid.agg(sum(col("u")).as("rss_q"))
       val dt = col("tt").cast("double") - col("tbar")
       val full = resid.crossJoin(broadcast(rss))
@@ -1657,8 +1621,7 @@ object Timeseries {
     // form float of those exact moments. Degenerate frames (flat u,
     // flat t) abstain NULL via the variance guards (§2.13).
     "q_breusch_pagan" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1682,8 +1645,8 @@ object Timeseries {
           col("rev").cast("double") - col("a") -
             col("b") * col("tt").cast("double"))
         .withColumn("u",
-          graft.functions.ColumnOps.toDec38(
-          graft.functions.ColumnOps.floorD(col("e") * col("e") + lit(0.500001))))
+          ColumnOps.toDec38(
+          ColumnOps.floorD(col("e") * col("e") + lit(0.500001))))
         // Σu² overflows decimal(38,0) past ~sf0.5 (u ~ e² grows with the
         // SQUARE of daily volume — the round-13 sf1 run hit ANSI
         // ARITHMETIC_OVERFLOW here). Split u = uh·1e9 + ul and sum the
@@ -1732,8 +1695,7 @@ object Timeseries {
     // segments (n < 3, flat t, zero pooled RSS) abstain NULL. Also
     // reports the break's effect size (RSS reduction share).
     "q_chow" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -1802,8 +1764,7 @@ object Timeseries {
     // making every output a literal-order float compose of exact
     // integers. Degenerate sides (n < 3, flat t, zero RSS) abstain NULL.
     "q_rdd" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val cut = lit("1998-01-01").cast("date")
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -1882,8 +1843,7 @@ object Timeseries {
     // float sequence both engines). Net direction flags on the ROUNDED
     // pair so it cannot flip cross-engine.
     "q_transfer_entropy" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"), count(lit(1)).as("cnt"))
@@ -1954,8 +1914,7 @@ object Timeseries {
     // "Previous day" = previous OBSERVED day (row lag on the date-ordered
     // calendar frame), stated contract.
     "q_granger" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("y"), count(lit(1)).as("x"))
@@ -2010,8 +1969,7 @@ object Timeseries {
     // literal order. Shape: one shuffle to the daily frame, one global
     // aggregate carrying all 12 moment sums, three output rows.
     "q_periodogram" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("x"))
@@ -2060,8 +2018,7 @@ object Timeseries {
     // z abstains on a constant window via try_divide; ranking on the
     // r6-ROUNDED |z| with a day tie-break so the top-10 cut can't flip.
     "q_rolling_anomaly" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2105,8 +2062,7 @@ object Timeseries {
     // cents sums; symbol boundaries compare the r6-ROUNDED z so a 1-ulp
     // division difference cannot relabel a segment.
     "q_sax_symbols" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2148,8 +2104,7 @@ object Timeseries {
     // daily frame; z is a closed float sequence, degenerate one-sided
     // series abstain via try_divide.
     "q_runs_test" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2187,8 +2142,7 @@ object Timeseries {
     // critical −2.86 (Fuller 1976; reported as the documented constant,
     // not an engine computation). Degenerate constant series abstain.
     "q_dickey_fuller" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))
@@ -2239,8 +2193,7 @@ object Timeseries {
     // is a BoundedWindow; a constant series has B = 0 and abstains NULL on
     // both engines (predicate on the raw factor, the §2.13 discipline).
     "q_kpss" -> ((s, dir) => {
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))

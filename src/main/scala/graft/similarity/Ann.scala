@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import scala.util.Random
+import graft.functions.ColumnOps.r6
 
 /** Similarity search over an embedding column (`embeddings` table:
   * vec_id, embedding Array[Float], label).
@@ -750,9 +751,6 @@ object Ann {
     * cross-engine.
     */
   def lof(emb: DataFrame, maxId: Long, k: Int): DataFrame = {
-    def r6(c: Column): Column =
-      graft.functions.ColumnOps.floorD(
-    c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
     val s = emb.where(col("vec_id") < maxId)
       .select(col("vec_id"), col("embedding"),
         dot(col("embedding"), col("embedding")).as("sq"))

@@ -6,6 +6,7 @@ import graft.dedup.Dedup
 import graft.operators.LlmQueries
 import graft.similarity.Ann
 import org.apache.spark.sql.functions._
+import graft.functions.ColumnOps
 
 /** Scaling evidence for the dedup pipeline: runs minhash signatures +
   * banded candidates + exact verify at 1×/4×/16× corpus multiplicity and
@@ -34,8 +35,7 @@ object ScaleProbe {
     // Window. Run standalone: `runMain graft.tools.ScaleProbe <dir> ranks`.
     if (args.length > 1 && args(1) == "ranks") {
       val ord = Sources.table(spark, dir, "orders")
-      val cents0 = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents0 = ColumnOps.cents(col("o_totalprice"))
       graft.operators.Ranks.withPartitionedRank(
         ord.limit(2000).select(col("o_orderkey").as("ck"),
           col("o_orderstatus").as("seg"), cents0.as("v")),
@@ -757,8 +757,7 @@ object ScaleProbe {
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
       val nOrders = big.count()
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val t0 = System.nanoTime()
       val daily = big.groupBy(datediff(to_date(col("o_orderdate")),
           lit("1995-01-01").cast("date")).as("x"))
@@ -788,8 +787,7 @@ object ScaleProbe {
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
       val nOrders = big.count()
-      val cents = floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
-        .cast("long")
+      val cents = ColumnOps.cents(col("o_totalprice"))
       val t0 = System.nanoTime()
       val daily = big.groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(sum(cents).as("rev"))

@@ -84,6 +84,37 @@ class QueriesSmokeSpec extends SparkSpec {
       s"floorD mismatch: ${xs.zip(got).zip(want).filter(p => p._1._2 != p._2)}")
   }
 
+  test("r2/r4/r6/cents round half-up with the 1e-6 bias, exactly, at every magnitude") {
+    // reference: the same IEEE multiply-add the engines run, then an EXACT
+    // BigDecimal floor — ties, negatives, the |x·10^k| >= 4e18 floorD
+    // branch, and null propagation
+    import graft.functions.ColumnOps.{cents, r2, r4, r6}
+    import spark.implicits._
+    val xs = Seq(0.0, 2.345, -2.345, 0.125, -0.125, 1.005, -1.005, 99.995,
+      -0.0000005, 123.456789, -123.456789, 4.1e12, -4.1e12, 5.0e14, 4.1e16,
+      -4.1e16)
+    def floorExact(y: Double): java.math.BigDecimal =
+      new java.math.BigDecimal(y).setScale(0, java.math.RoundingMode.FLOOR)
+    def want(k: Int, x: Double): Double = {
+      val s = math.pow(10, k)
+      floorExact(x * s + 0.500001).doubleValue / s
+    }
+    val df = (xs.map(Option(_)) :+ None).toDF("x")
+    val rows = df.select(r2(col("x")), r4(col("x")), r6(col("x")),
+      cents(col("x"))).collect()
+    assert(rows.last.toSeq.forall(_ == null), s"null input: ${rows.last}")
+    xs.zip(rows).foreach { case (x, row) =>
+      assert(row.getDouble(0) == want(2, x), s"r2($x) = ${row.getDouble(0)}")
+      assert(row.getDouble(1) == want(4, x), s"r4($x) = ${row.getDouble(1)}")
+      assert(row.getDouble(2) == want(6, x), s"r6($x) = ${row.getDouble(2)}")
+      assert(row.getLong(3) == floorExact(x * 100.0 + 0.500001).longValueExact,
+        s"cents($x) = ${row.getLong(3)}")
+    }
+    // the ties land half-up, the negative one toward +inf
+    assert(rows(1).getDouble(0) == 2.35 && rows(2).getDouble(0) == -2.34)
+    assert(rows(1).getLong(3) == 235L && rows(2).getLong(3) == -234L)
+  }
+
   test("toDec38 is the EXACT decimal of an integer-valued double above 2^53") {
     // the second face of the r13 sf1 defect: Spark's Double→Decimal cast
     // goes through Double.toString (shortest round-trip), losing the low

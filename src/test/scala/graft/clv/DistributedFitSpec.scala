@@ -63,4 +63,59 @@ class DistributedFitSpec extends SparkSpec {
     val direct = BetaGeo.fitFeatures(feats, "frequency", "recency", "t")
     assert(math.abs(viaCap.r - direct.r) < 1e-4 * math.max(1.0, direct.r))
   }
+
+  test("fitModel honours its driver cap per model: both fits go distributed") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val returning = ClvModel.prepare(graft.operators.Rfm.customerFeatures(
+      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "orders"),
+      to_date(lit("2001-08-02")), "o_custkey", "o_orderdate", "o_totalprice"))
+      .filter(col("frequency") > 0 && col("monetary") > 0)
+      .cache()
+    // Spark jobs started while `body` runs. The Gamma-Gamma fit submits
+    // from a pool thread, so a thread-local job group would miss its jobs:
+    // count every job, and drain the asynchronous listener bus by waiting
+    // for a marker job submitted after `body` (events arrive in order).
+    def jobsIn[T](body: => T): (T, Int) = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (j.properties != null &&
+              j.properties.getProperty("spark.jobGroup.id") == "fit-cap-drain")
+            drained.countDown()
+          else jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        sc.setJobGroup("fit-cap-drain", "listener drain marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        (out, jobs.get())
+      } finally sc.removeSparkListener(listener)
+    }
+    try {
+      val (direct, nDirect) = jobsIn(ClvModel.fitModel(returning))
+      val (capped, nCapped) = jobsIn(ClvModel.fitModel(returning, maxDriverRows = 1))
+      // each model alone on its distributed path: one treeAggregate job
+      // per Nelder-Mead objective evaluation, hundreds per fit
+      val (_, nBg) = jobsIn(BetaGeo.fitFeatures(returning, "frequency", "recency", "t",
+        maxDriverRows = 1))
+      val (_, nGg) = jobsIn(GammaGamma.fitFeatures(returning, "frequency", "monetary",
+        maxDriverRows = 1))
+      val counts = s"jobs: direct $nDirect, capped $nCapped, BG/NBD alone $nBg, " +
+        s"Gamma-Gamma alone $nGg"
+      assert(nDirect <= 10 && nBg >= 100 && nGg >= 100, counts)
+      // the capped fitModel ran both distributed fits: each model's share
+      // shows up on top of the other's (run to run, a fit's job count moves
+      // by a few Nelder-Mead steps, never by half)
+      assert(nCapped - nBg >= nGg / 2 && nCapped - nGg >= nBg / 2, counts)
+      def close(a: Double, b: Double): Boolean = math.abs(a - b) < 1e-4 * math.max(1.0, b)
+      val pairs = Seq(capped.bg.r -> direct.bg.r, capped.bg.alpha -> direct.bg.alpha,
+        capped.bg.a -> direct.bg.a, capped.bg.b -> direct.bg.b,
+        capped.gg.p -> direct.gg.p, capped.gg.q -> direct.gg.q, capped.gg.v -> direct.gg.v)
+      assert(pairs.forall { case (a, b) => close(a, b) }, s"$capped vs $direct")
+    } finally returning.unpersist()
+  }
 }

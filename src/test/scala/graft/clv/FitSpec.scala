@@ -141,9 +141,18 @@ class FitSpec extends AnyFunSuite {
     assert(ggNorm(ggHeavy) < ggNorm(ggLight))
   }
 
+  private def quartic(x: Array[Double]): Double =
+    math.pow(x(0) - 3, 4) + math.pow(x(1) + 1, 2) + 5
+
   test("NelderMead minimizes a known quartic bowl") {
-    val sol = NelderMead.minimize(
-      x => math.pow(x(0) - 3, 4) + math.pow(x(1) + 1, 2) + 5, Array(0.0, 0.0))
+    val sol = NelderMead.minimize("quartic", quartic, Array(0.0, 0.0))
     assert(math.abs(sol(0) - 3) < 1e-2 && math.abs(sol(1) + 1) < 1e-3)
+  }
+
+  test("NelderMead fails loudly when it hits maxIter") {
+    val e = intercept[IllegalStateException](
+      NelderMead.minimize("quartic", quartic, Array(0.0, 0.0), maxIter = 3))
+    assert(e.getMessage.startsWith("quartic fit did not converge in 3 "), e.getMessage)
+    assert(e.getMessage.contains("x spread") && e.getMessage.contains("f spread"))
   }
 }
