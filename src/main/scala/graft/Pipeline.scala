@@ -30,7 +30,9 @@ object Pipeline {
 
   /** One daily run: generate a batch, append it, recompute features over the
     * FULL history (the reference is O(history) per run by design — SURVEY
-    * §4.1), validate, then score. Returns the scored frame.
+    * §4.1), validate, then score. Returns the scored frame, which is empty
+    * (and `predictedClv` left as it was) on a day with no returning
+    * customer.
     */
   def runDaily(spark: SparkSession, dirs: Dirs, windowStartUtc: String,
       asOfDate: String, seed: Long,
@@ -73,9 +75,15 @@ object Pipeline {
     Firewall.validateFeatures(staging, featuresOnDisk)
 
     // -- predict: CLV scoring, snapshot write (WRITE_TRUNCATE) -------------
-    val scored = ClvModel.runClvLogic(ClvModel.prepare(featuresOnDisk))
-    val out = ClvModel.outputColumns(scored)
-    Sources.overwriteParquet(out, dirs.predictedClv)
-    Sources.readSnapshot(spark, dirs.predictedClv)
+    // A day without a returning customer scores nothing and skips the
+    // write, so the previous snapshot, if any, stays live (reference:
+    // dags/clv_models.py:100–112 skips save_data on an empty frame).
+    val prepared = ClvModel.prepare(featuresOnDisk)
+    ClvModel.scoreReturning(prepared) match {
+      case Some(scored) =>
+        Sources.overwriteParquet(ClvModel.outputColumns(scored), dirs.predictedClv)
+        Sources.readSnapshot(spark, dirs.predictedClv)
+      case None => ClvModel.outputColumns(ClvModel.unscored(prepared))
+    }
   }
 }

@@ -22,7 +22,7 @@
   */
 package graft.clv
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 final case class FittedClvModel(bg: BetaGeoParams, gg: GammaGammaParams)
@@ -55,8 +55,18 @@ object ClvModel {
 
   /** The model brain (reference: dags/clv_models.py:39–84). Input must be
     * the prepared features frame; output is scored returning customers.
+    * A frame with no returning customer (every frequency 0, as on an
+    * all-new first day) fits nothing and scores to an empty frame; only an
+    * empty INPUT raises (reference: dags/clv_models.py:100–112).
     */
-  def runClvLogic(df: DataFrame, penalizer: Double = 0.1): DataFrame = {
+  def runClvLogic(df: DataFrame, penalizer: Double = 0.1): DataFrame =
+    scoreReturning(df, penalizer).getOrElse(unscored(df))
+
+  /** runClvLogic with the empty case explicit: None when no customer is
+    * returning, so a caller can skip save_data. Emptiness is read off the
+    * rows the fit collects anyway, so it costs no Spark action.
+    */
+  def scoreReturning(df: DataFrame, penalizer: Double = 0.1): Option[DataFrame] = {
     if (df.isEmpty)
       throw new IllegalArgumentException("INPUT ERROR: Dataframe is empty")
     if (df.columns.toSeq != expectedColumns)
@@ -71,9 +81,21 @@ object ClvModel {
       .withColumn("t", col("t").cast("double"))
       .withColumn("monetary", col("monetary").cast("double"))
 
-    val model = fitModel(returning, penalizer)
-    score(returning, model)
+    val rows = sufficientStats(returning, MaxDriverRows)
+    if (rows.isEmpty) None
+    else Some(score(returning, fitCollected(rows, returning, penalizer, MaxDriverRows)))
   }
+
+  /** The scored schema with no rows: `limit(0)` plans as an empty relation,
+    * so nothing is scanned.
+    */
+  private[graft] def unscored(df: DataFrame): DataFrame =
+    applyDataQualityFixes(df.limit(0)
+      .withColumn("predicted_purchases", lit(0.0))
+      .withColumn("predicted_avg_value", lit(0.0))
+      .withColumn("clv", lit(0.0)))
+
+  private val MaxDriverRows = 2000000L
 
   /** M1 + M2: fit both models on the returning-customer slice.
     *
@@ -86,7 +108,14 @@ object ClvModel {
     * under contention rather than data volume.
     */
   def fitModel(returning: DataFrame, penalizer: Double = 0.1,
-      maxDriverRows: Long = 2000000L): FittedClvModel = {
+      maxDriverRows: Long = MaxDriverRows): FittedClvModel =
+    fitCollected(sufficientStats(returning, maxDriverRows), returning, penalizer,
+      maxDriverRows)
+
+  /** The one grouping-sets collect behind [[fitModel]]: BG/NBD rows carry
+    * gid 1, Gamma-Gamma rows gid 6; empty exactly when `returning` is.
+    */
+  private def sufficientStats(returning: DataFrame, maxDriverRows: Long): Array[Row] = {
     val proj = returning.select(
       col("frequency").cast("double").as("x"),
       col("recency").cast("double").as("tx"),
@@ -101,8 +130,12 @@ object ClvModel {
     // sorted collect: deterministic FP summation order (bit-reproducible
     // params); the limit doubles as the bounded-driver routing test — it
     // always reaches row maxDriverRows + 1 of whichever slice overflows
-    val rows = gs.sort("gid", "x", "tx", "big", "m")
+    gs.sort("gid", "x", "tx", "big", "m")
       .limit(2 * maxDriverRows.toInt + 2).collect()
+  }
+
+  private def fitCollected(rows: Array[Row], returning: DataFrame, penalizer: Double,
+      maxDriverRows: Long): FittedClvModel = {
     val (bgRows, ggRows) = rows.partition(_.getLong(5) == 1L)
     // The two models are independent; overlap them on two threads — the
     // Gamma-Gamma loop rides a Future while this thread runs BG/NBD —

@@ -112,6 +112,9 @@ object Dedup {
     * documents sharing a (band_id, band_hash) bucket. Probability a pair
     * with Jaccard s becomes a candidate: 1 − (1 − s^rows)^bands.
     * `bucketCap` bounds per-bucket membership (see [[capBuckets]]).
+    * Precondition: `doc_id` is unique in `signatures`. A duplicated id
+    * matches every one of its rows in both signature attaches, so each of
+    * its pairs fans out once per row combination.
     */
   def minhashCandidates(signatures: DataFrame, bands: Int = 16, numHashes: Int = 64,
       bucketCap: Int = 10000, attachHint: String = "SHUFFLE_HASH"): DataFrame = {
@@ -288,7 +291,8 @@ object Dedup {
     // row on that bound is SOUND under the trailing distinct: a
     // qualifying pair always survives via its first-shared-token row
     // (later rows may fail the bound, but one survivor keeps the pair).
-    // Measured at sf0.1 (t=0.8, k=3; tools/PpjoinProbe): candidate pairs
+    // Measured at sf0.1 (t=0.8, k=3;
+    // PpjoinProbe, deleted, last held at cdb9a9a): candidate pairs
     // 43,440 → 12,804 (−70.5%) before the exact-verify join.
     val alpha = ceil(lit(threshold / (1.0 + threshold)) *
       (col("len_a") + col("len_b")))

@@ -30,23 +30,37 @@ object Sources {
     * `read.parquet(path)` runs a footer-read JOB per call to infer the
     * schema — ~30 ms of pure driver/scheduler overhead that every query
     * paid once per table it touches (a 5-table star query paid five).
-    * Corpus table schemas are immutable within a JVM (paths are versioned
-    * test fixtures or generated SF dirs; appends never change a schema),
-    * so the STRUCTTYPE — metadata only, never data or results — is memoized
-    * per path and handed to the reader, which then skips the inference job.
-    * Every scan still reads the parquet data itself on every invocation.
+    * The STRUCTTYPE — metadata only, never data or results — is memoized
+    * per path together with the path's file signature, and handed to the
+    * reader, which then skips the inference job. A path rewritten in place
+    * changes its signature, so it is inferred again rather than read with
+    * a stale schema. Every scan still reads the parquet data itself on
+    * every invocation.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
 
   private def readTable(spark: SparkSession, path: String): DataFrame = {
+    val sig = fileSignature(spark, path)
     val cached = schemaMemo.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
+    if (cached != null && cached._1 == sig) spark.read.schema(cached._2).parquet(path)
     else {
       val df = spark.read.parquet(path)
-      if (schemaMemo.size < 256) schemaMemo.put(path, df.schema)
+      if (cached != null || schemaMemo.size < 256) schemaMemo.put(path, (sig, df.schema))
       df
     }
+  }
+
+  /** (name, length, modification time) of the file, or of every entry of
+    * a dataset directory — a rewrite renames the part files. One
+    * file-system listing, no Spark job; a missing path lists as empty, so
+    * its read fails in Spark exactly as before.
+    */
+  private def fileSignature(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -357,7 +357,7 @@ object Curation {
     // Jaccard here is the oracle ANCHOR (it costs a corpus-wide distinct —
     // exactly what the sketch path exists to avoid); contract: |est −
     // exact| ≤ 0.25, measured err 0.023/0.005/0.079 at sf0.001/0.01/0.1
-    // vs 64-lane σ≈0.05 (OverlapProbe).
+    // vs 64-lane σ≈0.05 (OverlapProbe, deleted; last held at cdb9a9a).
     "q_source_overlap" -> ((s, dir) => {
       val d = t(s, dir, "documents").where(col("source").isin("src0", "src1"))
       val est = d.select(col("source"),

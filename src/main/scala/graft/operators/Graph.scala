@@ -271,7 +271,7 @@ object Graph {
   /** Customer–part bipartite edge set (customer bought part), the input
     * to the butterfly census: one orderkey equi-join, distinct'd.
     */
-  def custPartEdges(orders: DataFrame, lineitem: DataFrame): DataFrame =
+  private def custPartEdges(orders: DataFrame, lineitem: DataFrame): DataFrame =
     orders.select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
       .join(lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("p")),
         Seq("ok"))
@@ -1293,8 +1293,10 @@ object Graph {
     // (guide §3.1, the pagerank rankHint discipline): Catalyst's estimate
     // read the persisted node-sized vectors as large and planned
     // sort-merge joins that re-shuffled + re-sorted the EDGE table every
-    // half-round. Broadcast the vector when it provably fits; beyond
-    // ~4M nodes, shuffled-hash — no sort, no broadcast cap.
+    // half-round. Broadcast the vector below ~4M nodes, shuffled-hash
+    // above — no sort, no broadcast cap. The gate reads
+    // approx_count_distinct (~5% relative error), so near the 4M boundary
+    // it can pick either side.
     val eObs = Observation()
     val e = edges.select(col("c"), col("p"))
       .observe(eObs, approx_count_distinct(col("c")).as("nc"),

@@ -51,42 +51,6 @@ object LlmQueries {
     docs.select("doc_id", "text", "lang", "source", "n_chars").unionByName(perturbed)
   }
 
-  /** q_kl_divergence's pipeline over an explicit documents frame — public
-    * so ScaleProbe can run the identical plan at multiplied corpus sizes
-    * (the measured-curve evidence that the one-shuffle + vocab-broadcast +
-    * per-source-window shape tracks the scan). See the q_kl_divergence
-    * scaladoc at the `queries` entry for semantics and float discipline.
-    */
-  def klDivergence(d: DataFrame): DataFrame = {
-    val counts = d
-      .select(col("source"),
-        explode(TextOps.tokens(lower(col("text")))).as("term"))
-      .where(length(col("term")) > 0)
-      .groupBy("source", "term").agg(count(lit(1)).as("f"))
-    val tm = counts.groupBy("term").agg(sum(col("f")).as("ft"))
-    val tot = tm.agg(sum(col("ft")).as("nn"))
-    val ns = counts.groupBy("source")
-      .agg(sum(col("f")).as("ntok"), count(lit(1)).as("nterms"))
-    val j = counts
-      .join(broadcast(tm), Seq("term"))
-      .join(broadcast(ns), Seq("source"))
-      .crossJoin(broadcast(tot))
-    val pd = col("f").cast("double") / col("ntok").cast("double")
-    val qd = col("ft").cast("double") / col("nn").cast("double")
-    val wS = Window.partitionBy(col("source")).orderBy(col("term"))
-    val wCum = wS.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val acc = j
-      .withColumn("rn", row_number().over(wS).cast("long"))
-      .withColumn("kl", sum(pd * log(pd / qd)).over(wCum))
-      .withColumn("cov", sum(col("ft")).over(wCum))
-    acc.where(col("rn") === col("nterms"))
-      .select(col("source"), col("nterms").as("n_terms"),
-        col("ntok").as("n_tokens"), r6(col("kl")).as("kl"),
-        r6(col("cov").cast("double") / col("nn").cast("double"))
-          .as("corpus_coverage"))
-      .orderBy("source")
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- text analysis (oracle-backed) ------------------------------------
@@ -690,8 +654,9 @@ object LlmQueries {
     // every planted pair must survive to the verified output (recall, the
     // SQL-expressible planted count), and the 64-lane minhash estimate
     // must track the exact Jaccard the verify step computes — max |est −
-    // exact| ≤ 0.30 ≈ 5σ of the lane-sampling noise (measured max 0.111–
-    // 0.164, avg 0.021 across SFs; RecallProbe). An estimator or shingle
+    // exact| ≤ 0.30 ≈ 5σ of the lane-sampling noise (measured max
+    // 0.111–0.164, avg 0.021 across SFs by
+    // RecallProbe, deleted, last held at cdb9a9a). An estimator or shingle
     // kernel regression breaks the band before it breaks recall.
     "q_ngram_jaccard" -> ((s, dir) => {
       val d = withPlantedNearDups(docs(s, dir))
@@ -724,8 +689,9 @@ object LlmQueries {
     // maxHamming=3 — 4×16-bit chunks, pigeonhole-exhaustive, buckets stay
     // fine-grained enough to prune at 100 TB (r2 ADVICE: radius 8 exceeded
     // the guarantee) — must recover ≥ 60% of the planted pairs (measured
-    // 0.744–0.784 across SFs by RecallProbe: dropping 2 of ~40 tokens
-    // flips a minority of the 64 majority-vote bits, usually ≤ 3). The
+    // 0.744–0.784 across SFs by RecallProbe, deleted, last held at cdb9a9a:
+    // dropping 2 of ~40 tokens flips a minority of the 64 majority-vote
+    // bits, usually ≤ 3). The
     // pair list is engine-specific; the planted count is not.
     "q_dedup_simhash" -> ((s, dir) => {
       val d = withPlantedNearDups(docs(s, dir))
@@ -1052,7 +1018,8 @@ object LlmQueries {
     // (see graft.similarity.Pca scaladoc — one Gram-matrix treeAggregate
     // pass, driver-local d×d Jacobi eigen, a second pass checking
     // Var(scoreᵢ) = λᵢ ON THE DATA, measured deviation ~1e-16 at all SFs).
-    // Floors from PcaProbe: evr1 0.0209–0.0289 and cum8 0.160–0.205
+    // Floors from PcaProbe (deleted; last held at cdb9a9a): evr1
+    // 0.0209–0.0289 and cum8 0.160–0.205
     // across sf0.001/0.01/0.1 — these synthetic embeddings are near-
     // isotropic (1/d = 0.0156 baseline), so the load-bearing flags are
     // projvar/ortho/monotone; the floors still trip on a degenerate
@@ -1065,7 +1032,8 @@ object LlmQueries {
     // quantization (Jégou 2011, the FAISS IVF-PQ compression half) at
     // m=16 subspaces × 32 codewords — 16 bytes/vec vs 256 raw (16×).
     // Recall@10 vs brute measured 0.42–0.52 across sf0.001/0.01/0.1
-    // (RecallProbe r8; these uniform synthetic embeddings are PQ's worst
+    // (RecallProbe r8, deleted, last held at cdb9a9a; these uniform
+    // synthetic embeddings are PQ's worst
     // case — no cluster structure for the codebooks to exploit), floor
     // 0.35 per the measured-min-minus-margin band rule (within 0.1 of
     // the worst SF, so a partial recall regression trips the gate).
@@ -1135,7 +1103,8 @@ object LlmQueries {
     // cells PRUNE (only nprobe=8 of 16 cells searched per probe, the
     // q_ann_ivf join geometry) and PQ codes COMPRESS (ranking on the
     // 16-byte reconstruction). Measured recall@10 0.39–0.51 across SFs
-    // (RecallProbe r8) — just under the PQ ceiling, as expected (pruning
+    // (RecallProbe r8, deleted, last held at cdb9a9a) — just under the
+    // PQ ceiling, as expected (pruning
     // can only lose candidates); floor 0.30, within 0.1 of the worst SF.
     "q_ann_ivfpq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
@@ -1268,7 +1237,35 @@ object LlmQueries {
     // sum rides a source-PARTITIONED term-ordered cumulative window
     // (identical float sequence cross-engine — every ln argument is a
     // ratio of exact BIGINTs), keep-last-row.
-    "q_kl_divergence" -> ((s, dir) => klDivergence(docs(s, dir))),
+    "q_kl_divergence" -> ((s, dir) => {
+      val counts = docs(s, dir)
+        .select(col("source"),
+          explode(TextOps.tokens(lower(col("text")))).as("term"))
+        .where(length(col("term")) > 0)
+        .groupBy("source", "term").agg(count(lit(1)).as("f"))
+      val tm = counts.groupBy("term").agg(sum(col("f")).as("ft"))
+      val tot = tm.agg(sum(col("ft")).as("nn"))
+      val ns = counts.groupBy("source")
+        .agg(sum(col("f")).as("ntok"), count(lit(1)).as("nterms"))
+      val j = counts
+        .join(broadcast(tm), Seq("term"))
+        .join(broadcast(ns), Seq("source"))
+        .crossJoin(broadcast(tot))
+      val pd = col("f").cast("double") / col("ntok").cast("double")
+      val qd = col("ft").cast("double") / col("nn").cast("double")
+      val wS = Window.partitionBy(col("source")).orderBy(col("term"))
+      val wCum = wS.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val acc = j
+        .withColumn("rn", row_number().over(wS).cast("long"))
+        .withColumn("kl", sum(pd * log(pd / qd)).over(wCum))
+        .withColumn("cov", sum(col("ft")).over(wCum))
+      acc.where(col("rn") === col("nterms"))
+        .select(col("source"), col("nterms").as("n_terms"),
+          col("ntok").as("n_tokens"), r6(col("kl")).as("kl"),
+          r6(col("cov").cast("double") / col("nn").cast("double"))
+            .as("corpus_coverage"))
+        .orderBy("source")
+    }),
 
     // ---- Yule's K characteristic per source (r11) --------------------------
     // The size-INVARIANT vocabulary-richness constant (Yule 1944) that
@@ -1367,7 +1364,8 @@ object LlmQueries {
     // buckets vs the exact pair set (SQL-expressible: all-pairs cosine at
     // the same threshold). bits MATCHES the threshold — cos 0.4 → hyperplane
     // collision p≈0.63, so 4 bits/table × 8 tables → ~0.75 recall (measured
-    // 0.729–0.770 by RecallProbe; 8 bits gave 0.15: a tuning bug the
+    // 0.729–0.770 by RecallProbe, deleted, last held at cdb9a9a; 8 bits
+    // gave 0.15: a tuning bug the
     // contract would now catch). Soundness is structural — LSH scores the
     // exact cosine before its threshold filter, so every reported pair is
     // in the exact set; sound_lsh pins that too.
@@ -4050,7 +4048,8 @@ object LlmQueries {
         |FROM j WHERE jaccard >= 0.5""".stripMargin,
 
     // same planted-pair pipeline, simhash contract (floor 0.6: measured
-    // 0.744–0.784 across SFs at maxHamming=3; see RecallProbe)
+    // 0.744–0.784 across SFs at maxHamming=3;
+    // RecallProbe, deleted, last held at cdb9a9a)
     "q_dedup_simhash" ->
       """WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents

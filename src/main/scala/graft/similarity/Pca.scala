@@ -174,7 +174,8 @@ object Pca {
     * (corpus-measured Var(scoreᵢ) within 1e-6·λ₁ of λᵢ — the on-data
     * check), plus the measured-floor flags for the leading/cumulative
     * explained-variance ratio (floors set from measurements at all three
-    * SFs, the RecallProbe discipline).
+    * SFs, the measured-min-minus-margin rule of
+    * RecallProbe, deleted, last held at cdb9a9a).
     */
   def pcaContract(spark: SparkSession, emb: DataFrame, vecCol: String, k: Int,
       evr1Floor: Double, cumFloor: Double): DataFrame = {

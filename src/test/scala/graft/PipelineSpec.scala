@@ -8,9 +8,11 @@ import java.nio.file.Files
 /** End-to-end pipeline over the REAL reference corpus
   * (CSV files under /root/reference/data — 22 daily files, 35,041 data rows, 400
   * customers, including the three float-formatted-CustomerID files and
-  * nanosecond timestamps; SURVEY §1.4) plus the generator-fed daily run.
+  * nanosecond timestamps; SURVEY §1.4), over a seeded in-repo corpus with
+  * the same quirks, plus the generator-fed daily run.
   */
 class PipelineSpec extends SparkSpec {
+  import scala.jdk.CollectionConverters._
 
   private val corpus = "/root/reference/data/*.csv"
   // last corpus timestamp is 2026-01-23; pin the run date one day after
@@ -20,6 +22,88 @@ class PipelineSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_pipe").toString
     Pipeline.Dirs(s"$base/staging", s"$base/master_users",
       s"$base/features", s"$base/predicted_clv")
+  }
+
+  /** A seeded four-day corpus shaped like the reference (SURVEY §1.4): one
+    * CSV file per Generate.dailyBatch day, float-formatted CustomerIDs
+    * ("17.0") in the odd days' files, and timestamps written as
+    * `yyyy-MM-dd HH:mm:ss.SSSSSSSSS` strings with a nanosecond fraction.
+    * Returns (glob, data rows, run date).
+    */
+  private lazy val seededCorpus: (String, Long, String) = {
+    val dir = Files.createTempDirectory("graft_corpus")
+    val secs = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+      .withZone(java.time.ZoneOffset.UTC)
+    var maxId = 0L
+    var rows = 0L
+    (0 until 4).foreach { day =>
+      val (batch, newIds) = graft.sim.Generate.dailyBatch(spark, maxId,
+        s"2026-01-${20 + day} 00:00:00", seed = 40L + day)
+      val lines = batch.collect().toSeq.map { r =>
+        val id = r.getLong(0)
+        val nanos = (id * 7919L + r.getTimestamp(3).getTime) % 1000000000L
+        Seq(if (day % 2 == 1) s"$id.0" else id.toString, r.getInt(1), r.getDouble(2),
+          f"${secs.format(r.getTimestamp(3).toInstant)}.$nanos%09d", r.getDouble(4))
+          .mkString(",")
+      }
+      Files.write(dir.resolve(s"day_$day.csv"),
+        ("CustomerID,Quantity,UnitPrice,order_timestamp,TotalPurchase" +: lines).asJava)
+      maxId += newIds.count()
+      rows += lines.size
+    }
+    (s"$dir/*.csv", rows, "2026-01-24")
+  }
+
+  test("seeded corpus e2e: ingest absorbs the quirks → RFM → firewall → CLV scores written") {
+    val (glob, rows, runDate) = seededCorpus
+    val tx = Sources.referenceTransactionsCsv(spark, glob)
+    assert(tx.count() == rows)
+    assert(tx.where(col("order_timestamp").isNull).isEmpty, "ns timestamps must parse")
+    assert(tx.where(col("CustomerID").isNull).isEmpty, "float-formatted ids must cast")
+    val dirs = tmpDirs()
+    val scored = Pipeline.runOnCorpus(spark, glob, dirs, runDate)
+    val n = scored.count()
+    assert(n > 0L)
+    assert(scored.columns.toSeq == Seq("customer_id", "predicted_purchases",
+      "predicted_avg_value", "clv", "negatif_clv_flag", "outliners_flag"))
+    assert(scored.where(col("clv") < 0).isEmpty, "fixes floor negatives")
+    assert(Sources.readSnapshot(spark, dirs.predictedClv).count() == n)
+  }
+
+  test("seeded corpus: firewall genuinely blocks scoring on data loss (C1)") {
+    val (glob, _, runDate) = seededCorpus
+    val dirs = tmpDirs()
+    val staging = Sources.referenceTransactionsCsv(spark, glob)
+    Sources.overwriteParquet(staging, dirs.staging)
+    // poison the features snapshot: of ~240 customers keep ids ≤ 200
+    val feats = Rfm.customerFeatures(staging, to_date(lit(runDate)))
+      .where(col("customer_id") <= 200)
+    Sources.overwriteParquet(feats, dirs.features)
+    val e = intercept[IllegalArgumentException] {
+      graft.quality.Firewall.validateFeatures(staging,
+        Sources.readSnapshot(spark, dirs.features))
+    }
+    assert(e.getMessage.contains("DATA LOSS"))
+    assert(!Catalog.tableExists(spark, dirs.predictedClv))
+  }
+
+  test("day one without a returning customer scores nothing and writes no snapshot; day two scores") {
+    val dirs = tmpDirs()
+    // seed 11: no first-day session crosses midnight, so every customer
+    // has one purchase day (frequency 0)
+    val first = Pipeline.runDaily(spark, dirs, "2026-01-24 00:00:00", "2026-01-25", seed = 11)
+    val days = spark.read.parquet(dirs.staging).groupBy("CustomerID")
+      .agg(countDistinct(to_date(col("order_timestamp"))).as("days"))
+    assert(days.count() == 210L && days.where(col("days") >= 2).isEmpty,
+      "precondition: no customer with two purchase days")
+    assert(first.isEmpty)
+    assert(first.columns.toSeq == Seq("customer_id", "predicted_purchases",
+      "predicted_avg_value", "clv", "negatif_clv_flag", "outliners_flag"))
+    assert(!Catalog.tableExists(spark, dirs.predictedClv))
+    val second = Pipeline.runDaily(spark, dirs, "2026-01-25 00:00:00", "2026-01-26", seed = 12)
+    val n = second.count()
+    assert(n > 0L)
+    assert(Sources.readSnapshot(spark, dirs.predictedClv).count() == n)
   }
 
   test("corpus ingest absorbs the CSV quirks: 35,041 data rows, 400 customers, no null timestamps") {

@@ -91,10 +91,11 @@ class ClvModelSpec extends SparkSpec {
       StructField("first_purchase", StringType), StructField("last_purchase", StringType)))
     val oneShot = spark.createDataFrame(Seq(
       Row(1L, 0L, 150L, 0L, 50.0, "2025-01-01", "2025-01-01")).asJava, schema)
-    // fit would fail on an empty slice; reference behavior is that the
-    // filtered frame is empty and nothing is scored — mirror by checking
-    // the filter result rather than full scoring.
-    val returning = oneShot.filter(col("frequency") > 0 && col("monetary") > 0)
-    assert(returning.isEmpty)
+    val out = ClvModel.runClvLogic(oneShot)
+    assert(out.isEmpty)
+    assert(ClvModel.outputColumns(out).columns.toSeq == Seq("customer_id",
+      "predicted_purchases", "predicted_avg_value", "clv", "negatif_clv_flag",
+      "outliners_flag"))
+    assert(ClvModel.scoreReturning(oneShot).isEmpty, "nothing to fit, nothing to save")
   }
 }

@@ -65,36 +65,11 @@ class DistributedFitSpec extends SparkSpec {
   }
 
   test("fitModel honours its driver cap per model: both fits go distributed") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val returning = ClvModel.prepare(graft.operators.Rfm.customerFeatures(
       graft.io.Sources.table(spark, "/root/testdata/sf0.001", "orders"),
       to_date(lit("2001-08-02")), "o_custkey", "o_orderdate", "o_totalprice"))
       .filter(col("frequency") > 0 && col("monetary") > 0)
       .cache()
-    // Spark jobs started while `body` runs. The Gamma-Gamma fit submits
-    // from a pool thread, so a thread-local job group would miss its jobs:
-    // count every job, and drain the asynchronous listener bus by waiting
-    // for a marker job submitted after `body` (events arrive in order).
-    def jobsIn[T](body: => T): (T, Int) = {
-      val sc = spark.sparkContext
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (j.properties != null &&
-              j.properties.getProperty("spark.jobGroup.id") == "fit-cap-drain")
-            drained.countDown()
-          else jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        val out = body
-        sc.setJobGroup("fit-cap-drain", "listener drain marker")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        (out, jobs.get())
-      } finally sc.removeSparkListener(listener)
-    }
     try {
       val (direct, nDirect) = jobsIn(ClvModel.fitModel(returning))
       val (capped, nCapped) = jobsIn(ClvModel.fitModel(returning, maxDriverRows = 1))

@@ -3,9 +3,10 @@
 
 Usage: python3 tools/gen_sf.py <srcDir> <outDir> [mult]
 
-The growth modes mirror tools/ScaleProbe.scala's documented "what real
-corpus growth looks like" choices, so the scaled tables exercise the same
-plan shapes the measured 16x curves argue for:
+The growth modes mirror the "what real corpus growth looks like" choices
+of ScaleProbe (deleted; last held at cdb9a9a), so the scaled tables
+exercise the same plan shapes its measured 16x curves (SURVEY 2.x) argue
+for:
 
 - fact tables (orders, lineitem, events, customer) multiply as DISJOINT
   copies with offset keys (1e8 per copy -- clear of the runtime +1e6
