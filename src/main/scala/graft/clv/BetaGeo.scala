@@ -33,54 +33,30 @@ object BetaGeo {
     */
   final case class Obs(x: Double, tx: Double, big: Double, w: Double)
 
-  /** Unweighted log-likelihood of one observation (shared by the driver
-    * loop and the treeAggregate objective).
+  /** Σ w·ll and Σ w over obs[from, until) at the given log-params — the
+    * objective's one likelihood, run per driver chunk and per partition
+    * ([[fitDistributed]]). logGamma terms depend only on x, cached per
+    * distinct x (~10× on real feature tables); the cache is concurrent and
+    * its values pure functions of (x, params), so racing puts are idempotent.
     */
-  def llObs(r: Double, alpha: Double, a: Double, b: Double, o: Obs): Double = {
-    val x = o.x
-    val a1 = logGamma(r + x) - logGamma(r) + r * math.log(alpha)
-    val a2 = logGamma(a + b) + logGamma(b + x) - logGamma(b) - logGamma(a + b + x)
-    val a3 = -(r + x) * math.log(alpha + o.big)
-    if (x > 0) {
-      val a4 = math.log(a) - math.log(b + x - 1) - (r + x) * math.log(alpha + o.tx)
-      val m = math.max(a3, a4)
-      a1 + a2 + m + math.log(math.exp(a3 - m) + math.exp(a4 - m))
-    } else a1 + a2 + a3
-  }
-
-  /** Weighted penalized mean NLL — the exact objective lifetimes minimizes
-    * (log-params in, penalizer on the exponentiated params).
-    */
-  def negLogLikelihood(logParams: Array[Double], obs: Array[Obs], penalizer: Double): Double = {
+  private def llKernel(logParams: Array[Double]): (Array[Obs], Int, Int) => (Double, Double) = {
     val r = math.exp(logParams(0)); val alpha = math.exp(logParams(1))
     val a = math.exp(logParams(2)); val b = math.exp(logParams(3))
-    // the logGamma terms depend only on x (given params); frequencies are
-    // small integers, so caching per distinct x turns the per-observation
-    // cost into plain log arithmetic (~10× on real feature tables)
-    // concurrent: populated lazily from the parallel chunks below; values
-    // are pure functions of (x, params) so racing puts are idempotent
     val xCache = new java.util.concurrent.ConcurrentHashMap[Double, (Double, Double)]()
-    def xTerms(x: Double): (Double, Double) = {
-      val hit = xCache.get(x)
-      if (hit != null) hit
-      else {
-        val a1 = logGamma(r + x) - logGamma(r) + r * math.log(alpha)
-        val a2 = logGamma(a + b) + logGamma(b + x) - logGamma(b) - logGamma(a + b + x)
-        val v = (a1, a2)
-        xCache.put(x, v)
-        v
-      }
-    }
-    // fixed-boundary chunks summed in chunk order: parallel across cores yet
-    // bit-deterministic (FP addition order never varies between runs)
-    val partials = Optim.chunkedParallelSum(obs.length) { (from, until) =>
+    (obs, from, until) => {
       var llSum = 0.0
       var wSum = 0.0
       var i = from
       while (i < until) {
         val o = obs(i)
         val x = o.x
-        val (a1, a2) = xTerms(x)
+        var terms = xCache.get(x)
+        if (terms == null) {
+          terms = (logGamma(r + x) - logGamma(r) + r * math.log(alpha),
+            logGamma(a + b) + logGamma(b + x) - logGamma(b) - logGamma(a + b + x))
+          xCache.put(x, terms)
+        }
+        val (a1, a2) = terms
         val a3 = -(r + x) * math.log(alpha + o.big)
         val ll =
           if (x > 0) {
@@ -94,8 +70,15 @@ object BetaGeo {
       }
       (llSum, wSum)
     }
-    -partials._1 / partials._2 + penalizer * (r * r + alpha * alpha + a * a + b * b)
   }
+
+  /** Weighted penalized mean NLL — the exact objective lifetimes minimizes
+    * (log-params in, penalizer on the exponentiated params). Fixed-boundary
+    * chunks summed in chunk order: parallel across cores yet
+    * bit-deterministic (FP addition order never varies between runs).
+    */
+  def negLogLikelihood(logParams: Array[Double], obs: Array[Obs], penalizer: Double): Double =
+    Optim.penalizedMean(logParams, Optim.chunkedParallelSum(obs)(llKernel(logParams)), penalizer)
 
   /** Fit on pre-collected weighted observations (driver-side NM loop). */
   def fit(obs: Array[Obs], penalizer: Double = 0.1): BetaGeoParams = {
@@ -117,11 +100,11 @@ object BetaGeo {
     * weighted triples reach the driver. If the compressed cardinality still
     * exceeds `maxDriverRows` (degenerate day-grids at extreme scale), the
     * optimizer switches to the cluster-side objective — each Nelder–Mead
-    * evaluation becomes one `treeAggregate` over the cached triples instead
-    * of a driver loop, so driver memory stays O(1).
+    * evaluation becomes one Spark job over the cached triples instead of a
+    * driver loop, so driver memory stays O(1).
     */
   def fitFeatures(features: DataFrame, fCol: String, rCol: String, tCol: String,
-      penalizer: Double = 0.1, maxDriverRows: Long = 2000000L): BetaGeoParams = {
+      penalizer: Double = 0.1, maxDriverRows: Long = Optim.MaxDriverRows): BetaGeoParams = {
     val compressed = features
       .groupBy(col(fCol).cast("double").as("x"),
         col(rCol).cast("double").as("tx"),
@@ -138,8 +121,8 @@ object BetaGeo {
     else fitDistributed(compressed, penalizer)
   }
 
-  /** Cluster-side penalized MLE: the weighted-NLL sum runs as a
-    * `treeAggregate` per objective evaluation over the cached compressed
+  /** Cluster-side penalized MLE: each objective evaluation is one job that
+    * runs the driver's kernel once per partition of the cached compressed
     * triples. ~2 jobs per Nelder–Mead iteration on a small cached dataset —
     * the trade for unbounded input cardinality.
     */
@@ -148,14 +131,8 @@ object BetaGeo {
       .rdd.map(r => Obs(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def objective(logParams: Array[Double]): Double = {
-        val r = math.exp(logParams(0)); val alpha = math.exp(logParams(1))
-        val a = math.exp(logParams(2)); val b = math.exp(logParams(3))
-        val (llSum, wSum) = rdd.treeAggregate((0.0, 0.0))(
-          seqOp = { case ((ll, w), o) => (ll + o.w * llObs(r, alpha, a, b, o), w + o.w) },
-          combOp = { case ((l1, w1), (l2, w2)) => (l1 + l2, w1 + w2) })
-        -llSum / wSum + penalizer * (r * r + alpha * alpha + a * a + b * b)
-      }
+      def objective(logParams: Array[Double]): Double =
+        Optim.penalizedMean(logParams, Optim.partitionSum(rdd)(llKernel(logParams)), penalizer)
       val x0 = Array.fill(4)(0.1)
       require(java.lang.Double.isFinite(objective(x0)),
         "BG/NBD fitDistributed: non-finite objective at init")

@@ -81,9 +81,9 @@ object ClvModel {
       .withColumn("t", col("t").cast("double"))
       .withColumn("monetary", col("monetary").cast("double"))
 
-    val rows = sufficientStats(returning, MaxDriverRows)
+    val rows = sufficientStats(returning, Optim.MaxDriverRows)
     if (rows.isEmpty) None
-    else Some(score(returning, fitCollected(rows, returning, penalizer, MaxDriverRows)))
+    else Some(score(returning, fitCollected(rows, returning, penalizer, Optim.MaxDriverRows)))
   }
 
   /** The scored schema with no rows: `limit(0)` plans as an empty relation,
@@ -94,8 +94,6 @@ object ClvModel {
       .withColumn("predicted_purchases", lit(0.0))
       .withColumn("predicted_avg_value", lit(0.0))
       .withColumn("clv", lit(0.0)))
-
-  private val MaxDriverRows = 2000000L
 
   /** M1 + M2: fit both models on the returning-customer slice.
     *
@@ -108,7 +106,7 @@ object ClvModel {
     * under contention rather than data volume.
     */
   def fitModel(returning: DataFrame, penalizer: Double = 0.1,
-      maxDriverRows: Long = MaxDriverRows): FittedClvModel =
+      maxDriverRows: Long = Optim.MaxDriverRows): FittedClvModel =
     fitCollected(sufficientStats(returning, maxDriverRows), returning, penalizer,
       maxDriverRows)
 
@@ -130,8 +128,17 @@ object ClvModel {
     // sorted collect: deterministic FP summation order (bit-reproducible
     // params); the limit doubles as the bounded-driver routing test — it
     // always reaches row maxDriverRows + 1 of whichever slice overflows
-    gs.sort("gid", "x", "tx", "big", "m")
-      .limit(2 * maxDriverRows.toInt + 2).collect()
+    describedAs(returning, "clv.fit sufficient statistics")(
+      gs.sort("gid", "x", "tx", "big", "m").limit(2 * maxDriverRows.toInt + 2).collect())
+  }
+
+  /** Run `body` with this thread's Spark job description set to `desc` (names
+    * the fit's jobs to listeners), then restore it: pool threads are reused. */
+  private def describedAs[T](df: DataFrame, desc: String)(body: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   private def fitCollected(rows: Array[Row], returning: DataFrame, penalizer: Double,
@@ -147,13 +154,13 @@ object ClvModel {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     if (bgRows.length > maxDriverRows || ggRows.length > maxDriverRows) {
-      // degenerate compressed cardinality: per-model bounded/treeAggregate
+      // degenerate compressed cardinality: per-model bounded/distributed
       // routing (each fitFeatures re-compresses and caps independently;
       // their Spark jobs run concurrently from the two threads)
-      val ggF = Future(GammaGamma.fitFeatures(returning, "frequency", "monetary",
-        penalizer, maxDriverRows))
-      val bg = BetaGeo.fitFeatures(returning, "frequency", "recency", "t",
-        penalizer, maxDriverRows)
+      val ggF = Future(describedAs(returning, "clv.fit Gamma-Gamma")(GammaGamma.fitFeatures(
+        returning, "frequency", "monetary", penalizer, maxDriverRows)))
+      val bg = describedAs(returning, "clv.fit BG/NBD")(BetaGeo.fitFeatures(
+        returning, "frequency", "recency", "t", penalizer, maxDriverRows))
       FittedClvModel(bg, Await.result(ggF, Duration.Inf))
     } else {
       val bgObs = bgRows

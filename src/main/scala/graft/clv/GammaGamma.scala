@@ -9,9 +9,8 @@
   * monetary is continuous so exact triple-compression doesn't collapse as
   * hard. We still compress on distinct (frequency, monetary) pairs — exact,
   * and in practice 2-dp prices collapse heavily — and cap what reaches the
-  * driver; beyond the cap the objective would move to a per-iteration
-  * `treeAggregate` (documented, not needed at current scale ceilings since
-  * the features table is already one row per customer).
+  * driver; beyond the cap [[GammaGamma.fitDistributed]] runs the same
+  * objective as one Spark job per Nelder–Mead evaluation.
   */
 package graft.clv
 
@@ -26,35 +25,32 @@ object GammaGamma {
   /** weight = number of customers sharing the (frequency, monetary) pair. */
   final case class Obs(x: Double, m: Double, w: Double)
 
-  /** Weighted penalized mean NLL, log-params in (lifetimes' objective). */
-  def negLogLikelihood(logParams: Array[Double], obs: Array[Obs], penalizer: Double): Double = {
+  /** Σ w·ll and Σ w over `obs` slice [from, until) at the given log-params:
+    * the objective's one per-observation log-likelihood, shared by the
+    * driver's parallel chunks and [[fitDistributed]]'s partitions. The
+    * logGamma terms depend only on x (given params), cached per distinct
+    * frequency (see BetaGeo's kernel).
+    */
+  private def llKernel(logParams: Array[Double]): (Array[Obs], Int, Int) => (Double, Double) = {
     val p = math.exp(logParams(0)); val q = math.exp(logParams(1))
     val v = math.exp(logParams(2))
     val lgq = logGamma(q)
     val qlnv = q * math.log(v)
-    // logGamma terms depend only on x (given params) — cache per distinct
-    // frequency (see BetaGeo.negLogLikelihood)
-    // concurrent: populated lazily from the parallel chunks (see BetaGeo)
     val xCache = new java.util.concurrent.ConcurrentHashMap[Double, java.lang.Double]()
-    def xTerm(x: Double): Double = {
-      val hit = xCache.get(x)
-      if (hit != null) hit.doubleValue()
-      else {
-        val px = p * x
-        val t = logGamma(px + q) - logGamma(px) - lgq + px * math.log(x)
-        xCache.put(x, t)
-        t
-      }
-    }
-    // chunk-ordered parallel sum — deterministic, see BetaGeo
-    val partials = Optim.chunkedParallelSum(obs.length) { (from, until) =>
+    (obs, from, until) => {
       var llSum = 0.0
       var wSum = 0.0
       var i = from
       while (i < until) {
         val o = obs(i)
         val px = p * o.x
-        val ll = xTerm(o.x) + qlnv + (px - 1) * math.log(o.m) -
+        val hit = xCache.get(o.x)
+        val xTerm = if (hit != null) hit.doubleValue() else {
+          val t = logGamma(px + q) - logGamma(px) - lgq + px * math.log(o.x)
+          xCache.put(o.x, t)
+          t
+        }
+        val ll = xTerm + qlnv + (px - 1) * math.log(o.m) -
           (px + q) * math.log(v + o.m * o.x)
         llSum += o.w * ll
         wSum += o.w
@@ -62,8 +58,13 @@ object GammaGamma {
       }
       (llSum, wSum)
     }
-    -partials._1 / partials._2 + penalizer * (p * p + q * q + v * v)
   }
+
+  /** Weighted penalized mean NLL, log-params in (lifetimes' objective);
+    * chunk-ordered parallel sum — deterministic, see BetaGeo.
+    */
+  def negLogLikelihood(logParams: Array[Double], obs: Array[Obs], penalizer: Double): Double =
+    Optim.penalizedMean(logParams, Optim.chunkedParallelSum(obs)(llKernel(logParams)), penalizer)
 
   def fit(obs: Array[Obs], penalizer: Double = 0.1): GammaGammaParams = {
     require(obs.nonEmpty, "Gamma-Gamma fit needs at least one observation")
@@ -76,20 +77,12 @@ object GammaGamma {
     GammaGammaParams(math.exp(sol(0)), math.exp(sol(1)), math.exp(sol(2)))
   }
 
-  /** Per-observation log-likelihood (shared by driver + cluster paths). */
-  def llObs(p: Double, q: Double, v: Double, o: Obs): Double = {
-    val px = p * o.x
-    logGamma(px + q) - logGamma(px) - logGamma(q) + q * math.log(v) +
-      (px - 1) * math.log(o.m) + px * math.log(o.x) -
-      (px + q) * math.log(v + o.m * o.x)
-  }
-
   /** Fit from a features frame (frequency > 0, monetary > 0 slice). Like
     * BetaGeo.fitFeatures: compress on distinct (frequency, monetary) pairs,
-    * collect if bounded, else run the objective as treeAggregate jobs.
+    * collect if bounded, else run the objective as Spark jobs.
     */
   def fitFeatures(features: DataFrame, fCol: String, mCol: String,
-      penalizer: Double = 0.1, maxDriverRows: Long = 2000000L): GammaGammaParams = {
+      penalizer: Double = 0.1, maxDriverRows: Long = Optim.MaxDriverRows): GammaGammaParams = {
     val compressed = features
       .groupBy(col(fCol).cast("double").as("x"), col(mCol).cast("double").as("m"))
       .agg(count(lit(1)).cast("double").as("w"))
@@ -100,22 +93,16 @@ object GammaGamma {
     else fitDistributed(compressed, penalizer)
   }
 
-  /** Cluster-side objective: one treeAggregate per Nelder–Mead evaluation
-    * over the cached compressed pairs (see BetaGeo.fitDistributed).
+  /** Cluster-side objective: one job per Nelder–Mead evaluation over the
+    * cached compressed pairs (see BetaGeo.fitDistributed).
     */
   def fitDistributed(compressed: DataFrame, penalizer: Double = 0.1): GammaGammaParams = {
     val rdd = compressed.select(col("x"), col("m"), col("w"))
       .rdd.map(r => Obs(r.getDouble(0), r.getDouble(1), r.getDouble(2)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def objective(logParams: Array[Double]): Double = {
-        val p = math.exp(logParams(0)); val q = math.exp(logParams(1))
-        val v = math.exp(logParams(2))
-        val (llSum, wSum) = rdd.treeAggregate((0.0, 0.0))(
-          seqOp = { case ((ll, w), o) => (ll + o.w * llObs(p, q, v, o), w + o.w) },
-          combOp = { case ((l1, w1), (l2, w2)) => (l1 + l2, w1 + w2) })
-        -llSum / wSum + penalizer * (p * p + q * q + v * v)
-      }
+      def objective(logParams: Array[Double]): Double =
+        Optim.penalizedMean(logParams, Optim.partitionSum(rdd)(llKernel(logParams)), penalizer)
       val x0 = Array.fill(3)(0.1)
       require(java.lang.Double.isFinite(objective(x0)),
         "Gamma-Gamma fitDistributed: non-finite objective at init")

@@ -1,40 +1,16 @@
 package graft.model
 
 import org.apache.spark.sql.types._
-import java.sql.{Date, Timestamp}
 
-/** Typed row models + explicit StructTypes for the warehouse path.
+/** Explicit StructTypes for the warehouse path's raw tables: the
+  * transactions staging log (typed and as read from the CSV corpus) and the
+  * master user registry. The pipeline stays on DataFrames; the model path's
+  * column contract is `ClvModel.expectedColumns`.
   *
   * The reference declares every schema explicitly and disables autodetect
   * (reference: dags/clv_data_dag.py:19–25,73); we mirror that: inference is
   * never used on the warehouse path.
   */
-final case class Transaction(
-    CustomerID: Long,
-    Quantity: Int,
-    UnitPrice: Double,
-    order_timestamp: Timestamp,
-    TotalPurchase: Double)
-
-/** RFM-T features, one row per customer (reference: dags/clv_data_dag.py:80–93). */
-final case class CustomerFeatures(
-    customer_id: Long,
-    recency: Long,
-    t: Long,
-    frequency: Long,
-    monetary_value: Double,
-    first_purchase: Date,
-    last_purchase: Date)
-
-/** Model output (reference: dags/clv_models.py:93). */
-final case class ClvScore(
-    customer_id: Long,
-    predicted_purchases: Double,
-    predicted_avg_value: Double,
-    clv: Double,
-    negatif_clv_flag: Int,
-    outliners_flag: Int)
-
 object Schemas {
 
   /** transactions_staging (reference: dags/clv_data_dag.py:19–25). */
@@ -56,30 +32,6 @@ object Schemas {
     StructField("UnitPrice", DoubleType, nullable = true),
     StructField("order_timestamp", TimestampType, nullable = true),
     StructField("TotalPurchase", DoubleType, nullable = true)))
-
-  val customerFeatures: StructType = StructType(Seq(
-    StructField("customer_id", LongType, nullable = false),
-    StructField("recency", LongType, nullable = false),
-    StructField("t", LongType, nullable = false),
-    StructField("frequency", LongType, nullable = false),
-    StructField("monetary_value", DoubleType, nullable = false),
-    StructField("first_purchase", DateType, nullable = false),
-    StructField("last_purchase", DateType, nullable = false)))
-
-  /** Ordered column contract checked by the model path — order-sensitive,
-    * unlike the firewall's set-based check (reference: dags/clv_models.py:47–49
-    * vs dags/validate_features.py:16).
-    */
-  val modelInputColumns: Seq[String] =
-    Seq("customer_id", "recency", "t", "frequency", "monetary", "first_purchase", "last_purchase")
-
-  val predictedClv: StructType = StructType(Seq(
-    StructField("customer_id", LongType, nullable = false),
-    StructField("predicted_purchases", DoubleType, nullable = false),
-    StructField("predicted_avg_value", DoubleType, nullable = false),
-    StructField("clv", DoubleType, nullable = false),
-    StructField("negatif_clv_flag", IntegerType, nullable = false),
-    StructField("outliners_flag", IntegerType, nullable = false)))
 
   /** master_users (reference: dags/simulate_data.py:56–58). */
   val masterUsers: StructType = StructType(Seq(

@@ -34,6 +34,30 @@ object Analytics {
     * is the conventional retail churn window. */
   val ChurnGapDays = 90
 
+  /** The Kaplan–Meier risk table `(t_days, n_at_t, n_events, n_risk)` over
+    * customer lifetimes: t_days = days between a customer's first and last
+    * order, an event = churn (last order more than [[ChurnGapDays]] before
+    * [[SegAsOf]]), n_at_t / n_events = customers and events per t_days, and
+    * n_risk = customers whose lifetime is at least t_days. ONE customer-key
+    * shuffle, then everything lives on the calendar-bounded t_days frame.
+    */
+  private def riskTable(s: SparkSession, dir: String): DataFrame = {
+    val asOf = lit(SegAsOf).cast("date")
+    val life = t(s, dir, "orders").groupBy(col("o_custkey"))
+      .agg(to_date(min(col("o_orderdate"))).as("first_d"),
+        to_date(max(col("o_orderdate"))).as("last_d"))
+      .select(datediff(col("last_d"), col("first_d")).cast("long").as("t_days"),
+        (datediff(asOf, col("last_d")) > lit(ChurnGapDays))
+          .cast("long").as("event"))
+    val byT = life.groupBy("t_days")
+      .agg(count(lit(1)).as("n_at_t"), sum(col("event")).as("n_events"))
+    val wOrd = BoundedWindow.ordered(col("t_days"), col("t_days"))
+    byT.withColumn("n_risk",
+      sum(col("n_at_t")).over(BoundedWindow.whole(col("t_days"))) - coalesce(
+        sum(col("n_at_t")).over(
+          wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+  }
+
   /** RRF constant (Cormack et al. 2009: k=60 is the published default). */
   val RrfK = 60
 
@@ -968,23 +992,10 @@ object Analytics {
     // multiply of the deterministic S sequence.
     "q_rmst" -> ((s, dir) => {
       val tau = lit(730L)
-      val asOf = lit(SegAsOf).cast("date")
-      val life = t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(to_date(min(col("o_orderdate"))).as("first_d"),
-          to_date(max(col("o_orderdate"))).as("last_d"))
-        .select(datediff(col("last_d"), col("first_d")).cast("long")
-          .as("t_days"),
-          (datediff(asOf, col("last_d")) > lit(ChurnGapDays))
-            .cast("long").as("event"))
-      val byT = life.groupBy("t_days")
-        .agg(count(lit(1)).as("n_at_t"), sum(col("event")).as("n_events"))
+      val withRisk = riskTable(s, dir)
       val wOrd = BoundedWindow.ordered(col("t_days"), col("t_days"))
       val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = BoundedWindow.whole(col("t_days"))
-      val withRisk = byT.withColumn("n_risk",
-        sum(col("n_at_t")).over(wAll) - coalesce(
-          sum(col("n_at_t")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       val term = when(col("n_events") > 0 && col("n_events") < col("n_risk"),
         log(lit(1.0) - col("n_events").cast("double")
           / col("n_risk").cast("double"))).otherwise(lit(0.0))
@@ -1026,24 +1037,10 @@ object Analytics {
     // variance formula divides by n−d, so both engines skip those terms
     // identically and flag the dead tail. Bands clamp to [0, 1].
     "q_km_ci" -> ((s, dir) => {
-      val asOf = lit(SegAsOf).cast("date")
-      val life = t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(to_date(min(col("o_orderdate"))).as("first_d"),
-          to_date(max(col("o_orderdate"))).as("last_d"))
-        .select(datediff(col("last_d"), col("first_d")).cast("long")
-          .as("t_days"),
-          (datediff(asOf, col("last_d")) > lit(ChurnGapDays))
-            .cast("long").as("event"))
-      val byT = life.groupBy("t_days")
-        .agg(count(lit(1)).as("n_at_t"), sum(col("event")).as("n_events"))
+      val withRisk = riskTable(s, dir)
       val wOrd = BoundedWindow.ordered(col("t_days"), col("t_days"))
       val wCum = wOrd.rowsBetween(Window.unboundedPreceding,
         Window.currentRow)
-      val wAll = BoundedWindow.whole(col("t_days"))
-      val withRisk = byT.withColumn("n_risk",
-        sum(col("n_at_t")).over(wAll) - coalesce(
-          sum(col("n_at_t")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       val lnTerm = when(col("n_events") > 0 &&
         col("n_events") < col("n_risk"),
         log(lit(1.0) - col("n_events").cast("double")
@@ -1088,24 +1085,10 @@ object Analytics {
     // abstaining NULL while H = 0 (no events yet: the band is undefined,
     // and NULL mirrors identically — §2.13 discipline).
     "q_nelson_aalen" -> ((s, dir) => {
-      val asOf = lit(SegAsOf).cast("date")
-      val life = t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(to_date(min(col("o_orderdate"))).as("first_d"),
-          to_date(max(col("o_orderdate"))).as("last_d"))
-        .select(datediff(col("last_d"), col("first_d")).cast("long")
-          .as("t_days"),
-          (datediff(asOf, col("last_d")) > lit(ChurnGapDays))
-            .cast("long").as("event"))
-      val byT = life.groupBy("t_days")
-        .agg(count(lit(1)).as("n_at_t"), sum(col("event")).as("n_events"))
+      val withRisk = riskTable(s, dir)
       val wOrd = BoundedWindow.ordered(col("t_days"), col("t_days"))
       val wCum = wOrd.rowsBetween(Window.unboundedPreceding,
         Window.currentRow)
-      val wAll = BoundedWindow.whole(col("t_days"))
-      val withRisk = byT.withColumn("n_risk",
-        sum(col("n_at_t")).over(wAll) - coalesce(
-          sum(col("n_at_t")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       val hTerm = col("n_events").cast("double") /
         col("n_risk").cast("double")
       val vTerm = col("n_events").cast("double") /

@@ -144,7 +144,7 @@ object Bloom {
   val MaxFilterBytes: Long = 64L * 1024 * 1024
 
   /** One pass over the build side: per-partition partial filters OR-merged
-    * up a tree (same two-tier discipline as the CLV fit's treeAggregate
+    * up a tree (same two-tier discipline as the CLV fit's distributed
     * path — driver never sees the keys, only geometry-sized bit arrays).
     * `expectedItems` sizes the filter; the caller usually knows it from
     * stats, or pays one cheap count() on the (small) build side.

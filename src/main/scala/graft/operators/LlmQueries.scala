@@ -36,6 +36,16 @@ object LlmQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
 
+  /** Per-source term counts `(source, term, f)`: each document's lowercased
+    * tokens (empty ones dropped) counted per (source, term) — one
+    * (source, term) shuffle to exact BIGINT counts. */
+  private def termCounts(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir)
+      .select(col("source"),
+        explode(TextOps.tokens(lower(col("text")))).as("term"))
+      .where(length(col("term")) > 0)
+      .groupBy("source", "term").agg(count(lit(1)).as("f"))
+
   /** k-means geometry for q_kmeans (clusters / Lloyd iterations / dim). */
   val KmeansK = 8
   val KmeansIters = 5
@@ -1171,11 +1181,7 @@ object LlmQueries {
     // track it next to the type-token ratio. One (source, term) shuffle to
     // exact counts; rates are single divisions of exact BIGINTs, r6.
     "q_hapax_rate" -> ((s, dir) => {
-      val counts = docs(s, dir)
-        .select(col("source"),
-          explode(TextOps.tokens(lower(col("text")))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("source", "term").agg(count(lit(1)).as("f"))
+      val counts = termCounts(s, dir)
       counts.groupBy("source")
         .agg(count(lit(1)).as("vocab"),
           sum(col("f")).as("n_tokens"),
@@ -1198,11 +1204,7 @@ object LlmQueries {
     // until one final division (entropy's ln sums need the §2.13 guard
     // discipline; λ needs none). Same one (source, term) shuffle.
     "q_simpson_diversity" -> ((s, dir) => {
-      val counts = docs(s, dir)
-        .select(col("source"),
-          explode(TextOps.tokens(lower(col("text")))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("source", "term").agg(count(lit(1)).as("f"))
+      val counts = termCounts(s, dir)
       counts.groupBy("source")
         .agg(count(lit(1)).as("vocab"),
           sum(col("f")).as("n_tokens"),
@@ -1238,11 +1240,7 @@ object LlmQueries {
     // (identical float sequence cross-engine — every ln argument is a
     // ratio of exact BIGINTs), keep-last-row.
     "q_kl_divergence" -> ((s, dir) => {
-      val counts = docs(s, dir)
-        .select(col("source"),
-          explode(TextOps.tokens(lower(col("text")))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("source", "term").agg(count(lit(1)).as("f"))
+      val counts = termCounts(s, dir)
       val tm = counts.groupBy("term").agg(sum(col("f")).as("ft"))
       val tot = tm.agg(sum(col("ft")).as("nn"))
       val ns = counts.groupBy("source")
@@ -1278,11 +1276,7 @@ object LlmQueries {
     // compose of exact integers (N ≥ 1 structurally — every census row
     // has f ≥ 1 — so the division is total).
     "q_yule_k" -> ((s, dir) => {
-      val counts = docs(s, dir)
-        .select(col("source"),
-          explode(TextOps.tokens(lower(col("text")))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("source", "term").agg(count(lit(1)).as("f"))
+      val counts = termCounts(s, dir)
       counts.groupBy("source")
         .agg(count(lit(1)).as("vocab"),
           sum(col("f")).as("n_tokens"),

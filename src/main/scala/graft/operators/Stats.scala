@@ -2365,10 +2365,7 @@ object Stats {
     // Differences are exact integer cents; percentile's midpoint
     // interpolation is an exactly-representable .5 average of two ints.
     "q_hodges_lehmann" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
       def yr(y: Int) = daily.where(year(col("day")) === y)
       val a = yr(1998).select(col("rev").as("ra"))
       val b = yr(1997).select(col("rev").as("rb"))
@@ -2671,10 +2668,7 @@ object Stats {
     // linkPrediction discipline). Weekday = (day − 1995-01-01) mod 7 —
     // engine-neutral, no locale. Reject line: χ²₀.₀₅,₆ = 12.591587243744.
     "q_kruskal_wallis" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
         .select(col("rev"),
           pmod(datediff(col("day"), lit("1995-01-01").cast("date"))
             .cast("long"), lit(7L)).as("wd"))
@@ -2719,10 +2713,7 @@ object Stats {
     // Σ R_j² accumulation is order-independent with no quantization;
     // χ²_F = 12/(bk(k+1))·ΣR_j² − 3b(k+1) vs the same χ²₀.₀₅,₆ line.
     "q_friedman" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
         .select(col("day"), col("rev"),
           floor(datediff(col("day"), lit("1995-01-01").cast("date")) / 7)
             .cast("long").as("wk"),
@@ -2763,10 +2754,7 @@ object Stats {
     // the predicted order up to reversal). One shuffle to the daily
     // frame; everything after lives on the ≤7-row weekday frame.
     "q_page_trend" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
         .select(col("day"), col("rev"),
           floor(datediff(col("day"), lit("1995-01-01").cast("date")) / 7)
             .cast("long").as("wk"),
@@ -2810,10 +2798,7 @@ object Stats {
     // labels cut on the r6-ROUNDED |δ| so a 1-ulp difference cannot
     // relabel.
     "q_cliffs_delta" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
       def yr(y: Int) = daily.where(year(col("day")) === y)
       val a = yr(1998).select(col("rev").as("ra"))
       val b = yr(1997).select(col("rev").as("rb"))
@@ -2844,10 +2829,7 @@ object Stats {
     // micro-units before the 14-cell sum; E = 0 abstains via try_divide
     // (≡ DuckDB /). Same χ²₀.₀₅,₆ reject line.
     "q_mood_median" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
         .select(col("rev"),
           pmod(datediff(col("day"), lit("1995-01-01").cast("date"))
             .cast("long"), lit(7L)).as("wd"))
@@ -2892,10 +2874,7 @@ object Stats {
     // ints. Work is pairs × K ≈ 366·200 rows — calendar-bounded.
     "q_permutation_test" -> ((s, dir) => {
       val K = 200
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = Timeseries.dailyRevenue(s, dir)
       def yr(y: Int) = daily.where(year(col("day")) === y)
         .select((month(col("day")) * 100 + dayofmonth(col("day")))
           .cast("long").as("md"), col("rev"))

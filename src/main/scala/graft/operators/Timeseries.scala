@@ -54,6 +54,15 @@ object Timeseries {
   def sinMicro(k: Int, p: Int): Long =
     math.floor(math.sin(2.0 * math.Pi * k / p) * 1e6 + 0.5).toLong
 
+  /** The daily revenue series `(day DATE, rev BIGINT)`: orders grouped by
+    * calendar day of `o_orderdate`, revenue summed in integer cents
+    * (`ColumnOps.cents` per order) — the input of the time-series family
+    * and of the daily-series tests in [[Stats]]. */
+  private[operators] def dailyRevenue(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg(sum(ColumnOps.cents(col("o_totalprice"))).as("rev"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- EWMA trend over the daily revenue series -------------------------
@@ -267,10 +276,7 @@ object Timeseries {
     // continuity-corrected z = (S ∓ 1)/√Var. S and every variance term
     // are exact BIGINTs; z is one closed-form float both engines replay.
     "q_mann_kendall" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val a = daily.select(col("day").as("d1"), col("rev").as("r1"))
       val b = daily.select(col("day").as("d2"), col("rev").as("r2"))
       val pairs = a.join(broadcast(b), col("d1") < col("d2"))
@@ -305,10 +311,7 @@ object Timeseries {
     // invariant, and S plus every variance term stay exact BIGINT; z is
     // the same continuity-corrected closed float.
     "q_mk_seasonal" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("dow", dayofweek(col("day")).cast("long"))
       val a = daily.select(col("dow"), col("day").as("d1"),
         col("rev").as("r1"))
@@ -352,10 +355,7 @@ object Timeseries {
     // Bartels' exact H0 variance is a closed form of N. Both windows run
     // over the calendar-bounded daily frame.
     "q_bartels_rank" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val ranked = daily
         .withColumn("rk", rank().over(Window.orderBy(col("rev"))).cast("long"))
         .withColumn("tc", count(lit(1)).over(Window.partitionBy(col("rev"))))
@@ -405,10 +405,7 @@ object Timeseries {
     // compose of exact integers. Degenerate frames (< 12 blocks, zero
     // variance) abstain NULL.
     "q_gumbel_max" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val blocks = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val blocks = dailyRevenue(s, dir)
         .groupBy(trunc(col("day"), "month").as("mon"))
         .agg(max(col("rev")).as("m"))
       val md = col("m").cast("decimal(38,0)")
@@ -631,10 +628,7 @@ object Timeseries {
     // division and the median midpoint — deterministic single ops, no
     // summation-order drift anywhere.
     "q_seasonal_decompose" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .select(col("day"), col("rev"), dayofweek(col("day")).cast("long").as("dow"))
       val wTrend = BoundedWindow.ordered(col("day"), col("day")).rowsBetween(-3, 3)
       val detrended = daily
@@ -661,10 +655,7 @@ object Timeseries {
     // ≤14-row calibration frame, exact BIGINT everything; the one float
     // is the coverage share.
     "q_conformal_forecast" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val mx = daily.agg(max(col("day")).as("max_day"))
       val hist7 = daily.select(date_add(col("day"), 7).as("day"),
         col("rev").as("rev_m7"))
@@ -710,10 +701,7 @@ object Timeseries {
     // are exact BIGINT/decimal-38 moment algebra and each strength is a
     // closed-form float over exact integers.
     "q_seasonal_strength" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .select(col("day"), col("rev"),
           dayofweek(col("day")).cast("long").as("dow"))
       val wTrend = BoundedWindow.ordered(col("day"), col("day"))
@@ -761,10 +749,7 @@ object Timeseries {
     // q_corr_stats precedent). Everything after the daily aggregate
     // rides windows on the calendar-bounded frame.
     "q_changepoint" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wAll = BoundedWindow.whole(col("day"))
       val wRun = BoundedWindow.ordered(col("day"), col("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -797,10 +782,7 @@ object Timeseries {
     // significance p ≈ 2·exp(−6K²/(n³+n²)) (Pettitt's approximation,
     // clamped to 1) and its 5% flag on the ROUNDED p.
     "q_pettitt" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wVal = BoundedWindow.ordered(col("day"), col("rev"))
       val below = count(lit(1)).over(
         wVal.rangeBetween(Window.unboundedPreceding, -1))
@@ -840,10 +822,7 @@ object Timeseries {
     // neighbour is not an extremum); z is one closed-form float, n < 3
     // abstains NULL.
     "q_turning_points" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val lagged = daily
         .withColumn("p", lag(col("rev"), 1).over(w))
@@ -897,10 +876,7 @@ object Timeseries {
     // engines run the identical final float sequence. Denominator is the
     // full-series Σ(r−m)² (the standard ACF normalization).
     "q_acf" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val lags = (1 to 7).foldLeft(daily) { (d, k) =>
         d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
@@ -946,10 +922,7 @@ object Timeseries {
     // after it with NULL on both engines (NULL arithmetic propagates
     // identically through the recursion).
     "q_pacf" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val lags = (1 to 5).foldLeft(daily) { (d, k) =>
         d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
@@ -1027,10 +1000,7 @@ object Timeseries {
     // (constant series, < q+1 days) abstain NULL.
     "q_variance_ratio" -> ((s, dir) => {
       val q = 5
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val diffs = daily
         .withColumn("d", col("rev") - lag(col("rev"), 1).over(w))
@@ -1070,10 +1040,7 @@ object Timeseries {
     // sequence identical cross-engine; the clip censuses are exact
     // BIGINTs off strict comparisons against the fence literals.
     "q_winsorize" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val lo = Ranks.exactQuantileCont(daily, col("rev"), 0.05)
       val hi = Ranks.exactQuantileCont(daily, col("rev"), 0.95)
       val wOrd = BoundedWindow.ordered(col("day"), col("day"))
@@ -1114,10 +1081,7 @@ object Timeseries {
     // Σ|naive-1 error| is BIGINT-exact, so every output float is a single
     // division over exact integers — no accumulation order exists.
     "q_forecast" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val mx = daily.agg(max(col("day")).as("max_day"))
       val hist7 = daily.select(date_add(col("day"), 7).as("day"),
         col("rev").as("rev_m7"))
@@ -1156,10 +1120,7 @@ object Timeseries {
     // only float per row is ONE division over exact integers, so the hash
     // oracle is exact.
     "q_drawdown" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val dd = daily
         .withColumn("peak",
@@ -1237,10 +1198,7 @@ object Timeseries {
     // both window passes and all aggregates live on ≤ 4×|days| rows —
     // bounded by the CALENDAR, not the corpus.
     "q_hurst" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val idx = row_number().over(BoundedWindow.ordered(col("day"), col("day")))
         .cast("long") - 1L
       val exploded = daily
@@ -1311,10 +1269,7 @@ object Timeseries {
     // division + sqrt over two exact integers. Revenue cents are > 0 on
     // any observed day, so the relative denominators are safe.
     "q_theil_u" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val mx = daily.agg(max(col("day")).as("max_day"))
       val hist7 = daily.select(date_add(col("day"), 7).as("day"),
         col("rev").as("rev_m7"))
@@ -1392,10 +1347,7 @@ object Timeseries {
     // pass, one global aggregate.
     "q_ljung_box" -> ((s, dir) => {
       val h = 7
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val lags = (1 to h).foldLeft(daily) { (d, k) =>
         d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
@@ -1443,10 +1395,7 @@ object Timeseries {
     // Standard tuning k = 0.5σ slack, h = 5σ alarm; top 10 days by the
     // r6-ROUNDED two-sided statistic with a day tie-break.
     "q_cusum" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("x", col("rev").cast("double") / lit(1000000.0))
       val wAll = BoundedWindow.whole(col("day"))
       val wRun = BoundedWindow.ordered(col("day"), col("day"))
@@ -1496,10 +1445,7 @@ object Timeseries {
     // (<2-day) calendar. One shuffle to the calendar-bounded daily frame;
     // the moment row broadcasts back.
     "q_durbin_watson" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("tt",
           datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
       val revd = col("rev").cast("decimal(20,0)")
@@ -1556,10 +1502,7 @@ object Timeseries {
     // to-rounded so it cannot flip cross-engine. Degenerate frames
     // (n ≤ 2, flat calendar) drop to empty output identically.
     "q_cooks_distance" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("tt",
           datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
       val revd = col("rev").cast("decimal(20,0)")
@@ -1621,10 +1564,7 @@ object Timeseries {
     // form float of those exact moments. Degenerate frames (flat u,
     // flat t) abstain NULL via the variance guards (§2.13).
     "q_breusch_pagan" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("tt",
           datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
       val revd = col("rev").cast("decimal(20,0)")
@@ -1695,10 +1635,7 @@ object Timeseries {
     // segments (n < 3, flat t, zero pooled RSS) abstain NULL. Also
     // reports the break's effect size (RSS reduction share).
     "q_chow" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("tt",
           datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
         .withColumn("pre",
@@ -1764,11 +1701,8 @@ object Timeseries {
     // making every output a literal-order float compose of exact
     // integers. Degenerate sides (n < 3, flat t, zero RSS) abstain NULL.
     "q_rdd" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
       val cut = lit("1998-01-01").cast("date")
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
         .withColumn("tt", datediff(col("day"), cut).cast("long"))
         .where(col("tt") >= -365L && col("tt") <= 364L)
         .withColumn("rgt", (col("tt") >= 0L).cast("long"))
@@ -2018,10 +1952,7 @@ object Timeseries {
     // z abstains on a constant window via try_divide; ranking on the
     // r6-ROUNDED |z| with a day tie-break so the top-10 cut can't flip.
     "q_rolling_anomaly" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wTrail = BoundedWindow.ordered(col("day"), col("day"))
         .rowsBetween(-28, -1)
       val scored = daily
@@ -2062,10 +1993,7 @@ object Timeseries {
     // cents sums; symbol boundaries compare the r6-ROUNDED z so a 1-ulp
     // division difference cannot relabel a segment.
     "q_sax_symbols" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wAll = BoundedWindow.whole(col("day"))
       val idx = row_number().over(BoundedWindow.ordered(col("day"), col("day")))
         .cast("long") - 1L
@@ -2104,10 +2032,7 @@ object Timeseries {
     // daily frame; z is a closed float sequence, degenerate one-sided
     // series abstain via try_divide.
     "q_runs_test" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wOrd = BoundedWindow.ordered(col("day"), col("day"))
       val signs = daily
         .withColumn("d", col("rev") - lag(col("rev"), 1).over(wOrd))
@@ -2142,10 +2067,7 @@ object Timeseries {
     // critical −2.86 (Fuller 1976; reported as the documented constant,
     // not an engine computation). Degenerate constant series abstain.
     "q_dickey_fuller" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wOrd = BoundedWindow.ordered(col("day"), col("day"))
       val pairs = daily
         .withColumn("xl", lag(col("rev"), 1).over(wOrd))
@@ -2193,10 +2115,7 @@ object Timeseries {
     // is a BoundedWindow; a constant series has B = 0 and abstains NULL on
     // both engines (predicate on the raw factor, the §2.13 discipline).
     "q_kpss" -> ((s, dir) => {
-      val cents = ColumnOps.cents(col("o_totalprice"))
-      val daily = t(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(sum(cents).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wOrd = BoundedWindow.ordered(col("day"), col("day"))
       val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = BoundedWindow.whole(col("day"))

@@ -17,23 +17,37 @@ trait SparkSpec extends AnyFunSuite {
     * marker job submitted after `body` (events arrive in order).
     */
   def jobsIn[T](body: => T): (T, Int) = {
+    val (out, descriptions) = jobDescriptionsIn(body)
+    (out, descriptions.size)
+  }
+
+  /** The `spark.job.description` of every Spark job started while `body`
+    * runs (None where unset), counted as in [[jobsIn]]. The drain marker
+    * sets only the job group id and restores it, so the calling thread's
+    * job description and group are as `body` left them.
+    */
+  def jobDescriptionsIn[T](body: => T): (T, Seq[Option[String]]) = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.jobGroup.id") == "jobs-in-drain")
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == "jobs-in-drain"))
           drained.countDown()
-        else jobs.incrementAndGet()
+        else jobs.add(props.flatMap(p => Option(p.getProperty("spark.job.description"))))
+      }
     }
     sc.addSparkListener(listener)
     try {
       val out = body
-      sc.setJobGroup("jobs-in-drain", "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val group = sc.getLocalProperty("spark.jobGroup.id")
+      sc.setLocalProperty("spark.jobGroup.id", "jobs-in-drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("spark.jobGroup.id", group)
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get())
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }

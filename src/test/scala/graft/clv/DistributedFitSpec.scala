@@ -3,9 +3,9 @@ package graft.clv
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The cluster-side treeAggregate objective must land on the same optimum
-  * as the driver loop — it is the same math over the same compressed
-  * triples, just reduced on executors.
+/** The cluster-side objective must land on the same optimum as the driver
+  * loop — it is the same kernel over the same compressed observations, just
+  * run once per partition on executors.
   */
 class DistributedFitSpec extends SparkSpec {
 
@@ -25,6 +25,16 @@ class DistributedFitSpec extends SparkSpec {
     assert(math.abs(dist.alpha - local.alpha) < 1e-4 * math.max(1.0, local.alpha))
     assert(math.abs(dist.a - local.a) < 1e-4 * math.max(1.0, local.a))
     assert(math.abs(dist.b - local.b) < 1e-4 * math.max(1.0, local.b))
+    // Gamma-Gamma: driver fitFeatures against fitDistributed on (x, m, w)
+    val ggLocal = GammaGamma.fitFeatures(feats, "frequency", "monetary_value")
+    val ggDist = GammaGamma.fitDistributed(feats
+      .groupBy(col("frequency").cast("double").as("x"),
+        col("monetary_value").cast("double").as("m"))
+      .agg(count(lit(1)).cast("double").as("w")))
+    assert(math.abs(ggDist.p - ggLocal.p) < 1e-4 * math.max(1.0, ggLocal.p),
+      s"$ggDist vs $ggLocal")
+    assert(math.abs(ggDist.q - ggLocal.q) < 1e-4 * math.max(1.0, ggLocal.q))
+    assert(math.abs(ggDist.v - ggLocal.v) < 1e-4 * math.max(1.0, ggLocal.v))
     feats.unpersist()
   }
 
@@ -72,8 +82,21 @@ class DistributedFitSpec extends SparkSpec {
       .cache()
     try {
       val (direct, nDirect) = jobsIn(ClvModel.fitModel(returning))
-      val (capped, nCapped) = jobsIn(ClvModel.fitModel(returning, maxDriverRows = 1))
-      // each model alone on its distributed path: one treeAggregate job
+      val sc = spark.sparkContext
+      sc.setJobDescription("caller")
+      val ((capped, after), cappedJobs) =
+        try jobDescriptionsIn((ClvModel.fitModel(returning, maxDriverRows = 1),
+          sc.getLocalProperty("spark.job.description")))
+        finally sc.setJobDescription(null)
+      val nCapped = cappedJobs.size
+      // every job of the capped fit names the fit, also on the Gamma-Gamma
+      // pool thread, and the caller's own description survives it
+      val described = cappedJobs.groupBy(identity).view.mapValues(_.size).toMap
+      assert(cappedJobs.forall(_.exists(_.startsWith("clv.fit "))), described)
+      assert(Set("clv.fit sufficient statistics", "clv.fit BG/NBD", "clv.fit Gamma-Gamma")
+        .subsetOf(cappedJobs.flatten.toSet), described)
+      assert(after == "caller")
+      // each model alone on its distributed path: one job
       // per Nelder-Mead objective evaluation, hundreds per fit
       val (_, nBg) = jobsIn(BetaGeo.fitFeatures(returning, "frequency", "recency", "t",
         maxDriverRows = 1))
