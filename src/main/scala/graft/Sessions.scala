@@ -23,10 +23,11 @@ object Sessions {
       // flagged as racey session-state mutation).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
-    // WARN for interactive/verify runs; Bench passes ERROR (and ALSO sets
-    // the root level ERROR *before* the builder call — session-INIT INFO
-    // lines print during getOrCreate, long before this line runs, and the
-    // driver's bounded stdout tail must end as exactly one JSON line)
+    // WARN for interactive/verify runs; Bench passes ERROR. This only sets
+    // the level from here on: session-INIT INFO lines print during
+    // getOrCreate, before this line runs, so the quiet config that keeps
+    // Bench's stdout tail to one JSON line comes from
+    // src/main/resources/log4j2.properties, loaded at process start.
     spark.sparkContext.setLogLevel(logLevel)
     // graft.Blocks deliberately unpersists locally-checkpointed frames
     // AFTER their terminal action (the blocks are provably dead); Spark

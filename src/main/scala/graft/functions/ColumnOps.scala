@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Expression-level helpers: the shared rounding vocabulary and
+/** Expression-level helpers: the shared rounding and cast vocabulary and
   * let-binding for higher-order-function pipelines.
   *
   * Rounding contract. Oracle-checked queries round half-up with a 1e-6
@@ -57,6 +57,11 @@ object ColumnOps {
     floorD(c * lit(10000.0) + lit(0.500001)) / lit(10000.0)
   def r6(c: Column): Column =
     floorD(c * lit(1000000.0) + lit(0.500001)) / lit(1000000.0)
+
+  /** The two casts of the exact-moment queries: to double, and to
+    * decimal(38,0) for exact integer products and sums. */
+  def d(c: Column): Column = c.cast("double")
+  def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Integer cents (LONG) of a 2-dp money amount, half-up:
     * floor(c·100 + 0.500001). Plain `floor`, not floorD: money stays far

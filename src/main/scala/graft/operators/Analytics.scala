@@ -58,6 +58,34 @@ object Analytics {
           wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
   }
 
+  /** The life and byt CTEs of [[RiskTableCte]], for the oracles that build
+    * their own risk CTE. */
+  private val KmLifeCte =
+    """life AS (
+      |  SELECT CAST(date_diff('day', MIN(CAST(o_orderdate AS DATE)),
+      |      MAX(CAST(o_orderdate AS DATE))) AS BIGINT) AS t_days,
+      |    CASE WHEN date_diff('day', MAX(CAST(o_orderdate AS DATE)),
+      |      DATE '2001-09-01') > 90 THEN 1 ELSE 0 END AS event
+      |  FROM orders GROUP BY o_custkey
+      |), byt AS (
+      |  SELECT t_days, CAST(COUNT(*) AS BIGINT) AS n_at_t,
+      |    CAST(SUM(event) AS BIGINT) AS n_events
+      |  FROM life GROUP BY t_days
+      |)""".stripMargin
+
+  /** The DuckDB mirror of [[riskTable]] without n_at_t in its last CTE: life
+    * (per-customer lifetime and churn event), byt (per t_days counts) and
+    * risk (n_risk). */
+  private val RiskTableCte =
+    s"""$KmLifeCte, risk AS (
+       |  SELECT t_days, n_events,
+       |    CAST(SUM(n_at_t) OVER () AS BIGINT) - CAST(COALESCE(
+       |      SUM(n_at_t) OVER (ORDER BY t_days
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS BIGINT) AS n_risk
+       |  FROM byt
+       |)""".stripMargin
+
   /** RRF constant (Cormack et al. 2009: k=60 is the published default). */
   val RrfK = 60
 
@@ -1374,22 +1402,21 @@ object Analytics {
         .orderBy("custkey")
     }))
 
+  /** Each customer's total spend in integer cents (feats: custkey, m). */
+  private[operators] val CustomerSpendCte =
+    """feats AS (
+      |  SELECT o_custkey AS custkey,
+      |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
+      |      AS BIGINT) AS m
+      |  FROM orders GROUP BY 1
+      |)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
 
     // same exact-integer risk sets and the identical ordered ln-sum
     // sequence; the died-out tail pinned to 0 on both engines
     "q_survival" ->
-      """WITH life AS (
-        |  SELECT CAST(date_diff('day', MIN(CAST(o_orderdate AS DATE)),
-        |      MAX(CAST(o_orderdate AS DATE))) AS BIGINT) AS t_days,
-        |    CASE WHEN date_diff('day', MAX(CAST(o_orderdate AS DATE)),
-        |      DATE '2001-09-01') > 90 THEN 1 ELSE 0 END AS event
-        |  FROM orders GROUP BY o_custkey
-        |), byt AS (
-        |  SELECT t_days, CAST(COUNT(*) AS BIGINT) AS n_at_t,
-        |    CAST(SUM(event) AS BIGINT) AS n_events
-        |  FROM life GROUP BY t_days
-        |), risk AS (
+      s"""WITH $KmLifeCte, risk AS (
         |  SELECT t_days, n_at_t, n_events, n_at_t - n_events AS n_censored,
         |    CAST(SUM(n_at_t) OVER () AS BIGINT) - CAST(COALESCE(
         |      SUM(n_at_t) OVER (ORDER BY t_days
@@ -1415,17 +1442,7 @@ object Analytics {
     // ordered float sums replay op-for-op; the d=n dead tail abstains the
     // band with NULL identically, clamps mirror
     "q_km_ci" ->
-      """WITH life AS (
-        |  SELECT CAST(date_diff('day', MIN(CAST(o_orderdate AS DATE)),
-        |      MAX(CAST(o_orderdate AS DATE))) AS BIGINT) AS t_days,
-        |    CASE WHEN date_diff('day', MAX(CAST(o_orderdate AS DATE)),
-        |      DATE '2001-09-01') > 90 THEN 1 ELSE 0 END AS event
-        |  FROM orders GROUP BY o_custkey
-        |), byt AS (
-        |  SELECT t_days, CAST(COUNT(*) AS BIGINT) AS n_at_t,
-        |    CAST(SUM(event) AS BIGINT) AS n_events
-        |  FROM life GROUP BY t_days
-        |), risk AS (
+      s"""WITH $KmLifeCte, risk AS (
         |  SELECT t_days, n_at_t, n_events,
         |    CAST(SUM(n_at_t) OVER () AS BIGINT) - CAST(COALESCE(
         |      SUM(n_at_t) OVER (ORDER BY t_days
@@ -1470,24 +1487,7 @@ object Analytics {
     // sequence, the log-band composes in the same literal order, and the
     // H = 0 head abstains NULL on both engines
     "q_nelson_aalen" ->
-      """WITH life AS (
-        |  SELECT CAST(date_diff('day', MIN(CAST(o_orderdate AS DATE)),
-        |      MAX(CAST(o_orderdate AS DATE))) AS BIGINT) AS t_days,
-        |    CASE WHEN date_diff('day', MAX(CAST(o_orderdate AS DATE)),
-        |      DATE '2001-09-01') > 90 THEN 1 ELSE 0 END AS event
-        |  FROM orders GROUP BY o_custkey
-        |), byt AS (
-        |  SELECT t_days, CAST(COUNT(*) AS BIGINT) AS n_at_t,
-        |    CAST(SUM(event) AS BIGINT) AS n_events
-        |  FROM life GROUP BY t_days
-        |), risk AS (
-        |  SELECT t_days, n_events,
-        |    CAST(SUM(n_at_t) OVER () AS BIGINT) - CAST(COALESCE(
-        |      SUM(n_at_t) OVER (ORDER BY t_days
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n_risk
-        |  FROM byt
-        |), s AS (
+      s"""WITH $RiskTableCte, s AS (
         |  SELECT *,
         |    SUM(CAST(n_events AS DOUBLE) / CAST(n_risk AS DOUBLE))
         |      OVER w AS h,
@@ -1737,12 +1737,7 @@ object Analytics {
     // NTILE over (m, custkey) ascending ≡ ntileOf(two-level exact rank):
     // same tiling by construction; shares are divisions of exact cents
     "q_lorenz" ->
-      """WITH feats AS (
-        |  SELECT o_custkey AS custkey,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS m
-        |  FROM orders GROUP BY 1
-        |), ranked AS (
+      s"""WITH $CustomerSpendCte, ranked AS (
         |  SELECT m, NTILE(10) OVER (ORDER BY m, custkey) AS decile
         |  FROM feats
         |), byd AS (
@@ -1764,12 +1759,7 @@ object Analytics {
     // identical (spend DESC, custkey) ranking and INTEGER threshold
     // crossings — no float boundary anywhere
     "q_pareto_8020" ->
-      """WITH feats AS (
-        |  SELECT o_custkey AS custkey,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS m
-        |  FROM orders GROUP BY 1
-        |), ranked AS (
+      s"""WITH $CustomerSpendCte, ranked AS (
         |  SELECT ROW_NUMBER() OVER (ORDER BY m DESC, custkey) AS rk,
         |    SUM(m) OVER (ORDER BY m DESC, custkey
         |      ROWS UNBOUNDED PRECEDING) AS cum,
@@ -1799,24 +1789,7 @@ object Analytics {
     // the same KM frame with UNROUNDED S, ordered step-integral
     // accumulation, identical tail term
     "q_rmst" ->
-      """WITH life AS (
-        |  SELECT CAST(date_diff('day', MIN(CAST(o_orderdate AS DATE)),
-        |      MAX(CAST(o_orderdate AS DATE))) AS BIGINT) AS t_days,
-        |    CASE WHEN date_diff('day', MAX(CAST(o_orderdate AS DATE)),
-        |      DATE '2001-09-01') > 90 THEN 1 ELSE 0 END AS event
-        |  FROM orders GROUP BY o_custkey
-        |), byt AS (
-        |  SELECT t_days, CAST(COUNT(*) AS BIGINT) AS n_at_t,
-        |    CAST(SUM(event) AS BIGINT) AS n_events
-        |  FROM life GROUP BY t_days
-        |), risk AS (
-        |  SELECT t_days, n_events,
-        |    CAST(SUM(n_at_t) OVER () AS BIGINT) - CAST(COALESCE(
-        |      SUM(n_at_t) OVER (ORDER BY t_days
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS n_risk
-        |  FROM byt
-        |), sv AS (
+      s"""WITH $RiskTableCte, sv AS (
         |  SELECT t_days,
         |    CASE WHEN MAX(CASE WHEN n_events >= n_risk THEN 1 ELSE 0 END)
         |        OVER (ORDER BY t_days) = 1 THEN 0.0

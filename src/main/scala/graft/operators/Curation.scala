@@ -722,6 +722,46 @@ object Curation {
     })
   )
 
+  /** The lexical and vector scores of q_hybrid_search: each document's BM25
+    * (k1 = 1.2, b = 0.75) for the query terms table, hash and spark, and its
+    * cosine to embedding 0 (s: doc_id, bm25, cos). */
+  private[operators] val HybridScoresCte =
+    """d AS (
+      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+      |  FROM documents
+      |), f AS (
+      |  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
+      |    CAST(len(list_filter(toks, x -> x = 'table')) AS DOUBLE) AS tf_table,
+      |    CAST(len(list_filter(toks, x -> x = 'hash')) AS DOUBLE) AS tf_hash,
+      |    CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf_spark
+      |  FROM d
+      |), st AS (
+      |  SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl,
+      |    SUM(CASE WHEN tf_table > 0 THEN 1.0 ELSE 0.0 END) AS df_table,
+      |    SUM(CASE WHEN tf_hash > 0 THEN 1.0 ELSE 0.0 END) AS df_hash,
+      |    SUM(CASE WHEN tf_spark > 0 THEN 1.0 ELSE 0.0 END) AS df_spark
+      |  FROM f
+      |), bm AS (
+      |  SELECT doc_id,
+      |    ln((n_docs - df_table + 0.5) / (df_table + 0.5) + 1.0)
+      |      * (tf_table * 2.2) / (tf_table + 1.2 * (0.25 + 0.75 * dl / avgdl))
+      |  + ln((n_docs - df_hash + 0.5) / (df_hash + 0.5) + 1.0)
+      |      * (tf_hash * 2.2) / (tf_hash + 1.2 * (0.25 + 0.75 * dl / avgdl))
+      |  + ln((n_docs - df_spark + 0.5) / (df_spark + 0.5) + 1.0)
+      |      * (tf_spark * 2.2) / (tf_spark + 1.2 * (0.25 + 0.75 * dl / avgdl))
+      |    AS bm25
+      |  FROM f, st
+      |), q AS (
+      |  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
+      |), s AS (
+      |  SELECT bm.doc_id, bm.bm25,
+      |    list_dot_product(e.embedding::DOUBLE[], qv)
+      |      / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
+      |         * sqrt(list_dot_product(qv, qv))) AS cos
+      |  FROM bm JOIN embeddings e ON bm.doc_id = e.vec_id, q
+      |  WHERE bm.doc_id > 0
+      |)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
 
     // scalar-list generate_series + unnest: DuckDB's table-function form
@@ -951,41 +991,7 @@ object Curation {
     // both rankings recomputed with the exact q_bm25 formula and the
     // q_rrf_fusion cosine/fusion structure; ranks tie-break on doc_id
     "q_hybrid_search" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-        |    CAST(len(list_filter(toks, x -> x = 'table')) AS DOUBLE) AS tf_table,
-        |    CAST(len(list_filter(toks, x -> x = 'hash')) AS DOUBLE) AS tf_hash,
-        |    CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf_spark
-        |  FROM d
-        |), st AS (
-        |  SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl,
-        |    SUM(CASE WHEN tf_table > 0 THEN 1.0 ELSE 0.0 END) AS df_table,
-        |    SUM(CASE WHEN tf_hash > 0 THEN 1.0 ELSE 0.0 END) AS df_hash,
-        |    SUM(CASE WHEN tf_spark > 0 THEN 1.0 ELSE 0.0 END) AS df_spark
-        |  FROM f
-        |), bm AS (
-        |  SELECT doc_id,
-        |    ln((n_docs - df_table + 0.5) / (df_table + 0.5) + 1.0)
-        |      * (tf_table * 2.2) / (tf_table + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |  + ln((n_docs - df_hash + 0.5) / (df_hash + 0.5) + 1.0)
-        |      * (tf_hash * 2.2) / (tf_hash + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |  + ln((n_docs - df_spark + 0.5) / (df_spark + 0.5) + 1.0)
-        |      * (tf_spark * 2.2) / (tf_spark + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    AS bm25
-        |  FROM f, st
-        |), q AS (
-        |  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-        |), s AS (
-        |  SELECT bm.doc_id, bm.bm25,
-        |    list_dot_product(e.embedding::DOUBLE[], qv)
-        |      / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-        |         * sqrt(list_dot_product(qv, qv))) AS cos
-        |  FROM bm JOIN embeddings e ON bm.doc_id = e.vec_id, q
-        |  WHERE bm.doc_id > 0
-        |), a AS (
+      s"""WITH $HybridScoresCte, a AS (
         |  SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank_lex
         |  FROM s ORDER BY bm25 DESC, doc_id LIMIT 50
         |), b AS (

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Sources.{table => t}
 import graft.text.TextOps
-import graft.functions.ColumnOps.{r4, r6}
+import graft.functions.ColumnOps.{d, r4, r6}
 
 /** Evaluation + data-contract operator family: the measurement layer a
   * training-data pipeline runs over its OWN outputs — retrieval-quality
@@ -285,7 +285,6 @@ object Evaluation {
         .agg(count(lit(1)).as("n"), sum(col("phm")).as("sph"),
           sum(col("y")).as("sy"))
       val wAll = BoundedWindow.whole(col("bin"))
-      def d(c: Column): Column = c.cast("double")
       val tot = perBin
         .withColumn("ntot", sum(col("n")).over(wAll))
         .withColumn("sytot", sum(col("sy")).over(wAll))
@@ -939,41 +938,7 @@ object Evaluation {
     // the q_hybrid_search bm25/cos structure; metrics from the two ranked
     // CTEs — natural-log DCG (base cancels in the DCG/IDCG ratio)
     "q_ranking_metrics" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-        |    CAST(len(list_filter(toks, x -> x = 'table')) AS DOUBLE) AS tf_table,
-        |    CAST(len(list_filter(toks, x -> x = 'hash')) AS DOUBLE) AS tf_hash,
-        |    CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf_spark
-        |  FROM d
-        |), st AS (
-        |  SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl,
-        |    SUM(CASE WHEN tf_table > 0 THEN 1.0 ELSE 0.0 END) AS df_table,
-        |    SUM(CASE WHEN tf_hash > 0 THEN 1.0 ELSE 0.0 END) AS df_hash,
-        |    SUM(CASE WHEN tf_spark > 0 THEN 1.0 ELSE 0.0 END) AS df_spark
-        |  FROM f
-        |), bm AS (
-        |  SELECT doc_id,
-        |    ln((n_docs - df_table + 0.5) / (df_table + 0.5) + 1.0)
-        |      * (tf_table * 2.2) / (tf_table + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |  + ln((n_docs - df_hash + 0.5) / (df_hash + 0.5) + 1.0)
-        |      * (tf_hash * 2.2) / (tf_hash + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |  + ln((n_docs - df_spark + 0.5) / (df_spark + 0.5) + 1.0)
-        |      * (tf_spark * 2.2) / (tf_spark + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    AS bm25
-        |  FROM f, st
-        |), q AS (
-        |  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-        |), s AS (
-        |  SELECT bm.doc_id, bm.bm25,
-        |    list_dot_product(e.embedding::DOUBLE[], qv)
-        |      / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-        |         * sqrt(list_dot_product(qv, qv))) AS cos
-        |  FROM bm JOIN embeddings e ON bm.doc_id = e.vec_id, q
-        |  WHERE bm.doc_id > 0
-        |), cand AS (
+      s"""WITH ${Curation.HybridScoresCte}, cand AS (
         |  SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank
         |  FROM s ORDER BY bm25 DESC, doc_id LIMIT 10
         |), truth AS (

@@ -184,6 +184,28 @@ object Graph {
       .select(col("u"), col("v")).distinct()
   }
 
+  /** The DuckDB mirror of [[partPairEdges]] over every 10th order: the
+    * sampled lineitem (li) and its distinct part pairs u < v (und), both
+    * CTEs MATERIALIZED or neither. */
+  private def partPairsCte(materialized: Boolean): String = {
+    val as = if (materialized) "AS MATERIALIZED" else "AS"
+    s"""li $as (
+       |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
+       |), und $as (
+       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+       |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
+       |  WHERE a.l_partkey < b.l_partkey
+       |)""".stripMargin
+  }
+
+  /** [[partPairsCte]] (materialized) with both directions of each pair
+    * (sym: src, dst). */
+  private val PartPairsSymCte =
+    s"""${partPairsCte(true)}, sym AS MATERIALIZED (
+       |  SELECT u AS src, v AS dst FROM und
+       |  UNION ALL SELECT v AS src, u AS dst FROM und
+       |)""".stripMargin
+
   /** Exact triangle count + global transitivity via the degree-ordered
     * "forward" algorithm (Schank–Wagner 2005; the shape every distributed
     * triangle counter uses): direct each edge toward its higher-(degree,id)
@@ -1335,13 +1357,7 @@ object Graph {
 
     // identical degree census, micro-unit ln tail sum, one closed-form α̂
     "q_degree_powerlaw" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), deg AS (
+      s"""WITH ${partPairsCte(false)}, deg AS (
         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
         |  GROUP BY node
@@ -1439,13 +1455,7 @@ object Graph {
     // Spark's struct ordering; counts are exact integers, transitivity is
     // the one r4-rounded double
     "q_triangles" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), deg AS (
+      s"""WITH ${partPairsCte(false)}, deg AS (
         |  SELECT node, COUNT(*) AS d FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und)
         |  GROUP BY node
@@ -1514,13 +1524,7 @@ object Graph {
     // the triple-keeping forward algorithm: dir is referenced three times
     // (both wedge legs + the closure probe), hence MATERIALIZED
     "q_local_cc" ->
-      """WITH li AS MATERIALIZED (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), deg AS MATERIALIZED (
+      s"""WITH ${partPairsCte(true)}, deg AS MATERIALIZED (
         |  SELECT node, COUNT(*) AS d FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und)
         |  GROUP BY node
@@ -1556,13 +1560,7 @@ object Graph {
     "q_communities" -> lpaOracle(LpaRounds),
 
     "q_link_prediction" ->
-      """WITH li AS MATERIALIZED (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), deg AS MATERIALIZED (
+      s"""WITH ${partPairsCte(true)}, deg AS MATERIALIZED (
         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und)
         |  GROUP BY node
@@ -1594,13 +1592,7 @@ object Graph {
     // identical all-integer Newman compose: BIGINT sums, HUGEINT products
     // (Spark mirrors in DECIMAL(38,0)), one final float division
     "q_assortativity" ->
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), deg AS (
+      s"""WITH ${partPairsCte(false)}, deg AS (
         |  SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und)
         |  GROUP BY node
@@ -1665,13 +1657,7 @@ object Graph {
     */
   private def randomWalkOracle(steps: Int): String = {
     val head =
-      """WITH li AS (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), sym AS MATERIALIZED (
+      s"""WITH ${partPairsCte(false)}, sym AS MATERIALIZED (
         |  SELECT u AS src, v AS dst FROM und
         |  UNION ALL SELECT v AS src, u AS dst FROM und
         |), s0 AS (
@@ -1700,16 +1686,7 @@ object Graph {
     */
   private def lpaChain(rounds: Int): String = {
     val head =
-      """WITH li AS MATERIALIZED (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), sym AS MATERIALIZED (
-        |  SELECT u AS src, v AS dst FROM und
-        |  UNION ALL SELECT v AS src, u AS dst FROM und
-        |), l0 AS MATERIALIZED (
+      s"""WITH $PartPairsSymCte, l0 AS MATERIALIZED (
         |  SELECT DISTINCT src AS node, src AS label FROM sym
         |)""".stripMargin
     val steps = (1 to rounds).map { i =>
@@ -1772,16 +1749,7 @@ object Graph {
     */
   private def bfsOracle(rounds: Int): String = {
     val head =
-      """WITH li AS MATERIALIZED (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), sym AS MATERIALIZED (
-        |  SELECT u AS src, v AS dst FROM und
-        |  UNION ALL SELECT v AS src, u AS dst FROM und
-        |), f0 AS MATERIALIZED (SELECT MIN(src) AS node FROM sym),
+      s"""WITH $PartPairsSymCte, f0 AS MATERIALIZED (SELECT MIN(src) AS node FROM sym),
         |a0 AS MATERIALIZED (SELECT node, CAST(0 AS BIGINT) AS dist FROM f0)""".stripMargin
     val roundCtes = (1 to rounds).map { k =>
       s""", f$k AS MATERIALIZED (
@@ -1810,16 +1778,7 @@ object Graph {
     */
   private def closenessOracle(rounds: Int): String = {
     val head =
-      """WITH li AS MATERIALIZED (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), sym AS MATERIALIZED (
-        |  SELECT u AS src, v AS dst FROM und
-        |  UNION ALL SELECT v AS src, u AS dst FROM und
-        |), a0 AS MATERIALIZED (
+      s"""WITH $PartPairsSymCte, a0 AS MATERIALIZED (
         |  SELECT src AS seed, src AS node, CAST(0 AS BIGINT) AS dist
         |  FROM (SELECT DISTINCT src FROM sym WHERE src % 97 = 0)
         |)""".stripMargin
@@ -1856,13 +1815,7 @@ object Graph {
       // MATERIALIZED: each aᵢ references aᵢ₋₁ twice, so DuckDB's default
       // CTE inlining would expand the chain exponentially (measured: fd
       // exhaustion from 2^rounds lineitem scans)
-      """WITH li AS MATERIALIZED (
-        |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 10 = 0
-        |), und AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey
-        |), a0 AS MATERIALIZED (
+      s"""WITH ${partPairsCte(true)}, a0 AS MATERIALIZED (
         |  SELECT DISTINCT node FROM (
         |    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
         |)""".stripMargin

@@ -46,6 +46,17 @@ object LlmQueries {
       .where(length(col("term")) > 0)
       .groupBy("source", "term").agg(count(lit(1)).as("f"))
 
+  /** The DuckDB mirror of [[termCounts]]: the counts CTE (source, term, f). */
+  private val TermCountsCte =
+    """counts AS (
+      |  SELECT source, t.x AS term, CAST(COUNT(*) AS BIGINT) AS f
+      |  FROM (SELECT source,
+      |          regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+      |        FROM documents) d, LATERAL unnest(toks) AS t(x)
+      |  WHERE len(t.x) > 0
+      |  GROUP BY source, t.x
+      |)""".stripMargin
+
   /** k-means geometry for q_kmeans (clusters / Lloyd iterations / dim). */
   val KmeansK = 8
   val KmeansIters = 5
@@ -2384,6 +2395,99 @@ object LlmQueries {
        |GROUP BY t.doc_id ORDER BY media_id""".stripMargin
   }
 
+  /** Each document's whitespace tokens (toks) and the planted near-duplicate
+    * copy that drops its last two (pert). */
+  private val PlantedTokensCte =
+    """toks AS (
+      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
+      |), pert AS (
+      |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
+      |)""".stripMargin
+
+  /** [[PlantedTokensCte]] as distinct word 3-shingle sets: sh_a of each
+    * original, sh_b of its planted copy. */
+  private val ShingleSetsCte =
+    s"""$PlantedTokensCte, sh_a AS (
+       |  SELECT doc_id, list_distinct(list_transform(
+       |    range(0, greatest(len(w)-3, 0) + 1),
+       |    i -> array_to_string(w[i+1 : i+3], ' '))) AS sh
+       |  FROM toks
+       |), sh_b AS (
+       |  SELECT doc_id, list_distinct(list_transform(
+       |    range(0, greatest(len(w2)-3, 0) + 1),
+       |    i -> array_to_string(w2[i+1 : i+3], ' '))) AS sh
+       |  FROM pert
+       |)""".stripMargin
+
+  /** [[ShingleSetsCte]] joined per document: the exact Jaccard of each
+    * planted near-duplicate pair. */
+  private val ShingleJaccardCte =
+    s"""$ShingleSetsCte, j AS (
+       |  SELECT a.doc_id,
+       |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+       |      len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
+       |  FROM sh_a a JOIN sh_b b USING (doc_id)
+       |)""".stripMargin
+
+  /** Exact cosine of the first 10 embeddings (probes) against every other
+    * embedding, dot products accumulated float-to-double in index order as
+    * the Spark kernel does. */
+  private val AnnScoredCte =
+    """probes AS (
+      |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pvec
+      |  FROM embeddings WHERE vec_id < 10
+      |), corpus AS (
+      |  SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings
+      |), scored AS (
+      |  SELECT p.probe_id, c.vec_id,
+      |    list_dot_product(c.cvec, p.pvec) /
+      |      (sqrt(list_dot_product(c.cvec, c.cvec)) * sqrt(list_dot_product(p.pvec, p.pvec))) AS cos_exact
+      |  FROM corpus c, probes p WHERE c.vec_id <> p.probe_id
+      |)""".stripMargin
+
+  /** [[AnnScoredCte]] ranked per probe: the exact top-k ground truth the ANN
+    * oracles count against. */
+  private val AnnRankedCte =
+    s"""$AnnScoredCte, ranked AS (
+       |  SELECT probe_id, vec_id,
+       |    row_number() OVER (PARTITION BY probe_id ORDER BY cos_exact DESC, vec_id) AS rank
+       |  FROM scored
+       |)""".stripMargin
+
+  /** The character-trigram language model over a norm CTE (doc_id, t):
+    * trigrams (tg), the profile of the 80% training split (prof), its size
+    * (tot) and each document's add-one log-count sum (sc). */
+  private val TrigramScoresCte =
+    """tg AS (
+      |  SELECT doc_id, substr(t, CAST(i AS INTEGER), 3) AS g
+      |  FROM norm, LATERAL unnest(generate_series(1, greatest(length(t) - 2, 1))) AS u(i)
+      |), prof AS (
+      |  SELECT g, COUNT(*) AS c FROM tg WHERE doc_id % 10 < 8 GROUP BY g
+      |), tot AS (
+      |  SELECT CAST(SUM(c) AS DOUBLE) AS nn, CAST(COUNT(*) AS DOUBLE) AS vv FROM prof
+      |), sc AS (
+      |  SELECT tg.doc_id, SUM(ln(COALESCE(p.c, 0) + 1.0)) AS s,
+      |    CAST(COUNT(*) AS BIGINT) AS n_grams
+      |  FROM tg LEFT JOIN prof p USING (g)
+      |  GROUP BY tg.doc_id
+      |)""".stripMargin
+
+  /** The synthetic video pixels of a p CTE (doc_id, w, h, nf): every 2nd
+    * frame (fr) and its closed-form luminance per pixel (px). */
+  private val FramePixelsCte =
+    """fr AS (
+      |  SELECT p.doc_id, p.w, p.h, f.f AS frame_idx
+      |  FROM p, LATERAL unnest(generate_series(0, p.nf - 1)) AS f(f)
+      |  WHERE f.f % 2 = 0
+      |), px AS (
+      |  SELECT fr.doc_id, fr.frame_idx, fr.w, fr.h,
+      |    CAST((x.x * 31 + y.y * 17 + fr.frame_idx * 23 + fr.doc_id) % 256
+      |      AS DOUBLE) AS v
+      |  FROM fr,
+      |    LATERAL unnest(generate_series(0, fr.w - 1)) AS x(x),
+      |    LATERAL unnest(generate_series(0, fr.h - 1)) AS y(y)
+      |)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "q_text_stats" ->
       """SELECT doc_id, CAST(LENGTH(text) AS BIGINT) AS char_len,
@@ -2594,17 +2698,7 @@ object LlmQueries {
     // cast float→double and accumulate the dot product in index order, so
     // the ranks and the 4-dp rounded cosines agree exactly
     "q_ann_brute" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pvec
-        |  FROM embeddings WHERE vec_id < 10
-        |), corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings
-        |), scored AS (
-        |  SELECT p.probe_id, c.vec_id,
-        |    list_dot_product(c.cvec, p.pvec) /
-        |      (sqrt(list_dot_product(c.cvec, c.cvec)) * sqrt(list_dot_product(p.pvec, p.pvec))) AS cos_exact
-        |  FROM corpus c, probes p WHERE c.vec_id <> p.probe_id
-        |), ranked AS (
+      s"""WITH $AnnScoredCte, ranked AS (
         |  SELECT probe_id, vec_id, cos_exact,
         |    row_number() OVER (PARTITION BY probe_id ORDER BY cos_exact DESC, vec_id) AS rank
         |  FROM scored
@@ -3433,14 +3527,7 @@ object LlmQueries {
     // identical tokenization; all counts exact BIGINT, rates single
     // divisions
     "q_hapax_rate" ->
-      """WITH counts AS (
-        |  SELECT source, t.x AS term, CAST(COUNT(*) AS BIGINT) AS f
-        |  FROM (SELECT source,
-        |          regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |        FROM documents) d, LATERAL unnest(toks) AS t(x)
-        |  WHERE len(t.x) > 0
-        |  GROUP BY source, t.x
-        |)
+      s"""WITH $TermCountsCte
         |SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
         |  CAST(COUNT(*) AS BIGINT) AS vocab,
         |  CAST(SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
@@ -3455,14 +3542,7 @@ object LlmQueries {
     // identical tokenization; Σf(f−1) exact in HUGEINT, the inverse
     // division NULLs on zero on both engines (try_divide ≡ DuckDB /)
     "q_simpson_diversity" ->
-      """WITH counts AS (
-        |  SELECT source, t.x AS term, CAST(COUNT(*) AS BIGINT) AS f
-        |  FROM (SELECT source,
-        |          regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |        FROM documents) d, LATERAL unnest(toks) AS t(x)
-        |  WHERE len(t.x) > 0
-        |  GROUP BY source, t.x
-        |)
+      s"""WITH $TermCountsCte
         |SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
         |  CAST(COUNT(*) AS BIGINT) AS vocab,
         |  CASE WHEN SUM(f) > 1 THEN
@@ -3479,14 +3559,7 @@ object LlmQueries {
     // cumulative ln-term sum (each argument a ratio of exact BIGINTs),
     // keep-last-row; coverage stays BIGINT until one final division
     "q_kl_divergence" ->
-      """WITH counts AS (
-        |  SELECT source, t.x AS term, CAST(COUNT(*) AS BIGINT) AS f
-        |  FROM (SELECT source,
-        |          regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |        FROM documents) d, LATERAL unnest(toks) AS t(x)
-        |  WHERE len(t.x) > 0
-        |  GROUP BY source, t.x
-        |), tm AS (
+      s"""WITH $TermCountsCte, tm AS (
         |  SELECT term, CAST(SUM(f) AS BIGINT) AS ft FROM counts GROUP BY term
         |), tot AS (
         |  SELECT CAST(SUM(ft) AS BIGINT) AS nn FROM tm
@@ -3550,14 +3623,7 @@ object LlmQueries {
     // identical tokenization + census; Σf² exact in HUGEINT, K the same
     // left-associated float compose of the exact integers
     "q_yule_k" ->
-      """WITH counts AS (
-        |  SELECT source, t.x AS term, CAST(COUNT(*) AS BIGINT) AS f
-        |  FROM (SELECT source,
-        |          regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-        |        FROM documents) d, LATERAL unnest(toks) AS t(x)
-        |  WHERE len(t.x) > 0
-        |  GROUP BY source, t.x
-        |)
+      s"""WITH $TermCountsCte
         |SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
         |  CAST(COUNT(*) AS BIGINT) AS vocab,
         |  CAST(SUM(f * f) AS BIGINT) AS sum_f2,
@@ -3605,21 +3671,7 @@ object LlmQueries {
         |ORDER BY doc_a, doc_b""".stripMargin,
 
     "q_jaccard_exact" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-        |), pert AS (
-        |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
-        |), sh_a AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w)-3, 0) + 1),
-        |    i -> array_to_string(w[i+1 : i+3], ' '))) AS sh
-        |  FROM toks
-        |), sh_b AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w2)-3, 0) + 1),
-        |    i -> array_to_string(w2[i+1 : i+3], ' '))) AS sh
-        |  FROM pert
-        |)
+      s"""WITH $ShingleSetsCte
         |SELECT a.doc_id AS doc_a, a.doc_id + 1000000 AS doc_b,
         |  FLOOR((CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
         |    len(list_distinct(list_concat(a.sh, b.sh)))) * 10000.0 + 0.500001) / 10000.0 AS jaccard
@@ -3629,21 +3681,7 @@ object LlmQueries {
     // same shingle pipeline, containment formula: |A∩B| / |B| (B = the
     // perturbed copy, whose shingles are a subset of the original's)
     "q_containment_exact" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-        |), pert AS (
-        |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
-        |), sh_a AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w)-3, 0) + 1),
-        |    i -> array_to_string(w[i+1 : i+3], ' '))) AS sh
-        |  FROM toks
-        |), sh_b AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w2)-3, 0) + 1),
-        |    i -> array_to_string(w2[i+1 : i+3], ' '))) AS sh
-        |  FROM pert
-        |)
+      s"""WITH $ShingleSetsCte
         |SELECT a.doc_id AS doc_a, a.doc_id + 1000000 AS doc_b,
         |  FLOOR((CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
         |    greatest(len(b.sh), 1)) * 10000.0 + 0.500001) / 10000.0 AS containment
@@ -3670,21 +3708,7 @@ object LlmQueries {
     // is FP-bit-identical cross-engine (see q_ann_brute), and the planted
     // jaccard threshold 0.5 is far from any pair's value (min 0.75).
     "q_ann_lsh" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pvec
-        |  FROM embeddings WHERE vec_id < 10
-        |), corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings
-        |), scored AS (
-        |  SELECT p.probe_id, c.vec_id,
-        |    list_dot_product(c.cvec, p.pvec) /
-        |      (sqrt(list_dot_product(c.cvec, c.cvec)) * sqrt(list_dot_product(p.pvec, p.pvec))) AS cos_exact
-        |  FROM corpus c, probes p WHERE c.vec_id <> p.probe_id
-        |), ranked AS (
-        |  SELECT probe_id, vec_id,
-        |    row_number() OVER (PARTITION BY probe_id ORDER BY cos_exact DESC, vec_id) AS rank
-        |  FROM scored
-        |)
+      s"""WITH $AnnRankedCte
         |SELECT COUNT(*) AS n_exact, CAST(1 AS BIGINT) AS recall_ge_040
         |FROM ranked WHERE rank <= 5""".stripMargin,
 
@@ -3702,21 +3726,7 @@ object LlmQueries {
         |ORDER BY component""".stripMargin,
 
     "q_ann_pq" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pvec
-        |  FROM embeddings WHERE vec_id < 10
-        |), corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings
-        |), scored AS (
-        |  SELECT p.probe_id, c.vec_id,
-        |    list_dot_product(c.cvec, p.pvec) /
-        |      (sqrt(list_dot_product(c.cvec, c.cvec)) * sqrt(list_dot_product(p.pvec, p.pvec))) AS cos_exact
-        |  FROM corpus c, probes p WHERE c.vec_id <> p.probe_id
-        |), ranked AS (
-        |  SELECT probe_id, vec_id,
-        |    row_number() OVER (PARTITION BY probe_id ORDER BY cos_exact DESC, vec_id) AS rank
-        |  FROM scored
-        |)
+      s"""WITH $AnnRankedCte
         |SELECT COUNT(*) AS n_exact, CAST(1 AS BIGINT) AS recall_ge_035,
         |  CAST(16 AS BIGINT) AS bytes_per_vec
         |FROM ranked WHERE rank <= 10""".stripMargin,
@@ -3772,41 +3782,13 @@ object LlmQueries {
         |ORDER BY anchor_id, rank""".stripMargin,
 
     "q_ann_ivfpq" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pvec
-        |  FROM embeddings WHERE vec_id < 10
-        |), corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings
-        |), scored AS (
-        |  SELECT p.probe_id, c.vec_id,
-        |    list_dot_product(c.cvec, p.pvec) /
-        |      (sqrt(list_dot_product(c.cvec, c.cvec)) * sqrt(list_dot_product(p.pvec, p.pvec))) AS cos_exact
-        |  FROM corpus c, probes p WHERE c.vec_id <> p.probe_id
-        |), ranked AS (
-        |  SELECT probe_id, vec_id,
-        |    row_number() OVER (PARTITION BY probe_id ORDER BY cos_exact DESC, vec_id) AS rank
-        |  FROM scored
-        |)
+      s"""WITH $AnnRankedCte
         |SELECT COUNT(*) AS n_exact, CAST(1 AS BIGINT) AS recall_ge_030,
         |  CAST(16 AS BIGINT) AS bytes_per_vec
         |FROM ranked WHERE rank <= 10""".stripMargin,
 
     "q_ann_ivf" ->
-      """WITH probes AS (
-        |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pvec
-        |  FROM embeddings WHERE vec_id < 10
-        |), corpus AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS cvec FROM embeddings
-        |), scored AS (
-        |  SELECT p.probe_id, c.vec_id,
-        |    list_dot_product(c.cvec, p.pvec) /
-        |      (sqrt(list_dot_product(c.cvec, c.cvec)) * sqrt(list_dot_product(p.pvec, p.pvec))) AS cos_exact
-        |  FROM corpus c, probes p WHERE c.vec_id <> p.probe_id
-        |), ranked AS (
-        |  SELECT probe_id, vec_id,
-        |    row_number() OVER (PARTITION BY probe_id ORDER BY cos_exact DESC, vec_id) AS rank
-        |  FROM scored
-        |)
+      s"""WITH $AnnRankedCte
         |SELECT COUNT(*) AS n_exact, CAST(1 AS BIGINT) AS recall_ge_040
         |FROM ranked WHERE rank <= 5""".stripMargin,
 
@@ -3864,26 +3846,7 @@ object LlmQueries {
     // same shingle pipeline as q_jaccard_exact, reduced to the planted-pair
     // count above the target cutoff + the constant recall contract
     "q_dedup_minhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-        |), pert AS (
-        |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
-        |), sh_a AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w)-3, 0) + 1),
-        |    i -> array_to_string(w[i+1 : i+3], ' '))) AS sh
-        |  FROM toks
-        |), sh_b AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w2)-3, 0) + 1),
-        |    i -> array_to_string(w2[i+1 : i+3], ' '))) AS sh
-        |  FROM pert
-        |), j AS (
-        |  SELECT a.doc_id,
-        |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-        |  FROM sh_a a JOIN sh_b b USING (doc_id)
-        |)
+      s"""WITH $ShingleJaccardCte
         |SELECT COUNT(*) AS n_planted, CAST(1 AS BIGINT) AS recall_ge_095
         |FROM j WHERE jaccard >= 0.5""".stripMargin,
 
@@ -3971,11 +3934,7 @@ object LlmQueries {
     // histograms via unnest; denominators from token counts; identical
     // float sequence and NULL abstention for <2-token docs
     "q_rouge_overlap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-        |), pert AS (
-        |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
-        |), rg AS (
+      s"""WITH $PlantedTokensCte, rg AS (
         |  SELECT doc_id, unnest(list_transform(
         |    range(0, CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END),
         |    i -> array_to_string(w[i+1 : i+2], ' '))) AS g
@@ -4017,26 +3976,7 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin,
 
     "q_ngram_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-        |), pert AS (
-        |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
-        |), sh_a AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w)-3, 0) + 1),
-        |    i -> array_to_string(w[i+1 : i+3], ' '))) AS sh
-        |  FROM toks
-        |), sh_b AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w2)-3, 0) + 1),
-        |    i -> array_to_string(w2[i+1 : i+3], ' '))) AS sh
-        |  FROM pert
-        |), j AS (
-        |  SELECT a.doc_id,
-        |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-        |  FROM sh_a a JOIN sh_b b USING (doc_id)
-        |)
+      s"""WITH $ShingleJaccardCte
         |SELECT COUNT(*) AS n_planted, CAST(1 AS BIGINT) AS recall_ge_095,
         |  CAST(1 AS BIGINT) AS est_band_ok
         |FROM j WHERE jaccard >= 0.5""".stripMargin,
@@ -4045,26 +3985,7 @@ object LlmQueries {
     // 0.744–0.784 across SFs at maxHamming=3;
     // RecallProbe, deleted, last held at cdb9a9a)
     "q_dedup_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-        |), pert AS (
-        |  SELECT doc_id, w[1 : greatest(len(w)-2, 1)] AS w2 FROM toks
-        |), sh_a AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w)-3, 0) + 1),
-        |    i -> array_to_string(w[i+1 : i+3], ' '))) AS sh
-        |  FROM toks
-        |), sh_b AS (
-        |  SELECT doc_id, list_distinct(list_transform(
-        |    range(0, greatest(len(w2)-3, 0) + 1),
-        |    i -> array_to_string(w2[i+1 : i+3], ' '))) AS sh
-        |  FROM pert
-        |), j AS (
-        |  SELECT a.doc_id,
-        |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-        |  FROM sh_a a JOIN sh_b b USING (doc_id)
-        |)
+      s"""WITH $ShingleJaccardCte
         |SELECT COUNT(*) AS n_planted, CAST(1 AS BIGINT) AS recall_ge_060
         |FROM j WHERE jaccard >= 0.5""".stripMargin,
 
@@ -4243,22 +4164,11 @@ object LlmQueries {
     // quantization mirrored via CAST AS REAL like q_multimodal. Sampling
     // (every 2nd frame) is the f % 2 = 0 predicate.
     "q_multimodal_frames" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
         |    2 + doc_id % 5 AS nf
         |  FROM documents
-        |), fr AS (
-        |  SELECT p.doc_id, p.w, p.h, f.f AS frame_idx
-        |  FROM p, LATERAL unnest(generate_series(0, p.nf - 1)) AS f(f)
-        |  WHERE f.f % 2 = 0
-        |), px AS (
-        |  SELECT fr.doc_id, fr.frame_idx, fr.w, fr.h,
-        |    CAST((x.x * 31 + y.y * 17 + fr.frame_idx * 23 + fr.doc_id) % 256
-        |      AS DOUBLE) AS v
-        |  FROM fr,
-        |    LATERAL unnest(generate_series(0, fr.w - 1)) AS x(x),
-        |    LATERAL unnest(generate_series(0, fr.h - 1)) AS y(y)
-        |)
+        |), $FramePixelsCte
         |SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
         |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
         |  FLOOR(CAST(CAST(AVG(v) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
@@ -4273,22 +4183,11 @@ object LlmQueries {
     // demux: two independent container paths hash-matched against one
     // ground truth.
     "q_multimodal_gif" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT doc_id, 4 + doc_id % 13 AS w, 5 + doc_id % 7 AS h,
         |    2 + doc_id % 5 AS nf
         |  FROM documents
-        |), fr AS (
-        |  SELECT p.doc_id, p.w, p.h, f.f AS frame_idx
-        |  FROM p, LATERAL unnest(generate_series(0, p.nf - 1)) AS f(f)
-        |  WHERE f.f % 2 = 0
-        |), px AS (
-        |  SELECT fr.doc_id, fr.frame_idx, fr.w, fr.h,
-        |    CAST((x.x * 31 + y.y * 17 + fr.frame_idx * 23 + fr.doc_id) % 256
-        |      AS DOUBLE) AS v
-        |  FROM fr,
-        |    LATERAL unnest(generate_series(0, fr.w - 1)) AS x(x),
-        |    LATERAL unnest(generate_series(0, fr.h - 1)) AS y(y)
-        |)
+        |), $FramePixelsCte
         |SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
         |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
         |  FLOOR(CAST(CAST(AVG(v) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
@@ -4356,21 +4255,9 @@ object LlmQueries {
     // same code-point trigram windows, add-one smoothing decomposed as
     // SUM(ln(c+1)) − L·ln(N+V); FLOOR-form r4 absorbs summation-order ulps
     "q_lm_perplexity" ->
-      """WITH norm AS (
+      raw"""WITH norm AS (
         |  SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS t FROM documents
-        |), tg AS (
-        |  SELECT doc_id, substr(t, CAST(i AS INTEGER), 3) AS g
-        |  FROM norm, LATERAL unnest(generate_series(1, greatest(length(t) - 2, 1))) AS u(i)
-        |), prof AS (
-        |  SELECT g, COUNT(*) AS c FROM tg WHERE doc_id % 10 < 8 GROUP BY g
-        |), tot AS (
-        |  SELECT CAST(SUM(c) AS DOUBLE) AS nn, CAST(COUNT(*) AS DOUBLE) AS vv FROM prof
-        |), sc AS (
-        |  SELECT tg.doc_id, SUM(ln(COALESCE(p.c, 0) + 1.0)) AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS n_grams
-        |  FROM tg LEFT JOIN prof p USING (g)
-        |  GROUP BY tg.doc_id
-        |)
+        |), $TrigramScoresCte
         |SELECT doc_id, n_grams,
         |  FLOOR(((s - n_grams * ln(nn + vv)) / n_grams) * 10000.0 + 0.500001)
         |    / 10000.0 AS avg_logprob
@@ -4380,22 +4267,10 @@ object LlmQueries {
     // NTILE(3) — independently cross-checking the ntileOf derivation —
     // and per-bucket means over exact 1e-4-grid integer sums
     "q_ppl_buckets" ->
-      """WITH norm AS (
+      raw"""WITH norm AS (
         |  SELECT doc_id, source, regexp_replace(lower(text), '\s+', ' ', 'g') AS t
         |  FROM documents
-        |), tg AS (
-        |  SELECT doc_id, substr(t, CAST(i AS INTEGER), 3) AS g
-        |  FROM norm, LATERAL unnest(generate_series(1, greatest(length(t) - 2, 1))) AS u(i)
-        |), prof AS (
-        |  SELECT g, COUNT(*) AS c FROM tg WHERE doc_id % 10 < 8 GROUP BY g
-        |), tot AS (
-        |  SELECT CAST(SUM(c) AS DOUBLE) AS nn, CAST(COUNT(*) AS DOUBLE) AS vv FROM prof
-        |), sc AS (
-        |  SELECT tg.doc_id, SUM(ln(COALESCE(p.c, 0) + 1.0)) AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS n_grams
-        |  FROM tg LEFT JOIN prof p USING (g)
-        |  GROUP BY tg.doc_id
-        |), pinned AS (
+        |), $TrigramScoresCte, pinned AS (
         |  SELECT sc.doc_id, norm.source,
         |    FLOOR(((s - n_grams * ln(nn + vv)) / n_grams) * 10000.0
         |      + 0.500001) / 10000.0 AS lp

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Sources.{table => t}
 import graft.functions.ColumnOps
-import graft.functions.ColumnOps.{r2, r4, r6}
+import graft.functions.ColumnOps.{d, dec, r2, r4, r6}
 
 /** Inferential-statistics operator family — the hypothesis-testing layer a
   * data pipeline runs over its own segments before trusting a difference:
@@ -58,6 +58,122 @@ object Stats {
       row_number().over(Window.partitionBy(col("sy")).orderBy(col("px"))).as("rny"))
   }
 
+  /** The cells CTE of [[ContingencyCte]], for the oracle that builds its own
+    * margins. */
+  private val CellsCte =
+    """cells AS (
+      |  SELECT o_orderpriority AS px, o_orderstatus AS sy,
+      |    CAST(COUNT(*) AS BIGINT) AS c
+      |  FROM orders GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** The DuckDB mirror of [[contingency]]: the (priority x status) cells with
+    * both margins, the grand total and the per-margin row numbers. */
+  private val ContingencyCte =
+    s"""$CellsCte, cont AS (
+       |  SELECT px, sy, c,
+       |    SUM(c) OVER (PARTITION BY px) AS rt,
+       |    SUM(c) OVER (PARTITION BY sy) AS ct,
+       |    SUM(c) OVER () AS n,
+       |    row_number() OVER (PARTITION BY px ORDER BY sy) AS rnx,
+       |    row_number() OVER (PARTITION BY sy ORDER BY px) AS rny
+       |  FROM cells
+       |)""".stripMargin
+
+  /** Each purchasing user's mean purchase value x with its arm g — the
+    * unit of randomization of the A/B tests (one user-keyed groupBy). */
+  private def armMeans(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .where(col("event_type") === "purchase")
+      .groupBy(col("user_id"))
+      .agg(avg(col("value")).as("x"))
+      .select(arm(col("user_id")).as("g"), col("x"))
+
+  /** The DuckDB mirror of [[armMeans]]: each purchasing user's mean purchase
+    * value x and md5 arm g (u). */
+  private val ArmMeansCte =
+    """u AS (
+      |  SELECT user_id, AVG(value) AS x,
+      |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4) AS BIGINT) % 2 AS g
+      |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
+      |)""".stripMargin
+
+  /** [[ArmMeansCte]] with the per-arm count, mean and sample variance (m: na,
+    * nb, ma, mb, va, vb). */
+  private val ArmMomentsCte =
+    s"""$ArmMeansCte, m AS (
+       |  SELECT
+       |    CAST(COUNT(x) FILTER (WHERE g = 0) AS BIGINT) AS na,
+       |    CAST(COUNT(x) FILTER (WHERE g = 1) AS BIGINT) AS nb,
+       |    AVG(x) FILTER (WHERE g = 0) AS ma,
+       |    AVG(x) FILTER (WHERE g = 1) AS mb,
+       |    VAR_SAMP(x) FILTER (WHERE g = 0) AS va,
+       |    VAR_SAMP(x) FILTER (WHERE g = 1) AS vb
+       |  FROM u
+       |)""".stripMargin
+
+  /** Per weekday wd (0 = the weekday of 1995-01-01) the sum rj of the
+    * daily-revenue midranks within each complete 7-day week, and the
+    * number of weeks b. Midranks are RANK() + (ties−1)/2 inside each week,
+    * so every sum is exact in double. */
+  private def weekdayRankSums(s: SparkSession, dir: String): DataFrame = {
+    val daily = Timeseries.dailyRevenue(s, dir)
+      .select(col("day"), col("rev"),
+        floor(datediff(col("day"), lit("1995-01-01").cast("date")) / 7)
+          .cast("long").as("wk"),
+        pmod(datediff(col("day"), lit("1995-01-01").cast("date"))
+          .cast("long"), lit(7L)).as("wd"))
+    val complete = daily
+      .withColumn("wn", count(lit(1)).over(Window.partitionBy(col("wk"))))
+      .where(col("wn") === 7)
+    val ranked = complete
+      .withColumn("rk", rank().over(
+        Window.partitionBy(col("wk")).orderBy(col("rev"))))
+      .withColumn("ties", count(lit(1)).over(
+        Window.partitionBy(col("wk"), col("rev"))))
+      .withColumn("midrank",
+        col("rk").cast("double") +
+          (col("ties") - 1L).cast("double") / 2.0)
+    ranked.groupBy("wd")
+      .agg(sum(col("midrank")).as("rj"), count(lit(1)).as("b"))
+  }
+
+  /** The DuckDB mirror of [[weekdayRankSums]]: the complete-week daily series
+    * (d2, complete), its within-week midranks (ranked) and their per-weekday
+    * sums (bywd: wd, rj, b). */
+  private val WeekdayRankSumsCte =
+    s"""${Timeseries.DailyRevenueCte}, d2 AS (
+       |  SELECT rev,
+       |    CAST(FLOOR((day - DATE '1995-01-01') / 7.0) AS BIGINT) AS wk,
+       |    CAST(((day - DATE '1995-01-01') % 7 + 7) % 7 AS BIGINT) AS wd
+       |  FROM daily
+       |), complete AS (
+       |  SELECT * FROM (
+       |    SELECT *, COUNT(*) OVER (PARTITION BY wk) AS wn FROM d2)
+       |  WHERE wn = 7
+       |), ranked AS (
+       |  SELECT wd,
+       |    CAST(RANK() OVER (PARTITION BY wk ORDER BY rev) AS DOUBLE)
+       |      + CAST(COUNT(*) OVER (PARTITION BY wk, rev) - 1 AS DOUBLE)
+       |        / 2.0 AS midrank
+       |  FROM complete
+       |), bywd AS (
+       |  SELECT wd, SUM(midrank) AS rj, CAST(COUNT(*) AS BIGINT) AS b
+       |  FROM ranked GROUP BY wd
+       |)""".stripMargin
+
+  /** Per market segment the exact account-balance moments in integer
+    * cents: ng = count, sg = Σv, ssqg = Σv² (decimal). */
+  private def segmentBalanceMoments(s: SparkSession, dir: String): DataFrame = {
+    val v = ColumnOps.cents(col("c_acctbal"))
+    t(s, dir, "customer")
+      .select(col("c_mktsegment").as("seg"), v.as("v"),
+        v.cast("decimal(18,0)").as("vd"))
+      .groupBy("seg")
+      .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg"),
+        sum(col("vd") * col("vd")).as("ssqg"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Welch's two-sample t-test over a deterministic hash-split experiment,
@@ -69,11 +185,7 @@ object Stats {
     // as a key. Welch, not Student: no equal-variance assumption, df from
     // Welch–Satterthwaite.
     "q_ab_ttest" -> ((s, dir) => {
-      val byUser = t(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg(avg(col("value")).as("x"))
-        .select(arm(col("user_id")).as("g"), col("x"))
+      val byUser = armMeans(s, dir)
       val xa = when(col("g") === 0L, col("x"))
       val xb = when(col("g") === 1L, col("x"))
       val g = byUser.agg(
@@ -308,13 +420,7 @@ object Stats {
     // so both engines add the 5 terms in the same sequence — structural
     // parity (the q_changepoint discipline), not rounded-away.
     "q_anova" -> ((s, dir) => {
-      val v = ColumnOps.cents(col("c_acctbal"))
-      val g = t(s, dir, "customer")
-        .select(col("c_mktsegment").as("seg"), v.as("v"),
-          v.cast("decimal(18,0)").as("vd"))
-        .groupBy("seg")
-        .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg"),
-          sum(col("vd") * col("vd")).as("ssqg"))
+      val g = segmentBalanceMoments(s, dir)
       val tg = col("sg").cast("double") * col("sg").cast("double") /
         col("ng").cast("double")
       val wOrd = BoundedWindow.ordered(col("seg"), col("seg"))
@@ -399,7 +505,6 @@ object Stats {
         col("n").as("na"))
       val b = cells.select(col("q").as("qb"), col("d").as("db"),
         col("n").as("nb"))
-      def dec(x: Column): Column = x.cast("decimal(38,0)")
       val zeroDec = lit(0).cast("decimal(38,0)")
       val mass = dec(col("na")) * col("nb")
       val px = a.crossJoin(broadcast(b)).where(col("qa") < col("qb"))
@@ -415,7 +520,6 @@ object Stats {
       val meta = cells.agg(count(lit(1)).as("n_cells"),
         sum(col("n")).as("n_rows"))
       val g = px.crossJoin(broadcast(ptx)).crossJoin(broadcast(meta))
-      def d(x: Column): Column = x.cast("double")
       val cd = d(col("conc")) + d(col("disc"))
       val num = d(col("conc")) - d(col("disc"))
       // NULL-guarded denominators (the q_rdd ANSI hoisted-division lesson)
@@ -462,7 +566,6 @@ object Stats {
       val score2 = least(dAll, lit(2L) * (nTot + 1L) - dAll)
       val g = cum.agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
         sum(col("c2") * score2).as("ab2"))
-      def d(x: Column): Column = x.cast("double")
       val n1D = when(col("n1") >= 2L, d(col("n1")))
       val n2D = when(col("n2") >= 2L, d(col("n2")))
       val nD = n1D + n2D
@@ -515,7 +618,6 @@ object Stats {
       val aggs = Seq(sum(contrib).as("twoj")) ++
         (1 to 5).map(k => sum(col(s"c$k")).as(s"n$k"))
       val gFrame = withBef.agg(aggs.head, aggs.tail: _*)
-      def d(x: Column): Column = x.cast("double")
       val ns = (1 to 5).map(k => col(s"n$k"))
       val nTot = ns.reduce(_ + _)
       val kGroups = ns.map(n => (n > 0L).cast("long")).reduce(_ + _)
@@ -571,12 +673,10 @@ object Stats {
       val d2 = lit(2L) * col("bef2") + col("c2") + lit(1L)
       val a1 = dAll - d1 + col("n1") + lit(1L)
       val a2 = dAll - d2 + col("n2") + lit(1L)
-      def dec(x: Column): Column = x.cast("decimal(38,0)")
       val g = cum.agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
         sum(col("c1") * dAll).as("sd1"), sum(col("c2") * dAll).as("sd2"),
         sum(col("c1") * a1).as("sa1"), sum(dec(col("c1")) * a1 * a1).as("saa1"),
         sum(col("c2") * a2).as("sa2"), sum(dec(col("c2")) * a2 * a2).as("saa2"))
-      def d(x: Column): Column = x.cast("double")
       // NULL (not 0.0) under the abstain threshold: subexpression
       // elimination hoists the shared divisions out of the CaseWhen
       // guards, and under ANSI a hoisted x/0.0 throws where x/NULL
@@ -618,11 +718,7 @@ object Stats {
     // so the ceil and the boolean run on bit-identical doubles on both
     // engines (no boundary flips), not just values that agree to 1e-6.
     "q_power_analysis" -> ((s, dir) => {
-      val byUser = t(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg(avg(col("value")).as("x"))
-        .select(arm(col("user_id")).as("g"), col("x"))
+      val byUser = armMeans(s, dir)
       val xa = when(col("g") === 0L, col("x"))
       val xb = when(col("g") === 1L, col("x"))
       val gg = byUser.agg(
@@ -1177,7 +1273,6 @@ object Stats {
         sum(col("n")).over(wAll).as("nt"),
         sum(col("sv")).over(wAll).as("svt"),
         sum(col("ssq")).over(wAll).as("ssqt"))
-      def d(c: Column): Column = c.cast("double")
       val nI = d(col("n")); val nR = d(col("nt") - col("n"))
       val mI = d(col("sv")) / nI
       // try_divide throughout the rest-arm terms (r10 sweep): a single
@@ -1267,7 +1362,6 @@ object Stats {
         sum(when(col("g") === 1L, col("x")).otherwise(0L)).as("sxb"),
         sum(when(col("g") === 1L, col("y")).otherwise(0L)).as("syb"))
       val nD = col("n").cast("double")
-      def d(c: Column): Column = c.cast("double")
       val varX = nD * d(col("sxx")) - d(col("sx")) * d(col("sx"))
       val varY = nD * d(col("syy")) - d(col("sy")) * d(col("sy"))
       val covXY = nD * d(col("sxy")) - d(col("sx")) * d(col("sy"))
@@ -1307,7 +1401,6 @@ object Stats {
         .groupBy("g", "post")
         .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
           sum(col("vd") * col("vd")).as("ssq"))
-      def d(c: Column): Column = c.cast("double")
       val mean = d(col("s")) / d(col("n"))
       // greatest(…, 0) on the NEVER-NULL raw moment difference (not the
       // /(n−1) quotient, whose n=1 NULL would hit Spark's null-skipping
@@ -1359,13 +1452,7 @@ object Stats {
     // run the identical sequence. The pair frame is a broadcast self-join
     // of the 5-row group table — schema-bounded, never corpus-bounded.
     "q_tukey_hsd" -> ((s, dir) => {
-      val v = ColumnOps.cents(col("c_acctbal"))
-      val g = t(s, dir, "customer")
-        .select(col("c_mktsegment").as("seg"), v.as("v"),
-          v.cast("decimal(18,0)").as("vd"))
-        .groupBy("seg")
-        .agg(count(lit(1)).as("ng"), sum(col("v")).as("sg"),
-          sum(col("vd") * col("vd")).as("ssqg"))
+      val g = segmentBalanceMoments(s, dir)
       val tg = col("sg").cast("double") * col("sg").cast("double") /
         col("ng").cast("double")
       val wOrd = BoundedWindow.ordered(col("seg"), col("seg"))
@@ -2341,7 +2428,6 @@ object Stats {
         sum(col("w") * col("nk")).as("swn"),
         sum(col("w") * col("w") * col("nk")).as("swwn"),
         sum(col("w") * col("ak")).as("swa"))
-      def d(c: Column): Column = c.cast("double")
       val pbar = d(col("aa")) / d(col("nn"))
       val num = d(col("swa")) - d(col("swn")) * d(col("aa")) / d(col("nn"))
       val vr = pbar * (lit(1.0) - pbar) *
@@ -2409,7 +2495,6 @@ object Stats {
       // sum instead of a 5-decimal-sum re-group (measured 6.0 → 1.0 s at
       // sf0.1; the moments are the SAME exact integers, so the oracle
       // hash is unchanged).
-      def dd(c: Column): Column = c.cast("decimal(38,0)")
       val wAllK = BoundedWindow.whole(col("day"))
       val wxr = BoundedWindow.ordered(col("day"), col("x"), col("day"))
       val wyr = BoundedWindow.ordered(col("day"), col("y"), col("day"))
@@ -2429,23 +2514,22 @@ object Stats {
           - (lit(2L) * col("py") - col("ty_all")))
       val m = withSums.agg(count(lit(1)).as("n"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(dd(col("x")) * col("x")).as("sx2"),
-        sum(dd(col("y")) * col("y")).as("sy2"),
-        sum(dd(col("ax"))).as("tx"), sum(dd(col("ay"))).as("ty"),
-        sum(dd(col("ax")) * col("ay")).as("t3"),
-        sum(dd(col("ax")) * col("ax")).as("t3x"),
-        sum(dd(col("ay")) * col("ay")).as("t3y"))
+        sum(dec(col("x")) * col("x")).as("sx2"),
+        sum(dec(col("y")) * col("y")).as("sy2"),
+        sum(dec(col("ax"))).as("tx"), sum(dec(col("ay"))).as("ty"),
+        sum(dec(col("ax")) * col("ay")).as("t3"),
+        sum(dec(col("ax")) * col("ax")).as("t3x"),
+        sum(dec(col("ay")) * col("ay")).as("t3y"))
       val a = daily.select(col("x").as("xi"), col("y").as("yi"))
       val b = daily.select(col("x").as("xj"), col("y").as("yj"))
       val t1 = a.crossJoin(broadcast(b))
-        .agg(sum(dd(abs(col("xi") - col("xj")) * abs(col("yi") - col("yj"))))
+        .agg(sum(dec(abs(col("xi") - col("xj")) * abs(col("yi") - col("yj"))))
           .as("t1"))
       val g = m.crossJoin(broadcast(t1))
-        .withColumn("t1x", lit(2L) * dd(col("n")) * col("sx2")
-          - lit(2L) * dd(col("sx")) * col("sx"))
-        .withColumn("t1y", lit(2L) * dd(col("n")) * col("sy2")
-          - lit(2L) * dd(col("sy")) * col("sy"))
-      def d(c: Column): Column = c.cast("double")
+        .withColumn("t1x", lit(2L) * dec(col("n")) * col("sx2")
+          - lit(2L) * dec(col("sx")) * col("sx"))
+        .withColumn("t1y", lit(2L) * dec(col("n")) * col("sy2")
+          - lit(2L) * dec(col("sy")) * col("sy"))
       val n2 = d(col("n")) * d(col("n"))
       val n3 = n2 * d(col("n"))
       val dcov2 = d(col("t1")) / n2 +
@@ -2493,7 +2577,6 @@ object Stats {
         sum(when(col("g") === 0L, col("y")).otherwise(0L)).as("syt"),
         sum(when(col("g") === 1L, col("y")).otherwise(0L)).as("syc"))
       val wAll = BoundedWindow.whole(col("qn"))
-      def d(c: Column): Column = c.cast("double")
       val matched = strata.where(col("nt") > 0 && col("nc") > 0)
         .withColumn("mt", sum(col("nt")).over(wAll))
         .withColumn("mc", sum(col("nc")).over(wAll))
@@ -2524,11 +2607,7 @@ object Stats {
     // A/A split the expected answer is equivalent = 1.
     "q_tost_equivalence" -> ((s, dir) => {
       val margin = lit(50.0)
-      val byUser = t(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg(avg(col("value")).as("x"))
-        .select(arm(col("user_id")).as("g"), col("x"))
+      val byUser = armMeans(s, dir)
       val xa = when(col("g") === 0L, col("x"))
       val xb = when(col("g") === 1L, col("x"))
       val g = byUser.agg(
@@ -2567,7 +2646,6 @@ object Stats {
         .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
           sum(col("vd") * col("vd")).as("ssq"))
       val wAll = BoundedWindow.whole(col("prio"))
-      def d(c: Column): Column = c.cast("double")
       val tot0 = cells
         .withColumn("nn", sum(col("n")).over(wAll))
         .withColumn("snn", sum(col("n") * col("n")).over(wAll))
@@ -2626,7 +2704,6 @@ object Stats {
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n"), sum(isHigh.cast("long")).as("k"))
         .where(col("n") >= 5)
-      def d(c: Column): Column = c.cast("double")
       val p = d(col("k")) / d(col("n"))
       val terms = cust.select(col("o_custkey"), col("n"), col("k"),
         floor(p * lit(1000000.0) + lit(0.500001)).cast("long").as("pu"),
@@ -2713,28 +2790,9 @@ object Stats {
     // Σ R_j² accumulation is order-independent with no quantization;
     // χ²_F = 12/(bk(k+1))·ΣR_j² − 3b(k+1) vs the same χ²₀.₀₅,₆ line.
     "q_friedman" -> ((s, dir) => {
-      val daily = Timeseries.dailyRevenue(s, dir)
-        .select(col("day"), col("rev"),
-          floor(datediff(col("day"), lit("1995-01-01").cast("date")) / 7)
-            .cast("long").as("wk"),
-          pmod(datediff(col("day"), lit("1995-01-01").cast("date"))
-            .cast("long"), lit(7L)).as("wd"))
-      val complete = daily
-        .withColumn("wn", count(lit(1)).over(Window.partitionBy(col("wk"))))
-        .where(col("wn") === 7)
-      val ranked = complete
-        .withColumn("rk", rank().over(
-          Window.partitionBy(col("wk")).orderBy(col("rev"))))
-        .withColumn("ties", count(lit(1)).over(
-          Window.partitionBy(col("wk"), col("rev"))))
-        .withColumn("midrank",
-          col("rk").cast("double") +
-            (col("ties") - 1L).cast("double") / 2.0)
-      val byWd = ranked.groupBy("wd")
-        .agg(sum(col("midrank")).as("rj"), count(lit(1)).as("b"))
+      val byWd = weekdayRankSums(s, dir)
       val g = byWd.agg(max(col("b")).as("b"), count(lit(1)).as("k"),
         sum(col("rj") * col("rj")).as("srj2"))
-      def d(c: Column): Column = c.cast("double")
       val chi = lit(12.0) / (d(col("b")) * d(col("k")) * (d(col("k")) + 1.0)) *
         col("srj2") - lit(3.0) * d(col("b")) * (d(col("k")) + 1.0)
       g.select(col("b").as("n_weeks"), col("k").as("k_days"),
@@ -2754,28 +2812,9 @@ object Stats {
     // the predicted order up to reversal). One shuffle to the daily
     // frame; everything after lives on the ≤7-row weekday frame.
     "q_page_trend" -> ((s, dir) => {
-      val daily = Timeseries.dailyRevenue(s, dir)
-        .select(col("day"), col("rev"),
-          floor(datediff(col("day"), lit("1995-01-01").cast("date")) / 7)
-            .cast("long").as("wk"),
-          pmod(datediff(col("day"), lit("1995-01-01").cast("date"))
-            .cast("long"), lit(7L)).as("wd"))
-      val complete = daily
-        .withColumn("wn", count(lit(1)).over(Window.partitionBy(col("wk"))))
-        .where(col("wn") === 7)
-      val ranked = complete
-        .withColumn("rk", rank().over(
-          Window.partitionBy(col("wk")).orderBy(col("rev"))))
-        .withColumn("ties", count(lit(1)).over(
-          Window.partitionBy(col("wk"), col("rev"))))
-        .withColumn("midrank",
-          col("rk").cast("double") +
-            (col("ties") - 1L).cast("double") / 2.0)
-      val byWd = ranked.groupBy("wd")
-        .agg(sum(col("midrank")).as("rj"), count(lit(1)).as("b"))
+      val byWd = weekdayRankSums(s, dir)
       val g = byWd.agg(max(col("b")).as("b"), count(lit(1)).as("k"),
         sum((col("wd") + 1L).cast("double") * col("rj")).as("l"))
-      def d(c: Column): Column = c.cast("double")
       val bD = d(col("b")); val kD = d(col("k"))
       val el = bD * kD * (kD + 1.0) * (kD + 1.0) / 4.0
       val vl = bD * kD * kD * (kD + 1.0) * (kD * kD - 1.0) / 144.0
@@ -2844,7 +2883,6 @@ object Stats {
       val tot = cells
         .withColumn("ta", sum(col("above")).over(wAll))
         .withColumn("tn", sum(col("nj")).over(wAll))
-      def d(c: Column): Column = c.cast("double")
       def cellTerm(o: Column, e: Column): Column =
         floor(try_divide((d(o) - e) * (d(o) - e), e) * 1000000.0)
           .cast("long")
@@ -2940,7 +2978,6 @@ object Stats {
           .as("sfma"),
         sum(when(col("g") === 1L, col("fd") * col("md")).otherwise(lit(0)))
           .as("sfmb"))
-      def d(c: Column): Column = c.cast("double")
       val naD = d(col("na")); val nbD = d(col("nb"))
       val nD = naD + nbD
       // pooled central SSCP = per-arm (Σxx − ΣxΣx/n) summed, / (N−2)
@@ -2980,7 +3017,6 @@ object Stats {
         .groupBy(col("o_orderpriority").as("prio"))
         .agg(count(lit(1)).as("ni"), sum(v).as("si"),
           sum(v.cast("decimal(19,0)") * v.cast("decimal(19,0)")).as("qi"))
-      def d(c: Column): Column = c.cast("double")
       val vi = try_divide(greatest(d(col("qi")) - d(col("si")) * d(col("si")) /
         d(col("ni")), lit(0.0)), d(col("ni")) - 1)
       def lnPos(c: Column): Column = when(c > 0, log(c))
@@ -3204,16 +3240,37 @@ object Stats {
        |FROM f4""".stripMargin
   }
 
+  /** The two-sample value histogram of an o CTE (v, g): per value the arm
+    * counts ca (g = 0) and cb (g = 1). */
+  private val AbHistCte =
+    """hist AS (
+      |  SELECT v,
+      |    CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+      |    CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
+      |  FROM o GROUP BY v
+      |)""".stripMargin
+
+  /** Every 20th order's price in cents (v) split urgent-or-high (g = 1) vs
+    * the rest (g = 0), and its two-sample value histogram (hist: c1, c2). */
+  private val UrgentHistCte =
+    """o AS (
+      |  SELECT CASE WHEN o_orderpriority = '1-URGENT'
+      |      OR o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END AS g,
+      |    CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT) AS v
+      |  FROM orders WHERE o_orderkey % 20 = 0
+      |), hist AS (
+      |  SELECT v,
+      |    CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+      |    CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c2
+      |  FROM o GROUP BY v
+      |)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
 
     // same per-user moments as the t-test, r6-pinned before the power math
     // so ceil/boolean boundaries are decided on identical doubles
     "q_power_analysis" ->
-      """WITH u AS (
-        |  SELECT user_id, AVG(value) AS x,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4) AS BIGINT) % 2 AS g
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-        |), m AS (
+      s"""WITH $ArmMeansCte, m AS (
         |  SELECT
         |    CAST(COUNT(x) FILTER (WHERE g = 0) AS BIGINT) AS na,
         |    CAST(COUNT(x) FILTER (WHERE g = 1) AS BIGINT) AS nb,
@@ -3402,20 +3459,7 @@ object Stats {
         |FROM scored WHERE rn = 1 ORDER BY feature""".stripMargin,
 
     "q_ab_ttest" ->
-      """WITH u AS (
-        |  SELECT user_id, AVG(value) AS x,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4) AS BIGINT) % 2 AS g
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-        |), m AS (
-        |  SELECT
-        |    CAST(COUNT(x) FILTER (WHERE g = 0) AS BIGINT) AS na,
-        |    CAST(COUNT(x) FILTER (WHERE g = 1) AS BIGINT) AS nb,
-        |    AVG(x) FILTER (WHERE g = 0) AS ma,
-        |    AVG(x) FILTER (WHERE g = 1) AS mb,
-        |    VAR_SAMP(x) FILTER (WHERE g = 0) AS va,
-        |    VAR_SAMP(x) FILTER (WHERE g = 1) AS vb
-        |  FROM u
-        |)
+      s"""WITH $ArmMomentsCte
         |SELECT na AS n_a, nb AS n_b,
         |  FLOOR(ma * 1000000.0 + 0.500001) / 1000000.0 AS mean_a,
         |  FLOOR(mb * 1000000.0 + 0.500001) / 1000000.0 AS mean_b,
@@ -3434,19 +3478,7 @@ object Stats {
         |  / (pow(va / na, 2) / (na - 1) + pow(vb / nb, 2) / (nb - 1)) AS df) AS df2""".stripMargin,
 
     "q_chi_square" ->
-      """WITH cells AS (
-        |  SELECT o_orderpriority AS px, o_orderstatus AS sy,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM orders GROUP BY 1, 2
-        |), cont AS (
-        |  SELECT px, sy, c,
-        |    SUM(c) OVER (PARTITION BY px) AS rt,
-        |    SUM(c) OVER (PARTITION BY sy) AS ct,
-        |    SUM(c) OVER () AS n,
-        |    row_number() OVER (PARTITION BY px ORDER BY sy) AS rnx,
-        |    row_number() OVER (PARTITION BY sy ORDER BY px) AS rny
-        |  FROM cells
-        |), g AS (
+      s"""WITH $ContingencyCte, g AS (
         |  SELECT MAX(n) AS nn, CAST(COUNT(*) AS BIGINT) AS n_cells,
         |    SUM(CASE WHEN rnx = 1 THEN 1 ELSE 0 END) AS r,
         |    SUM(CASE WHEN rny = 1 THEN 1 ELSE 0 END) AS cc,
@@ -3462,19 +3494,7 @@ object Stats {
         |FROM g""".stripMargin,
 
     "q_mutual_info" ->
-      """WITH cells AS (
-        |  SELECT o_orderpriority AS px, o_orderstatus AS sy,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM orders GROUP BY 1, 2
-        |), cont AS (
-        |  SELECT px, sy, c,
-        |    SUM(c) OVER (PARTITION BY px) AS rt,
-        |    SUM(c) OVER (PARTITION BY sy) AS ct,
-        |    SUM(c) OVER () AS n,
-        |    row_number() OVER (PARTITION BY px ORDER BY sy) AS rnx,
-        |    row_number() OVER (PARTITION BY sy ORDER BY px) AS rny
-        |  FROM cells
-        |), g AS (
+      s"""WITH $ContingencyCte, g AS (
         |  SELECT MAX(n) AS nn,
         |    SUM((c / CAST(n AS DOUBLE))
         |      * ln(c * CAST(n AS DOUBLE) / (CAST(rt AS DOUBLE) * ct))) AS mi,
@@ -3585,17 +3605,12 @@ object Stats {
         |FROM g""".stripMargin,
 
     "q_ks_exact" ->
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |      THEN 0 ELSE 1 END AS g,
         |    CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT) AS v
         |  FROM orders WHERE o_orderkey % 20 = 0
-        |), hist AS (
-        |  SELECT v,
-        |    CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM o GROUP BY v
-        |), cum AS (
+        |), $AbHistCte, cum AS (
         |  SELECT ca, cb,
         |    SUM(ca) OVER (ORDER BY v
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
@@ -3690,17 +3705,12 @@ object Stats {
         |FROM f""".stripMargin,
 
     "q_mann_whitney" ->
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 4)
         |      AS BIGINT) % 2 AS g,
         |    CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT) AS v
         |  FROM orders WHERE o_orderkey % 20 = 0
-        |), hist AS (
-        |  SELECT v,
-        |    CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM o GROUP BY v
-        |), cum AS (
+        |), $AbHistCte, cum AS (
         |  SELECT ca, cb, ca + cb AS c,
         |    SUM(ca) OVER (ORDER BY v
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -3783,17 +3793,7 @@ object Stats {
     // the distance-from-extremes score LEAST(D, 2(N+1)−D) exact BIGINT;
     // parity-split classical moments in identical literal order
     "q_ansari_bradley" ->
-      """WITH o AS (
-        |  SELECT CASE WHEN o_orderpriority = '1-URGENT'
-        |      OR o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END AS g,
-        |    CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT) AS v
-        |  FROM orders WHERE o_orderkey % 20 = 0
-        |), hist AS (
-        |  SELECT v,
-        |    CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |    CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |  FROM o GROUP BY v
-        |), cum AS (
+      s"""WITH $UrgentHistCte, cum AS (
         |  SELECT c1, c2,
         |    CAST(SUM(c1) OVER () AS BIGINT) AS n1,
         |    CAST(SUM(c2) OVER () AS BIGINT) AS n2,
@@ -3852,17 +3852,7 @@ object Stats {
     // moments exact HUGEINT, and S²/p̂/W/df compose in the same literal
     // order; sub-threshold groups abstain via the same NULL denominators
     "q_brunner_munzel" ->
-      """WITH o AS (
-        |  SELECT CASE WHEN o_orderpriority = '1-URGENT'
-        |      OR o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END AS g,
-        |    CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT) AS v
-        |  FROM orders WHERE o_orderkey % 20 = 0
-        |), hist AS (
-        |  SELECT v,
-        |    CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-        |    CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c2
-        |  FROM o GROUP BY v
-        |), cum AS (
+      s"""WITH $UrgentHistCte, cum AS (
         |  SELECT c1, c2,
         |    CAST(SUM(c1) OVER () AS BIGINT) AS n1,
         |    CAST(SUM(c2) OVER () AS BIGINT) AS n2,
@@ -4770,12 +4760,7 @@ object Stats {
     // identical rank cuts ((n·5)//100 both engines), exact BIGINT trimmed
     // and winsorized sums, one division per output
     "q_trimmed_mean" ->
-      """WITH feats AS (
-        |  SELECT o_custkey AS custkey,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS m
-        |  FROM orders GROUP BY 1
-        |), ranked AS (
+      s"""WITH ${Analytics.CustomerSpendCte}, ranked AS (
         |  SELECT m, ROW_NUMBER() OVER (ORDER BY m, custkey) AS r,
         |    COUNT(*) OVER () AS n
         |  FROM feats
@@ -5037,11 +5022,7 @@ object Stats {
     // the same exact-integer contingency cells and the identical ln-ratio
     // terms; the reject flag compares the r4-rounded statistic
     "q_g_test" ->
-      """WITH cells AS (
-        |  SELECT o_orderpriority AS px, o_orderstatus AS sy,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM orders GROUP BY 1, 2
-        |), cont AS (
+      s"""WITH $CellsCte, cont AS (
         |  SELECT px, sy, c,
         |    SUM(c) OVER (PARTITION BY px) AS rt,
         |    SUM(c) OVER (PARTITION BY sy) AS ct,
@@ -5325,12 +5306,7 @@ object Stats {
     // identical calendar-bounded pair census; quantile_cont matches
     // percentile's midpoint interpolation on exact integers
     "q_hodges_lehmann" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), a AS (SELECT rev AS ra FROM daily WHERE year(day) = 1998
+      s"""WITH ${Timeseries.DailyRevenueCte}, a AS (SELECT rev AS ra FROM daily WHERE year(day) = 1998
         |), b AS (SELECT rev AS rb FROM daily WHERE year(day) = 1997
         |), pairs AS (SELECT ra - rb AS d FROM a, b
         |), m AS (
@@ -5442,20 +5418,7 @@ object Stats {
     // the q_ab_ttest moment frame, two one-sided z's against ±$50, the
     // verdict on the same r6-rounded statistics
     "q_tost_equivalence" ->
-      """WITH u AS (
-        |  SELECT user_id, AVG(value) AS x,
-        |    CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4) AS BIGINT) % 2 AS g
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-        |), m AS (
-        |  SELECT
-        |    CAST(COUNT(x) FILTER (WHERE g = 0) AS BIGINT) AS na,
-        |    CAST(COUNT(x) FILTER (WHERE g = 1) AS BIGINT) AS nb,
-        |    AVG(x) FILTER (WHERE g = 0) AS ma,
-        |    AVG(x) FILTER (WHERE g = 1) AS mb,
-        |    VAR_SAMP(x) FILTER (WHERE g = 0) AS va,
-        |    VAR_SAMP(x) FILTER (WHERE g = 1) AS vb
-        |  FROM u
-        |)
+      s"""WITH $ArmMomentsCte
         |SELECT na AS n_a, nb AS n_b,
         |  FLOOR((ma - mb) * 1000000.0 + 0.500001) / 1000000.0 AS diff,
         |  FLOOR(sqrt(va / na + vb / nb) * 1000000.0 + 0.500001) / 1000000.0
@@ -5586,12 +5549,7 @@ object Stats {
     // identical midranks off the value-grouped prefix sum, micro-quantized
     // per-group terms, the same engine-neutral weekday and χ² line
     "q_kruskal_wallis" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), d2 AS (
+      s"""WITH ${Timeseries.DailyRevenueCte}, d2 AS (
         |  SELECT rev, CAST(((day - DATE '1995-01-01') % 7 + 7) % 7 AS BIGINT) AS wd
         |  FROM daily
         |), vals AS (
@@ -5634,30 +5592,7 @@ object Stats {
     // identical per-block midranks (RANK + (ties−1)/2), exact half-integer
     // rank algebra, the same χ² line
     "q_friedman" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), d2 AS (
-        |  SELECT rev,
-        |    CAST(FLOOR((day - DATE '1995-01-01') / 7.0) AS BIGINT) AS wk,
-        |    CAST(((day - DATE '1995-01-01') % 7 + 7) % 7 AS BIGINT) AS wd
-        |  FROM daily
-        |), complete AS (
-        |  SELECT * FROM (
-        |    SELECT *, COUNT(*) OVER (PARTITION BY wk) AS wn FROM d2)
-        |  WHERE wn = 7
-        |), ranked AS (
-        |  SELECT wd,
-        |    CAST(RANK() OVER (PARTITION BY wk ORDER BY rev) AS DOUBLE)
-        |      + CAST(COUNT(*) OVER (PARTITION BY wk, rev) - 1 AS DOUBLE)
-        |        / 2.0 AS midrank
-        |  FROM complete
-        |), bywd AS (
-        |  SELECT wd, SUM(midrank) AS rj, CAST(COUNT(*) AS BIGINT) AS b
-        |  FROM ranked GROUP BY wd
-        |), g AS (
+      s"""WITH $WeekdayRankSumsCte, g AS (
         |  SELECT CAST(MAX(b) AS BIGINT) AS b, CAST(COUNT(*) AS BIGINT) AS k,
         |    SUM(rj * rj) AS srj2
         |  FROM bywd
@@ -5678,30 +5613,7 @@ object Stats {
     // aggregation order cannot matter), the same L/E/Var literal-order
     // closed forms, z on the rounded value
     "q_page_trend" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), d2 AS (
-        |  SELECT rev,
-        |    CAST(FLOOR((day - DATE '1995-01-01') / 7.0) AS BIGINT) AS wk,
-        |    CAST(((day - DATE '1995-01-01') % 7 + 7) % 7 AS BIGINT) AS wd
-        |  FROM daily
-        |), complete AS (
-        |  SELECT * FROM (
-        |    SELECT *, COUNT(*) OVER (PARTITION BY wk) AS wn FROM d2)
-        |  WHERE wn = 7
-        |), ranked AS (
-        |  SELECT wd,
-        |    CAST(RANK() OVER (PARTITION BY wk ORDER BY rev) AS DOUBLE)
-        |      + CAST(COUNT(*) OVER (PARTITION BY wk, rev) - 1 AS DOUBLE)
-        |        / 2.0 AS midrank
-        |  FROM complete
-        |), bywd AS (
-        |  SELECT wd, SUM(midrank) AS rj, CAST(COUNT(*) AS BIGINT) AS b
-        |  FROM ranked GROUP BY wd
-        |), g AS (
+      s"""WITH $WeekdayRankSumsCte, g AS (
         |  SELECT CAST(MAX(b) AS BIGINT) AS b, CAST(COUNT(*) AS BIGINT) AS k,
         |    SUM(CAST(wd + 1 AS DOUBLE) * rj) AS l
         |  FROM bywd
@@ -5732,12 +5644,7 @@ object Stats {
     // identical bounded pair census, exact dominance counts, the same
     // r6-rounded |δ| magnitude cuts
     "q_cliffs_delta" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), a AS (SELECT rev AS ra FROM daily WHERE year(day) = 1998
+      s"""WITH ${Timeseries.DailyRevenueCte}, a AS (SELECT rev AS ra FROM daily WHERE year(day) = 1998
         |), b AS (SELECT rev AS rb FROM daily WHERE year(day) = 1997
         |), dom AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -5762,12 +5669,7 @@ object Stats {
     // identical exact percentile median, micro-quantized cell terms,
     // NULL-on-zero expected counts on both engines
     "q_mood_median" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), d2 AS (
+      s"""WITH ${Timeseries.DailyRevenueCte}, d2 AS (
         |  SELECT rev, CAST(((day - DATE '1995-01-01') % 7 + 7) % 7 AS BIGINT) AS wd
         |  FROM daily
         |), med AS (
@@ -5818,12 +5720,7 @@ object Stats {
     // identical md5-derived sign flips, exact integer sum comparisons,
     // the same (1 + exceed)/(K + 1) rational
     "q_permutation_test" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), pairs AS (
+      s"""WITH ${Timeseries.DailyRevenueCte}, pairs AS (
         |  SELECT a.md, a.rev - b.rev AS d FROM
         |    (SELECT CAST(month(day) * 100 + dayofmonth(day) AS BIGINT) AS md,
         |       rev FROM daily WHERE year(day) = 1998) a

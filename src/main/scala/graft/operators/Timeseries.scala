@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Sources.{table => t}
 import graft.functions.ColumnOps
-import graft.functions.ColumnOps.{r2, r4, r6}
+import graft.functions.ColumnOps.{d, dec, r2, r4, r6}
 
 /** Time-series analytics family: exponential smoothing over the daily
   * revenue series, time-range window frames over the event log, and
@@ -62,6 +62,122 @@ object Timeseries {
     t(s, dir, "orders")
       .groupBy(to_date(col("o_orderdate")).as("day"))
       .agg(sum(ColumnOps.cents(col("o_totalprice"))).as("rev"))
+
+  /** The DuckDB mirror of [[dailyRevenue]]: the `daily` CTE the oracles of
+    * the series queries interpolate (without `WITH`, so it can follow
+    * other CTEs). */
+  private[operators] val DailyRevenueCte =
+    """daily AS (
+      |  SELECT CAST(o_orderdate AS DATE) AS day,
+      |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
+      |      AS BIGINT) AS rev
+      |  FROM orders GROUP BY 1
+      |)""".stripMargin
+
+  /** The lag-1..h moment row of the daily series, all exact integer sums
+    * (one ordered window, one global aggregate): nn, ss = Σr, syy = Σr²
+    * and per lag k the pair count n_k, p_k = Σr·r₋ₖ (decimal), and the
+    * pair-window sums a_k = Σr and b_k = Σr₋ₖ. */
+  private def lagMoments(s: SparkSession, dir: String, h: Int): DataFrame = {
+    val w = BoundedWindow.ordered(col("day"), col("day"))
+    val lags = (1 to h).foldLeft(dailyRevenue(s, dir)) { (d, k) =>
+      d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
+    val revd = col("rev").cast("decimal(18,0)")
+    val aggCols =
+      Seq(count(lit(1)).as("nn"), sum(col("rev")).as("ss"),
+        sum(revd * revd).as("syy")) ++
+      (1 to h).flatMap { k =>
+        val lk = col(s"l$k")
+        Seq(count(lk).as(s"n$k"),
+          sum(revd * lk.cast("decimal(18,0)")).as(s"p$k"),
+          sum(when(lk.isNotNull, col("rev"))).as(s"a$k"),
+          sum(lk).as(s"b$k"))
+      }
+    lags.agg(aggCols.head, aggCols.tail: _*)
+  }
+
+  /** The DuckDB mirror of [[lagMoments]]: the daily series with lags
+    * 1..h (lagged), their integer moment row (g) and its mean and centred
+    * square sum (m: mu, den). */
+  private def lagMomentsCte(h: Int): String = {
+    val lagCols = (1 to h).map(k =>
+      s"    LAG(rev, $k) OVER (ORDER BY day) AS l$k").mkString(",\n")
+    val aggs = (1 to h).map(k =>
+      s"""    CAST(COUNT(l$k) AS BIGINT) AS n$k,
+         |    CAST(SUM(CAST(rev AS HUGEINT) * l$k) AS DOUBLE) AS p$k,
+         |    CAST(SUM(rev) FILTER (WHERE l$k IS NOT NULL) AS BIGINT) AS a$k,
+         |    CAST(SUM(l$k) AS BIGINT) AS b$k""".stripMargin).mkString(",\n")
+    s"""$DailyRevenueCte, lagged AS (
+       |  SELECT day, rev,
+       |$lagCols
+       |  FROM daily
+       |), g AS (
+       |  SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(SUM(rev) AS BIGINT) AS ss,
+       |    CAST(SUM(CAST(rev AS HUGEINT) * rev) AS DOUBLE) AS syy,
+       |$aggs
+       |  FROM lagged
+       |), m AS (
+       |  SELECT *, CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE) AS mu,
+       |    syy - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE)
+       |      AS den
+       |  FROM g
+       |)""".stripMargin
+  }
+
+  /** The OLS trend line of the daily series over epoch-day tt (days since
+    * 1992-01-01), fitted from exact integer moments so both engines derive
+    * bit-identical doubles. Returns the series with its tt column, the
+    * one-row moment frame (n, st = Σt, sy = Σy, stt = Σt², sty = Σty),
+    * and the slope b and intercept a as columns over that frame (b is
+    * NULL on a flat calendar). */
+  private def trendFit(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Column, Column) = {
+    val daily = dailyRevenue(s, dir)
+      .withColumn("tt",
+        datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
+    val revd = col("rev").cast("decimal(20,0)")
+    val ttd = col("tt").cast("decimal(20,0)")
+    val m = daily.agg(
+      count(lit(1)).as("n"), sum(col("tt")).as("st"),
+      sum(col("rev")).as("sy"), sum(ttd * ttd).as("stt"),
+      sum(ttd * revd).as("sty"))
+    val nD = col("n").cast("double"); val stD = col("st").cast("double")
+    val syD = col("sy").cast("double")
+    val denom = nD * col("stt").cast("double") - stD * stD
+    val b = when(denom =!= 0.0,
+      (nD * col("sty").cast("double") - stD * syD) / denom)
+    (daily, m, b, (syD - b * stD) / nD)
+  }
+
+  /** The DuckDB mirror of [[trendFit]]'s inputs: the daily series with epoch-
+    * day tt (dd) and its exact integer moment row (m). */
+  private val TrendMomentsCte =
+    s"""$DailyRevenueCte, dd AS (
+       |  SELECT day, rev,
+       |    CAST(datediff('day', DATE '1992-01-01', day) AS BIGINT) AS tt
+       |  FROM daily
+       |), m AS (
+       |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+       |    CAST(SUM(tt) AS BIGINT) AS st, CAST(SUM(rev) AS BIGINT) AS sy,
+       |    CAST(SUM(CAST(tt AS HUGEINT) * tt) AS HUGEINT) AS stt,
+       |    CAST(SUM(CAST(tt AS HUGEINT) * rev) AS HUGEINT) AS sty
+       |  FROM dd
+       |)""".stripMargin
+
+  /** [[TrendMomentsCte]] with the slope b (ab0, NULL on a flat calendar),
+    * carrying n, st, sy and stt. */
+  private val TrendFitCte =
+    s"""$TrendMomentsCte, ab0 AS (
+       |  SELECT n, st, sy, stt,
+       |    CASE WHEN CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
+       |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) <> 0.0
+       |      THEN (CAST(n AS DOUBLE) * CAST(sty AS DOUBLE)
+       |        - CAST(st AS DOUBLE) * CAST(sy AS DOUBLE))
+       |        / (CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
+       |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
+       |      END AS b
+       |  FROM m
+       |)""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -362,7 +478,6 @@ object Timeseries {
         .withColumn("dd", lit(2L) * col("rk") + col("tc") - 1L)
       val wDay = BoundedWindow.ordered(col("day"), col("day"))
       val diffed = ranked.withColumn("dn", lead(col("dd"), 1).over(wDay))
-      def dec(x: Column): Column = x.cast("decimal(38,0)")
       val zeroDec = lit(0).cast("decimal(38,0)")
       val m = diffed.agg(count(lit(1)).as("n"),
         sum(dec(col("dd")) * col("dd")).as("sdd"),
@@ -876,22 +991,7 @@ object Timeseries {
     // engines run the identical final float sequence. Denominator is the
     // full-series Σ(r−m)² (the standard ACF normalization).
     "q_acf" -> ((s, dir) => {
-      val daily = dailyRevenue(s, dir)
-      val w = BoundedWindow.ordered(col("day"), col("day"))
-      val lags = (1 to 7).foldLeft(daily) { (d, k) =>
-        d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
-      val revd = col("rev").cast("decimal(18,0)")
-      val aggCols =
-        Seq(count(lit(1)).as("nn"), sum(col("rev")).as("ss"),
-          sum(revd * revd).as("syy")) ++
-        (1 to 7).flatMap { k =>
-          val lk = col(s"l$k")
-          Seq(count(lk).as(s"n$k"),
-            sum(revd * lk.cast("decimal(18,0)")).as(s"p$k"),
-            sum(when(lk.isNotNull, col("rev"))).as(s"a$k"),
-            sum(lk).as(s"b$k"))
-        }
-      val g = lags.agg(aggCols.head, aggCols.tail: _*)
+      val g = lagMoments(s, dir, 7)
       val nnD = col("nn").cast("double"); val ssD = col("ss").cast("double")
       val m = ssD / nnD
       val den = col("syy").cast("double") - ssD * ssD / nnD
@@ -922,22 +1022,7 @@ object Timeseries {
     // after it with NULL on both engines (NULL arithmetic propagates
     // identically through the recursion).
     "q_pacf" -> ((s, dir) => {
-      val daily = dailyRevenue(s, dir)
-      val w = BoundedWindow.ordered(col("day"), col("day"))
-      val lags = (1 to 5).foldLeft(daily) { (d, k) =>
-        d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
-      val revd = col("rev").cast("decimal(18,0)")
-      val aggCols =
-        Seq(count(lit(1)).as("nn"), sum(col("rev")).as("ss"),
-          sum(revd * revd).as("syy")) ++
-        (1 to 5).flatMap { k =>
-          val lk = col(s"l$k")
-          Seq(count(lk).as(s"n$k"),
-            sum(revd * lk.cast("decimal(18,0)")).as(s"p$k"),
-            sum(when(lk.isNotNull, col("rev"))).as(s"a$k"),
-            sum(lk).as(s"b$k"))
-        }
-      val g = lags.agg(aggCols.head, aggCols.tail: _*)
+      val g = lagMoments(s, dir, 5)
       val nnD = col("nn").cast("double"); val ssD = col("ss").cast("double")
       val m = ssD / nnD
       val den = col("syy").cast("double") - ssD * ssD / nnD
@@ -1347,22 +1432,7 @@ object Timeseries {
     // pass, one global aggregate.
     "q_ljung_box" -> ((s, dir) => {
       val h = 7
-      val daily = dailyRevenue(s, dir)
-      val w = BoundedWindow.ordered(col("day"), col("day"))
-      val lags = (1 to h).foldLeft(daily) { (d, k) =>
-        d.withColumn(s"l$k", lag(col("rev"), k).over(w)) }
-      val revd = col("rev").cast("decimal(18,0)")
-      val aggCols =
-        Seq(count(lit(1)).as("nn"), sum(col("rev")).as("ss"),
-          sum(revd * revd).as("syy")) ++
-        (1 to h).flatMap { k =>
-          val lk = col(s"l$k")
-          Seq(count(lk).as(s"n$k"),
-            sum(revd * lk.cast("decimal(18,0)")).as(s"p$k"),
-            sum(when(lk.isNotNull, col("rev"))).as(s"a$k"),
-            sum(lk).as(s"b$k"))
-        }
-      val g = lags.agg(aggCols.head, aggCols.tail: _*)
+      val g = lagMoments(s, dir, h)
       val nnD = col("nn").cast("double"); val ssD = col("ss").cast("double")
       val m = ssD / nnD
       val den = col("syy").cast("double") - ssD * ssD / nnD
@@ -1445,22 +1515,8 @@ object Timeseries {
     // (<2-day) calendar. One shuffle to the calendar-bounded daily frame;
     // the moment row broadcasts back.
     "q_durbin_watson" -> ((s, dir) => {
-      val daily = dailyRevenue(s, dir)
-        .withColumn("tt",
-          datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
-      val revd = col("rev").cast("decimal(20,0)")
-      val ttd = col("tt").cast("decimal(20,0)")
-      val m = daily.agg(
-        count(lit(1)).as("n"), sum(col("tt")).as("st"),
-        sum(col("rev")).as("sy"), sum(ttd * ttd).as("stt"),
-        sum(ttd * revd).as("sty"))
-      val nD = col("n").cast("double"); val stD = col("st").cast("double")
-      val syD = col("sy").cast("double")
-      val denom = nD * col("stt").cast("double") - stD * stD
-      val b = when(denom =!= 0.0,
-        (nD * col("sty").cast("double") - stD * syD) / denom)
-      val ab = m.select(col("n"), b.as("b"),
-        ((syD - b * stD) / nD).as("a"))
+      val (daily, m, b, a) = trendFit(s, dir)
+      val ab = m.select(col("n"), b.as("b"), a.as("a"))
       val w = BoundedWindow.ordered(col("day"), col("day"))
       val resid = daily.crossJoin(broadcast(ab))
         .withColumn("e",
@@ -1502,22 +1558,9 @@ object Timeseries {
     // to-rounded so it cannot flip cross-engine. Degenerate frames
     // (n ≤ 2, flat calendar) drop to empty output identically.
     "q_cooks_distance" -> ((s, dir) => {
-      val daily = dailyRevenue(s, dir)
-        .withColumn("tt",
-          datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
-      val revd = col("rev").cast("decimal(20,0)")
-      val ttd = col("tt").cast("decimal(20,0)")
-      val m = daily.agg(
-        count(lit(1)).as("n"), sum(col("tt")).as("st"),
-        sum(col("rev")).as("sy"), sum(ttd * ttd).as("stt"),
-        sum(ttd * revd).as("sty"))
+      val (daily, m, b, a) = trendFit(s, dir)
       val nD = col("n").cast("double"); val stD = col("st").cast("double")
-      val syD = col("sy").cast("double")
-      val denom = nD * col("stt").cast("double") - stD * stD
-      val b = when(denom =!= 0.0,
-        (nD * col("sty").cast("double") - stD * syD) / denom)
-      val ab = m.select(col("n"), b.as("b"),
-        ((syD - b * stD) / nD).as("a"),
+      val ab = m.select(col("n"), b.as("b"), a.as("a"),
         (col("stt").cast("double") - stD * stD / nD).as("s_tt"),
         (stD / nD).as("tbar"))
       val resid = daily.crossJoin(broadcast(ab))
@@ -1564,22 +1607,9 @@ object Timeseries {
     // form float of those exact moments. Degenerate frames (flat u,
     // flat t) abstain NULL via the variance guards (§2.13).
     "q_breusch_pagan" -> ((s, dir) => {
-      val daily = dailyRevenue(s, dir)
-        .withColumn("tt",
-          datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
-      val revd = col("rev").cast("decimal(20,0)")
-      val ttd = col("tt").cast("decimal(20,0)")
-      val m = daily.agg(
-        count(lit(1)).as("n"), sum(col("tt")).as("st"),
-        sum(col("rev")).as("sy"), sum(ttd * ttd).as("stt"),
-        sum(ttd * revd).as("sty"))
+      val (daily, m, b, a) = trendFit(s, dir)
       val nD = col("n").cast("double"); val stD = col("st").cast("double")
-      val syD = col("sy").cast("double")
-      val denom = nD * col("stt").cast("double") - stD * stD
-      val b = when(denom =!= 0.0,
-        (nD * col("sty").cast("double") - stD * syD) / denom)
-      val ab = m.select(col("n"), col("st"), col("stt"), b.as("b"),
-        ((syD - b * stD) / nD).as("a"))
+      val ab = m.select(col("n"), col("st"), col("stt"), b.as("b"), a.as("a"))
       val resid = daily.crossJoin(broadcast(ab))
         .withColumn("e",
           col("rev").cast("double") - col("a") -
@@ -1857,17 +1887,15 @@ object Timeseries {
         .withColumn("y1", lag(col("y"), 1).over(w))
         .withColumn("x1", lag(col("x"), 1).over(w))
         .where(col("y1").isNotNull)
-      def dd(c: Column): Column = c.cast("decimal(38,0)")
       val m = lagged.agg(count(lit(1)).as("n"),
         sum(col("y")).as("sy"), sum(col("y1")).as("sy1"),
         sum(col("x1")).as("sx1"),
-        sum(dd(col("y")) * col("y")).as("syy"),
-        sum(dd(col("y")) * col("y1")).as("syy1"),
-        sum(dd(col("y")) * col("x1")).as("syx1"),
-        sum(dd(col("y1")) * col("y1")).as("sy1y1"),
-        sum(dd(col("y1")) * col("x1")).as("sy1x1"),
-        sum(dd(col("x1")) * col("x1")).as("sx1x1"))
-      def d(c: Column): Column = c.cast("double")
+        sum(dec(col("y")) * col("y")).as("syy"),
+        sum(dec(col("y")) * col("y1")).as("syy1"),
+        sum(dec(col("y")) * col("x1")).as("syx1"),
+        sum(dec(col("y1")) * col("y1")).as("sy1y1"),
+        sum(dec(col("y1")) * col("x1")).as("sy1x1"),
+        sum(dec(col("x1")) * col("x1")).as("sx1x1"))
       val nD = d(col("n"))
       val c11 = d(col("sy1y1")) - d(col("sy1")) * d(col("sy1")) / nD
       val c12 = d(col("sy1x1")) - d(col("sy1")) * d(col("sx1")) / nD
@@ -1909,21 +1937,19 @@ object Timeseries {
         .agg(sum(cents).as("x"))
         .withColumn("tt",
           datediff(col("day"), lit("1992-01-01").cast("date")).cast("long"))
-      def dd(c: Column): Column = c.cast("decimal(38,0)")
       val aggCols = Seq(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(dd(col("x")) * col("x")).as("sx2")) ++
+        sum(dec(col("x")) * col("x")).as("sx2")) ++
         Periods.flatMap { p =>
           val idx = (pmod(col("tt"), lit(p.toLong)) + lit(1L)).cast("int")
           val ct = element_at(
             array((0 until p).map(k => lit(cosMicro(k, p))): _*), idx)
           val st = element_at(
             array((0 until p).map(k => lit(sinMicro(k, p))): _*), idx)
-          Seq(sum(dd(col("x")) * ct).as(s"sxc$p"),
-            sum(dd(col("x")) * st).as(s"sxs$p"),
+          Seq(sum(dec(col("x")) * ct).as(s"sxc$p"),
+            sum(dec(col("x")) * st).as(s"sxs$p"),
             sum(ct).as(s"sc$p"), sum(st).as(s"ss$p"))
         }
       val g = daily.agg(aggCols.head, aggCols.tail: _*)
-      def d(c: Column): Column = c.cast("double")
       val nD = d(col("n")); val mu = d(col("sx")) / nD
       val varsum = d(col("sx2")) - d(col("sx")) * mu
       val rows = Periods.map { p =>
@@ -1962,7 +1988,6 @@ object Timeseries {
           sum(col("rev").cast("decimal(19,0)") *
             col("rev").cast("decimal(19,0)")).over(wTrail))
         .where(col("n_w") === 28L)
-      def d(c: Column): Column = c.cast("double")
       val mu = d(col("s1")) / d(col("n_w"))
       val sd = sqrt(greatest(d(col("s2")) - d(col("s1")) * d(col("s1")) /
         d(col("n_w")), lit(0.0)) / (d(col("n_w")) - 1))
@@ -2008,7 +2033,6 @@ object Timeseries {
         .agg(count(lit(1)).as("seg_days"), sum(col("rev")).as("seg_sum"),
           max(col("n")).as("n"), max(col("s1")).as("s1"), max(col("s2")).as("s2"))
         .where(col("seg_days") === 16L)
-      def d(c: Column): Column = c.cast("double")
       val mu = d(col("s1")) / d(col("n"))
       val sd = sqrt(greatest(d(col("s2")) - d(col("s1")) * d(col("s1")) /
         d(col("n")), lit(0.0)) / (d(col("n")) - 1))
@@ -2044,7 +2068,6 @@ object Timeseries {
             lag(col("s"), 1).over(wOrd) =!= col("s"), 1L).otherwise(0L))
       val g = runs.agg(sum(col("s")).as("np"),
         sum(lit(1L) - col("s")).as("nm"), sum(col("chg")).as("r"))
-      def d(c: Column): Column = c.cast("double")
       val nD = d(col("np")) + d(col("nm"))
       val eR = lit(2.0) * d(col("np")) * d(col("nm")) / nD + 1.0
       val vR = (eR - 1.0) * (eR - 2.0) / (nD - 1.0)
@@ -2080,7 +2103,6 @@ object Timeseries {
         sum(col("xd") * col("xd")).as("sxx"),
         sum(col("xd") * col("dyd")).as("sxy"),
         sum(col("dyd") * col("dyd")).as("syy"))
-      def d(c: Column): Column = c.cast("double")
       val nD = d(col("n"))
       val vx = d(col("sxx")) - d(col("sx")) * d(col("sx")) / nD
       val cxy = d(col("sxy")) - d(col("sx")) * d(col("sy")) / nD
@@ -2131,7 +2153,6 @@ object Timeseries {
       val m = scaled.agg(max(col("n")).as("n"),
         sum(col("sp") * col("sp")).as("a"),
         sum(col("dd") * col("dd")).as("b"))
-      def d(c: Column): Column = c.cast("double")
       val eta = when(col("b") > lit(0),
         d(col("a")) / (d(col("n")) * d(col("b"))))
       m.select(col("n").as("n_days"), r6(eta).as("kpss_stat"),
@@ -2199,38 +2220,13 @@ object Timeseries {
     * the 7 branches stay textually identical to the Spark float sequence.
     */
   private def acfOracle: String = {
-    val lagCols = (1 to 7).map(k => s"    LAG(rev, $k) OVER (ORDER BY day) AS l$k").mkString(",\n")
-    val aggs = (1 to 7).map(k =>
-      s"""    CAST(COUNT(l$k) AS BIGINT) AS n$k,
-         |    CAST(SUM(CAST(rev AS HUGEINT) * l$k) AS DOUBLE) AS p$k,
-         |    CAST(SUM(rev) FILTER (WHERE l$k IS NOT NULL) AS BIGINT) AS a$k,
-         |    CAST(SUM(l$k) AS BIGINT) AS b$k""".stripMargin).mkString(",\n")
     val branches = (1 to 7).map(k =>
       s"""SELECT CAST($k AS BIGINT) AS lag, n$k AS n_pairs,
          |  FLOOR((p$k - mu * CAST(a$k AS DOUBLE) - mu * CAST(b$k AS DOUBLE)
          |    + CAST(n$k AS DOUBLE) * mu * mu) / den * 1000000.0 + 0.500001)
          |    / 1000000.0 AS acf
          |FROM m""".stripMargin).mkString("\nUNION ALL\n")
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-       |      AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1
-       |), lagged AS (
-       |  SELECT day, rev,
-       |$lagCols
-       |  FROM daily
-       |), g AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(SUM(rev) AS BIGINT) AS ss,
-       |    CAST(SUM(CAST(rev AS HUGEINT) * rev) AS DOUBLE) AS syy,
-       |$aggs
-       |  FROM lagged
-       |), m AS (
-       |  SELECT *, CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE) AS mu,
-       |    syy - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE)
-       |      AS den
-       |  FROM g
-       |)
+    s"""WITH ${lagMomentsCte(7)}
        |$branches
        |ORDER BY lag""".stripMargin
   }
@@ -2242,13 +2238,6 @@ object Timeseries {
     * den > 0 / d_k ≠ 0 guards mirror and NULLs propagate identically.
     */
   private def pacfOracle: String = {
-    val lagCols = (1 to 5).map(k =>
-      s"    LAG(rev, $k) OVER (ORDER BY day) AS l$k").mkString(",\n")
-    val aggs = (1 to 5).map(k =>
-      s"""    CAST(COUNT(l$k) AS BIGINT) AS n$k,
-         |    CAST(SUM(CAST(rev AS HUGEINT) * l$k) AS DOUBLE) AS p$k,
-         |    CAST(SUM(rev) FILTER (WHERE l$k IS NOT NULL) AS BIGINT) AS a$k,
-         |    CAST(SUM(l$k) AS BIGINT) AS b$k""".stripMargin).mkString(",\n")
     val rks = (1 to 5).map(k =>
       s"""    CASE WHEN den > 0.0 THEN
          |      (p$k - mu * CAST(a$k AS DOUBLE) - mu * CAST(b$k AS DOUBLE)
@@ -2259,26 +2248,7 @@ object Timeseries {
          |  FLOOR(r$k * 1000000.0 + 0.500001) / 1000000.0 AS acf,
          |  FLOOR(phi$k$k * 1000000.0 + 0.500001) / 1000000.0 AS pacf
          |FROM l5""".stripMargin
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-       |      AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1
-       |), lagged AS (
-       |  SELECT day, rev,
-       |$lagCols
-       |  FROM daily
-       |), g AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(SUM(rev) AS BIGINT) AS ss,
-       |    CAST(SUM(CAST(rev AS HUGEINT) * rev) AS DOUBLE) AS syy,
-       |$aggs
-       |  FROM lagged
-       |), m AS (
-       |  SELECT *, CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE) AS mu,
-       |    syy - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE)
-       |      AS den
-       |  FROM g
-       |), rr AS (
+    s"""WITH ${lagMomentsCte(5)}, rr AS (
        |  SELECT nn,
        |$rks
        |  FROM m
@@ -2336,13 +2306,6 @@ object Timeseries {
     * left-fold, so Q is the identical float sequence.
     */
   private def ljungBoxOracle: String = {
-    val lagCols = (1 to 7).map(k =>
-      s"    LAG(rev, $k) OVER (ORDER BY day) AS l$k").mkString(",\n")
-    val aggs = (1 to 7).map(k =>
-      s"""    CAST(COUNT(l$k) AS BIGINT) AS n$k,
-         |    CAST(SUM(CAST(rev AS HUGEINT) * l$k) AS DOUBLE) AS p$k,
-         |    CAST(SUM(rev) FILTER (WHERE l$k IS NOT NULL) AS BIGINT) AS a$k,
-         |    CAST(SUM(l$k) AS BIGINT) AS b$k""".stripMargin).mkString(",\n")
     // den > 0 guard mirrors the Spark when(den > 0.0, ...): both engines
     // abstain NULL on a constant series (rho NULLs propagate into q_stat
     // and reject identically)
@@ -2353,26 +2316,7 @@ object Timeseries {
          |      / 1000000.0 END AS r$k""".stripMargin).mkString(",\n")
     val chain = (1 to 7).map(k =>
       s"r$k * r$k / (CAST(nn AS DOUBLE) - $k.0)").mkString(" + ")
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-       |      AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1
-       |), lagged AS (
-       |  SELECT day, rev,
-       |$lagCols
-       |  FROM daily
-       |), g AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS nn, CAST(SUM(rev) AS BIGINT) AS ss,
-       |    CAST(SUM(CAST(rev AS HUGEINT) * rev) AS DOUBLE) AS syy,
-       |$aggs
-       |  FROM lagged
-       |), m AS (
-       |  SELECT *, CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE) AS mu,
-       |    syy - CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE)
-       |      AS den
-       |  FROM g
-       |), r AS (
+    s"""WITH ${lagMomentsCte(7)}, r AS (
        |  SELECT nn,
        |$rhos
        |  FROM m
@@ -2392,22 +2336,7 @@ object Timeseries {
     * both abstain), same r6 pins.
     */
   private def durbinWatsonOracle: String =
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS day,
-       |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-       |      AS BIGINT) AS rev
-       |  FROM orders GROUP BY 1
-       |), dd AS (
-       |  SELECT day, rev,
-       |    CAST(datediff('day', DATE '1992-01-01', day) AS BIGINT) AS tt
-       |  FROM daily
-       |), m AS (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-       |    CAST(SUM(tt) AS BIGINT) AS st, CAST(SUM(rev) AS BIGINT) AS sy,
-       |    CAST(SUM(CAST(tt AS HUGEINT) * tt) AS HUGEINT) AS stt,
-       |    CAST(SUM(CAST(tt AS HUGEINT) * rev) AS HUGEINT) AS sty
-       |  FROM dd
-       |), ab0 AS (
+    s"""WITH $TrendMomentsCte, ab0 AS (
        |  SELECT n, st, sy,
        |    CASE WHEN CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
        |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) <> 0.0
@@ -2527,12 +2456,7 @@ object Timeseries {
     // (the q_theil_sen precedent); identical clamp, strict censuses, and
     // day-ordered cumulative mean
     "q_winsorize" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), q AS (
+      s"""WITH $DailyRevenueCte, q AS (
         |  SELECT quantile_cont(CAST(rev AS DOUBLE), 0.05) AS lo,
         |    quantile_cont(CAST(rev AS DOUBLE), 0.95) AS hi
         |  FROM daily
@@ -2565,12 +2489,7 @@ object Timeseries {
     // constant Spark folds from 2.0*(2q-1)(q-1)/(3.0q) is spelled as its
     // folded double 4.8 so SQRT sees the same bits
     "q_variance_ratio" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), lagd AS (
+      s"""WITH $DailyRevenueCte, lagd AS (
         |  SELECT day, rev - LAG(rev, 1) OVER (ORDER BY day) AS d
         |  FROM daily
         |), diffs AS (
@@ -2712,12 +2631,7 @@ object Timeseries {
     // identical integer-cents series, date-equi lookbacks (a.day - 7 / - 1),
     // BIGINT-exact MASE denominator, single-division floats
     "q_forecast" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), mx AS (
+      s"""WITH $DailyRevenueCte, mx AS (
         |  SELECT MAX(day) AS max_day FROM daily
         |), tr AS (
         |  SELECT CAST(SUM(ABS(a.rev - b.rev)) AS BIGINT) AS sum_d,
@@ -2898,12 +2812,7 @@ object Timeseries {
     // identical calendar windows, the same exact order-statistic rank
     // ceil(0.9(n+1)) clamped to n, exact coverage counts
     "q_conformal_forecast" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), mx AS (SELECT MAX(day) AS max_day FROM daily),
+      s"""WITH $DailyRevenueCte, mx AS (SELECT MAX(day) AS max_day FROM daily),
         |scored AS (
         |  SELECT d.day, m.max_day, ABS(d.rev - h.rev) AS abs_err
         |  FROM daily d
@@ -2988,12 +2897,7 @@ object Timeseries {
         |FROM e""".stripMargin,
 
     "q_changepoint" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), stats AS (
+      s"""WITH $DailyRevenueCte, stats AS (
         |  SELECT day, rev,
         |    AVG(rev) OVER () AS mu,
         |    stddev_pop(rev) OVER () AS sd,
@@ -3017,12 +2921,7 @@ object Timeseries {
     // BIGINT U_t, and the identical closed-form p sequence on the single
     // surviving row
     "q_pettitt" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), cnt AS (
+      s"""WITH $DailyRevenueCte, cnt AS (
         |  SELECT day,
         |    CAST(COUNT(*) OVER (ORDER BY rev
         |      RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT)
@@ -3060,12 +2959,7 @@ object Timeseries {
     // not extrema on either engine), and the identical closed-form
     // moment sequence
     "q_turning_points" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), lagged AS (
+      s"""WITH $DailyRevenueCte, lagged AS (
         |  SELECT rev,
         |    LAG(rev, 1) OVER (ORDER BY day) AS p,
         |    LEAD(rev, 1) OVER (ORDER BY day) AS nx
@@ -3100,32 +2994,7 @@ object Timeseries {
     // per-row closed forms of broadcast scalars, ranking on the ROUNDED
     // D with day tie-break, the 4/n cut compared rounded-to-rounded
     "q_cooks_distance" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), dd AS (
-        |  SELECT day, rev,
-        |    CAST(datediff('day', DATE '1992-01-01', day) AS BIGINT) AS tt
-        |  FROM daily
-        |), m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(tt) AS BIGINT) AS st, CAST(SUM(rev) AS BIGINT) AS sy,
-        |    CAST(SUM(CAST(tt AS HUGEINT) * tt) AS HUGEINT) AS stt,
-        |    CAST(SUM(CAST(tt AS HUGEINT) * rev) AS HUGEINT) AS sty
-        |  FROM dd
-        |), ab0 AS (
-        |  SELECT n, st, sy, stt,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-        |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) <> 0.0
-        |      THEN (CAST(n AS DOUBLE) * CAST(sty AS DOUBLE)
-        |        - CAST(st AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-        |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-        |      END AS b
-        |  FROM m
-        |), ab AS (
+      s"""WITH $TrendFitCte, ab AS (
         |  SELECT n, b,
         |    (CAST(sy AS DOUBLE) - b * CAST(st AS DOUBLE)) / CAST(n AS DOUBLE)
         |      AS a,
@@ -3184,12 +3053,7 @@ object Timeseries {
     // algebra per segment, and the same left-associated F compose;
     // guards mirror exactly
     "q_chow" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), dd AS (
+      s"""WITH $DailyRevenueCte, dd AS (
         |  SELECT rev,
         |    CAST(datediff('day', DATE '1992-01-01', day) AS BIGINT) AS tt,
         |    CASE WHEN day < DATE '1998-01-01' THEN 1 ELSE 0 END AS pre
@@ -3274,12 +3138,7 @@ object Timeseries {
     // the q_chow exact-integer side moments, and the same staged
     // b/a/rss/s2/va literal-order float compose per side
     "q_rdd" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), dd AS (
+      s"""WITH $DailyRevenueCte, dd AS (
         |  SELECT rev,
         |    CAST(datediff('day', DATE '1998-01-01', day) AS BIGINT) AS tt
         |  FROM daily
@@ -3458,32 +3317,7 @@ object Timeseries {
     // left-associated float sequence of the exact moments, guards mirror
     // (flat u / flat t abstain NULL, reject pinned 0)
     "q_breusch_pagan" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), dd AS (
-        |  SELECT day, rev,
-        |    CAST(datediff('day', DATE '1992-01-01', day) AS BIGINT) AS tt
-        |  FROM daily
-        |), m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(tt) AS BIGINT) AS st, CAST(SUM(rev) AS BIGINT) AS sy,
-        |    CAST(SUM(CAST(tt AS HUGEINT) * tt) AS HUGEINT) AS stt,
-        |    CAST(SUM(CAST(tt AS HUGEINT) * rev) AS HUGEINT) AS sty
-        |  FROM dd
-        |), ab0 AS (
-        |  SELECT n, st, sy, stt,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-        |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) <> 0.0
-        |      THEN (CAST(n AS DOUBLE) * CAST(sty AS DOUBLE)
-        |        - CAST(st AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * CAST(stt AS DOUBLE)
-        |        - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-        |      END AS b
-        |  FROM m
-        |), ab AS (
+      s"""WITH $TrendFitCte, ab AS (
         |  SELECT n, st, stt, b,
         |    (CAST(sy AS DOUBLE) - b * CAST(st AS DOUBLE)) / CAST(n AS DOUBLE)
         |      AS a
@@ -3557,12 +3391,7 @@ object Timeseries {
 
     // integer-cents running peak; one float division per row
     "q_drawdown" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), p AS (
+      s"""WITH $DailyRevenueCte, p AS (
         |  SELECT day, rev, MAX(rev) OVER (ORDER BY day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
         |  FROM daily
@@ -3679,12 +3508,7 @@ object Timeseries {
     // the same exact pair census, integer S and tie terms, identical
     // continuity-corrected z
     "q_mann_kendall" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), pairs AS (
+      s"""WITH $DailyRevenueCte, pairs AS (
         |  SELECT CAST(SUM(SIGN(b.rev - a.rev)) AS BIGINT) AS s,
         |    CAST(COUNT(*) AS BIGINT) AS n_pairs
         |  FROM daily a JOIN daily b ON a.day < b.day
@@ -3713,12 +3537,7 @@ object Timeseries {
     // identical per-season exact tie terms summed to one BIGINT var18,
     // the same continuity-corrected z
     "q_mk_seasonal" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), dd AS (
+      s"""WITH $DailyRevenueCte, dd AS (
         |  SELECT day, rev, CAST(dayofweek(day) + 1 AS BIGINT) AS dow
         |  FROM daily
         |), pairs AS (
@@ -3756,12 +3575,7 @@ object Timeseries {
     // Σ(ΔD)² / ΣD² moments (ΣD = N(N+1) identically, so no mean pass),
     // the same closed-form Bartels variance and NULL-den abstention
     "q_bartels_rank" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), ranked AS (
+      s"""WITH $DailyRevenueCte, ranked AS (
         |  SELECT day,
         |    CAST(2 * RANK() OVER (ORDER BY rev)
         |      + COUNT(*) OVER (PARTITION BY rev) - 1 AS BIGINT) AS dd
@@ -3807,12 +3621,7 @@ object Timeseries {
     // the Scala-shared √6/π, γ, ln(−ln(·)) literals composed in the same
     // order
     "q_gumbel_max" ->
-      s"""WITH daily AS (
-         |  SELECT CAST(o_orderdate AS DATE) AS day,
-         |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-         |      AS BIGINT) AS rev
-         |  FROM orders GROUP BY 1
-         |), blocks AS (
+      s"""WITH $DailyRevenueCte, blocks AS (
          |  SELECT date_trunc('month', day) AS mon,
          |    CAST(MAX(rev) AS BIGINT) AS m
          |  FROM daily GROUP BY 1
@@ -3893,12 +3702,7 @@ object Timeseries {
     // decimal-38 sums), micro-unit block means, and the identical pivoted
     // OLS float sequence for the slope
     "q_hurst" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), ix AS (
+      s"""WITH $DailyRevenueCte, ix AS (
         |  SELECT rev, ROW_NUMBER() OVER (ORDER BY day) - 1 AS i FROM daily
         |), ex AS (
         |  SELECT CAST(mm.m AS BIGINT) AS m, ix.rev,
@@ -3953,12 +3757,7 @@ object Timeseries {
     // identical daily frame, date-equi lookbacks, and the same 1e-12
     // micro-unit quantization of each squared relative term
     "q_theil_u" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), mx AS (SELECT MAX(day) AS max_day FROM daily
+      s"""WITH $DailyRevenueCte, mx AS (SELECT MAX(day) AS max_day FROM daily
         |), j AS (
         |  SELECT d.day, d.rev, h7.rev AS rev_m7, h1.rev AS rev_m1
         |  FROM daily d, mx
@@ -4025,12 +3824,7 @@ object Timeseries {
     // identical prefix-sum closed form in date order, the same r6-rounded
     // two-sided ranking and 5σ alarm line
     "q_cusum" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), d2 AS (
+      s"""WITH $DailyRevenueCte, d2 AS (
         |  SELECT day, rev, CAST(rev AS DOUBLE) / 1000000.0 AS x FROM daily
         |), s AS (
         |  SELECT day, rev, x,
@@ -4067,12 +3861,7 @@ object Timeseries {
     // identical trailing frame, clamped rolling moments, r6-rounded |z|
     // ranking with the same day tie-break
     "q_rolling_anomaly" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), w AS (
+      s"""WITH $DailyRevenueCte, w AS (
         |  SELECT day, rev,
         |    CAST(COUNT(*) OVER tw AS BIGINT) AS n_w,
         |    CAST(SUM(rev) OVER tw AS BIGINT) AS s1,
@@ -4105,12 +3894,7 @@ object Timeseries {
     // identical global moments, 16-day PAA means on exact cents, the
     // written-out quartile breakpoints on the r6-rounded z
     "q_sax_symbols" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), idx AS (
+      s"""WITH $DailyRevenueCte, idx AS (
         |  SELECT rev,
         |    CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) - 1 AS i,
         |    CAST(COUNT(*) OVER () AS BIGINT) AS n,
@@ -4143,12 +3927,7 @@ object Timeseries {
 
     // identical day-ordered sign lags, run-start counting, closed z
     "q_runs_test" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), ds AS (
+      s"""WITH $DailyRevenueCte, ds AS (
         |  SELECT day, rev - LAG(rev) OVER (ORDER BY day) AS d FROM daily
         |), signs AS (
         |  SELECT day, CASE WHEN d > 0 THEN 1 ELSE 0 END AS s
@@ -4184,12 +3963,7 @@ object Timeseries {
     // identical lagged pairs, exact HUGEINT moments, the same OLS/SSE
     // identity and the documented -2.86 asymptotic critical
     "q_dickey_fuller" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), pairs AS (
+      s"""WITH $DailyRevenueCte, pairs AS (
         |  SELECT rev - xl AS dy, xl AS x
         |  FROM (SELECT rev, LAG(rev) OVER (ORDER BY day) AS xl FROM daily)
         |  WHERE xl IS NOT NULL
@@ -4231,12 +4005,7 @@ object Timeseries {
     // identical n-scaled integer residual / partial sum, exact HUGEINT
     // squares, the same lag-0 eta = A/(n*B) and documented 0.463 critical
     "q_kpss" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS day,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.500001) AS BIGINT))
-        |      AS BIGINT) AS rev
-        |  FROM orders GROUP BY 1
-        |), w AS (
+      s"""WITH $DailyRevenueCte, w AS (
         |  SELECT rev,
         |    CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS t,
         |    CAST(SUM(rev) OVER (ORDER BY day

@@ -58,7 +58,7 @@ object StageProbe {
     println(f"[stage] $name total ${wall}%.2f s, $jobs jobs, ${stages.size} stages")
     val totWall = stages.values.map(_.wallMs).filter(_ > 0).sum
     val totRun = stages.values.map(_.runMs).sum
-    println(f"[stage] stage-wall sum ${totWall / 1e3}%.2f s, task-run sum ${totRun / 1e3}%.2f s (over 32 cores), gap ${wall - totWall / 1e3}%.2f s")
+    println(f"[stage] stage-wall sum ${totWall / 1e3}%.2f s, task-run sum ${totRun / 1e3}%.2f s (over ${spark.sparkContext.defaultParallelism} cores), gap ${wall - totWall / 1e3}%.2f s")
     stages.toSeq.sortBy(-_._2.wallMs).take(30).foreach { case (id, s) =>
       println(f"[stage] #$id%-4d tasks=${s.tasks}%-4d wall=${s.wallMs}%-6d ms run=${s.runMs}%-7d ms cpu=${s.cpuMs}%-7d ms deser=${s.deserMs}%-6d ms gc=${s.gcMs}%-5d ms shR=${s.shRead / 1024}%-8d KB shW=${s.shWrite / 1024}%-8d KB  ${s.name}")
     }

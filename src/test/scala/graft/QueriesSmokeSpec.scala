@@ -49,6 +49,16 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(unbacked.isEmpty, s"queries without an oracle: $unbacked")
   }
 
+  test("no oracle renders an uninitialized shared CTE") {
+    // oracles interpolate shared CTE strings; one read before its object
+    // initializes it renders as the word null (the oracles spell SQL's
+    // NULL in capitals)
+    val hits = SparkEntry.oracleSql.toSeq.sortBy(_._1).collect {
+      case (name, sql) if "\\bnull\\b".r.findFirstIn(sql).nonEmpty => name
+    }
+    assert(hits.isEmpty, s"oracles rendering null: ${hits.mkString(", ")}")
+  }
+
   test("every query has a committed baseline envelope (no unbaselined drift)") {
     // the r9/r10/r11 recurrence: a query committed after the closing
     // 3-run refresh ships with no perf contract. Gate.enforce fails the
