@@ -10,25 +10,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: media as opaque `binary` columns with typed
-  * metadata, processed in partition-local batches.
+  * metadata, decoded partition-local.
   *
   * Images decode FOR REAL via `javax.imageio.ImageIO` (in the JDK: PNG,
-  * JPEG, GIF, BMP) — genuine width/height and luminance statistics out of
-  * genuine compressed bytes, exercised end-to-end by the oracle-backed
-  * q_multimodal (deterministic PNG encode inside the engine → decode →
-  * stats the oracle recomputes from the pixel formula). Audio decodes FOR
-  * REAL too, via `javax.sound.sampled` (in the JDK: WAV/AIFF/AU) — see
-  * [[decodeAudio]] and the oracle-backed q_multimodal_audio. Video is
-  * covered twice over, still JDK-only: container METADATA by a real
-  * ISO-BMFF box walk ([[parseMp4]]), and FRAME decode by a real RIFF/AVI
-  * demux + per-frame decode ([[decodeAviFrames]]: uncompressed 24-bit DIB
-  * read directly, MJPEG through the ImageIO JPEG reader — the two
-  * historically unencumbered AVI codecs). Codecs the JDK cannot reach
+  * JPEG, GIF, BMP, TIFF) — genuine width/height and luminance statistics
+  * out of genuine compressed bytes, exercised end-to-end by the
+  * oracle-backed q_multimodal (deterministic PNG encode inside the engine
+  * → decode → stats the oracle recomputes from the pixel formula). Audio
+  * decodes FOR REAL too, via `javax.sound.sampled` (in the JDK: WAV/AIFF/
+  * AU) — see [[decodeAudio]] and the oracle-backed q_multimodal_audio.
+  * Video is covered twice over, still JDK-only: container METADATA by a
+  * real ISO-BMFF box walk ([[parseMp4]]), and FRAME decode by a real
+  * RIFF/AVI demux + per-frame decode ([[decodeAviFrames]]: uncompressed
+  * 24-bit DIB read directly, MJPEG through the ImageIO JPEG reader — the
+  * two historically unencumbered AVI codecs). Codecs the JDK cannot reach
   * (H.264 et al. need ffmpeg-class native bindings) fail loudly rather
-  * than pretend. The Spark-side shape — binary payload, `mapPartitions`
-  * batching (the Scala analogue of `mapInPandas`: codec state amortized
-  * over a batch, not per-row), typed feature output — is identical for
-  * every modality, so adding a codec binding changes one function.
+  * than pretend, and so does a mime with no JDK reader. Every modality has
+  * one Spark-side shape — binary payload in, one `mapPartitions` scan with
+  * a per-partition [[ImageCodec]] where the codec has reusable state,
+  * typed features out — so adding a codec binding changes one function.
   */
 object Multimodal {
 
@@ -40,10 +40,6 @@ object Multimodal {
       media_id: Long, mime: String, byte_len: Long,
       width: Int, height: Int, feature: Array[Float])
 
-  /** Mimes [[decodeImage]] genuinely decodes (JDK ImageIO readers). */
-  private val ImageMimes =
-    Set("image/png", "image/jpeg", "image/gif", "image/bmp", "image/tiff")
-
   /** Partition-local codec state: one `ImageReader`/`ImageWriter` per mime
     * per task, fed by IN-MEMORY streams. The convenience `ImageIO.read`/
     * `write` entry points cost two hidden taxes per call that are fine for
@@ -51,20 +47,15 @@ object Multimodal {
     * the codec, and (with the default `getUseCache=true`) a DISK-BACKED
     * stream cache — a temp file created and deleted per image. Reusing the
     * reader and wrapping the byte array in a `MemoryCacheImageInputStream`
-    * removes both; this is the "codec state amortized over the batch"
-    * contract of [[extractFeatures]], made literal. Not thread-safe — one
-    * instance per partition iterator, like any per-task codec context.
+    * removes both. Not thread-safe — one instance per partition iterator,
+    * like any per-task codec context.
     */
   final class ImageCodec {
     private val readers = new java.util.HashMap[String, ImageReader]()
     private val writers = new java.util.HashMap[String, ImageWriter]()
 
     def read(payload: Array[Byte], mime: String, mediaId: Long): BufferedImage = {
-      val reader = readers.computeIfAbsent(mime, m => {
-        val it = ImageIO.getImageReadersByMIMEType(m)
-        require(it.hasNext, s"media_id $mediaId: no JDK ImageIO reader for $m")
-        it.next()
-      })
+      val reader = readerFor(mime, mediaId)
       val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(payload))
       try {
         reader.setInput(iis, true, true)
@@ -89,11 +80,7 @@ object Multimodal {
       })
 
     def write(img: BufferedImage, mime: String): Array[Byte] = {
-      val writer = writers.computeIfAbsent(mime, m => {
-        val it = ImageIO.getImageWritersByMIMEType(m)
-        require(it.hasNext, s"no JDK ImageIO writer for $m")
-        it.next()
-      })
+      val writer = writerFor(mime)
       val bos = new ByteArrayOutputStream()
       val ios = new MemoryCacheImageOutputStream(bos)
       try {
@@ -118,22 +105,21 @@ object Multimodal {
   }
 
   /** Real image decode: parse the compressed payload, return true pixel
-    * dimensions plus an 8-float luminance profile —
-    * [mean, min, max, stddev, top-half mean, bottom-half mean, left-half
-    * mean, right-half mean], luminance = (r+g+b)/3 in [0,255].
-    * All accumulation in double; each stat quantizes to float32 once at
-    * the end (the oracle mirrors that single quantization with CAST AS
-    * REAL, keeping 4-dp parity exact).
+    * dimensions plus the 8-float [[lumProfile]]. A mime with no JDK
+    * ImageIO reader, or a payload its reader rejects, fails with the
+    * media_id.
     */
   def decodeImage(row: MediaRow, codec: ImageCodec = new ImageCodec): MediaFeatures = {
     val img = codec.read(row.payload, row.mime, row.media_id)
-    val w = img.getWidth
-    val h = img.getHeight
-    // bulk pixel grab: one ColorModel conversion pass instead of a
-    // per-pixel getRGB call
-    val rgbs = img.getRGB(0, 0, w, h, null, 0, w)
-    MediaFeatures(row.media_id, row.mime, row.payload.length.toLong, w, h,
-      lumProfile(rgbs, w, h))
+    MediaFeatures(row.media_id, row.mime, row.payload.length.toLong,
+      img.getWidth, img.getHeight, lumProfile(img))
+  }
+
+  /** [[lumProfile]] of a decoded image: one bulk pixel grab (a single
+    * ColorModel conversion pass instead of a per-pixel getRGB call). */
+  private def lumProfile(img: BufferedImage): Array[Float] = {
+    val w = img.getWidth; val h = img.getHeight
+    lumProfile(img.getRGB(0, 0, w, h, null, 0, w), w, h)
   }
 
   /** The 8-float luminance profile every pixel-bearing modality reports
@@ -175,17 +161,24 @@ object Multimodal {
       media_id: Long, mime: String, byte_len: Long,
       sample_rate: Int, n_channels: Int, n_frames: Long, feature: Array[Float])
 
-  /** REAL audio decode via `javax.sound.sampled` (in the JDK: WAV, AIFF,
-    * AU — the same "the codec was here all along" move as the r4 ImageIO
-    * upgrade and the r8 AVI frame path).
-    * Parses the container header for format metadata, then streams PCM16
-    * frames and accumulates amplitude statistics in double:
-    * [rms, meanAbs, peak, min, max, zeroCrossRate, dcOffset, durationSec],
-    * each quantized to float32 once at the end (oracle mirrors with CAST
-    * AS REAL). Mono PCM16 only — the fixture format; a real ingest adds
-    * channel handling here and nothing else changes.
+  /** A mono sample format: the contract one audio reader owns, and the
+    * layout one encoder writes. */
+  private final case class SampleFormat(
+      encoding: AudioFormat.Encoding, bits: Int, name: String)
+  private val Pcm16 = SampleFormat(AudioFormat.Encoding.PCM_SIGNED, 16, "PCM16")
+  private val Float32 = SampleFormat(AudioFormat.Encoding.PCM_FLOAT, 32, "float32 PCM")
+
+  /** Open an audio payload through `javax.sound.sampled` and return its
+    * format, frame count and sample bytes in the container's byte order.
+    * Mono is part of the contract, not an assumption: the statistics
+    * treat consecutive samples as a single time series (zero-cross
+    * counting across interleaved L/R channels would be meaningless). A
+    * payload javax.sound cannot parse, or one in another sample format,
+    * fails with the media_id — so a container regression cannot silently
+    * cross from one reader's contract to another's.
     */
-  def decodeAudio(row: MediaRow): AudioFeatures = {
+  private def openAudio(row: MediaRow, want: SampleFormat)
+      : (AudioFormat, Long, java.nio.ByteBuffer) = {
     val in: AudioInputStream =
       try AudioSystem.getAudioInputStream(new ByteArrayInputStream(row.payload))
       catch {
@@ -195,56 +188,86 @@ object Multimodal {
       }
     try {
       val fmt = in.getFormat
-      // mono is part of the contract, not an assumption: the stats below
-      // treat consecutive samples as a single time series (zero-cross
-      // counting across interleaved L/R channels would be meaningless)
-      require(fmt.getSampleSizeInBits == 16 &&
-        fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED &&
+      require(fmt.getSampleSizeInBits == want.bits &&
+        fmt.getEncoding == want.encoding &&
         fmt.getChannels == 1,
-        s"media_id ${row.media_id}: expected mono PCM16, got $fmt")
-      val channels = fmt.getChannels
+        s"media_id ${row.media_id}: expected mono ${want.name}, got $fmt")
       val nFrames = in.getFrameLength
-      val bytes = in.readAllBytes()
-      val sb = java.nio.ByteBuffer.wrap(bytes)
+      val bytes = java.nio.ByteBuffer.wrap(in.readAllBytes())
         .order(if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
                else java.nio.ByteOrder.LITTLE_ENDIAN)
-        .asShortBuffer()
-      var sum = 0.0; var sumAbs = 0.0; var sumSq = 0.0
-      var minS = Double.MaxValue; var maxS = Double.MinValue
-      var crossings = 0L
-      var prevNonNeg = true
-      val n = sb.remaining()
-      var i = 0
-      while (i < n) {
-        val s = sb.get(i).toDouble
-        sum += s; sumAbs += math.abs(s); sumSq += s * s
-        if (s < minS) minS = s
-        if (s > maxS) maxS = s
-        val nonNeg = s >= 0
-        if (i > 0 && nonNeg != prevNonNeg) crossings += 1
-        prevNonNeg = nonNeg
-        i += 1
-      }
-      val nd = math.max(n, 1).toDouble
-      AudioFeatures(row.media_id, row.mime, row.payload.length.toLong,
-        fmt.getSampleRate.toInt, channels, nFrames,
-        Array((math.sqrt(sumSq / nd)).toFloat, (sumAbs / nd).toFloat,
-          math.max(math.abs(minS), math.abs(maxS)).toFloat,
-          minS.toFloat, maxS.toFloat,
-          (crossings / nd).toFloat, (sum / nd).toFloat,
-          (nFrames / fmt.getSampleRate.toDouble).toFloat))
+      (fmt, nFrames, bytes)
     } finally in.close()
   }
 
-  /** Audio feature extraction — one scan, no shuffle. A plain per-row map
-    * (no batch grouping): unlike the image path, where the batch shape
-    * amortizes reusable ImageReader state, `javax.sound` exposes no
-    * reusable reader handle — `AudioSystem.getAudioInputStream` is a fresh
-    * SPI dispatch per payload, so grouping would be a no-op costume.
+  /** Amplitude statistics of `n` samples, accumulated in double:
+    * [rms, meanAbs, peak, min, max, zeroCrossRate, dcOffset, durationSec],
+    * each quantized to float32 once at the end (oracles mirror with CAST
+    * AS REAL). */
+  private def amplitudeFeatures(row: MediaRow, fmt: AudioFormat, nFrames: Long,
+      n: Int, sample: Int => Double): AudioFeatures = {
+    var sum = 0.0; var sumAbs = 0.0; var sumSq = 0.0
+    var minS = Double.MaxValue; var maxS = Double.MinValue
+    var crossings = 0L
+    var prevNonNeg = true
+    var i = 0
+    while (i < n) {
+      val s = sample(i)
+      sum += s; sumAbs += math.abs(s); sumSq += s * s
+      if (s < minS) minS = s
+      if (s > maxS) maxS = s
+      val nonNeg = s >= 0
+      if (i > 0 && nonNeg != prevNonNeg) crossings += 1
+      prevNonNeg = nonNeg
+      i += 1
+    }
+    val nd = math.max(n, 1).toDouble
+    AudioFeatures(row.media_id, row.mime, row.payload.length.toLong,
+      fmt.getSampleRate.toInt, fmt.getChannels, nFrames,
+      Array((math.sqrt(sumSq / nd)).toFloat, (sumAbs / nd).toFloat,
+        math.max(math.abs(minS), math.abs(maxS)).toFloat,
+        minS.toFloat, maxS.toFloat,
+        (crossings / nd).toFloat, (sum / nd).toFloat,
+        (nFrames / fmt.getSampleRate.toDouble).toFloat))
+  }
+
+  /** REAL audio decode via `javax.sound.sampled` (in the JDK: WAV, AIFF,
+    * AU — the same "the codec was here all along" move as the r4 ImageIO
+    * upgrade and the r8 AVI frame path): mono PCM16 in either byte order
+    * (the container header selects it) → [[amplitudeFeatures]]. Mono only
+    * — the fixture format; a real ingest adds channel handling in
+    * [[openAudio]] and nothing else changes.
+    */
+  def decodeAudio(row: MediaRow): AudioFeatures = {
+    val (fmt, nFrames, bytes) = openAudio(row, Pcm16)
+    val sb = bytes.asShortBuffer()
+    amplitudeFeatures(row, fmt, nFrames, sb.remaining(), sb.get(_).toDouble)
+  }
+
+  /** Float32 companion of [[decodeAudio]]: REQUIRES mono 32-bit PCM_FLOAT
+    * (format tag 3) and fails loudly on anything else, as [[decodeAudio]]
+    * fails on a float container. */
+  def decodeAudioF32(row: MediaRow): AudioFeatures = {
+    val (fmt, nFrames, bytes) = openAudio(row, Float32)
+    val fb = bytes.asFloatBuffer()
+    amplitudeFeatures(row, fmt, nFrames, fb.remaining(), fb.get(_).toDouble)
+  }
+
+  /** Audio feature extraction — one scan, no shuffle, a plain per-row map:
+    * `javax.sound` exposes no reusable reader handle
+    * (`AudioSystem.getAudioInputStream` is a fresh SPI dispatch per
+    * payload), so unlike the image kernels there is no per-partition
+    * codec state to keep.
     */
   def extractAudioFeatures(media: Dataset[MediaRow]): Dataset[AudioFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(decodeAudio))
+  }
+
+  /** Float32 audio extraction — the [[extractAudioFeatures]] shape. */
+  def extractAudioF32Features(media: Dataset[MediaRow]): Dataset[AudioFeatures] = {
+    import media.sparkSession.implicits._
+    media.mapPartitions(_.map(decodeAudioF32))
   }
 
   /** Per-media PCM resample summary — integer-exact by construction (see
@@ -282,272 +305,139 @@ object Multimodal {
     out
   }
 
-  /** Real decode → [[resamplePcm]] → integer summary, one scan, no
-    * shuffle (the [[extractAudioFeatures]] shape: per-row map, no batch
-    * costume — javax.sound has no reusable reader handle). The decoded
-    * PCM is the REAL container payload; only the summary leaves the task,
-    * so 100 TB of audio costs one scan and a row of longs per clip.
+  /** Real PCM16 decode → [[resamplePcm]] → integer summary, one scan, no
+    * shuffle (the [[extractAudioFeatures]] per-row map). The decoded PCM
+    * is the REAL container payload; only the summary leaves the task, so
+    * 100 TB of audio costs one scan and a row of longs per clip.
     */
   def resampleAudio(media: Dataset[MediaRow], num: Int, den: Int): Dataset[ResampleSummary] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map { row =>
-      val in: AudioInputStream =
-        try AudioSystem.getAudioInputStream(new ByteArrayInputStream(row.payload))
-        catch {
-          case e: javax.sound.sampled.UnsupportedAudioFileException =>
-            throw new IllegalArgumentException(
-              s"media_id ${row.media_id}: payload is not a decodable audio container", e)
-        }
-      try {
-        val fmt = in.getFormat
-        require(fmt.getSampleSizeInBits == 16 &&
-          fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED &&
-          fmt.getChannels == 1,
-          s"media_id ${row.media_id}: expected mono PCM16, got $fmt")
-        val bytes = in.readAllBytes()
-        val sb = java.nio.ByteBuffer.wrap(bytes)
-          .order(if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-                 else java.nio.ByteOrder.LITTLE_ENDIAN)
-          .asShortBuffer()
-        val pcm = new Array[Short](sb.remaining())
-        sb.get(pcm)
-        val out = resamplePcm(pcm, num, den)
-        var sum = 0L; var sumAbs = 0L; var peak = 0L
-        var i = 0
-        while (i < out.length) {
-          val v = out(i).toLong
-          sum += v; sumAbs += math.abs(v)
-          if (math.abs(v) > peak) peak = math.abs(v)
-          i += 1
-        }
-        ResampleSummary(row.media_id,
-          (fmt.getSampleRate.toDouble * den / num).toInt,
-          pcm.length.toLong, out.length.toLong, sum, sumAbs, peak)
-      } finally in.close()
+      val (fmt, _, bytes) = openAudio(row, Pcm16)
+      val sb = bytes.asShortBuffer()
+      val pcm = new Array[Short](sb.remaining())
+      sb.get(pcm)
+      val out = resamplePcm(pcm, num, den)
+      var sum = 0L; var sumAbs = 0L; var peak = 0L
+      var i = 0
+      while (i < out.length) {
+        val v = out(i).toLong
+        sum += v; sumAbs += math.abs(v)
+        if (math.abs(v) > peak) peak = math.abs(v)
+        i += 1
+      }
+      ResampleSummary(row.media_id,
+        (fmt.getSampleRate.toDouble * den / num).toInt,
+        pcm.length.toLong, out.length.toLong, sum, sumAbs, peak)
     })
   }
 
-  /** Encode one mono PCM16 WAV (lossless, so decode returns the exact
-    * sample function).
-    */
-  def encodeWav(nFrames: Int, sampleRate: Float, sample: Int => Short): Array[Byte] = {
-    val pcm = new Array[Byte](nFrames * 2)
-    val bb = java.nio.ByteBuffer.wrap(pcm).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+  /** Encode one mono audio container: `put(bytes, i)` writes sample i at
+    * the buffer's position in `fmt`'s layout. Lossless, so decode returns
+    * the exact sample function. */
+  private def encodeAudio(nFrames: Int, sampleRate: Float, fmt: SampleFormat,
+      bigEndian: Boolean, fileType: AudioFileFormat.Type)(
+      put: (java.nio.ByteBuffer, Int) => Unit): Array[Byte] = {
+    val frameBytes = fmt.bits / 8
+    val pcm = new Array[Byte](nFrames * frameBytes)
+    val bb = java.nio.ByteBuffer.wrap(pcm).order(
+      if (bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
     var i = 0
-    while (i < nFrames) { bb.putShort(i * 2, sample(i)); i += 1 }
-    val fmt = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED, sampleRate, 16, 1,
-      2, sampleRate, false)
-    val ais = new AudioInputStream(new ByteArrayInputStream(pcm), fmt, nFrames.toLong)
+    while (i < nFrames) { put(bb, i); i += 1 }
+    val af = new AudioFormat(fmt.encoding, sampleRate, fmt.bits, 1,
+      frameBytes, sampleRate, bigEndian)
+    val ais = new AudioInputStream(new ByteArrayInputStream(pcm), af, nFrames.toLong)
     val bos = new ByteArrayOutputStream()
-    try AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos) finally ais.close()
+    try AudioSystem.write(ais, fileType, bos) finally ais.close()
     bos.toByteArray
   }
 
-  /** Deterministic REAL-WAV media table: frame count and every sample are
-    * closed-form in doc_id (n = 400 + id%800 frames at 8 kHz, sample(i) =
-    * (i·37 + id·11) mod 2001 − 1000 — integer-valued, so sums of s and s²
-    * stay exact in doubles and an oracle recomputes rms/meanAbs/peak
-    * without seeing the bytes). Encode runs partition-local, like the PNG
-    * fixture.
-    */
-  def wavMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { did =>
-        val n = (400 + did % 800).toInt
-        MediaRow(did,
-          encodeWav(n, 8000f, i => (((i.toLong * 37 + did * 11) % 2001) - 1000).toShort),
-          "audio/wav")
-      }
-    }
-  }
+  /** Encode one mono PCM16 WAV (little-endian RIFF). */
+  def encodeWav(nFrames: Int, sampleRate: Float, sample: Int => Short): Array[Byte] =
+    encodeAudio(nFrames, sampleRate, Pcm16, bigEndian = false,
+      AudioFileFormat.Type.WAVE)((bb, i) => bb.putShort(sample(i)))
 
   /** Encode one mono PCM16 AIFF — the SECOND real audio container (r11):
-    * AIFF is big-endian PCM in an IFF chunk layout (FORM/COMM/SSND),
-    * written and read by the same JDK `javax.sound` SPI as WAV. Lossless,
-    * so decode returns the exact sample function; [[decodeAudio]] needs
-    * no change — `fmt.isBigEndian` already selects the byte order.
+    * big-endian PCM in an IFF chunk layout (FORM/COMM/SSND), written and
+    * read by the same JDK `javax.sound` SPI as WAV; [[decodeAudio]] reads
+    * both, the container header selecting the byte order.
     */
-  def encodeAiff(nFrames: Int, sampleRate: Float, sample: Int => Short): Array[Byte] = {
-    val pcm = new Array[Byte](nFrames * 2)
-    val bb = java.nio.ByteBuffer.wrap(pcm).order(java.nio.ByteOrder.BIG_ENDIAN)
-    var i = 0
-    while (i < nFrames) { bb.putShort(i * 2, sample(i)); i += 1 }
-    val fmt = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED, sampleRate, 16, 1,
-      2, sampleRate, true)
-    val ais = new AudioInputStream(new ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-    val bos = new ByteArrayOutputStream()
-    try AudioSystem.write(ais, AudioFileFormat.Type.AIFF, bos) finally ais.close()
-    bos.toByteArray
-  }
-
-  /** Deterministic REAL-AIFF media table — the [[wavMediaFromDocuments]]
-    * contract with a DISTINCT closed form (n = 300 + id%700 frames at
-    * 11025 Hz, sample(i) = (i·53 + id·17) mod 1777 − 888), so a reader
-    * regression in either container breaks only its own query (the
-    * q_multimodal_tiff stance).
-    */
-  def aiffMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { did =>
-        val n = (300 + did % 700).toInt
-        MediaRow(did,
-          encodeAiff(n, 11025f, i => (((i.toLong * 53 + did * 17) % 1777) - 888).toShort),
-          "audio/aiff")
-      }
-    }
-  }
+  def encodeAiff(nFrames: Int, sampleRate: Float, sample: Int => Short): Array[Byte] =
+    encodeAudio(nFrames, sampleRate, Pcm16, bigEndian = true,
+      AudioFileFormat.Type.AIFF)((bb, i) => bb.putShort(sample(i)))
 
   /** Encode one mono float32 PCM WAV (WAVE_FORMAT_IEEE_FLOAT, format tag
-    * 3) — the THIRD real audio container path (r11): the same RIFF
-    * layout as [[encodeWav]] but 32-bit IEEE-float samples, written and
-    * read by the JDK's WaveFloatFileWriter/Reader SPI. Lossless for the
+    * 3) — the THIRD real audio container path (r11), written and read by
+    * the JDK's WaveFloatFileWriter/Reader SPI. Lossless for the
     * integer-valued sample functions the fixtures use (every integer
-    * |v| < 2²⁴ is exact in float32), so decode returns the exact sample
-    * function and the oracle recomputes the stats closed-form.
+    * |v| < 2²⁴ is exact in float32), so the oracle recomputes the stats
+    * closed-form.
     */
-  def encodeWavFloat(nFrames: Int, sampleRate: Float, sample: Int => Float): Array[Byte] = {
-    val pcm = new Array[Byte](nFrames * 4)
-    val bb = java.nio.ByteBuffer.wrap(pcm).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < nFrames) { bb.putFloat(i * 4, sample(i)); i += 1 }
-    val fmt = new AudioFormat(AudioFormat.Encoding.PCM_FLOAT, sampleRate, 32, 1,
-      4, sampleRate, false)
-    val ais = new AudioInputStream(new ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-    val bos = new ByteArrayOutputStream()
-    try AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos) finally ais.close()
-    bos.toByteArray
-  }
+  def encodeWavFloat(nFrames: Int, sampleRate: Float, sample: Int => Float): Array[Byte] =
+    encodeAudio(nFrames, sampleRate, Float32, bigEndian = false,
+      AudioFileFormat.Type.WAVE)((bb, i) => bb.putFloat(sample(i)))
 
-  /** Deterministic float32-WAV media table — the [[wavMediaFromDocuments]]
-    * contract with a DISTINCT closed form (n = 256 + id%512 frames at
-    * 16 kHz, sample(i) = (i·29 + id·13) mod 1601 − 800, integer-valued
-    * floats), so a float-path regression breaks only its own query.
+  /** The shell of every deterministic fixture table below: one
+    * partition-local encode per doc_id (one scan, no shuffle, like a real
+    * binary ingest), with one [[ImageCodec]] per partition for the
+    * encoders that use one. Each fixture's payload is closed-form in
+    * doc_id, so an oracle recomputes what the decoder reports without
+    * seeing a byte.
     */
-  def f32MediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
+  private def mediaTable(spark: SparkSession, docs: DataFrame, mime: String)(
+      payload: (Long, ImageCodec) => Array[Byte]): Dataset[MediaRow] = {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { did =>
-        val n = (256 + did % 512).toInt
-        MediaRow(did,
-          encodeWavFloat(n, 16000f,
-            i => (((i.toLong * 29 + did * 13) % 1601) - 800).toFloat),
-          "audio/wav-f32")
-      }
+      val codec = new ImageCodec
+      it.map(did => MediaRow(did, payload(did, codec), mime))
     }
   }
 
-  /** Float32 companion of [[decodeAudio]]: REQUIRES mono 32-bit PCM_FLOAT
-    * (format tag 3) and fails loudly on anything else — the PCM16 reader
-    * and this one each own exactly their contract, so a container
-    * regression cannot silently cross paths.
+  /** REAL-WAV media table: n = 400 + id%800 frames at 8 kHz, sample(i) =
+    * (i·37 + id·11) mod 2001 − 1000 — integer-valued, so sums of s and s²
+    * stay exact in doubles and an oracle recomputes rms/meanAbs/peak.
     */
-  def decodeAudioF32(row: MediaRow): AudioFeatures = {
-    val in: AudioInputStream =
-      try AudioSystem.getAudioInputStream(new ByteArrayInputStream(row.payload))
-      catch {
-        case e: javax.sound.sampled.UnsupportedAudioFileException =>
-          throw new IllegalArgumentException(
-            s"media_id ${row.media_id}: payload is not a decodable audio container", e)
-      }
-    try {
-      val fmt = in.getFormat
-      require(fmt.getSampleSizeInBits == 32 &&
-        fmt.getEncoding == AudioFormat.Encoding.PCM_FLOAT &&
-        fmt.getChannels == 1,
-        s"media_id ${row.media_id}: expected mono float32 PCM, got $fmt")
-      val channels = fmt.getChannels
-      val nFrames = in.getFrameLength
-      val bytes = in.readAllBytes()
-      val fb = java.nio.ByteBuffer.wrap(bytes)
-        .order(if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-               else java.nio.ByteOrder.LITTLE_ENDIAN)
-        .asFloatBuffer()
-      var sum = 0.0; var sumAbs = 0.0; var sumSq = 0.0
-      var minS = Double.MaxValue; var maxS = Double.MinValue
-      var crossings = 0L
-      var prevNonNeg = true
-      val n = fb.remaining()
-      var i = 0
-      while (i < n) {
-        val s = fb.get(i).toDouble
-        sum += s; sumAbs += math.abs(s); sumSq += s * s
-        if (s < minS) minS = s
-        if (s > maxS) maxS = s
-        val nonNeg = s >= 0
-        if (i > 0 && nonNeg != prevNonNeg) crossings += 1
-        prevNonNeg = nonNeg
-        i += 1
-      }
-      val nd = math.max(n, 1).toDouble
-      AudioFeatures(row.media_id, row.mime, row.payload.length.toLong,
-        fmt.getSampleRate.toInt, channels, nFrames,
-        Array((math.sqrt(sumSq / nd)).toFloat, (sumAbs / nd).toFloat,
-          math.max(math.abs(minS), math.abs(maxS)).toFloat,
-          minS.toFloat, maxS.toFloat,
-          (crossings / nd).toFloat, (sum / nd).toFloat,
-          (nFrames / fmt.getSampleRate.toDouble).toFloat))
-    } finally in.close()
-  }
+  def wavMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "audio/wav") { (did, _) =>
+      encodeWav((400 + did % 800).toInt, 8000f,
+        i => (((i.toLong * 37 + did * 11) % 2001) - 1000).toShort)
+    }
 
-  /** Float32 audio extraction — plain per-row map, see
-    * [[extractAudioFeatures]] for why no batch grouping. */
-  def extractAudioF32Features(media: Dataset[MediaRow]): Dataset[AudioFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(decodeAudioF32))
-  }
-
-  /** STUB decode kernel for OPAQUE payloads (text blobs in the plumbing
-    * tests — every real media mime has a real decoder above/below).
-    * Derives stable pseudo-dimensions and an 8-float pseudo-embedding from
-    * the payload bytes so tests are reproducible. Swap this function for a
-    * real codec binding; nothing else changes.
+  /** REAL-AIFF media table — the [[wavMediaFromDocuments]] contract with a
+    * DISTINCT closed form (n = 300 + id%700 frames at 11025 Hz, sample(i) =
+    * (i·53 + id·17) mod 1777 − 888), so a reader regression in either
+    * container breaks only its own query (the q_multimodal_tiff stance).
     */
-  def decodeStub(row: MediaRow): MediaFeatures = {
-    val h = java.util.Arrays.hashCode(row.payload)
-    val width = 64 + math.abs(h % 1024)
-    val height = 64 + math.abs((h / 1024) % 1024)
-    val feature = Array.tabulate(8)(i =>
-      (((h * (i + 1)) % 1000) / 1000.0f))
-    MediaFeatures(row.media_id, row.mime, row.payload.length.toLong, width, height, feature)
-  }
+  def aiffMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "audio/aiff") { (did, _) =>
+      encodeAiff((300 + did % 700).toInt, 11025f,
+        i => (((i.toLong * 53 + did * 17) % 1777) - 888).toShort)
+    }
 
-  /** Decode dispatch: real ImageIO for image mimes, stub otherwise. */
-  def decode(row: MediaRow, codec: ImageCodec): MediaFeatures =
-    if (ImageMimes.contains(row.mime)) decodeImage(row, codec) else decodeStub(row)
-
-  /** Batched feature extraction: partition-local, decode amortized over
-    * `batchSize` rows (the mapInPandas batch shape). No shuffle — features
-    * for 100 TB of media cost one scan.
+  /** Float32-WAV media table — the [[wavMediaFromDocuments]] contract with
+    * a DISTINCT closed form (n = 256 + id%512 frames at 16 kHz, sample(i) =
+    * (i·29 + id·13) mod 1601 − 800, integer-valued floats), so a
+    * float-path regression breaks only its own query.
     */
-  def extractFeatures(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaFeatures] = {
+  def f32MediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "audio/wav-f32") { (did, _) =>
+      encodeWavFloat((256 + did % 512).toInt, 16000f,
+        i => (((i.toLong * 29 + did * 13) % 1601) - 800).toFloat)
+    }
+
+  /** Image feature extraction: partition-local, one [[ImageCodec]] per
+    * partition (its readers are reused across the partition's rows). No
+    * shuffle — features for 100 TB of media cost one scan.
+    */
+  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { iter =>
-      // codec state (ImageIO reader instances / a real ffmpeg context) is
-      // initialized once per partition, reused across batches
       val codec = new ImageCodec
-      iter.grouped(batchSize).flatMap(_.map(decode(_, codec)))
+      iter.map(decodeImage(_, codec))
     }
   }
 
-  /** Dimension-only fallback for OPAQUE mimes (no decodable pixels — the
-    * decodeStub counterpart): rescales the pseudo-dimensions with the same
-    * integer contract as [[resizeImage]] so the plumbing stays testable on
-    * non-image payloads. Every image mime takes the REAL pixel path —
-    * since the r9 fixed-point bilinear kernel landed this function backs
-    * NO oracle query (q_multimodal_resize runs [[resizeImage]] on decoded
-    * pixels); it survives solely as [[resizeMedia]]'s opaque-mime arm.
-    */
-  def resizeStub(f: MediaFeatures, maxSide: Int): MediaFeatures = {
-    val maxDim = math.max(f.width, f.height)
-    if (maxDim <= maxSide) f
-    else f.copy(width = math.max(1, f.width * maxSide / maxDim),
-      height = math.max(1, f.height * maxSide / maxDim))
-  }
-
-  /** REAL bilinear downscale of the pixel buffer (the r8 VERDICT gap:
-    * resizeStub scaled metadata only). Deliberately NOT AWT's
+  /** REAL bilinear downscale of the pixel buffer. Deliberately NOT AWT's
     * `AffineTransformOp`: its filtering arithmetic is implementation-
     * defined (native mlib vs java loops differ in rounding), which would
     * make 100 TB of resized features irreproducible across JVMs. This
@@ -621,28 +511,6 @@ object Multimodal {
     out
   }
 
-  /** Batched resize over raw media: decode → [[resizeImage]] → luminance
-    * profile of the RESIZED buffer, partition-local (the extractFeatures
-    * mapPartitions shape — one scan, codec state amortized per batch, no
-    * shuffle at any corpus size). Opaque mimes fall back to the
-    * dimension-only stub, exactly like [[decode]]'s dispatch.
-    */
-  def resizeMedia(media: Dataset[MediaRow], maxSide: Int = 256,
-      batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { iter =>
-      val codec = new ImageCodec
-      iter.grouped(batchSize).flatMap(_.map { row =>
-        if (ImageMimes.contains(row.mime)) {
-          val resized = resizeImage(codec.read(row.payload, row.mime, row.media_id), maxSide)
-          val ow = resized.getWidth; val oh = resized.getHeight
-          MediaFeatures(row.media_id, row.mime, row.payload.length.toLong, ow, oh,
-            lumProfile(resized.getRGB(0, 0, ow, oh, null, 0, ow), ow, oh))
-        } else resizeStub(decodeStub(row), maxSide)
-      })
-    }
-  }
-
   /** Per-media integer-exact summary of a resize — the oracle surface for
     * q_multimodal_resize: output dims plus Σ(r+g+b) over the RESIZED
     * buffer, which stays a pure integer through the fixed-point kernel and
@@ -652,12 +520,11 @@ object Multimodal {
   final case class ResizeSummary(media_id: Long, width: Int, height: Int,
       rgb_sum: Long)
 
-  def resizeSummaries(media: Dataset[MediaRow], maxSide: Int,
-      batchSize: Int = 64): Dataset[ResizeSummary] = {
+  def resizeSummaries(media: Dataset[MediaRow], maxSide: Int): Dataset[ResizeSummary] = {
     import media.sparkSession.implicits._
     media.mapPartitions { iter =>
       val codec = new ImageCodec
-      iter.grouped(batchSize).flatMap(_.map { row =>
+      iter.map { row =>
         val resized = resizeImage(codec.read(row.payload, row.mime, row.media_id), maxSide)
         val ow = resized.getWidth; val oh = resized.getHeight
         val rgbs = resized.getRGB(0, 0, ow, oh, null, 0, ow)
@@ -669,7 +536,7 @@ object Multimodal {
           i += 1
         }
         ResizeSummary(row.media_id, ow, oh, sum)
-      })
+      }
     }
   }
 
@@ -698,12 +565,11 @@ object Multimodal {
   final case class PhashRow(media_id: Long, dc: Long, phash: Long,
       n_ones: Long)
 
-  def phashSummaries(media: Dataset[MediaRow],
-      batchSize: Int = 64): Dataset[PhashRow] = {
+  def phashSummaries(media: Dataset[MediaRow]): Dataset[PhashRow] = {
     import media.sparkSession.implicits._
     media.mapPartitions { iter =>
       val codec = new ImageCodec
-      iter.grouped(batchSize).flatMap(_.map { row =>
+      iter.map { row =>
         val g = resampleTo(codec.read(row.payload, row.mime, row.media_id), 8, 8)
         val rgbs = g.getRGB(0, 0, 8, 8, null, 0, 8)
         val p = rgbs.map(_ & 0xFF) // gray source: blue channel IS luminance
@@ -729,7 +595,7 @@ object Multimodal {
           if (d > med) { hash |= 1L << i; ones += 1 }
         }
         PhashRow(row.media_id, dct(0, 0), hash, ones)
-      })
+      }
     }
   }
 
@@ -806,9 +672,7 @@ object Multimodal {
           val img = codec.read(
             java.util.Arrays.copyOfRange(payload, cOff, cOff + cLen),
             "image/jpeg", mediaId)
-          val w = img.getWidth; val h = img.getHeight
-          out += VideoFrame(mediaId, i, w, h,
-            lumProfile(img.getRGB(0, 0, w, h, null, 0, w), w, h))
+          out += VideoFrame(mediaId, i, img.getWidth, img.getHeight, lumProfile(img))
         } else {
           val w = biWidth; val h = biHeight
           val stride = ((w * 3 + 3) / 4) * 4
@@ -916,28 +780,21 @@ object Multimodal {
     d
   }
 
-  /** Deterministic REAL-AVI media table: dims, frame count and every pixel
-    * of every frame are closed-form in doc_id (width = 4 + id%13, height =
-    * 3 + id%7, frames = 2 + id%5, lum(x,y,f) = (31x + 17y + 23f + id) mod
-    * 256 — integer-valued, DIB is lossless), so an oracle recomputes every
-    * sampled frame's luminance stats without seeing a byte. Encode runs
-    * partition-local, like the PNG/WAV/MP4 fixtures.
+  /** REAL-AVI media table: width = 4 + id%13, height = 3 + id%7, frames =
+    * 2 + id%5, lum(x,y,f) = (31x + 17y + 23f + id) mod 256 — integer-valued
+    * and DIB is lossless, so an oracle recomputes every sampled frame's
+    * luminance stats.
     */
-  def aviMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { did =>
-        val w = (4 + did % 13).toInt
-        val h = (3 + did % 7).toInt
-        val nf = (2 + did % 5).toInt
-        val frames = (0 until nf).map(f =>
-          dibFrame(w, h, (x, y) => ((x * 31 + y * 17 + f * 23 + did) % 256).toInt))
-        MediaRow(did, encodeAvi(w, h, fps = 10, mjpeg = false, frames), "video/x-msvideo")
-      }
+  def aviMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "video/x-msvideo") { (did, _) =>
+      val w = (4 + did % 13).toInt
+      val h = (3 + did % 7).toInt
+      val frames = (0 until (2 + did % 5).toInt).map(f =>
+        dibFrame(w, h, (x, y) => ((x * 31 + y * 17 + f * 23 + did) % 256).toInt))
+      encodeAvi(w, h, fps = 10, mjpeg = false, frames)
     }
-  }
 
-  /** Batched frame sampling + decode: one media row → one row per kept
+  /** Frame sampling + decode: one media row → one row per kept
     * frame (the flatMap/explode shape of frame extraction), every
     * `sampleEvery`-th frame decoded. Partition-local, no shuffle — frames
     * for 100 TB of video cost one scan; the JPEG reader (MJPEG case) is
@@ -945,14 +802,13 @@ object Multimodal {
     * Dispatch by mime: RIFF/AVI demux, or the multi-frame GIF reader —
     * the two JDK-decodable animated containers.
     */
-  def extractVideoFrames(media: Dataset[MediaRow], sampleEvery: Int = 1,
-      batchSize: Int = 64): Dataset[VideoFrame] = {
+  def extractVideoFrames(media: Dataset[MediaRow], sampleEvery: Int = 1): Dataset[VideoFrame] = {
     import media.sparkSession.implicits._
     media.mapPartitions { iter =>
       val codec = new ImageCodec
-      iter.grouped(batchSize).flatMap(_.flatMap(m =>
+      iter.flatMap(m =>
         if (m.mime == "image/gif") decodeGifFrames(m.payload, m.media_id, sampleEvery, codec)
-        else decodeAviFrames(m.payload, m.media_id, sampleEvery, codec)))
+        else decodeAviFrames(m.payload, m.media_id, sampleEvery, codec))
     }
   }
 
@@ -977,9 +833,7 @@ object Multimodal {
       require(n >= 1, s"media_id $mediaId: GIF holds no frames")
       (0 until n).iterator.filter(_ % sampleEvery == 0).map { i =>
         val img = reader.read(i)
-        val w = img.getWidth; val h = img.getHeight
-        VideoFrame(mediaId, i, w, h,
-          lumProfile(img.getRGB(0, 0, w, h, null, 0, w), w, h))
+        VideoFrame(mediaId, i, img.getWidth, img.getHeight, lumProfile(img))
       }.toVector
     } catch {
       case e: java.io.IOException =>
@@ -1039,33 +893,22 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Deterministic REAL-animated-GIF media table — the
-    * [[aviMediaFromDocuments]] closed form (frame count and pixel formula
-    * identical), with the height floor shifted to 5 (the JDK GIF codec
-    * constraint documented on [[encodeGif]]), so q_multimodal_gif shares
-    * the frames oracle's SQL shape and the two containers cross-check each
-    * other's frame pipelines.
+  /** REAL-animated-GIF media table — the [[aviMediaFromDocuments]] closed
+    * form (frame count and pixel formula identical), with the height floor
+    * shifted to 5 (the JDK GIF codec constraint documented on
+    * [[encodeGif]]), so q_multimodal_gif shares the frames oracle's SQL
+    * shape and the two containers cross-check each other's frame pipelines.
     */
-  def gifMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      val codec = new ImageCodec
-      it.map { did =>
-        val w = (4 + did % 13).toInt
-        val h = (5 + did % 7).toInt
-        val nf = (2 + did % 5).toInt
-        val frames = (0 until nf).map(f =>
-          (x: Int, y: Int) => ((x * 31 + y * 17 + f * 23 + did) % 256).toInt)
-        MediaRow(did, encodeGif(w, h, frames, codec), "image/gif")
-      }
+  def gifMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "image/gif") { (did, codec) =>
+      val frames = (0 until (2 + did % 5).toInt).map(f =>
+        (x: Int, y: Int) => ((x * 31 + y * 17 + f * 23 + did) % 256).toInt)
+      encodeGif((4 + did % 13).toInt, (5 + did % 7).toInt, frames, codec)
     }
-  }
 
-  /** Encode one grayscale-valued RGB PNG (lossless, so decode returns the
-    * exact pixel function).
-    */
-  def encodePng(width: Int, height: Int, pixel: (Int, Int) => Int,
-      codec: ImageCodec = new ImageCodec): Array[Byte] = {
+  /** A TYPE_INT_RGB image whose pixel (x, y) is the gray level
+    * `pixel(x, y) & 0xFF`. */
+  private def grayImage(width: Int, height: Int, pixel: (Int, Int) => Int): BufferedImage = {
     val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < height) {
@@ -1077,57 +920,38 @@ object Multimodal {
       }
       y += 1
     }
-    codec.write(img, "image/png")
+    img
   }
 
-  /** Deterministic REAL-PNG media table from any id-carrying frame: image
-    * dims and pixels are closed-form in doc_id (width = 4 + id%13, height =
-    * 3 + id%7, luminance(x,y) = (31x + 17y + id) mod 256), so an oracle can
-    * recompute everything the decoder reports without ever seeing the
-    * bytes. Encode runs partition-local (one scan, no shuffle), exactly
-    * like a real binary-ingest path.
+  /** Encode one grayscale-valued RGB PNG (lossless, so decode returns the
+    * exact pixel function).
     */
-  def pngMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      val codec = new ImageCodec
-      it.map { did =>
-        val w = (4 + did % 13).toInt
-        val h = (3 + did % 7).toInt
-        MediaRow(did, encodePng(w, h, (x, y) => ((x * 31 + y * 17 + did) % 256).toInt, codec),
-          "image/png")
-      }
+  def encodePng(width: Int, height: Int, pixel: (Int, Int) => Int,
+      codec: ImageCodec = new ImageCodec): Array[Byte] =
+    codec.write(grayImage(width, height, pixel), "image/png")
+
+  /** REAL-PNG media table: width = 4 + id%13, height = 3 + id%7,
+    * luminance(x,y) = (31x + 17y + id) mod 256.
+    */
+  def pngMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "image/png") { (did, codec) =>
+      encodePng((4 + did % 13).toInt, (3 + did % 7).toInt,
+        (x, y) => ((x * 31 + y * 17 + did) % 256).toInt, codec)
     }
-  }
 
   /** The THIRD real still-image container (after PNG and the BMP spec
     * coverage): genuine baseline TIFFs through the JDK 9+ javax.imageio
     * TIFF plugin — lossless like PNG, so decode returns the exact pixel
-    * function. Distinct dims/pixel formula from the PNG path, so a TIFF
-    * reader regression breaks its own query, not a shared oracle row.
+    * function. Distinct dims/pixel formula from the PNG path (width = 5 +
+    * id%11, height = 4 + id%9, luminance(x,y) = (29x + 19y + 3·id) mod
+    * 256), so a TIFF reader regression breaks its own query, not a shared
+    * oracle row.
     */
-  def tiffMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { it =>
-      val codec = new ImageCodec
-      it.map { did =>
-        val w = (5 + did % 11).toInt
-        val h = (4 + did % 9).toInt
-        val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = ((x * 29 + y * 19 + did * 3) % 256).toInt
-            img.setRGB(x, y, (v << 16) | (v << 8) | v)
-            x += 1
-          }
-          y += 1
-        }
-        MediaRow(did, codec.write(img, "image/tiff"), "image/tiff")
-      }
+  def tiffMediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "image/tiff") { (did, codec) =>
+      codec.write(grayImage((5 + did % 11).toInt, (4 + did % 9).toInt,
+        (x, y) => ((x * 29 + y * 19 + did * 3) % 256).toInt), "image/tiff")
     }
-  }
 
   // ---- video container metadata (REAL ISO-BMFF parsing, no codec) -------
 
@@ -1256,45 +1080,25 @@ object Multimodal {
     ftyp ++ moov ++ mdat
   }
 
-  /** Deterministic REAL-MP4 media table: container parameters are
-    * closed-form in doc_id (width = 16·(4 + id%60), height = 16·(3 +
+  /** REAL-MP4 media table: width = 16·(4 + id%60), height = 16·(3 +
     * id%40), duration = (5 + id%120) s at timescale 600, mdat = 100 +
-    * id%900 bytes), so the oracle recomputes everything [[parseMp4]]
-    * reports without seeing a byte. Encode runs partition-local — one
-    * scan, no shuffle, like any binary ingest.
+    * id%900 bytes — everything [[parseMp4]] reports.
     */
-  def mp4MediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].map { did =>
-      MediaRow(did,
-        encodeMp4(did,
-          width = (16 * (4 + did % 60)).toInt,
-          height = (16 * (3 + did % 40)).toInt,
-          durationTicks = 600L * (5 + did % 120),
-          timescale = 600L,
-          mdatLen = (100 + did % 900).toInt),
-        "video/mp4")
+  def mp4MediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] =
+    mediaTable(spark, docs, "video/mp4") { (did, _) =>
+      encodeMp4(did,
+        width = (16 * (4 + did % 60)).toInt,
+        height = (16 * (3 + did % 40)).toInt,
+        durationTicks = 600L * (5 + did % 120),
+        timescale = 600L,
+        mdatLen = (100 + did % 900).toInt)
     }
-  }
 
-  /** Batched container-metadata extraction — same partition-local batch
-    * shape as [[extractFeatures]]; a real demuxer context would be
-    * initialized once per partition here.
+  /** Container-metadata extraction — one scan, no shuffle, a plain
+    * per-row map (the box walk keeps no codec state).
     */
-  def extractVideoMeta(media: Dataset[MediaRow], batchSize: Int = 64): Dataset[VideoMeta] = {
+  def extractVideoMeta(media: Dataset[MediaRow]): Dataset[VideoMeta] = {
     import media.sparkSession.implicits._
-    media.mapPartitions(_.grouped(batchSize).flatMap(_.map(m =>
-      parseMp4(m.payload, m.media_id))))
-  }
-
-  /** Text-payload media table (payload = utf-8 bytes, stub decode path) —
-    * the fixture for the non-image plumbing tests.
-    */
-  def mediaFromDocuments(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id").as("media_id"),
-        encode(col("text"), "UTF-8").as("payload"),
-        lit("text/plain").as("mime"))
-      .as[MediaRow]
+    media.mapPartitions(_.map(m => parseMp4(m.payload, m.media_id)))
   }
 }

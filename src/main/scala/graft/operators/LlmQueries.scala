@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Sources.{table => t}
@@ -56,6 +56,32 @@ object LlmQueries {
       |  WHERE len(t.x) > 0
       |  GROUP BY source, t.x
       |)""".stripMargin
+
+  /** The output rows of q_multimodal_audio, q_multimodal_aiff and
+    * q_multimodal_f32: format metadata plus rms, mean |v| and peak. */
+  private def audioRows(feats: Dataset[Multimodal.AudioFeatures]): DataFrame =
+    feats.toDF()
+      .select(col("media_id"), col("mime"),
+        col("sample_rate").cast("long").as("sample_rate"),
+        col("n_channels").cast("long").as("n_channels"),
+        col("n_frames"),
+        r4(element_at(col("feature"), 1)).as("rms"),
+        r4(element_at(col("feature"), 2)).as("mean_abs"),
+        element_at(col("feature"), 3).cast("long").as("peak"))
+      .orderBy("media_id")
+
+  /** The output rows of q_multimodal_frames and q_multimodal_gif: every
+    * 2nd frame of each clip with its dims and luminance mean/min/max. */
+  private def frameRows(media: Dataset[Multimodal.MediaRow]): DataFrame =
+    Multimodal.extractVideoFrames(media, sampleEvery = 2).toDF()
+      .select(col("media_id"),
+        col("frame_idx").cast("long").as("frame_idx"),
+        col("width").cast("long").as("width"),
+        col("height").cast("long").as("height"),
+        r4(element_at(col("feature"), 1)).as("mean_lum"),
+        element_at(col("feature"), 2).cast("long").as("min_lum"),
+        element_at(col("feature"), 3).cast("long").as("max_lum"))
+      .orderBy("media_id", "frame_idx")
 
   /** k-means geometry for q_kmeans (clusters / Lloyd iterations / dim). */
   val KmeansK = 8
@@ -1646,34 +1672,14 @@ object LlmQueries {
     // sample are closed-form in doc_id with INTEGER values, so amplitude
     // sums stay exact in doubles and the oracle recomputes rms/meanAbs/
     // peak from the sample formula without seeing the bytes.
-    "q_multimodal_audio" -> ((s, dir) => {
-      val media = Multimodal.wavMediaFromDocuments(s, t(s, dir, "documents"))
-      Multimodal.extractAudioFeatures(media).toDF()
-        .select(col("media_id"), col("mime"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("n_channels").cast("long").as("n_channels"),
-          col("n_frames"),
-          r4(element_at(col("feature"), 1)).as("rms"),
-          r4(element_at(col("feature"), 2)).as("mean_abs"),
-          element_at(col("feature"), 3).cast("long").as("peak"))
-        .orderBy("media_id")
-    }),
+    "q_multimodal_audio" -> ((s, dir) => audioRows(Multimodal.extractAudioFeatures(
+      Multimodal.wavMediaFromDocuments(s, t(s, dir, "documents"))))),
 
     // the SECOND real audio container (r11): genuine AIFF (big-endian IFF
     // chunks) through the same javax.sound SPI — distinct sample formula
     // and rate, so a reader regression breaks only its own query
-    "q_multimodal_aiff" -> ((s, dir) => {
-      val media = Multimodal.aiffMediaFromDocuments(s, t(s, dir, "documents"))
-      Multimodal.extractAudioFeatures(media).toDF()
-        .select(col("media_id"), col("mime"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("n_channels").cast("long").as("n_channels"),
-          col("n_frames"),
-          r4(element_at(col("feature"), 1)).as("rms"),
-          r4(element_at(col("feature"), 2)).as("mean_abs"),
-          element_at(col("feature"), 3).cast("long").as("peak"))
-        .orderBy("media_id")
-    }),
+    "q_multimodal_aiff" -> ((s, dir) => audioRows(Multimodal.extractAudioFeatures(
+      Multimodal.aiffMediaFromDocuments(s, t(s, dir, "documents"))))),
 
     // REAL float32-WAV decode (r11, the THIRD audio container path):
     // WAVE_FORMAT_IEEE_FLOAT through the same javax.sound SPI
@@ -1681,18 +1687,8 @@ object LlmQueries {
     // the oracle recomputes rms/mean_abs/peak from the closed form
     // (n = 256 + id%512 @ 16 kHz, v(i) = (i·29 + id·13) mod 1601 − 800)
     // without seeing bytes; a non-float payload fails loudly
-    "q_multimodal_f32" -> ((s, dir) => {
-      val media = Multimodal.f32MediaFromDocuments(s, t(s, dir, "documents"))
-      Multimodal.extractAudioF32Features(media).toDF()
-        .select(col("media_id"), col("mime"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("n_channels").cast("long").as("n_channels"),
-          col("n_frames"),
-          r4(element_at(col("feature"), 1)).as("rms"),
-          r4(element_at(col("feature"), 2)).as("mean_abs"),
-          element_at(col("feature"), 3).cast("long").as("peak"))
-        .orderBy("media_id")
-    }),
+    "q_multimodal_f32" -> ((s, dir) => audioRows(Multimodal.extractAudioF32Features(
+      Multimodal.f32MediaFromDocuments(s, t(s, dir, "documents"))))),
 
     // REAL WAV decode → fixed-point linear-interp resample 8 kHz → 6 kHz
     // (src/dst = 4/3): every output sample is exact integer arithmetic
@@ -1732,18 +1728,8 @@ object LlmQueries {
     // the pixel formula without seeing a byte. The MJPEG decode path is
     // covered by MultimodalSpec self-consistency (JPEG bytes are
     // JDK-version-specific, so no closed-form oracle there).
-    "q_multimodal_frames" -> ((s, dir) => {
-      val media = Multimodal.aviMediaFromDocuments(s, t(s, dir, "documents"))
-      Multimodal.extractVideoFrames(media, sampleEvery = 2).toDF()
-        .select(col("media_id"),
-          col("frame_idx").cast("long").as("frame_idx"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          r4(element_at(col("feature"), 1)).as("mean_lum"),
-          element_at(col("feature"), 2).cast("long").as("min_lum"),
-          element_at(col("feature"), 3).cast("long").as("max_lum"))
-        .orderBy("media_id", "frame_idx")
-    }),
+    "q_multimodal_frames" -> ((s, dir) =>
+      frameRows(Multimodal.aviMediaFromDocuments(s, t(s, dir, "documents")))),
 
     // oracle-backed: the SECOND JDK-decodable animated container — REAL
     // multi-frame GIF decode (ImageIO index reads over a gray-ramp
@@ -1751,18 +1737,8 @@ object LlmQueries {
     // sampling path as the AVI pipeline. Same closed form in doc_id, so
     // the two containers hash-match the SAME oracle rows — a demux or
     // palette regression in either path breaks its own query.
-    "q_multimodal_gif" -> ((s, dir) => {
-      val media = Multimodal.gifMediaFromDocuments(s, t(s, dir, "documents"))
-      Multimodal.extractVideoFrames(media, sampleEvery = 2).toDF()
-        .select(col("media_id"),
-          col("frame_idx").cast("long").as("frame_idx"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          r4(element_at(col("feature"), 1)).as("mean_lum"),
-          element_at(col("feature"), 2).cast("long").as("min_lum"),
-          element_at(col("feature"), 3).cast("long").as("max_lum"))
-        .orderBy("media_id", "frame_idx")
-    }),
+    "q_multimodal_gif" -> ((s, dir) =>
+      frameRows(Multimodal.gifMediaFromDocuments(s, t(s, dir, "documents")))),
 
     // oracle-backed: REAL pixel resize — encode genuine PNGs, decode,
     // bilinear-downscale the PIXEL BUFFER with the exact fixed-point
@@ -2472,10 +2448,43 @@ object LlmQueries {
       |  GROUP BY tg.doc_id
       |)""".stripMargin
 
-  /** The synthetic video pixels of a p CTE (doc_id, w, h, nf): every 2nd
-    * frame (fr) and its closed-form luminance per pixel (px). */
-  private val FramePixelsCte =
-    """fr AS (
+  /** The oracle of an audio fixture: clip lengths `frames` and samples
+    * `sample` (SQL over doc_id, f.doc_id and i.i) aggregated to the
+    * [[audioRows]] columns. Integer-valued samples keep Σv and Σv² exact
+    * in doubles on both engines regardless of summation order; float32
+    * quantization mirrored via CAST AS REAL like q_multimodal. */
+  private def audioOracle(frames: String, sample: String, mime: String,
+      sampleRate: Int): String =
+    s"""WITH f AS (
+      |  SELECT doc_id, $frames AS n FROM documents
+      |), smp AS (
+      |  SELECT f.doc_id, f.n,
+      |    CAST($sample AS DOUBLE) AS v
+      |  FROM f, LATERAL unnest(generate_series(0, f.n - 1)) AS i(i)
+      |)
+      |SELECT doc_id AS media_id, '$mime' AS mime,
+      |  CAST($sampleRate AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS n_channels,
+      |  CAST(n AS BIGINT) AS n_frames,
+      |  FLOOR(CAST(CAST(sqrt(SUM(v * v) / n) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
+      |    / 10000.0 AS rms,
+      |  FLOOR(CAST(CAST(SUM(abs(v)) / n AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
+      |    / 10000.0 AS mean_abs,
+      |  CAST(GREATEST(abs(MIN(v)), abs(MAX(v))) AS BIGINT) AS peak
+      |FROM smp GROUP BY doc_id, n ORDER BY media_id""".stripMargin
+
+  /** The oracle of a video-frame fixture whose clip height is `height`
+    * (SQL over doc_id): every 2nd frame (fr), its closed-form luminance
+    * per pixel (px), aggregated to the [[frameRows]] columns. DIB and the
+    * gray-ramp GIF are lossless and luminance values are integers, so
+    * per-frame sums are exact in doubles on both engines; float32
+    * quantization mirrored via CAST AS REAL like q_multimodal. Sampling
+    * (every 2nd frame) is the f % 2 = 0 predicate. */
+  private def framesOracle(height: String): String =
+    s"""WITH p AS (
+      |  SELECT doc_id, 4 + doc_id % 13 AS w, $height AS h,
+      |    2 + doc_id % 5 AS nf
+      |  FROM documents
+      |), fr AS (
       |  SELECT p.doc_id, p.w, p.h, f.f AS frame_idx
       |  FROM p, LATERAL unnest(generate_series(0, p.nf - 1)) AS f(f)
       |  WHERE f.f % 2 = 0
@@ -2486,7 +2495,14 @@ object LlmQueries {
       |  FROM fr,
       |    LATERAL unnest(generate_series(0, fr.w - 1)) AS x(x),
       |    LATERAL unnest(generate_series(0, fr.h - 1)) AS y(y)
-      |)""".stripMargin
+      |)
+      |SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
+      |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+      |  FLOOR(CAST(CAST(AVG(v) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
+      |    / 10000.0 AS mean_lum,
+      |  CAST(MIN(v) AS BIGINT) AS min_lum, CAST(MAX(v) AS BIGINT) AS max_lum
+      |FROM px GROUP BY doc_id, frame_idx, w, h
+      |ORDER BY media_id, frame_idx""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "q_text_stats" ->
@@ -4054,66 +4070,19 @@ object LlmQueries {
         |  CAST(MAX(v) AS BIGINT) AS max_lum
         |FROM px GROUP BY doc_id, w, h ORDER BY media_id""".stripMargin,
 
-    // audio parity: integer-valued samples keep Σv and Σv² exact in
-    // doubles on both engines regardless of summation order; float32
-    // quantization mirrored via CAST AS REAL like q_multimodal
     "q_multimodal_audio" ->
-      """WITH f AS (
-        |  SELECT doc_id, 400 + doc_id % 800 AS n FROM documents
-        |), smp AS (
-        |  SELECT f.doc_id, f.n,
-        |    CAST((i.i * 37 + f.doc_id * 11) % 2001 - 1000 AS DOUBLE) AS v
-        |  FROM f, LATERAL unnest(generate_series(0, f.n - 1)) AS i(i)
-        |)
-        |SELECT doc_id AS media_id, 'audio/wav' AS mime,
-        |  CAST(8000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS n_channels,
-        |  CAST(n AS BIGINT) AS n_frames,
-        |  FLOOR(CAST(CAST(sqrt(SUM(v * v) / n) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS rms,
-        |  FLOOR(CAST(CAST(SUM(abs(v)) / n AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS mean_abs,
-        |  CAST(GREATEST(abs(MIN(v)), abs(MAX(v))) AS BIGINT) AS peak
-        |FROM smp GROUP BY doc_id, n ORDER BY media_id""".stripMargin,
+      audioOracle("400 + doc_id % 800", "(i.i * 37 + f.doc_id * 11) % 2001 - 1000",
+        "audio/wav", 8000),
 
-    // the AIFF sibling: its own frame-count/sample formula and rate,
-    // same exact-integer-sum float32-quantization discipline
+    // the AIFF sibling: its own frame-count/sample formula and rate
     "q_multimodal_aiff" ->
-      """WITH f AS (
-        |  SELECT doc_id, 300 + doc_id % 700 AS n FROM documents
-        |), smp AS (
-        |  SELECT f.doc_id, f.n,
-        |    CAST((i.i * 53 + f.doc_id * 17) % 1777 - 888 AS DOUBLE) AS v
-        |  FROM f, LATERAL unnest(generate_series(0, f.n - 1)) AS i(i)
-        |)
-        |SELECT doc_id AS media_id, 'audio/aiff' AS mime,
-        |  CAST(11025 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS n_channels,
-        |  CAST(n AS BIGINT) AS n_frames,
-        |  FLOOR(CAST(CAST(sqrt(SUM(v * v) / n) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS rms,
-        |  FLOOR(CAST(CAST(SUM(abs(v)) / n AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS mean_abs,
-        |  CAST(GREATEST(abs(MIN(v)), abs(MAX(v))) AS BIGINT) AS peak
-        |FROM smp GROUP BY doc_id, n ORDER BY media_id""".stripMargin,
+      audioOracle("300 + doc_id % 700", "(i.i * 53 + f.doc_id * 17) % 1777 - 888",
+        "audio/aiff", 11025),
 
-    // same closed-form amplitude algebra as the wav/aiff oracles, with
-    // the f32 fixture's own sample formula
+    // the float32 sibling: the f32 fixture's own sample formula
     "q_multimodal_f32" ->
-      """WITH f AS (
-        |  SELECT doc_id, 256 + doc_id % 512 AS n FROM documents
-        |), smp AS (
-        |  SELECT f.doc_id, f.n,
-        |    CAST((i.i * 29 + f.doc_id * 13) % 1601 - 800 AS DOUBLE) AS v
-        |  FROM f, LATERAL unnest(generate_series(0, f.n - 1)) AS i(i)
-        |)
-        |SELECT doc_id AS media_id, 'audio/wav-f32' AS mime,
-        |  CAST(16000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS n_channels,
-        |  CAST(n AS BIGINT) AS n_frames,
-        |  FLOOR(CAST(CAST(sqrt(SUM(v * v) / n) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS rms,
-        |  FLOOR(CAST(CAST(SUM(abs(v)) / n AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS mean_abs,
-        |  CAST(GREATEST(abs(MIN(v)), abs(MAX(v))) AS BIGINT) AS peak
-        |FROM smp GROUP BY doc_id, n ORDER BY media_id""".stripMargin,
+      audioOracle("256 + doc_id % 512", "(i.i * 29 + f.doc_id * 13) % 1601 - 800",
+        "audio/wav-f32", 16000),
 
     // resample parity: the kernel is pure integer arithmetic, so the
     // oracle rebuilds every output sample from the closed-form source
@@ -4159,42 +4128,14 @@ object LlmQueries {
         |  CAST(348 + doc_id % 900 AS BIGINT) AS byte_len
         |FROM documents ORDER BY media_id""".stripMargin,
 
-    // frame parity: DIB is lossless and luminance values are integers, so
-    // per-frame sums are exact in doubles on both engines; float32
-    // quantization mirrored via CAST AS REAL like q_multimodal. Sampling
-    // (every 2nd frame) is the f % 2 = 0 predicate.
-    "q_multimodal_frames" ->
-      s"""WITH p AS (
-        |  SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h,
-        |    2 + doc_id % 5 AS nf
-        |  FROM documents
-        |), $FramePixelsCte
-        |SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |  FLOOR(CAST(CAST(AVG(v) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS mean_lum,
-        |  CAST(MIN(v) AS BIGINT) AS min_lum, CAST(MAX(v) AS BIGINT) AS max_lum
-        |FROM px GROUP BY doc_id, frame_idx, w, h
-        |ORDER BY media_id, frame_idx""".stripMargin,
+    "q_multimodal_frames" -> framesOracle("3 + doc_id % 7"),
 
     // same closed form and sampling as q_multimodal_frames (height floor
     // shifted to 5 — the JDK GIF codec constraint on encodeGif), but the
     // ENGINE side goes through the animated-GIF reader instead of the AVI
     // demux: two independent container paths hash-matched against one
     // ground truth.
-    "q_multimodal_gif" ->
-      s"""WITH p AS (
-        |  SELECT doc_id, 4 + doc_id % 13 AS w, 5 + doc_id % 7 AS h,
-        |    2 + doc_id % 5 AS nf
-        |  FROM documents
-        |), $FramePixelsCte
-        |SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |  FLOOR(CAST(CAST(AVG(v) AS REAL) AS DOUBLE) * 10000.0 + 0.500001)
-        |    / 10000.0 AS mean_lum,
-        |  CAST(MIN(v) AS BIGINT) AS min_lum, CAST(MAX(v) AS BIGINT) AS max_lum
-        |FROM px GROUP BY doc_id, frame_idx, w, h
-        |ORDER BY media_id, frame_idx""".stripMargin,
+    "q_multimodal_gif" -> framesOracle("5 + doc_id % 7"),
 
     // resize parity: the fixed-point bilinear kernel is pure integer
     // arithmetic (corner-aligned sx = ox·(w−1)/qx as exact rationals,

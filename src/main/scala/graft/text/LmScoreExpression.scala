@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * distinct-trigram count of the training corpus).
   */
 final class LmModel(table: java.util.HashMap[String, java.lang.Long],
-    val totalGrams: Long, val n: Int = 3) extends Serializable {
+    val n: Int = 3) extends Serializable {
 
   /** V = distinct training grams (the smoothing denominator's vocab term). */
   val vocab: Long = table.size.toLong

@@ -285,6 +285,25 @@ object TextOps {
     scored
   }
 
+  /** Train the add-one-smoothed character-n-gram LM of [[lmScore]] and
+    * [[dsirSelect]] on `train`: collect its gram profile (vocab-bounded —
+    * at most the distinct-gram count of the training set), register the
+    * [[LmModel]], and return its registry id with ln(N+V) for N training
+    * grams over V distinct ones.
+    */
+  private def lmProfile(train: DataFrame, n: Int): (Long, Double) = {
+    val counts = train.select(explode(charNgrams(col("text"), n)).as("g"))
+      .groupBy("g").agg(count(lit(1)).as("c")).collect()
+    val table = new java.util.HashMap[String, java.lang.Long](counts.length * 2)
+    var total = 0L
+    counts.foreach { r =>
+      table.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1)))
+      total += r.getLong(1)
+    }
+    val model = new LmModel(table, n)
+    (LmModels.put(model), math.log((total + model.vocab).toDouble))
+  }
+
   /** Per-document average log-likelihood under a character-n-gram LM with
     * add-one smoothing — the perplexity quality filter (CCNet-style: score
     * docs against a reference corpus LM, gate or bucket on the result;
@@ -298,22 +317,11 @@ object TextOps {
     */
   def lmScore(docs: DataFrame, train: DataFrame, n: Int = 3,
               keep: Seq[String] = Nil): DataFrame = {
-    // vocab-bounded: at most the distinct-gram count of the training set
-    val counts = train.select(explode(charNgrams(col("text"), n)).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("c")).collect()
-    val table = new java.util.HashMap[String, java.lang.Long](counts.length * 2)
-    var total = 0L
-    counts.foreach { r =>
-      table.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1)))
-      total += r.getLong(1)
-    }
-    val model = new LmModel(table, total, n)
-    val modelId = LmModels.put(model)
+    val (modelId, lnNV) = lmProfile(train, n)
     // L stays declarative with the SAME normalization/windowing as the
     // kernel, so the decomposition's terms match the oracle verbatim
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
     val nGrams = greatest(length(norm) - (n - 1), lit(1)).cast("long")
-    val lnNV = math.log((total + model.vocab).toDouble)
     // `keep` passes caller columns through the scoring projection so
     // downstream consumers need no join-back on doc_id (r18: q_ppl_buckets
     // re-joined the full document table just to recover `source` — two
@@ -428,20 +436,8 @@ object TextOps {
     * selected docs, llr unrounded, ordered by the selection key.
     */
   def dsirSelect(docs: DataFrame, target: DataFrame, k: Int, n: Int = 3): DataFrame = {
-    def build(train: DataFrame): (Long, Double) = {
-      val counts = train.select(explode(charNgrams(col("text"), n)).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("c")).collect()
-      val table = new java.util.HashMap[String, java.lang.Long](counts.length * 2)
-      var total = 0L
-      counts.foreach { r =>
-        table.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1)))
-        total += r.getLong(1)
-      }
-      val model = new LmModel(table, total, n)
-      (LmModels.put(model), math.log((total + model.vocab).toDouble))
-    }
-    val (tId, tLnNV) = build(target)
-    val (sId, sLnNV) = build(docs)
+    val (tId, tLnNV) = lmProfile(target, n)
+    val (sId, sLnNV) = lmProfile(docs, n)
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
     val nGrams = greatest(length(norm) - (n - 1), lit(1)).cast("long").cast("double")
     def avgLl(id: Long, lnNV: Double): Column =

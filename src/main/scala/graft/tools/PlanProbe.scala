@@ -9,9 +9,25 @@ import graft.Sessions
   *  - `runMain graft.tools.PlanProbe --out <dir> <suffix> <q1,q2,..> [sfDir]`
   *    — write `<dir>/<query>_<suffix>.txt` per query in ONE JVM (the r17
   *    plans/ evidence workflow: before/after files for every touched query
-  *    without paying a session spin-up per plan).
+  *    without paying a session spin-up per plan). The files are
+  *    [[normalize]]d, so two runs of one commit write identical bytes and
+  *    a before/after pair differs only where the plans do.
   */
 object PlanProbe {
+
+  /** What a formatted plan prints that depends on the JVM rather than on
+    * the query: lambda class names, object identities (`IvfModel@1a2b`),
+    * exchange `plan_id` counters and the source line of an RDD call site.
+    */
+  private val JvmNoise = Seq(
+    raw"\$$Lambda\$$?\d*/0x[0-9a-f]+".r -> "\\$Lambda",
+    raw"([\w$$])@[0-9a-f]+\b".r -> "$1@<id>",
+    raw"plan_id=\d+".r -> "plan_id=<n>",
+    raw"\bat (\w+)\.scala:\d+".r -> "at $1.scala:<line>")
+
+  private def normalize(plan: String): String =
+    JvmNoise.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--out")) {
       val outDir = args(1)
@@ -25,7 +41,7 @@ object PlanProbe {
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), normalize(txt))
         graft.Blocks.releaseAll(spark)
         System.err.println(s"[plan] wrote $outDir/${name}_$suffix.txt")
       }

@@ -5,23 +5,10 @@ import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
 
-  test("media plumbing: binary payloads flow through batched extraction") {
-    import spark.implicits._
-    val docs = Seq((0L, "hello world"), (1L, "spark engine"), (2L, "x"))
-      .toDF("doc_id", "text")
-    val media = Multimodal.mediaFromDocuments(spark, docs)
-    val feats = Multimodal.extractFeatures(media, batchSize = 2).collect()
-      .sortBy(_.media_id)
-    assert(feats.length == 3)
-    assert(feats(0).byte_len == 11L)               // "hello world".getBytes.length
-    assert(feats.forall(f => f.width >= 64 && f.height >= 64))
-    assert(feats.forall(_.feature.length == 8))
-    // deterministic stub: same payload → same features
-    val again = Multimodal.extractFeatures(media, batchSize = 64).collect()
-      .sortBy(_.media_id)
-    assert(feats.map(_.feature.toSeq).toSeq == again.map(_.feature.toSeq).toSeq)
-    assert(feats.map(f => (f.width, f.height)).toSeq == again.map(f => (f.width, f.height)).toSeq)
-  }
+  /** `e` and its cause chain: a task's exception reaches the driver
+    * wrapped in the job's SparkException. */
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
   test("real PNG decode: ImageIO reports true dimensions and exact pixel stats") {
     import spark.implicits._
@@ -34,16 +21,26 @@ class MultimodalSpec extends SparkSpec {
     assert(f.feature(0) == 35.0f, s"mean lum: ${f.feature(0)}")   // (10+..+60)/6
     assert(f.feature(1) == 10.0f && f.feature(2) == 60.0f)        // min / max
     assert(f.feature(4) == 20.0f && f.feature(5) == 50.0f)        // top / bottom half
-    // the distributed path decodes the same bytes through the batch shape
+    assert(f.byte_len == bytes.length.toLong && f.feature.length == 8)
+    // the distributed path decodes the same bytes through the per-partition codec
     val viaSpark = Multimodal.extractFeatures(
-      Seq(Multimodal.MediaRow(7L, bytes, "image/png")).toDS(), batchSize = 2)
+      Seq(Multimodal.MediaRow(7L, bytes, "image/png")).toDS())
       .collect().head
     assert(viaSpark.width == 3 && viaSpark.feature.toSeq == f.feature.toSeq)
+    assert(viaSpark.byte_len == bytes.length.toLong && viaSpark.feature.length == 8)
     // corrupt payloads fail loudly, not as garbage stats
     val e = intercept[Exception] {
       Multimodal.decodeImage(Multimodal.MediaRow(8L, Array[Byte](1, 2, 3), "image/png"))
     }
     assert(e.getMessage.contains("not a decodable"))
+  }
+
+  test("extractFeatures fails on a mime with no JDK image reader, naming the media_id") {
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(3L, "hello world".getBytes("UTF-8"), "text/plain")).toDS()
+    val e = intercept[Exception](Multimodal.extractFeatures(media).collect())
+    assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("media_id 3: no JDK ImageIO reader for text/plain")), e)
   }
 
   test("pngMediaFromDocuments dims/pixels follow the closed form the oracle uses") {
@@ -155,14 +152,6 @@ class MultimodalSpec extends SparkSpec {
     // and a float container through the PCM16 path fails loudly too
     intercept[IllegalArgumentException](
       Multimodal.decodeAudio(Multimodal.MediaRow(12L, wav, "audio/wav-f32")))
-  }
-
-  test("resize bounds dimensions (opaque-mime fallback path)") {
-    import spark.implicits._
-    val docs = Seq((0L, "some media payload"), (1L, "another")).toDF("doc_id", "text")
-    val media = Multimodal.mediaFromDocuments(spark, docs)
-    val resized = Multimodal.resizeMedia(media, maxSide = 100).collect()
-    assert(resized.forall(f => f.width <= 100 && f.height <= 100))
   }
 
   test("real bilinear resize: corner-aligned samples, exact blends, aspect, pass-through") {
@@ -282,7 +271,7 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((0L, "a"), (6L, "b"), (29L, "c")).toDF("doc_id", "text")
     val frames = Multimodal.extractVideoFrames(
-      Multimodal.aviMediaFromDocuments(spark, docs), sampleEvery = 2, batchSize = 2)
+      Multimodal.aviMediaFromDocuments(spark, docs), sampleEvery = 2)
       .collect().groupBy(_.media_id)
     Seq(0L, 6L, 29L).foreach { did =>
       val (w, h, nf) = ((4 + did % 13).toInt, (3 + did % 7).toInt, (2 + did % 5).toInt)
@@ -361,7 +350,7 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((0L, "a"), (7L, "b"), (123L, "c")).toDF("doc_id", "text")
     val metas = Multimodal.extractVideoMeta(
-      Multimodal.mp4MediaFromDocuments(spark, docs), batchSize = 2)
+      Multimodal.mp4MediaFromDocuments(spark, docs))
       .collect().sortBy(_.media_id)
     metas.foreach { m =>
       val id = m.media_id
@@ -405,6 +394,15 @@ class MultimodalSpec extends SparkSpec {
       assert(r.sum_abs_out === out.map(v => math.abs(v.toLong)).sum)
       assert(r.peak_out === out.map(v => math.abs(v.toLong)).max)
     }
+  }
+
+  test("resampleAudio rejects a float32 WAV with the media_id (PCM16 contract)") {
+    import spark.implicits._
+    val f32 = Multimodal.encodeWavFloat(64, 16000f, i => (i * 5 - 100).toFloat)
+    val media = Seq(Multimodal.MediaRow(21L, f32, "audio/wav-f32")).toDS()
+    val e = intercept[Exception](Multimodal.resampleAudio(media, num = 4, den = 3).collect())
+    assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("media_id 21: expected mono PCM16")), e)
   }
 
   test("resampleTo: identity at source dims, exact upscale blends") {
