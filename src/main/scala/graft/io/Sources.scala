@@ -26,7 +26,7 @@ object Sources {
     * every downstream query sees one canonical type regardless of which
     * generator wrote the files.
     *
-    * Schema-inference memo (r18, guide §6 metadata cost): a bare
+    * Schema-inference memo (per-query metadata cost): a bare
     * `read.parquet(path)` runs a footer-read JOB per call to infer the
     * schema — ~30 ms of pure driver/scheduler overhead that every query
     * paid once per table it touches (a 5-table star query paid five).
@@ -107,11 +107,10 @@ object Sources {
     * is atomic — a concurrent reader sees the old table or the new one,
     * never a half-replaced mix — whereas Spark's `mode("overwrite")`
     * deletes the directory and then writes into it, a window in which a
-    * dying job leaves a corrupt snapshot a concurrent reader CAN see
-    * (r8 VERDICT gap #1).
+    * dying job leaves a corrupt snapshot a concurrent reader CAN see.
     *
-    * Protocol (JDK-only, same-filesystem; MULTI-WRITER safe — r10 verdict
-    * gap #3):
+    * Protocol (JDK-only, same-filesystem; safe with several writers racing
+    * on one path):
     *  1. the snapshot root holds immutable version dirs
     *     `v-<seq>-<uuid>` (sequence assigned at commit, under the lock —
     *     the time-travel ordinal [[readSnapshot(spark,path,version)*]]
@@ -145,11 +144,11 @@ object Sources {
     *     ages out and is swept). A committed version that falls OUT of
     *     the keep-window is not deleted on the spot: it is first marked
     *     retired (a `.retired-<dir>` tombstone) and deleted only once the
-    *     tombstone is older than `retireGraceMs` — a time-travel reader
-    *     pinned via [[readSnapshot(spark,path,version)*]] on the oldest
-    *     retained version would otherwise have its parquet files deleted
-    *     mid-scan by a concurrent writer's commit (r13 ADVICE). The grace
-    *     is a parameter because it is a READER-LATENCY contract, not a
+    *     tombstone is older than `retireGraceMs` — a reader pinned to the
+    *     oldest retained version, by number or through a `CURRENT` read two
+    *     commits ago, would otherwise have its parquet files deleted
+    *     mid-scan by a concurrent writer's commit. The grace is a
+    *     parameter because it is a READER-LATENCY contract, not a
     *     protocol constant: 0 restores immediate deletion.
     *
     * Readers go through [[readSnapshot]], which resolves `CURRENT` (and
@@ -298,7 +297,7 @@ object Sources {
     * (0 for create) — with the version-dir + pointer shape unchanged and
     * NO commit lock needed for the pointer itself (the lock also fences
     * local GC; store-side GC wants a lifecycle rule or lease instead).
-    * That mapping is no longer just documented (r14): the protocol's
+    * That mapping is tested, not only documented: the protocol's
     * CAS/race/grace contracts run against an in-memory store with exactly
     * those semantics — generation-compared atomic replace, no rename, no
     * pointer file, plus an injected stale-read (list-after-write lag)
@@ -379,7 +378,7 @@ object Sources {
     * read a pre-protocol plain parquet dir unchanged). The resolution is
     * one atomic pointer-file read, so the frame is pinned to a complete,
     * immutable version dir for its whole lifetime — an overwrite committed
-    * later neither corrupts it (grace copy) nor leaks into it.
+    * later neither corrupts it (grace copy, retire grace) nor leaks into it.
     */
   def readSnapshot(spark: SparkSession, path: String): DataFrame =
     readSnapshot(spark, path, LocalPointerStore)
@@ -398,7 +397,7 @@ object Sources {
       case None => spark.read.parquet(path)
     }
 
-  /** Time-travel read (round 13 — the natural completion of the S6 arc):
+  /** Time-travel read (the versioned face of the S6 snapshot write):
     * resolve a RETAINED historical version by its sequence number, as
     * committed by [[overwriteParquet]] and kept by its `retain` policy.
     * Fails loudly — naming what IS retained — when the requested version
@@ -406,7 +405,7 @@ object Sources {
     * CURRENT, because "an old snapshot" silently becoming "the newest
     * snapshot" is the exact bug a time-travel reader exists to avoid.
     *
-    * Reader-vs-GC contract (r14): a version that concurrent overwrites
+    * Reader-vs-GC contract: a version that concurrent overwrites
     * push out of the retain window is tombstoned and DELISTED at commit
     * but physically deleted only after the writer's `retireGraceMs`
     * (default [[StagingGraceMs]], 1 h) — so a reader pinned here keeps
@@ -426,7 +425,7 @@ object Sources {
     }
 
   /** Committed, sequence-named versions under a snapshot root, ascending
-    * by sequence: (sequence, dirName). Legacy `v-<uuid>` dirs (pre-r13
+    * by sequence: (sequence, dirName). Legacy `v-<uuid>` dirs (unnumbered
     * layouts) carry no ordinal and are not listed — they remain readable
     * through the CURRENT pointer until the next overwrite sweeps them.
     * A version that left the retain window is delisted the moment its
@@ -465,7 +464,7 @@ object Sources {
     * digits once the sequence passes 999,999,999 — an exact-9 match would
     * make such a version invisible to listVersions (sequence numbers
     * would regress and repeat, and the dir would be swept as garbage).
-    * Theoretical at 1e9 commits, but free to close (r13 ADVICE).
+    * Theoretical at 1e9 commits, but free to close.
     */
   private def parseVersionSeq(name: String): Option[Long] = {
     val m = java.util.regex.Pattern.compile("^v-(\\d{9,})-").matcher(name)

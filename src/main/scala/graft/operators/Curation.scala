@@ -434,8 +434,8 @@ object Curation {
     // The canonical hybrid-search stage: lexical BM25 ranking and
     // embedding-cosine ranking against one query vector, fused with RRF
     // (k=60) — doc store ⋈ vector store on id is the one co-partitioned
-    // join (both sides shuffle on the id ONCE; at 100 TB this is the
-    // bucketed-layout join of io.Layout), each ranking is a distributed
+    // join (both sides shuffle on the id ONCE; at 100 TB, stores bucketed
+    // on id would skip that shuffle), each ranking is a distributed
     // TakeOrdered top-50 heap, and the fusion is the join-free union +
     // groupBy of q_rrf_fusion. Ranks are cross-engine stable: both
     // engines compute identical score doubles (same formula structure),
@@ -522,8 +522,8 @@ object Curation {
     }),
 
     // ---- Z-order layout statistics ----------------------------------------
-    // The deterministic relational face of Layout.zOrdered (whose
-    // repartitionByRange boundaries are SAMPLED and so can't be oracled):
+    // The deterministic relational face of a z-ordered file layout (a
+    // range-partitioned write has SAMPLED boundaries, so can't be oracled):
     // min-max-normalize (l_partkey, l_suppkey) onto a 10-bit grid, Morton-
     // interleave to a 20-bit z-value, assign files by the top 4 z bits, and
     // report each file's min/max/span per dimension — the parquet row-group

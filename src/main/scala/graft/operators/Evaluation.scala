@@ -173,7 +173,7 @@ object Evaluation {
     // reduce in ONE full-width aggregate pass (map-side combined); the
     // referential-integrity check is the one join — orders NEVER shuffle
     // (left-anti against the customer key set, dim side broadcast at this
-    // geometry; bucketed-layout join per io.Layout at 100 TB). The check
+    // geometry; a bucketed-table join at 100 TB). The check
     // rows then explode from a single 1×1 crossed row.
     "q_dq_expectations" -> ((s, dir) => {
       val o = t(s, dir, "orders")

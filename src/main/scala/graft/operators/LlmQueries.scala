@@ -276,8 +276,7 @@ object LlmQueries {
     }),
 
     // oracle-backed: Count–Min sketch (Cormode–Muthukrishnan 2005) — the
-    // sublinear frequency sketch beside the Misra–Gries heavy hitters
-    // (streaming/StreamingOps) and HLL distinct (q_approx_distinct),
+    // sublinear frequency sketch beside HLL distinct (q_approx_distinct),
     // here with its 2048-cell table BUILT RELATIONALLY so the oracle
     // replays the entire sketch, not just its answers: d = 4 pairwise-
     // independent rows h_r(k) = (((k mod P)·A_r + B_r) mod P) mod 512

@@ -606,8 +606,7 @@ object Timeseries {
 
     // ---- watermark lateness audit (beyond reference, round 9) -------------
     // The batch diagnostic that SIZES a streaming watermark before anyone
-    // deploys one (streaming/StreamingOps picks delays; this measures
-    // them): per event, lateness = how far behind the per-user running
+    // deploys one: per event, lateness = how far behind the per-user running
     // event-time high-water mark it arrived, banded into the standard
     // watermark candidates — a band's tail above a candidate = exactly
     // the events `withWatermark(that delay)` would drop. The event log is

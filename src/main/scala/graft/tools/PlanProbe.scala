@@ -25,8 +25,22 @@ object PlanProbe {
     raw"plan_id=\d+".r -> "plan_id=<n>",
     raw"\bat (\w+)\.scala:\d+".r -> "at $1.scala:<line>")
 
-  private def normalize(plan: String): String =
-    JvmNoise.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+  /** Counters that number everything the JVM created before the plan:
+    * expression ids (`#123L`, `obj#370`), RDD ids (`MapPartitionsRDD[186]`)
+    * and lambda variables (`lambda x_2`). Each family is renumbered in
+    * order of first appearance within the plan; equal numbers stay equal.
+    */
+  private val JvmCounters = Seq(raw"(#)(\d+)".r, raw"(RDD\[)(\d+)".r,
+    raw"(lambda \w+_)(\d+)".r)
+
+  private def normalize(plan: String): String = {
+    val masked = JvmNoise.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+    JvmCounters.foldLeft(masked) { (s, re) =>
+      val ids = collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--out")) {

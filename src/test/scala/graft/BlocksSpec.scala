@@ -15,7 +15,7 @@ class BlocksSpec extends SparkSpec {
 
   test("releaseAll sweeps localCheckpoint blocks left by LSH dedup") {
     Blocks.releaseAll(spark)
-    val docs = Sources.table(spark, "/root/testdata/sf0.001", "documents")
+    val docs = Sources.table(spark, TestData.Sf0001, "documents")
     graft.dedup.Dedup.minhashNearDuplicates(docs, threshold = 0.3).count()
     assert(persistedCount > 0, "expected the signature checkpoint to be pinned")
     Blocks.releaseAll(spark)
@@ -24,7 +24,7 @@ class BlocksSpec extends SparkSpec {
 
   test("q_clv_scores feature checkpoint rides the caller-sweep contract") {
     Blocks.releaseAll(spark)
-    val df = graft.clv.ClvQueries.clvScores(spark, "/root/testdata/sf0.001")
+    val df = graft.clv.ClvQueries.clvScores(spark, TestData.Sf0001)
     // r18: the RFM feature frame is localCheckpointed ONCE and serves the
     // guards, both fit compressions AND the returned lazy projection (the
     // r17 cache+unpersist-in-finally shape recomputed the whole aggregate

@@ -77,9 +77,9 @@ class GateCorpusSpec extends AnyFunSuite {
   }
 
   test("live parity: the committed CORPUS_FP.json (written by the python " +
-    "tool) matches the JVM fingerprint of /root/testdata") {
+    s"tool) matches the JVM fingerprint of ${TestData.Root}") {
     val fp = java.nio.file.Paths.get("CORPUS_FP.json")
-    val testdata = java.nio.file.Paths.get("/root/testdata")
+    val testdata = java.nio.file.Paths.get(TestData.Root)
     assume(java.nio.file.Files.exists(fp) &&
       java.nio.file.Files.isDirectory(testdata),
       "committed fingerprint + driver corpus present")
@@ -88,7 +88,7 @@ class GateCorpusSpec extends AnyFunSuite {
       case Right(moved) => fail(
         s"corpus moved vs committed CORPUS_FP.json (${moved.size} files: " +
           s"${moved.take(5).mkString(", ")}) — if the driver regenerated " +
-          "/root/testdata, re-cut the envelopes and run " +
+          s"${TestData.Root}, re-cut the envelopes and run " +
           "tools/corpus_fp.py record; otherwise the JVM/python " +
           "fingerprints have diverged")
       case Left(reason) => fail(s"committed fingerprint unreadable: $reason")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class QueriesSmokeSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = TestData.Sf0001
 
   // empty-by-construction at sf0.001: anti/except find no unmatched keys
   // (every customer has orders); the brute near-dup pair list may prune

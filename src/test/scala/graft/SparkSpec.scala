@@ -4,6 +4,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The generated test corpus the specs read: its root, and the sf0.001
+  * tables under it.
+  */
+object TestData {
+  val Root = "/root/testdata"
+  val Sf0001 = s"$Root/sf0.001"
+}
+
 /** Shared local session for all suites (getOrCreate → one session per forked
   * test JVM, mirroring how the reference's pytest suite shares nothing but
   * pure functions — our pure functions just happen to need a SparkSession).

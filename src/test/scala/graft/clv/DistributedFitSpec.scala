@@ -11,7 +11,7 @@ class DistributedFitSpec extends SparkSpec {
 
   test("fitDistributed matches the driver-side fit on real features") {
     val feats = graft.operators.Rfm.customerFeatures(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "orders"),
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "orders"),
       to_date(lit("2001-08-02")), "o_custkey", "o_orderdate", "o_totalprice")
       .filter(col("frequency") > 0 && col("monetary_value") > 0)
       .cache()
@@ -66,7 +66,7 @@ class DistributedFitSpec extends SparkSpec {
 
   test("driver-cap routing: tiny cap forces the distributed path, same result") {
     val feats = graft.operators.Rfm.customerFeatures(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "orders"),
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "orders"),
       to_date(lit("2001-08-02")), "o_custkey", "o_orderdate", "o_totalprice")
       .filter(col("frequency") > 0 && col("monetary_value") > 0)
     val viaCap = BetaGeo.fitFeatures(feats, "frequency", "recency", "t", maxDriverRows = 1)
@@ -76,7 +76,7 @@ class DistributedFitSpec extends SparkSpec {
 
   test("fitModel honours its driver cap per model: both fits go distributed") {
     val returning = ClvModel.prepare(graft.operators.Rfm.customerFeatures(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "orders"),
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "orders"),
       to_date(lit("2001-08-02")), "o_custkey", "o_orderdate", "o_totalprice"))
       .filter(col("frequency") > 0 && col("monetary") > 0)
       .cache()

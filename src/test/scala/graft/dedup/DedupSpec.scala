@@ -201,7 +201,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("containment: subset copies score 1.0 where jaccard drops below it") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = graft.TestData.Sf0001
     val cont = graft.SparkEntry.queries("q_containment_exact")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val jacc = graft.SparkEntry.queries("q_jaccard_exact")(spark, sf)
@@ -220,7 +220,7 @@ class DedupSpec extends SparkSpec {
   }
   test("setsim prefix join is sound AND complete vs brute force on a real slice") {
     val d = graft.operators.LlmQueries.withPlantedNearDups(
-        graft.io.Sources.table(spark, "/root/testdata/sf0.001", "documents"))
+        graft.io.Sources.table(spark, graft.TestData.Sf0001, "documents"))
       .where(col("doc_id") % 5 === 0).cache()
     try {
       def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
@@ -251,7 +251,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("setsim join plan: prefix equi-join candidates, no cartesian anywhere") {
-    val p = graft.SparkEntry.queries("q_setsim_join")(spark, "/root/testdata/sf0.001")
+    val p = graft.SparkEntry.queries("q_setsim_join")(spark, graft.TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"candidates must come from the prefix equi-join:\n$p")

@@ -447,7 +447,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("pHash on real data: 15-bit range, popcount consistency, ≤7 ones") {
     val rows = graft.SparkEntry.queries("q_image_phash")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val h = r.getLong(2)
@@ -477,7 +477,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("q_multimodal_tiff: decoded dims and luminance match the pixel formula") {
     val rows = graft.SparkEntry.queries("q_multimodal_tiff")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(rows.length === 500)
     rows.take(20).foreach { r =>
       val did = r.getLong(0)

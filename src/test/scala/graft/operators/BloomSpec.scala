@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class BloomSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   test("no false negatives: every inserted key probes true (exhaustive)") {
     val bits = new BloomBits(new Array[Long](BloomBits.geometry(10000, 10)._1),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class CurationSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 

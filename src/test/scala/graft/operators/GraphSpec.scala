@@ -80,7 +80,7 @@ class GraphSpec extends SparkSpec {
     // A regression back to one eager action per round (the r8 contention
     // amplifier), to per-round edge re-materialization, or to convergence
     // POLLING each adds whole jobs and lands past this bound.
-    val li = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+    val li = graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     Graph.pagerank(Graph.copurchaseEdges(li), iters = 5).count()
     val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
@@ -103,7 +103,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("triangles: degree-ordered count matches brute-force triple join") {
-    val li = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+    val li = graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
       .where(col("l_orderkey") < 300)
     val und = Graph.partPairEdges(li).cache()
     try {
@@ -119,7 +119,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("triangles plan: equi-joins only, semi-join closure") {
-    val df = graft.SparkEntry.queries("q_triangles")(spark, "/root/testdata/sf0.001")
+    val df = graft.SparkEntry.queries("q_triangles")(spark, graft.TestData.Sf0001)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"wedge join went cartesian:\n$p")
     assert(p.contains("LeftSemi"), s"closure should be a semi-join:\n$p")
@@ -149,7 +149,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("butterflies plan: anchor equi-join, no cartesian wedge generation") {
-    val df = graft.SparkEntry.queries("q_butterflies")(spark, "/root/testdata/sf0.001")
+    val df = graft.SparkEntry.queries("q_butterflies")(spark, graft.TestData.Sf0001)
     val p = df.queryExecution.executedPlan.toString
     // the single-row stat attaches are BNLJ crosses by design (the
     // triangleStats shape); what must never appear is a row-level cartesian
@@ -202,7 +202,7 @@ class GraphSpec extends SparkSpec {
 
   test("LPA is deterministic and partition-invariant") {
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).cache()
     try {
       val a = Graph.labelPropagation(und, Graph.LpaRounds).collect()
@@ -227,7 +227,7 @@ class GraphSpec extends SparkSpec {
     }
     // on real data: per-node triangle credits sum to exactly 3x the census
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).cache()
     try {
       val global = Graph.triangleStats(und).head.getLong(2)
@@ -239,7 +239,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("local cc plan: distributed TakeOrdered heap, no global sort") {
-    val p = graft.SparkEntry.queries("q_local_cc")(spark, "/root/testdata/sf0.001")
+    val p = graft.SparkEntry.queries("q_local_cc")(spark, graft.TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k must be a heap, not a full sort:\n$p")
@@ -279,13 +279,13 @@ class GraphSpec extends SparkSpec {
 
   test("kTruss: fixpoint in-budget on real data, truss edges nest in the graph") {
     val r = graft.SparkEntry.queries("q_ktruss")(
-      spark, "/root/testdata/sf0.001").head
+      spark, graft.TestData.Sf0001).head
     assert(r.getLong(3) === 1L, s"q_ktruss must reach its fixpoint in 3 rounds: $r")
     assert(r.getLong(1) >= 0L && r.getLong(2) >= 0L)
     // edge-cohesion nesting: the 4-truss is a subgraph of the 2-core of
     // the co-purchase slice (every truss edge endpoint has degree >= 2)
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0))
     val core2 = Graph.kCore(und, k = 2, rounds = 6).head.getLong(1)
     assert(r.getLong(2) <= core2, "truss nodes nest inside the 2-core")
@@ -293,10 +293,10 @@ class GraphSpec extends SparkSpec {
 
   test("kCore: fixpoint reached in-budget on real data, cores nest") {
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).cache()
     try {
-      val r6c = graft.SparkEntry.queries("q_kcore")(spark, "/root/testdata/sf0.001").head
+      val r6c = graft.SparkEntry.queries("q_kcore")(spark, graft.TestData.Sf0001).head
       assert(r6c.getLong(3) === 1L, "q_kcore must reach its fixpoint in 6 rounds")
       val n4 = Graph.kCore(und, k = 4, rounds = 8).head.getLong(1)
       assert(r6c.getLong(1) <= n4, "the 6-core must nest inside the 4-core")
@@ -333,7 +333,7 @@ class GraphSpec extends SparkSpec {
 
   test("link prediction on real data: pairs are non-adjacent, cn ≤ min(deg)") {
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).cache()
     try {
       val top = Graph.linkPrediction(und, k = 20)
@@ -351,7 +351,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("link prediction plan: TakeOrdered heap, key equi-joins only") {
-    val p = graft.SparkEntry.queries("q_link_prediction")(spark, "/root/testdata/sf0.001")
+    val p = graft.SparkEntry.queries("q_link_prediction")(spark, graft.TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k must be a heap, not a full sort:\n$p")
@@ -379,10 +379,10 @@ class GraphSpec extends SparkSpec {
 
   test("q_sssp on real data: source row pinned, counts conserve, converged") {
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).cache()
     try {
-      val rows = graft.SparkEntry.queries("q_sssp")(spark, "/root/testdata/sf0.001")
+      val rows = graft.SparkEntry.queries("q_sssp")(spark, graft.TestData.Sf0001)
         .collect()
       val srcNode = und.agg(min(col("u"))).head.getLong(0)
       val d0 = rows.find(_.getLong(0) == 0L).get
@@ -403,7 +403,7 @@ class GraphSpec extends SparkSpec {
 
   test("BFS is deterministic across runs (checkpointed frontier, no races)") {
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0))
     def snap() = {
       val (dist, sizes) = Graph.bfsLevels(und, source = 1L, rounds = 3)
@@ -473,7 +473,7 @@ class GraphSpec extends SparkSpec {
 
   test("assortativity on the real slice matches a driver-computed Pearson") {
     val e = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0))
     val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
     val deg = (pairs.map(_._1) ++ pairs.map(_._2))
@@ -537,7 +537,7 @@ class GraphSpec extends SparkSpec {
 
   test("random walks on the real slice: seeds ≡ 0 mod 97, steps ride edges") {
     val e = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0))
     val edgeSet = e.collect()
       .flatMap(r => Seq((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
@@ -573,7 +573,7 @@ class GraphSpec extends SparkSpec {
 
   test("modularity on the real LPA partition: bounds and conservation") {
     val e = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).localCheckpoint()
     val r = Graph.modularity(e, Graph.labelPropagation(e, Graph.LpaRounds)).head()
     assert(r.getLong(1) <= r.getLong(0), "intra edges ≤ edges")
@@ -584,7 +584,7 @@ class GraphSpec extends SparkSpec {
   test("new graph plans: key equi-joins only, never a cartesian") {
     for (q <- Seq("q_assortativity", "q_reciprocity", "q_random_walk")) {
       spark.catalog.clearCache()
-      val p = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      val p = graft.SparkEntry.queries(q)(spark, graft.TestData.Sf0001)
         .queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
       // reciprocity's scalar attach is the sanctioned broadcast 1-row
@@ -628,7 +628,7 @@ class GraphSpec extends SparkSpec {
 
   test("degree power-law on real data: α̂ > 1, census consistent") {
     val r = graft.SparkEntry.queries("q_degree_powerlaw")(
-      spark, "/root/testdata/sf0.001").head()
+      spark, graft.TestData.Sf0001).head()
     assert(r.getLong(3) <= r.getLong(0), "tail ⊆ nodes")
     assert(r.getLong(1) % 2 === 0L, "Σdeg = 2·|edges| is even")
     assert(r.getDouble(5) > 1.0, s"α̂ > 1 by construction: $r")
@@ -660,11 +660,11 @@ class GraphSpec extends SparkSpec {
 
   test("closeness on real data: agrees with a single-source bfsLevels replay") {
     val und = Graph.partPairEdges(
-      graft.io.Sources.table(spark, "/root/testdata/sf0.001", "lineitem")
+      graft.io.Sources.table(spark, graft.TestData.Sf0001, "lineitem")
         .where(col("l_orderkey") % 10 === 0)).cache()
     try {
       val rows = graft.SparkEntry.queries("q_closeness")(
-        spark, "/root/testdata/sf0.001").collect()
+        spark, graft.TestData.Sf0001).collect()
       assert(rows.nonEmpty)
       rows.foreach { r =>
         assert(r.getLong(0) % 97 === 0L, "seeds are content-addressed")
@@ -711,7 +711,7 @@ class GraphSpec extends SparkSpec {
 
   test("rich club on real data: clubs nest in k, density bounded by 1") {
     val rows = graft.SparkEntry.queries("q_rich_club")(
-      spark, "/root/testdata/sf0.001").collect().sortBy(_.getLong(0))
+      spark, graft.TestData.Sf0001).collect().sortBy(_.getLong(0))
     assert(rows.length === 4)
     rows.sliding(2).foreach { w =>
       assert(w(1).getLong(2) <= w(0).getLong(2) &&

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 class PlanSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   private def plan(name: String): String = {
     // plan-shape assertions must see the real scans: a sibling suite that

@@ -25,7 +25,7 @@ class RanksSpec extends SparkSpec {
   }
 
   test("withGlobalRank matches on a real table and descending via negation") {
-    val feats = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "orders")
+    val feats = graft.io.Sources.table(spark, graft.TestData.Sf0001, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(floor(col("o_totalprice") * lit(100.0) + lit(0.500001))
         .cast("long")).as("m"))

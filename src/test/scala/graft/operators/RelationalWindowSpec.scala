@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class RelationalWindowSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   test("ntile quartiles balance within 1; ranks are exact integer ratios") {
     val rows = SparkEntry.queries("q_window_ntile")(spark, sf).collect()

@@ -121,7 +121,7 @@ class SamplingSpec extends SparkSpec {
 
   test("weighted reservoir plan: distributed TakeOrdered heap, no global sort") {
     val p = graft.SparkEntry.queries("q_weighted_reservoir")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+      spark, graft.TestData.Sf0001).queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       s"top-20 must be a distributed heap:\n$p")
     assert(!p.contains("Join"), s"sampling is a projection:\n$p")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 class SkewSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   test("salted join returns exactly the plain inner join") {
     val orders = Sources.table(spark, sf, "orders")

@@ -14,7 +14,7 @@ import java.nio.file.Files
   */
 class StatsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   private def plan(name: String): String = {
     spark.catalog.clearCache()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 class TopKSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   test("topKPerGroup ≡ window row_number filter, both directions") {
     val orders = graft.io.Sources.table(spark, sf, "orders")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 class AnnSpec extends SparkSpec {
 
-  private lazy val emb = Sources.table(spark, "/root/testdata/sf0.001", "embeddings").cache()
+  private lazy val emb = Sources.table(spark, graft.TestData.Sf0001, "embeddings").cache()
 
   test("brute-force top-k matches a driver-side exact computation") {
     val all = emb.collect().map { r =>
@@ -196,7 +196,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("PQ envelope holds at the smallest SF") {
-    val out = graft.SparkEntry.queries("q_ann_pq")(spark, "/root/testdata/sf0.001")
+    val out = graft.SparkEntry.queries("q_ann_pq")(spark, graft.TestData.Sf0001)
       .head()
     assert(out.getLong(0) === 100L) // 10 probes × k=10 exact pairs
     assert(out.getLong(1) === 1L, "recall-vs-brute fell below the 0.35 floor")
@@ -225,7 +225,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF-PQ envelope holds at the smallest SF, candidates via cell equi-join") {
-    val out = graft.SparkEntry.queries("q_ann_ivfpq")(spark, "/root/testdata/sf0.001")
+    val out = graft.SparkEntry.queries("q_ann_ivfpq")(spark, graft.TestData.Sf0001)
       .head()
     assert(out.getLong(0) === 100L && out.getLong(1) === 1L && out.getLong(2) === 16L)
     val p = Ann.ivfPqTopK(emb, emb.where(col("vec_id") < 3), k = 3,
@@ -324,7 +324,7 @@ class AnnSpec extends SparkSpec {
     val wantByClass = want.groupBy(_._1).map { case (g, vs) =>
       g -> (vs.length.toLong, vs.count(_._2).toLong) }
     val got = graft.SparkEntry.queries("q_knn_eval")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got === wantByClass, s"got $got want $wantByClass")
     assert(got.values.map(_._1).sum === probes.length.toLong)
@@ -398,7 +398,7 @@ class AnnSpec extends SparkSpec {
 
   test("LOF on real data: positive densities, scores near 1 in the bulk") {
     val rows = graft.SparkEntry.queries("q_lof")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getDouble(1) > 0.0 && r.getDouble(2) > 0.0)
@@ -413,7 +413,7 @@ class AnnSpec extends SparkSpec {
 
   test("quantization audit: centering dominates the raw affine dot on every probe") {
     val rows = graft.SparkEntry.queries("q_quantization_recall")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(rows.length === 10)
     rows.foreach { r =>
       assert(r.getLong(1) <= 5L && r.getLong(3) <= 5L)
@@ -462,7 +462,7 @@ class AnnSpec extends SparkSpec {
 
   test("DBSCAN on real data: census covers the sample, eps positive") {
     val rows = graft.SparkEntry.queries("q_dbscan")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     val n = emb.where(col("vec_id") < 200).count()
     assert(rows.map(r => r.getLong(1) + r.getLong(2) + r.getLong(3)).sum === n)
     rows.foreach(r => assert(r.getDouble(4) > 0.0))
@@ -505,7 +505,7 @@ class AnnSpec extends SparkSpec {
     }
     def r4d(x: Double) = math.floor(x * 1e4 + 0.500001) / 1e4
     val got = graft.SparkEntry.queries("q_embed_mmd")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(got.length === byG.size * (byG.size - 1) / 2)
     got.foreach { r =>
       val (na, sa, qa, s2a) = byG(r.getLong(0))
@@ -522,7 +522,7 @@ class AnnSpec extends SparkSpec {
 
   test("MMD plan: one partial-aggregated explode shuffle, broadcast-only assembly") {
     val p = graft.SparkEntry.queries("q_embed_mmd")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+      spark, graft.TestData.Sf0001).queryExecution.executedPlan.toString
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"bounded frames must broadcast:\n$p")
     assert(p.lastIndexOf("HashAggregate") > p.lastIndexOf("Exchange hashpartitioning"),
@@ -592,9 +592,9 @@ class AnnSpec extends SparkSpec {
 
   test("silhouette on real data: bounds hold, every cluster covered") {
     val out = graft.SparkEntry.queries("q_silhouette")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(out.length === 5)
-    val total = Sources.table(spark, "/root/testdata/sf0.001", "embeddings")
+    val total = Sources.table(spark, graft.TestData.Sf0001, "embeddings")
       .count()
     assert(out.map(_.getLong(1)).sum === total, "every vector assigned once")
     out.foreach { r =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 class KmeansSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = graft.TestData.Sf0001
 
   private def emb: DataFrame = graft.io.Sources.table(spark, sf, "embeddings")
 

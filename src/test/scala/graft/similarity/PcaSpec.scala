@@ -68,7 +68,7 @@ class PcaSpec extends SparkSpec {
   }
 
   test("q_pca contract flags are all green on the real corpus") {
-    val rows = graft.SparkEntry.queries("q_pca")(spark, "/root/testdata/sf0.001").collect()
+    val rows = graft.SparkEntry.queries("q_pca")(spark, graft.TestData.Sf0001).collect()
     assert(rows.length === 8)
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.getLong(0) === i + 1L)

@@ -53,7 +53,7 @@ class StringSimilaritySpec extends SparkSpec {
   }
 
   test("record linkage query: window-only plan, threshold from rounded score") {
-    val df = SparkEntry.queries("q_record_linkage")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("q_record_linkage")(spark, graft.TestData.Sf0001)
     val plan = df.queryExecution.executedPlan.toString
     // blocked linkage is ONE shuffle on the blocking key + the final sort —
     // scoring must never become a join

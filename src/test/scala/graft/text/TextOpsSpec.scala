@@ -153,7 +153,7 @@ class TextOpsSpec extends SparkSpec {
   test("native winnow_fp kernel matches the HOF composition exactly") {
     // same xxhash64 seed-42 k-gram hashes, same window mins — the kernel is
     // a drop-in replacement, verified on real corpus text
-    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val corpus = spark.read.parquet(s"${graft.TestData.Sf0001}/documents.parquet")
     val native = TextOps.fingerprint(corpus).orderBy("doc_id").collect()
     val hof = TextOps.fingerprintHof(corpus).orderBy("doc_id").collect()
     assert(native.length == hof.length && native.length > 0)
@@ -171,7 +171,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("model-scoring langId matches the join-based formulation on real docs") {
-    val corpus = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "documents")
+    val corpus = graft.io.Sources.table(spark, graft.TestData.Sf0001, "documents")
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("lang_pred")).toMap
     val model = asMap(TextOps.langId(corpus, corpus))
@@ -182,7 +182,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("langId honors a non-default n-gram width (model vs join parity at n=4)") {
-    val corpus = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "documents")
+    val corpus = graft.io.Sources.table(spark, graft.TestData.Sf0001, "documents")
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("lang_pred")).toMap
     val model = asMap(TextOps.langId(corpus, corpus, n = 4))
@@ -252,7 +252,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("lmScore kernel matches the join-based formulation on real docs") {
-    val d = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "documents")
+    val d = graft.io.Sources.table(spark, graft.TestData.Sf0001, "documents")
     val train = d.where(col("doc_id") % 10 < 8)
     val kernel = TextOps.lmScore(d, train)
     // built-ins-only cross-check: explode grams, left-join the profile,
@@ -372,7 +372,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("BPE kernel matches the driver apply on real docs; merges are monotone") {
-    val docs = graft.io.Sources.table(spark, "/root/testdata/sf0.001", "documents")
+    val docs = graft.io.Sources.table(spark, graft.TestData.Sf0001, "documents")
       .limit(50)
     val m20 = TextOps.trainBpe(docs, numMerges = 20)
     val viaKernel = TextOps.bpeTokenCounts(docs, m20)
@@ -397,7 +397,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("q_bpe_tokenize plan: one shuffle-free scan — no explode, no hash exchange") {
     spark.catalog.clearCache()
-    val p = graft.SparkEntry.queries("q_bpe_tokenize")(spark, "/root/testdata/sf0.001")
+    val p = graft.SparkEntry.queries("q_bpe_tokenize")(spark, graft.TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Generate"), s"corpus must not explode into words:\n$p")
     assert(!p.contains("Exchange hashpartitioning"),
@@ -439,7 +439,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("q_dsir_select plan: broadcast kernels, TakeOrdered heap, join-free") {
     spark.catalog.clearCache()
-    val p = graft.SparkEntry.queries("q_dsir_select")(spark, "/root/testdata/sf0.001")
+    val p = graft.SparkEntry.queries("q_dsir_select")(spark, graft.TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Join"), s"dsir scoring must not join:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
@@ -469,7 +469,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("q_zipf plan: TakeOrdered head, no global sort of the vocab") {
     spark.catalog.clearCache()
-    val p = graft.SparkEntry.queries("q_zipf")(spark, "/root/testdata/sf0.001")
+    val p = graft.SparkEntry.queries("q_zipf")(spark, graft.TestData.Sf0001)
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"),
       s"top-1000 head must be a distributed heap:\n$p")
@@ -547,7 +547,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("collocation PMI on real data: 20 rows, support-ordered, counts consistent") {
     val rows = graft.SparkEntry.queries("q_collocation_pmi")(
-      spark, "/root/testdata/sf0.001").collect()
+      spark, graft.TestData.Sf0001).collect()
     assert(rows.length === 20)
     val supports = rows.map(_.getLong(2)).toSeq
     assert(supports.sliding(2).forall(p => p(0) >= p(1)), "support-ordered")
@@ -591,7 +591,7 @@ class TextOpsSpec extends SparkSpec {
   // ---- q_ppl_buckets --------------------------------------------------------
 
   test("ppl buckets: tertiles partition each source with NTILE sizes and ordered scores") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = graft.TestData.Sf0001
     val out = graft.SparkEntry.queries("q_ppl_buckets")(spark, sf).collect()
     assert(out.nonEmpty)
     val bySource = out.groupBy(_.getString(0))
@@ -632,7 +632,7 @@ class TextOpsSpec extends SparkSpec {
     // over 'source' would have planned
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAggregate, Window => LWindow}
     val lp = graft.SparkEntry.queries("q_ppl_buckets")(
-      spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan
+      spark, graft.TestData.Sf0001).queryExecution.optimizedPlan
     val hot = lp.collect {
       case w: LWindow if w.partitionSpec.size < 2 &&
         w.child.collectFirst { case a: LAggregate => a }.isEmpty => w
