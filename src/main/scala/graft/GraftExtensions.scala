@@ -27,14 +27,10 @@ object GraftExtensions {
 
   /** One `(name, usage, builder)` entry per native function. Each usage
     * string starts with the call signature its builder's arity check names.
-    *
-    * Model-backed scorers: the modelId argument is a literal resolved
-    * against the driver-side registry at analysis time. SQL callers
-    * register a model THEMSELVES — e.g. `LangModels.put(model)` /
-    * `LmModels.put(model)` / `IvfModels.put(new IvfModel(centers))` —
-    * pass the returned id as the literal, and `remove` it when done (the
-    * DataFrame-API operators release their own entries before returning,
-    * so their ids are NOT reusable from SQL).
+    * The model-backed kernels are not here: a trained model is a driver
+    * object, not a SQL value, so each model builds its own `Column`
+    * (`LangModel.column`, `LmModel.column`, `BpeModel.column`,
+    * `IvfModel.column`, `BloomBits.column`).
     */
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("hyp2f1", "hyp2f1(a, b, c, z) - Gauss hypergeometric series", { exprs =>
@@ -96,15 +92,5 @@ object GraftExtensions {
     ("graft_bucket_of", "graft_bucket_of(bnds, v) - #{boundary < v} over a sorted double array (binary search)", { exprs =>
       require(exprs.length == 2, "graft_bucket_of(bnds, v) takes 2 arguments")
       graft.operators.BucketOfExpression(exprs(0), exprs(1))
-    }),
-    ("graft_lang_score", "graft_lang_score(text, modelId) - language of text under a registered trigram model",
-      graft.text.LangModels.factory),
-    ("graft_lm_logcount", "graft_lm_logcount(text, modelId) - sum of smoothed trigram log-counts under a registered LM",
-      graft.text.LmModels.factory),
-    ("graft_bpe_count", "graft_bpe_count(text, modelId) - subword count of text under a registered BPE model",
-      graft.text.BpeModels.factory),
-    ("graft_ivf_cells", "graft_ivf_cells(vec, modelId, nprobe) - top-nprobe IVF cells of an embedding",
-      graft.similarity.IvfModels.factory),
-    ("graft_bloom_contains", "graft_bloom_contains(key, modelId) - key might be in a registered bloom filter",
-      graft.operators.BloomModels.factory))
+    }))
 }

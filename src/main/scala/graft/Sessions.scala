@@ -19,8 +19,8 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       // events.parquet stores TIMESTAMP(NANOS), which vanilla Spark rejects;
       // reading it as long nanos is a session-wide decision made HERE, once,
-      // not mid-query (round-1 set it inside Sources.table on every read —
-      // flagged as racey session-state mutation).
+      // not mid-query (setting it inside Sources.table on every read would
+      // mutate session state that concurrent queries share).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     // WARN for interactive/verify runs; Bench passes ERROR. This only sets
@@ -48,8 +48,8 @@ object Sessions {
     // partition-less window over DATA is structural and enforced:
     // PlanSpec fails any query whose optimized plan carries a bare
     // Window without an Aggregate-bounded child. With the hazard gated
-    // in CI, the per-run WARN is pure bench-tail noise (the r10 "clean
-    // JSON tail" goal) — silence exactly this logger.
+    // in CI, the per-run WARN is pure noise in the bench stdout tail,
+    // which must stay clean JSON — silence exactly this logger.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -57,16 +57,16 @@ object Sessions {
     // DEBUG-STRING rendering exceeds spark.sql.debug.maxToStringFields —
     // it truncates the string, never the plan, so nothing about execution
     // changes. The structural guard on plan SHAPE lives in PlanSpec (the
-    // same justification as WindowExec above); the advice-text WARN is the
-    // last non-JSON line in the bench stdout tail (r12 "What's wrong" #2) —
-    // silence exactly this logger.
+    // same justification as WindowExec above); the advice-text WARN would
+    // otherwise be a non-JSON line in the bench stdout tail — silence
+    // exactly this logger.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.util.SparkStringUtils",
       org.apache.logging.log4j.Level.ERROR)
     // BlockManager's "Block rdd_N_P already exists on this machine; not
     // re-adding it" WARN is the designed benign outcome of a
-    // duplicate-compute race: root-caused (r14, SPARK_GRAFT_TRACE=1 merged
-    // capture) to q_hits/q_pagerank, whose freshly-materializing per-round
+    // duplicate-compute race: traced (SPARK_GRAFT_TRACE=1 merged capture)
+    // to q_hits/q_pagerank, whose freshly-materializing per-round
     // localCheckpoint RDD is referenced more than once in the same job —
     // two local-mode tasks can compute the same partition concurrently,
     // the first put wins, the second finds the block stored and logs this
@@ -74,9 +74,8 @@ object Sessions {
     // contents; doPutIterator keeps the stored copy). Real block-manager
     // FAILURES surface as ERRORs or task exceptions, not this WARN, and
     // the structural guards stay in CI (PlanSpec shapes; BlocksSpec
-    // release discipline) — so the per-run line is pure bench-tail noise
-    // in the bounded stdout window the driver parses (the r10 clean-JSON-
-    // tail arc, round 3).
+    // release discipline) — so the per-run line is pure noise in the
+    // bench stdout tail, which must stay clean JSON.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.storage.BlockManager",
       org.apache.logging.log4j.Level.ERROR)
@@ -91,7 +90,7 @@ object Sessions {
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** Surfaces the engine's observe() metrics: any rows dropped by an LSH
-    * bucket cap are logged instead of vanishing (r3 ADVICE). */
+    * bucket cap are logged instead of vanishing. */
   private def registerMetricsLogger(spark: SparkSession): Unit =
     if (metricsLoggerInstalled.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
       spark.listenerManager.register(

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.{ClassicConversions, ColumnConversions}
 import org.apache.spark.sql.functions._
 
 /** Expression-level helpers: the shared rounding and cast vocabulary and
@@ -29,15 +31,24 @@ import org.apache.spark.sql.functions._
   */
 object ColumnOps {
 
+  /** A model-backed codegen kernel over `child` as a Column: `build`
+    * wraps the child's Catalyst expression, and the result goes through
+    * Spark's developer-API `Column(expr)` constructor. That constructor
+    * hangs off the `Column` companion, which is private to Spark, and
+    * never reads it, hence the `null` receiver.
+    */
+  def kernel(child: Column)(build: Expression => Expression): Column =
+    ClassicConversions.ColumnConstructorExt(null)(build(ColumnConversions.expression(child)))
+
   /** let-bind: evaluate `c` once, use it many times inside `f`. */
   def bind(c: Column)(f: Column => Column): Column =
     element_at(transform(array(c), f), 1)
 
   /** Exact double-DOMAIN floor at every magnitude. Spark's `floor` on a
     * double returns LONG via Scala's Double→Long conversion, which
-    * SATURATES silently at ±2^63 — the round-13 sf1 finding: squared
-    * daily-revenue-cents residuals reach ~4e19, clamp to 9.22e18 on the
-    * Spark side only, and the DW/Cook's/BP statistics diverge from the
+    * SATURATES silently at ±2^63 — at sf1, squared daily-revenue-cents
+    * residuals reach ~4e19, clamp to 9.22e18 on the Spark side only, and
+    * the DW/Cook's/BP statistics diverge from the
     * oracle whose DuckDB FLOOR stays in double (a second face: the r6
     * micro-unit REPORT rounding clamps any |value| > 9.2e12 the same way).
     * Equivalence proof of the guarded form: for |x| < 4e18 the long floor
@@ -72,8 +83,8 @@ object ColumnOps {
   /** EXACT decimal(38,0) of an integer-valued double (the floorD output).
     * Spark's Cast(Double → Decimal) routes through `Double.toString` —
     * the SHORTEST round-trip decimal, not the exact binary value — so any
-    * integer-valued double above 2^53 loses its low digits (the r13 sf1
-    * finding: per-day cents² residuals ~5e18 cast with ±hundreds of
+    * integer-valued double above 2^53 loses its low digits (at sf1,
+    * per-day cents² residuals ~5e18 cast with ±hundreds of
     * noise; Σ then differed from the oracle's exact HUGEINT by 2.7e4, and
     * q_breusch_pagan's 11-order moment cancellation amplified that to a
     * visible het_slope shift). Two exact limbs fix it: hi = ⌊c/2^32⌋ and

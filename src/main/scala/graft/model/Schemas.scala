@@ -3,23 +3,15 @@ package graft.model
 import org.apache.spark.sql.types._
 
 /** Explicit StructTypes for the warehouse path's raw tables: the
-  * transactions staging log (typed and as read from the CSV corpus) and the
-  * master user registry. The pipeline stays on DataFrames; the model path's
-  * column contract is `ClvModel.expectedColumns`.
+  * transactions CSV corpus as read and the master user registry. The
+  * pipeline stays on DataFrames; the model path's column contract is
+  * `ClvModel.expectedColumns`.
   *
   * The reference declares every schema explicitly and disables autodetect
   * (reference: dags/clv_data_dag.py:19–25,73); we mirror that: inference is
   * never used on the warehouse path.
   */
 object Schemas {
-
-  /** transactions_staging (reference: dags/clv_data_dag.py:19–25). */
-  val transactions: StructType = StructType(Seq(
-    StructField("CustomerID", LongType, nullable = false),
-    StructField("Quantity", IntegerType, nullable = false),
-    StructField("UnitPrice", DoubleType, nullable = false),
-    StructField("order_timestamp", TimestampType, nullable = false),
-    StructField("TotalPurchase", DoubleType, nullable = false)))
 
   /** Permissive CSV-read schema absorbing the corpus quirks (SURVEY §1.4):
     * CustomerID is float-formatted ("209.0") in the three oldest files, so it

@@ -1,11 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import graft.functions.ColumnOps.kernel
 
 /** Bloom-filter semi-join prefilter — the shuffle-reduction pattern for
   * selective joins at 100 TB: reduce the build side's keys to a bounded
@@ -64,6 +65,9 @@ final class BloomBits(val words: Array[Long], val numHashes: Int)
     while (i < words.length) { words(i) |= other.words(i); i += 1 }
     this
   }
+
+  /** Whether the BIGINT column `key` might be in the filter. */
+  def column(key: Column): Column = kernel(key)(BloomContainsExpression(_, this))
 }
 
 object BloomBits {
@@ -82,22 +86,6 @@ object BloomBits {
   }
 }
 
-/** Driver-side registry: same literal-id + prompt-release contract as
-  * LmModels / LangModels / IvfModels.
-  */
-object BloomModels extends graft.ModelRegistry[BloomBits]("BloomBits") {
-
-  val factory: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, "graft_bloom_contains(key, modelId)")
-    val id = exprs(1) match {
-      case Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_bloom_contains: modelId must be a long literal, got $other")
-    }
-    BloomContainsExpression(exprs.head, get(id))
-  }
-}
-
 /** `key might be in the filter` as a codegen projection — lives inside
   * whole-stage codegen at the scan, so rejected probe rows never leave
   * the input stage.
@@ -112,7 +100,7 @@ case class BloomContainsExpression(child: Expression, bloom: BloomBits)
     if (child.dataType == LongType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom_contains needs a BIGINT key, got ${child.dataType.catalogString}")
+      s"bloom_contains needs a BIGINT key, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(key: Any): Any =
     bloom.mightContain(key.asInstanceOf[Long])
@@ -168,17 +156,10 @@ object Bloom {
   }
 
   /** `df` restricted to rows whose `key` might be in `bloom` — the raw
-    * prefilter pass, no exactness restoration. The registry id is
-    * released before returning (Dataset construction analyzes eagerly,
-    * so the bits are already embedded in the returned plan).
+    * prefilter pass, no exactness restoration.
     */
-  def filterMightContain(df: DataFrame, key: Column, bloom: BloomBits): DataFrame = {
-    val id = BloomModels.put(bloom)
-    val out = df.where(
-      call_function("graft_bloom_contains", key.cast(LongType), lit(id)))
-    BloomModels.remove(id)
-    out
-  }
+  def filterMightContain(df: DataFrame, key: Column, bloom: BloomBits): DataFrame =
+    df.where(bloom.column(key.cast(LongType)))
 
   /** Exact semi join with the probe side bloom-prefiltered at the scan:
     * the bloom pass drops ~all non-matching rows before the shuffle; the

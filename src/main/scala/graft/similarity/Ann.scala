@@ -25,15 +25,6 @@ import graft.functions.ColumnOps.r6
   */
 object Ann {
 
-  /** Largest `nlist` assigned via plan-literal centroids; above it
-    * [[ivfTopK]] switches to the broadcast [[IvfCellsExpression]] kernel
-    * (nlist × dim literal trees stop fitting whole-stage codegen's 64 KB
-    * method budget somewhere past a few hundred cells, and re-analyzing a
-    * multi-thousand-literal plan is driver CPU for nothing). AnnSpec pins
-    * the two forms row-identical on shared centroids.
-    */
-  val LiteralNlistMax = 256
-
   /** Elementwise dot product of two array columns via the native codegen
     * expression (DotProductExpression — registered as `vec_dot`); the HOF
     * form it replaces paid an interpreted lambda per element. Resolves in
@@ -175,66 +166,31 @@ object Ann {
     *
     * Plan shape: centroids are FIT once (driver-local Lloyd on a bounded
     * content-addressed sample — at 100 TB you fit on a ≤16k-row sample,
-    * never the full corpus), then baked into the plan as literals. Cell
-    * assignment is argmax over `nlist` codegen'd vec_dot scores —
-    * nearest-in-L2 via dot(v,c) − ‖c‖²/2, no per-row norm. The search is a
-    * plain equi-join on the cell id: corpus rows land in exactly one cell
-    * and each probe explodes to `nprobe` cells, so there are no duplicate
-    * candidate pairs and no dedup aggregate (cheaper than the LSH path,
-    * which must max-merge multi-table collisions).
-    *
-    * Assignment has two equivalent physical forms, switched on `nlist`
-    * (r15, closing the r14 in-code caveat): up to [[LiteralNlistMax]]
-    * cells the centroid matrix is baked into the plan as codegen'd
-    * literals (zero indirection, ideal for the tens-of-cells regime);
-    * above it — semdedup's nlist = √N crosses this by sf1, and a 100 TB
-    * deployment sits at tens of thousands of cells — assignment runs
-    * through the broadcast [[IvfCellsExpression]] kernel, which ships the
-    * matrix once per plan instead of nlist × dim literals (codegen blows
-    * its 64 KB method limit somewhere past a few hundred cells). Both
-    * forms share math and the larger-cid tie-break; AnnSpec proves them
-    * row-identical on the same centroids, so the switch cannot move a
-    * hash.
+    * never the full corpus), then ship once inside the plan as an
+    * [[IvfModel]]. Cell assignment is the [[IvfCellsExpression]] codegen
+    * kernel — nearest-in-L2 via dot(v,c) − ‖c‖²/2, no per-row norm, equal
+    * scores to the larger cell id — at any `nlist` (a 100 TB deployment
+    * runs tens of thousands of cells). The search is a plain equi-join on
+    * the cell id: corpus rows land in exactly one cell and each probe
+    * explodes to `nprobe` cells, so there are no duplicate candidate pairs
+    * and no dedup aggregate (cheaper than the LSH path, which must
+    * max-merge multi-table collisions). `nprobe` above `nlist` searches
+    * every cell; `nprobe` below 1 fails when the frame is built.
     */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, k: Int = 10, nlist: Int = 16,
       nprobe: Int = 4, seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): DataFrame = {
-    // slice(arr, -(nprobe>nlist), …) would silently return ZERO cells —
-    // clamp so "probe extra cells to be safe" degrades to exhaustive
-    val probeCells = math.min(nprobe, nlist)
-    val centers = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
-    if (nlist > LiteralNlistMax)
-      return ivfTopKWithCenters(corpus, probes, centers, k, probeCells)
-    val halfSq = centers.map(c => c.map(x => x * x).sum / 2.0)
-    // array of (score, cid) structs; struct ordering = score then cid, so
-    // array_max / array_sort give a deterministic larger-cid tie-break
-    def cellScores(vec: Column): Column = array(centers.indices.map { i =>
-      struct((dot(vec, array(centers(i).toIndexedSeq.map(lit): _*)) - lit(halfSq(i))).as("score"),
-        lit(i).as("cid"))
-    }: _*)
-
+    val model = new IvfModel(fitCentroids(corpus, nlist, seed, sampleFraction, maxIter))
     val c = corpus.select(col("vec_id"), col("embedding"),
-      array_max(cellScores(col("embedding"))).getField("cid").as("cell"))
+      nearestCell(model, col("embedding")).as("cell"))
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"),
-      explode(transform(slice(array_sort(cellScores(col("embedding"))), -probeCells, probeCells),
-        s => s.getField("cid"))).as("cell"))
+      explode(model.column(col("embedding"), nprobe)).as("cell"))
     ivfSearch(c, p, k)
   }
 
-  /** Large-`nlist` IVF: identical Voronoi search to [[ivfTopK]], but cell
-    * assignment runs through [[IvfCellsExpression]] — the centroid matrix
-    * ships once as a plan reference object and scores in a tight loop,
-    * instead of nlist × dim plan literals (which blow codegen limits
-    * somewhere past a few hundred cells). This is the nlist ≥ 4096 path a
-    * 100 TB deployment uses; both forms share math and tie-break, and
-    * AnnSpec proves them equal on the same centroids.
-    */
-  def ivfTopKBroadcast(corpus: DataFrame, probes: DataFrame, k: Int = 10,
-      nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-      sampleFraction: Double = 1.0, maxIter: Int = 10): DataFrame = {
-    val centers = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
-    ivfTopKWithCenters(corpus, probes, centers, k, nprobe)
-  }
+  /** The nearest cell of the embedding column `vec` under `model`. */
+  private def nearestCell(model: IvfModel, vec: Column): Column =
+    element_at(model.column(vec, 1), 1)
 
   /** Product-quantization ANN (Jégou–Douze–Schmid 2011, "Product
     * quantization for nearest neighbor search" — the FAISS IVF-PQ family's
@@ -249,7 +205,7 @@ object Ann {
     *
     * Plan shape: m driver-local Lloyd fits on ONE collected bounded sample;
     * encoding + reconstruction is a shuffle-free projection (per-subspace
-    * `graft_ivf_cells` broadcast kernels + codeword lookup from nested
+    * [[IvfCellsExpression]] kernels + codeword lookup from nested
     * literals); scoring is the brute shape — bounded probe batch broadcast
     * against one corpus scan, per-probe bounded window. Returns
     * (probe_id, vec_id, cos, rank) like the other top-k paths.
@@ -258,10 +214,7 @@ object Ann {
       ksub: Int = 16, seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): DataFrame = {
     val codebooks = pqCodebooks(corpus, m, ksub, seed, sampleFraction, maxIter)
-    val (recon, pqIds) = pqRecon(codebooks)
-    val c = corpus.select(col("vec_id"), recon.as("recon"))
-    // eager analysis embedded the m codebook models — release promptly
-    pqIds.foreach(IvfModels.remove)
+    val c = corpus.select(col("vec_id"), pqRecon(codebooks).as("recon"))
     val p = probes.select(col("vec_id").as("probe_id"),
       col("embedding").as("probe_vec"), norm(col("embedding")).as("p_norm"))
     val scored = c.join(broadcast(p), col("vec_id") =!= col("probe_id"))
@@ -286,22 +239,14 @@ object Ann {
       nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
       seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): DataFrame = {
-    val coarse = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
+    val coarse = new IvfModel(fitCentroids(corpus, nlist, seed, sampleFraction, maxIter))
     val codebooks = pqCodebooks(corpus, m, ksub, seed, sampleFraction, maxIter)
-    val probeCells = math.min(nprobe, coarse.length)
-    val coarseId = IvfModels.put(new IvfModel(coarse))
-    val (recon, pqIds) = pqRecon(codebooks)
     val c = corpus.select(col("vec_id"),
-      element_at(call_function("graft_ivf_cells",
-        col("embedding"), lit(coarseId), lit(1)), 1).as("cell"),
-      recon.as("recon"))
+      nearestCell(coarse, col("embedding")).as("cell"),
+      pqRecon(codebooks).as("recon"))
     val p = probes.select(col("vec_id").as("probe_id"),
       col("embedding").as("probe_vec"), norm(col("embedding")).as("p_norm"),
-      explode(call_function("graft_ivf_cells",
-        col("embedding"), lit(coarseId), lit(probeCells))).as("cell"))
-    // both selects analyzed eagerly — release coarse + codebook entries
-    IvfModels.remove(coarseId)
-    pqIds.foreach(IvfModels.remove)
+      explode(coarse.column(col("embedding"), nprobe)).as("cell"))
     val scored = c.join(p, Seq("cell"))
       .where(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
@@ -415,45 +360,16 @@ object Ann {
   }
 
   /** The PQ encode→decode column: per-subspace nearest codeword via the
-    * broadcast ivf-cells kernel, codeword lookup from nested literals,
-    * concat — a pure whole-stage-codegen projection. Returns the column
-    * AND the registry ids it references: callers release the ids only
-    * AFTER the column has been through (eager) analysis in a select —
-    * resolution reads the registry, so an early release breaks it.
+    * [[IvfCellsExpression]] kernel, codeword lookup from nested literals,
+    * concat — a pure whole-stage-codegen projection.
     */
-  private def pqRecon(codebooks: Array[Array[Array[Double]]]): (Column, Array[Long]) = {
-    val m = codebooks.length
+  private def pqRecon(codebooks: Array[Array[Array[Double]]]): Column = {
     val dsub = codebooks(0)(0).length
-    val ids = codebooks.map(cb => IvfModels.put(new IvfModel(cb)))
-    val recon = concat((0 until m).map { j =>
-      val code = element_at(call_function("graft_ivf_cells",
-        slice(col("embedding"), j * dsub + 1, dsub), lit(ids(j)), lit(1)), 1)
+    concat(codebooks.indices.map { j =>
+      val code = nearestCell(new IvfModel(codebooks(j)),
+        slice(col("embedding"), j * dsub + 1, dsub))
       element_at(typedLit(codebooks(j).map(_.toSeq).toSeq), code + lit(1))
     }: _*)
-    (recon, ids)
-  }
-
-  /** Search with externally-supplied centroids (shared by
-    * [[ivfTopKBroadcast]] and the AnnSpec literal-vs-broadcast parity
-    * proof).
-    */
-  private[graft] def ivfTopKWithCenters(corpus: DataFrame, probes: DataFrame,
-      centers: Array[Array[Double]], k: Int, nprobe: Int): DataFrame = {
-    val probeCells = math.min(nprobe, centers.length)
-    val modelId = IvfModels.put(new IvfModel(centers))
-    val c = corpus.select(col("vec_id"), col("embedding"),
-      element_at(call_function("graft_ivf_cells",
-        col("embedding"), lit(modelId), lit(1)), 1).as("cell"))
-    val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"),
-      explode(call_function("graft_ivf_cells",
-        col("embedding"), lit(modelId), lit(probeCells))).as("cell"))
-    val result = ivfSearch(c, p, k)
-    // the selects above analyzed eagerly, so graft_ivf_cells has already
-    // resolved and embedded the model object into the plans — release the
-    // registry entry now instead of waiting for 64 later puts to evict it
-    // (a nlist=4096 centroid matrix is ~25 MB of driver heap)
-    IvfModels.remove(modelId)
-    result
   }
 
   /** Voronoi centroids for IVF — driver-local Lloyd on the bounded
@@ -471,7 +387,7 @@ object Ann {
     * cluster-based curation (SemDeDup / DSIR-style domain discovery) run
     * Spark-first.
     *
-    * Per iteration: (1) assignment — the broadcast `graft_ivf_cells` codegen
+    * Per iteration: (1) assignment — the [[IvfCellsExpression]] codegen
     * kernel (nearest-in-L2 argmax, deterministic larger-cid tie-break), a
     * shuffle-free projection; (2) recompute — posexplode to (cell, dim)
     * partial sums with map-side combine, so each task emits ≤ k·dim rows
@@ -498,15 +414,12 @@ object Ann {
         .map(_.getSeq[Double](0).toArray)
     require(centers.length == k, s"kmeans: corpus has fewer than $k points")
     for (_ <- 1 to iters) {
-      val modelId = IvfModels.put(new IvfModel(centers))
       val sums = pts
-        .select(element_at(call_function("graft_ivf_cells",
-          col("v"), lit(modelId), lit(1)), 1).as("cell"),
+        .select(nearestCell(new IvfModel(centers), col("v")).as("cell"),
           posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy("cell", "pos")
         .agg(sum("x").as("sx"), count(lit(1)).as("n"))
         .collect()
-      IvfModels.remove(modelId)
       val next = centers.map(_.clone())
       sums.groupBy(_.getInt(0)).foreach { case (cell, rows) =>
         val c = new Array[Double](centers(0).length)
@@ -515,15 +428,8 @@ object Ann {
       }
       centers = next
     }
-    val modelId = IvfModels.put(new IvfModel(centers))
-    val assigned = pts.select(col("vec_id"), col("v"),
-      element_at(call_function("graft_ivf_cells",
-        col("v"), lit(modelId), lit(1)), 1).as("cell"))
-    // eager analysis embedded the model object into the plan; release the
-    // registry slot now (the ivfTopKWithCenters discipline)
-    assigned.queryExecution.analyzed
-    IvfModels.remove(modelId)
-    (centers, assigned)
+    (centers, pts.select(col("vec_id"), col("v"),
+      nearestCell(new IvfModel(centers), col("v")).as("cell")))
   }
 
   /** Shared IVF candidate join + exact-cosine re-rank. */
@@ -561,14 +467,10 @@ object Ann {
   private[graft] def semDedupParts(corpus: DataFrame, nlist: Int = 16,
       threshold: Double = 0.99, seed: Long = 42L, sampleFraction: Double = 1.0,
       maxIter: Int = 10): (DataFrame, DataFrame) = {
-    val centers = fitCentroids(corpus, nlist, seed, sampleFraction, maxIter)
-    val modelId = IvfModels.put(new IvfModel(centers))
+    val model = new IvfModel(fitCentroids(corpus, nlist, seed, sampleFraction, maxIter))
     val assigned = corpus.select(col("vec_id"), col("embedding"),
-        element_at(call_function("graft_ivf_cells",
-          col("embedding"), lit(modelId), lit(1)), 1).as("cell"))
+        nearestCell(model, col("embedding")).as("cell"))
       .localCheckpoint()
-    // eager analysis embedded the centroid matrix; release the registry id
-    IvfModels.remove(modelId)
     val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
       col("embedding").as("vec_a"))
     val b = assigned.select(col("cell"), col("vec_id").as("id_b"),
@@ -640,7 +542,7 @@ object Ann {
     val c = emb.select(col("vec_id"), col("embedding"))
     val p = emb.where(col("vec_id") < probeMaxId)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pvec"))
-    // ONE native codegen kernel per pair (r17): the m×m sub-dot grid runs
+    // ONE native codegen kernel per pair: the m×m sub-dot grid runs
     // as a tight triple loop over the two original array buffers — the
     // previous HOF tower (nested transform(sequence) lambdas, 8 probe +
     // 64 candidate `slice` array copies per pair, array_max, aggregate
@@ -719,9 +621,9 @@ object Ann {
     // centered = the proper SQ8 inner-product estimator: without the 128
     // shift the dot is dominated by the affine offset (≈ 16384·d +
     // 128·(Σa+Σb)) and ranks by vector NORM, not by the probe —
-    // q_quantization_recall measures exactly that. r17: the per-pair
-    // zip_with/aggregate HOF became the vec_qdot codegen kernel (same
-    // exact integers, no per-element lambda dispatch).
+    // q_quantization_recall measures exactly that. The vec_qdot codegen
+    // kernel computes the same exact integers as a zip_with/aggregate HOF,
+    // without the per-element lambda dispatch.
     val scored = c.join(broadcast(p), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         call_function("vec_qdot", col("qc"), col("pc"),

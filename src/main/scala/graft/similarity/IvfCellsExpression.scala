@@ -1,20 +1,20 @@
 package graft.similarity
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import graft.functions.ColumnOps.kernel
 
-/** The IVF centroid matrix as a broadcast model object — the large-`nlist`
-  * alternative to baking every centroid into the plan as literals
-  * (Ann.ivfTopK's `cellScores`): a literal argmax over nlist=4096 centroids
-  * generates an expression tree with 4096 × dim literals and blows past
-  * codegen limits, while this object ships ONCE in the serialized plan and
-  * scores cells in a tight loop. Same nearest-in-L2 math (dot(v,c) − ‖c‖²/2,
-  * no per-row norm), same deterministic tie-break (equal score → larger
-  * cell id), so the two forms are interchangeable — AnnSpec asserts
-  * equality on shared centroids.
+/** The IVF centroid matrix as a model object: it ships ONCE inside the
+  * serialized plan and scores every cell in a tight loop, nearest-in-L2
+  * via dot(v,c) − ‖c‖²/2 (no per-row norm), equal scores resolving to the
+  * larger cell id. Baking the matrix into the plan instead costs nlist ×
+  * dim literals, which blows whole-stage codegen's 64 KB method limit
+  * somewhere past a few hundred cells (a 100 TB deployment runs tens of
+  * thousands).
   */
 final class IvfModel(val centers: Array[Array[Double]]) extends Serializable {
   require(centers.nonEmpty, "IvfModel needs at least one centroid")
@@ -57,29 +57,11 @@ final class IvfModel(val centers: Array[Array[Double]]) extends Serializable {
     }
     new GenericArrayData(topCid)
   }
-}
 
-/** Driver-side registry, keyed by id — the `graft_ivf_cells(vec, modelId,
-  * nprobe)` SQL function resolves its model here at analysis time (same
-  * contract as [[graft.text.LangModels]]): bounded LRU, each call passes
-  * its own id literal so concurrent queries cannot race.
-  */
-object IvfModels extends graft.ModelRegistry[IvfModel]("IvfModel") {
-
-  /** Expression factory for `graft_ivf_cells(vec, modelId, nprobe)`,
-    * registered by [[graft.GraftExtensions]].
-    */
-  val factory: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 3, "graft_ivf_cells(vec, modelId, nprobe)")
-    (exprs(1), exprs(2)) match {
-      case (org.apache.spark.sql.catalyst.expressions.Literal(id: Long, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(np: Int, _)) =>
-        IvfCellsExpression(exprs.head, get(id), np)
-      case other => throw new IllegalArgumentException(
-        s"graft_ivf_cells: modelId/nprobe must be literals, got $other")
-    }
-  }
+  /** The top-`nprobe` cells of the embedding column `vec`; every cell
+    * when `nprobe` exceeds their count. */
+  def column(vec: Column, nprobe: Int): Column =
+    kernel(vec)(IvfCellsExpression(_, this, nprobe))
 }
 
 /** `array<int>` of the top-`nprobe` IVF cells of an embedding — pure
@@ -87,6 +69,7 @@ object IvfModels extends graft.ModelRegistry[IvfModel]("IvfModel") {
   */
 case class IvfCellsExpression(child: org.apache.spark.sql.catalyst.expressions.Expression,
     model: IvfModel, nprobe: Int) extends UnaryExpression {
+  require(nprobe >= 1, s"ivf_cells: nprobe must be at least 1, got $nprobe")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = child.nullable

@@ -1,10 +1,12 @@
 package graft.text
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ColumnOps.kernel
 
 /** A trained byte-pair-encoding merge table (Sennrich–Haddow–Birch 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") and its
@@ -78,24 +80,9 @@ final class BpeModel(val merges: Array[(String, String)]) extends Serializable {
     }
     total
   }
-}
 
-/** Driver-side registry, same bounded-LRU + prompt-release contract as
-  * [[LmModels]].
-  */
-object BpeModels extends graft.ModelRegistry[BpeModel]("BpeModel") {
-
-  /** Expression factory for `graft_bpe_count(text, modelId)`. */
-  val factory: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 2, "graft_bpe_count(text, modelId)")
-    val id = exprs(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_bpe_count: modelId must be a long literal, got $other")
-    }
-    BpeCountExpression(exprs.head, get(id))
-  }
+  /** The subword count of the text column `text`. */
+  def column(text: Column): Column = kernel(text)(BpeCountExpression(_, this))
 }
 
 /** Subword count of a text column under a broadcast [[BpeModel]] — pure

@@ -1,10 +1,12 @@
 package graft.text
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ColumnOps.kernel
 
 /** Trained trigram language model: the per-(language, trigram) log-
   * probabilities collected off the (bounded) profile aggregate, packed for
@@ -64,29 +66,9 @@ final class LangModel(val langs: Array[String],
     }
     if (best < 0) null else UTF8String.fromString(langs(best))
   }
-}
 
-/** Driver-side registry of trained models, keyed by id. The SQL function
-  * `graft_lang_score(text, modelId)` resolves its model from here at
-  * analysis time — the function registration itself is stateless and
-  * idempotent, so concurrent langId calls with different models cannot
-  * race on registry contents (each call passes its own id literal).
-  */
-object LangModels extends graft.ModelRegistry[LangModel]("LangModel") {
-
-  /** Expression factory for `graft_lang_score(text, modelId)`, registered
-    * by [[graft.GraftExtensions]].
-    */
-  val factory: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 2, "graft_lang_score(text, modelId)")
-    val id = exprs(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_lang_score: modelId must be a long literal, got $other")
-    }
-    LangScoreExpression(exprs.head, get(id))
-  }
+  /** The predicted language of the text column `text`. */
+  def column(text: Column): Column = kernel(text)(LangScoreExpression(_, this))
 }
 
 /** Scores a text column against a [[LangModel]] — pure projection, whole-

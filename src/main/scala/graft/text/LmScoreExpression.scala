@@ -1,10 +1,12 @@
 package graft.text
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ColumnOps.kernel
 
 /** Trained character-n-gram language model for PERPLEXITY scoring (the
   * CCNet-style quality filter: score every document's likelihood under a
@@ -53,28 +55,9 @@ final class LmModel(table: java.util.HashMap[String, java.lang.Long],
     }
     s
   }
-}
 
-/** Driver-side registry, same bounded-LRU + prompt-release contract as
-  * [[LangModels]] and graft.similarity.IvfModels.
-  */
-object LmModels extends graft.ModelRegistry[LmModel]("LmModel") {
-
-  /** Expression factory for `graft_lm_logcount(text, modelId)`, registered
-    * by [[graft.GraftExtensions]].
-    * The model id must be a literal so the model resolves at analysis time
-    * and concurrent queries cannot race on registry contents.
-    */
-  val factory: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 2, "graft_lm_logcount(text, modelId)")
-    val id = exprs(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_lm_logcount: modelId must be a long literal, got $other")
-    }
-    LmScoreExpression(exprs.head, get(id))
-  }
+  /** Σ ln(c_g + 1) of the text column `text`. */
+  def column(text: Column): Column = kernel(text)(LmScoreExpression(_, this))
 }
 
 /** Σ ln(c_g + 1) of a text column under a broadcast [[LmModel]] — pure

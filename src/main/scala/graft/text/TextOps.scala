@@ -246,7 +246,6 @@ object TextOps {
     // model's index-order tie-break must match max_by(struct(score,
     // p_lang)) / the oracle's ORDER BY p_lang, which compare UTF8String
     // binary — the two orders diverge for supplementary-plane code points
-    // (r3 ADVICE)
     val langs = rows.map(_.getString(0)).distinct.sortWith { (x, y) =>
       org.apache.spark.unsafe.types.UTF8String.fromString(x)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
@@ -273,25 +272,17 @@ object TextOps {
     * every exploded trigram through a broadcast join + two groupBys —
     * [[langIdJoin]] keeps it as the built-ins-only cross-check.)
     */
-  def langId(docs: DataFrame, train: DataFrame, n: Int = 3): DataFrame = {
-    val modelId = LangModels.put(trainLangModel(train, n))
-    val scored = docs.select(col("doc_id"), col("lang").as("lang_true"),
-        call_function("graft_lang_score", col("text"), lit(modelId)).as("lang_pred"))
+  def langId(docs: DataFrame, train: DataFrame, n: Int = 3): DataFrame =
+    docs.select(col("doc_id"), col("lang").as("lang_true"),
+        trainLangModel(train, n).column(col("text")).as("lang_pred"))
       .where(col("lang_pred").isNotNull)
-    // eager analysis has already resolved graft_lang_score and embedded
-    // the model into the plan — release the registry entry promptly
-    // rather than waiting for LRU eviction (same contract as IvfModels)
-    LangModels.remove(modelId)
-    scored
-  }
 
   /** Train the add-one-smoothed character-n-gram LM of [[lmScore]] and
     * [[dsirSelect]] on `train`: collect its gram profile (vocab-bounded —
-    * at most the distinct-gram count of the training set), register the
-    * [[LmModel]], and return its registry id with ln(N+V) for N training
-    * grams over V distinct ones.
+    * at most the distinct-gram count of the training set), and return the
+    * [[LmModel]] with ln(N+V) for N training grams over V distinct ones.
     */
-  private def lmProfile(train: DataFrame, n: Int): (Long, Double) = {
+  private def lmProfile(train: DataFrame, n: Int): (LmModel, Double) = {
     val counts = train.select(explode(charNgrams(col("text"), n)).as("g"))
       .groupBy("g").agg(count(lit(1)).as("c")).collect()
     val table = new java.util.HashMap[String, java.lang.Long](counts.length * 2)
@@ -301,7 +292,7 @@ object TextOps {
       total += r.getLong(1)
     }
     val model = new LmModel(table, n)
-    (LmModels.put(model), math.log((total + model.vocab).toDouble))
+    (model, math.log((total + model.vocab).toDouble))
   }
 
   /** Per-document average log-likelihood under a character-n-gram LM with
@@ -317,22 +308,19 @@ object TextOps {
     */
   def lmScore(docs: DataFrame, train: DataFrame, n: Int = 3,
               keep: Seq[String] = Nil): DataFrame = {
-    val (modelId, lnNV) = lmProfile(train, n)
+    val (model, lnNV) = lmProfile(train, n)
     // L stays declarative with the SAME normalization/windowing as the
     // kernel, so the decomposition's terms match the oracle verbatim
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
     val nGrams = greatest(length(norm) - (n - 1), lit(1)).cast("long")
     // `keep` passes caller columns through the scoring projection so
-    // downstream consumers need no join-back on doc_id (r18: q_ppl_buckets
-    // re-joined the full document table just to recover `source` — two
-    // exchanges and a join for a column already present on the input row)
-    val scored = docs.select(col("doc_id") +: nGrams.as("n_grams") +:
-      ((call_function("graft_lm_logcount", col("text"), lit(modelId))
+    // downstream consumers need no join-back on doc_id (recovering a
+    // column already on the input row, such as q_ppl_buckets' `source`,
+    // by re-joining the document table costs two exchanges and a join)
+    docs.select(col("doc_id") +: nGrams.as("n_grams") +:
+      ((model.column(col("text"))
         - nGrams.cast("double") * lit(lnNV)) / nGrams.cast("double")).as("avg_logprob") +:
       keep.map(col): _*)
-    // eager analysis already embedded the model in the plan
-    LmModels.remove(modelId)
-    scored
   }
 
   /** BPE training (Sennrich 2016): learn `numMerges` merges from the
@@ -410,15 +398,10 @@ object TextOps {
   }
 
   /** Subword-count column under a trained [[BpeModel]] via the codegen
-    * kernel; prompt registry release, the lmScore contract.
+    * kernel.
     */
-  def bpeTokenCounts(docs: DataFrame, model: BpeModel): DataFrame = {
-    val modelId = BpeModels.put(model)
-    val scored = docs.withColumn("n_subwords",
-      call_function("graft_bpe_count", col("text"), lit(modelId)))
-    BpeModels.remove(modelId)
-    scored
-  }
+  def bpeTokenCounts(docs: DataFrame, model: BpeModel): DataFrame =
+    docs.withColumn("n_subwords", model.column(col("text")))
 
   /** DSIR-style importance selection (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score every document
@@ -436,25 +419,20 @@ object TextOps {
     * selected docs, llr unrounded, ordered by the selection key.
     */
   def dsirSelect(docs: DataFrame, target: DataFrame, k: Int, n: Int = 3): DataFrame = {
-    val (tId, tLnNV) = lmProfile(target, n)
-    val (sId, sLnNV) = lmProfile(docs, n)
+    val (tModel, tLnNV) = lmProfile(target, n)
+    val (sModel, sLnNV) = lmProfile(docs, n)
     val norm = regexp_replace(lower(col("text")), "\\s+", " ")
     val nGrams = greatest(length(norm) - (n - 1), lit(1)).cast("long").cast("double")
-    def avgLl(id: Long, lnNV: Double): Column =
-      (call_function("graft_lm_logcount", col("text"), lit(id))
-        - nGrams * lit(lnNV)) / nGrams
+    def avgLl(model: LmModel, lnNV: Double): Column =
+      (model.column(col("text")) - nGrams * lit(lnNV)) / nGrams
     // uniform in (0,1) from the first 8 md5 hex digits; the +0.5 keeps it
     // strictly inside the interval — u=0 would hit Spark ln(0)=NULL vs
     // DuckDB -inf (the Divide-parity class of trap, dodged structurally)
     val u = (conv(substring(md5(col("text").cast("binary")), 1, 8), 16, 10)
       .cast("double") + lit(0.5)) / lit(4294967296.0)
-    val llr = avgLl(tId, tLnNV) - avgLl(sId, sLnNV)
-    val scored = docs.select(col("doc_id"), llr.as("llr"),
-      (llr - log(-log(u))).as("__key"))
-    // eager analysis already embedded both models in the plan
-    LmModels.remove(tId)
-    LmModels.remove(sId)
-    scored.orderBy(col("__key").desc, col("doc_id")).limit(k)
+    val llr = avgLl(tModel, tLnNV) - avgLl(sModel, sLnNV)
+    docs.select(col("doc_id"), llr.as("llr"), (llr - log(-log(u))).as("__key"))
+      .orderBy(col("__key").desc, col("doc_id")).limit(k)
       .select(col("doc_id"), col("llr"))
   }
 

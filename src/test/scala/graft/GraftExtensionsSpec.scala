@@ -10,7 +10,7 @@ class GraftExtensionsSpec extends SparkSpec {
   private val names = GraftExtensions.functions.map(_._1)
 
   test("the table names each native function once") {
-    assert(names.size == 20)
+    assert(names.size == 15)
     assert(names.distinct == names)
   }
 

@@ -527,7 +527,7 @@ class PipelineSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_csv").toString
     val (batch, _) = graft.sim.Generate.dailyBatch(spark, 50, "2026-01-24 00:00:00", 3)
     Sources.writeCsv(batch, s"$base/batch_csv")
-    val back = spark.read.schema(graft.model.Schemas.transactions)
+    val back = spark.read.schema(batch.schema)
       .option("header", "true").csv(s"$base/batch_csv")
     assert(back.count() == batch.count())
     assert(back.columns.toSeq == batch.columns.toSeq)

@@ -114,53 +114,44 @@ class AnnSpec extends SparkSpec {
       s"expected a dimension-mismatch failure, got $e")
   }
 
-  test("broadcast-model IVF ≡ literal-centroid IVF on the same centroids") {
-    val probes = emb.where(col("vec_id") < 10)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("probe_id", "vec_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // same data + same seed ⇒ same KMeans centroids ⇒ the two assignment
-    // forms must agree row-for-row, ranks included
-    val lit = rows(Ann.ivfTopK(emb, probes, k = 5, nlist = 16, nprobe = 4))
-    val bc = rows(Ann.ivfTopKBroadcast(emb, probes, k = 5, nlist = 16, nprobe = 4))
-    assert(lit == bc, s"forms diverge: ${(lit diff bc) ++ (bc diff lit)}")
+  test("IVF cell kernel ≡ a driver-side argmax; exact ties go to the larger cid") {
+    val vecs = emb.select("vec_id", "embedding").collect().map { r =>
+      r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray
+    }.toMap
+    // twelve real embeddings as centroids, plus a copy of centroid 3 as
+    // cell 12: every vector scores cells 3 and 12 exactly equal
+    val centers = ((100L until 112L).map(vecs) :+ vecs(103L)).toArray
+    val nprobe = 4
+    def score(v: Array[Double], c: Array[Double]): Double =
+      v.indices.foldLeft(0.0)((s, j) => s + v(j) * c(j)) - c.map(x => x * x).sum / 2.0
+    def reference(v: Array[Double]): Seq[Int] = centers.indices
+      .map(c => (score(v, centers(c)), c))
+      .sortBy { case (s, c) => (-s, -c) }.take(nprobe).map(_._2)
+    val got = emb.select(col("vec_id"),
+        new IvfModel(centers).column(col("embedding"), nprobe).as("cells"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    assert(got.size == vecs.size)
+    val wrong = vecs.collect { case (id, v) if got(id) != reference(v) =>
+      (id, got(id), reference(v)) }
+    assert(wrong.isEmpty, s"kernel ≠ reference: ${wrong.take(5)}")
+    // the centroid's own row is nearest to the tied pair: cell 12 first
+    assert(got(103L).take(2) == Seq(12, 3), s"tie not to the larger cid: ${got(103L)}")
   }
 
-  test("broadcast-model IVF runs at an nlist the literal form can't codegen") {
+  test("ivfTopK at nlist = 128 returns k results per probe") {
     val probes = emb.where(col("vec_id") < 5)
-    // 128 cells × 64 dims = 8192 plan literals in the literal form; the
-    // broadcast form ships one model object. Smoke the scale path end to
-    // end and sanity-check k results per probe with nprobe=32.
-    val got = Ann.ivfTopKBroadcast(emb, probes, k = 3, nlist = 128, nprobe = 32)
+    // 128 cells × 64 dims = 8192 centroid values in one model object
+    val got = Ann.ivfTopK(emb, probes, k = 3, nlist = 128, nprobe = 32)
       .groupBy("probe_id").count().collect()
     assert(got.length == 5 && got.forall(_.getLong(1) == 3L),
       s"expected 3 results for each of 5 probes: ${got.toSeq}")
   }
 
-  test("ivfTopK auto-switches to the broadcast kernel above LiteralNlistMax") {
-    val probes = emb.where(col("vec_id") < 5)
-    // nlist = 300 > LiteralNlistMax: the literal form would emit 300 × 64
-    // plan literals; the switch must route through the broadcast kernel
-    // and still return exactly k rows per probe. Equality of the two
-    // physical forms is pinned by the parity test above; this pins the
-    // DISPATCH (the entry point users and q_semdedup-scale callers hit).
-    assert(Ann.LiteralNlistMax == 256)
-    val got = Ann.ivfTopK(emb, probes, k = 3, nlist = 300, nprobe = 64)
-      .groupBy("probe_id").count().collect()
-    assert(got.length == 5 && got.forall(_.getLong(1) == 3L),
-      s"expected 3 results for each of 5 probes: ${got.toSeq}")
-  }
-
-  test("ivfTopKBroadcast releases its model registry entry promptly") {
-    val probes = emb.where(col("vec_id") < 3)
-    val before = IvfModels.size
-    val out = Ann.ivfTopKBroadcast(emb, probes, k = 2, nlist = 8, nprobe = 2)
-    // the centroid matrix is embedded in the analyzed plan by the time the
-    // call returns; the registry must not pin another copy (a nlist=4096
-    // model is ~25 MB of driver heap), and the frame must still execute
-    assert(IvfModels.size <= before,
-      s"ivfTopKBroadcast left a model registered (${IvfModels.size} > $before)")
-    assert(out.count() > 0)
+  test("ivfTopK rejects nprobe < 1 when the frame is built, naming nprobe") {
+    val e = intercept[IllegalArgumentException] {
+      Ann.ivfTopK(emb, emb.where(col("vec_id") < 3), k = 2, nlist = 8, nprobe = 0)
+    }
+    assert(e.getMessage.contains("nprobe"), e.getMessage)
   }
 
   test("cosine column math: self-similarity is 1, near-dup pairs are ordered") {
