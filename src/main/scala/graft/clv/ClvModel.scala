@@ -16,8 +16,9 @@
   * Scale: both fits collect only weighted sufficient observations (see
   * BetaGeo/GammaGamma scaladoc); the 7 fitted parameters then come back as
   * literals in column expressions, so scoring is one embarrassingly
-  * parallel projection — ₂F₁ runs as a native codegen expression
-  * (Hyp2f1Expression), everything else plain column arithmetic. No shuffle
+  * parallel projection — ₂F₁ runs as a static call into
+  * `Hyp2f1.hyp2f1` (the `hyp2f1` SQL function), everything else plain
+  * column arithmetic. No shuffle
   * in the scoring pass at all.
   */
 package graft.clv
@@ -100,10 +101,10 @@ object ClvModel {
     * Both sufficient-stat compressions ride ONE grouping-sets aggregate —
     * a single shuffle (Expand ×2 over the per-customer rows) and a single
     * sorted collect; the driver splits rows by grouping_id and runs both
-    * Nelder–Mead loops locally (zero further jobs). This replaces the
-    * round-7 shape (cache + count + two concurrent collects = 4 actions on
-    * 2 threads), whose wall-clock tracked scheduler latency × job count
-    * under contention rather than data volume.
+    * Nelder–Mead loops locally (zero further jobs). One action, not one
+    * per statistic: a cache + count + two concurrent collects shape (4
+    * actions on 2 threads) has a wall clock that tracks scheduler latency
+    * × job count under contention rather than data volume.
     */
   def fitModel(returning: DataFrame, penalizer: Double = 0.1,
       maxDriverRows: Long = Optim.MaxDriverRows): FittedClvModel =
@@ -146,8 +147,8 @@ object ClvModel {
     val (bgRows, ggRows) = rows.partition(_.getLong(5) == 1L)
     // The two models are independent; overlap them on two threads — the
     // Gamma-Gamma loop rides a Future while this thread runs BG/NBD —
-    // halving the one serial driver section the query has (the r8 driver
-    // bench flagged it as the query's contention-sensitive tail). Both
+    // halving the one serial driver section the query has, which is its
+    // contention-sensitive tail under a busy driver. Both
     // loops are deterministic regardless of scheduling: each consumes its
     // own pre-sorted observation array.
     import scala.concurrent.{Await, Future}
@@ -172,10 +173,10 @@ object ClvModel {
     }
   }
 
-  /** E[X(t)] as pure column arithmetic over the native ₂F₁ expression —
-    * the whole scoring projection stays inside whole-stage codegen (the
-    * round-1 plan used a scala UDF here; SURVEY §4.3 promotion applied).
-    * The 4 fitted params are literals (constant-folded).
+  /** E[X(t)] as pure column arithmetic over the native ₂F₁ kernel — the
+    * whole scoring projection stays inside whole-stage codegen, with no
+    * UDF boxing or serialization (SURVEY §4.3). The 4 fitted params are
+    * literals (constant-folded).
     */
   def expectedPurchasesCol(bg: BetaGeoParams, t: Column, x: Column,
       tx: Column, big: Column): Column = {

@@ -8,6 +8,10 @@ package graft.clv
   * z = t / (α + T + t) ∈ (0, 1), so the series always converges; the
   * Pochhammer recurrence term_{n+1} = term_n · (a+n)(b+n)z / ((c+n)(n+1))
   * is numerically stable for the parameter ranges a penalized fit produces.
+  *
+  * The `hyp2f1` SQL function calls [[hyp2f1]] as a static method inside
+  * whole-stage codegen, so the CLV scoring projection stays one generated
+  * stage with no UDF boxing or serialization.
   */
 object Hyp2f1 {
 

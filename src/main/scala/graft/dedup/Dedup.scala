@@ -55,7 +55,7 @@ object Dedup {
     call_function("shingle_hashes", text, lit(k))
 
   /** MinHash signature: numHashes independent min-hashes of the shingle
-    * set (distinct-by-hash), via the native MinHashSignatureExpression —
+    * set (distinct-by-hash), via the native `minhash_sig` kernel —
     * each shingle string hashed once, lanes derived by re-mixing the
     * 64-bit base hash (the one-hash + k-mixes construction), all inside
     * whole-stage codegen. Pure projection — signatures for 100 TB of docs
@@ -386,7 +386,7 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("component"))
   }
 
-  /** 64-bit SimHash (Charikar 2002) via the native SimHash64Expression:
+  /** 64-bit SimHash (Charikar 2002) via the native `simhash64` kernel:
     * per token-hash bit, sum ±1 across tokens; signature bit i = sign of
     * the sum. Registered at session build (graft.Sessions) and by the
     * DataFrame entry points.

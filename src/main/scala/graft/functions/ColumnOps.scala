@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.classic.{ClassicConversions, ColumnConversions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, ObjectType}
 
 /** Expression-level helpers: the shared rounding and cast vocabulary and
   * let-binding for higher-order-function pipelines.
@@ -31,14 +33,23 @@ import org.apache.spark.sql.functions._
   */
 object ColumnOps {
 
-  /** A model-backed codegen kernel over `child` as a Column: `build`
-    * wraps the child's Catalyst expression, and the result goes through
-    * Spark's developer-API `Column(expr)` constructor. That constructor
-    * hangs off the `Column` companion, which is private to Spark, and
-    * never reads it, hence the `null` receiver.
+  /** `model.method(args)` as a Column: an `Invoke` of a model-backed
+    * kernel, with each argument cast to its paired type. The model ships
+    * once inside the plan, as a literal that generated code reads from its
+    * reference objects; a NULL argument gives NULL without a call, and a
+    * method that may itself return null sets `returnNullable`.
     */
-  def kernel(child: Column)(build: Expression => Expression): Column =
-    ClassicConversions.ColumnConstructorExt(null)(build(ColumnConversions.expression(child)))
+  def invoke(model: AnyRef, method: String, dataType: DataType,
+      returnNullable: Boolean = false)(args: (Column, DataType)*): Column =
+    toColumn(Invoke(Literal(model, ObjectType(model.getClass)), method, dataType,
+      args.map(a => ColumnConversions.expression(a._1)), args.map(_._2),
+      returnNullable = returnNullable))
+
+  /** The Catalyst expression `e` as a Column, through Spark's
+    * developer-API `Column(expr)` constructor. That constructor hangs off
+    * the `Column` companion, which is private to Spark, and never reads
+    * it, hence the `null` receiver. */
+  def toColumn(e: Expression): Column = ClassicConversions.ColumnConstructorExt(null)(e)
 
   /** let-bind: evaluate `c` once, use it many times inside `f`. */
   def bind(c: Column)(f: Column => Column): Column =
@@ -49,7 +60,7 @@ object ColumnOps {
     * SATURATES silently at ±2^63 — at sf1, squared daily-revenue-cents
     * residuals reach ~4e19, clamp to 9.22e18 on the Spark side only, and
     * the DW/Cook's/BP statistics diverge from the
-    * oracle whose DuckDB FLOOR stays in double (a second face: the r6
+    * oracle whose DuckDB FLOOR stays in double (a second face: the [[r6]]
     * micro-unit REPORT rounding clamps any |value| > 9.2e12 the same way).
     * Equivalence proof of the guarded form: for |x| < 4e18 the long floor
     * is exact (no saturation below 2^63) and the Long→Double cast is

@@ -1,12 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
-import graft.functions.ColumnOps.kernel
+import org.apache.spark.sql.types.{BooleanType, LongType}
+import graft.functions.ColumnOps.invoke
 
 /** Bloom-filter semi-join prefilter — the shuffle-reduction pattern for
   * selective joins at 100 TB: reduce the build side's keys to a bounded
@@ -66,8 +64,10 @@ final class BloomBits(val words: Array[Long], val numHashes: Int)
     this
   }
 
-  /** Whether the BIGINT column `key` might be in the filter. */
-  def column(key: Column): Column = kernel(key)(BloomContainsExpression(_, this))
+  /** Whether the BIGINT column `key` might be in the filter: a projection
+    * inside whole-stage codegen at the scan, so rejected probe rows never
+    * leave the input stage. */
+  def column(key: Column): Column = invoke(this, "mightContain", BooleanType)(key -> LongType)
 }
 
 object BloomBits {
@@ -84,43 +84,6 @@ object BloomBits {
         "broadcast cap; raise the cap knowingly or pre-filter the build side")
     (nWords.toInt, math.max(1, math.round(0.693 * bitsPerKey).toInt))
   }
-}
-
-/** `key might be in the filter` as a codegen projection — lives inside
-  * whole-stage codegen at the scan, so rejected probe rows never leave
-  * the input stage.
-  */
-case class BloomContainsExpression(child: Expression, bloom: BloomBits)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"bloom_contains needs a BIGINT key, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(key: Any): Any =
-    bloom.mightContain(key.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBits", bloom, classOf[BloomBits].getName)
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = ${childGen.isNull};
-        boolean ${ev.value} = false;
-        if (!${ev.isNull}) {
-          ${ev.value} = $ref.mightContain(${childGen.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomContainsExpression =
-    copy(child = newChild)
 }
 
 object Bloom {

@@ -227,7 +227,7 @@ object Curation {
     }),
 
     // ---- SemDeDup (embedding-cluster semantic dedup) ----------------------
-    // Envelope oracle for [[graft.similarity.Ann.semDedup]]: planted exact
+    // Envelope oracle for [[graft.similarity.Ann.semDedupParts]]: planted exact
     // vector copies (vec_id+1e6 for every vec_id % 7 == 0) land in the
     // same Voronoi cell as their originals with cosine exactly 1, so the
     // drop rule MUST remove every one (all_planted_dropped); and the kept

@@ -137,8 +137,12 @@ object Graph {
       rounds += next
       ranks = next
     }
-    val res = observations.result().map(o =>
-      Observe.metricDouble(o, "l1").getOrElse(Double.NaN) * n)
+    // a residual is a reported figure, so a late observation is an error,
+    // never a NaN in l1_residual
+    val res = observations.result().zipWithIndex.map { case (o, i) =>
+      Observe.metricDouble(o, "l1").getOrElse(throw new IllegalStateException(
+        s"pagerank round ${i + 1}: the l1 observation did not arrive in time")) * n
+    }
     // the final table is self-contained checkpoint blocks: every earlier
     // round's cache and the edge/node checkpoints are provably dead
     rounds.init.foreach(_.unpersist(blocking = false))
@@ -1205,10 +1209,11 @@ object Graph {
       Blocks.releaseCheckpoint(dist)
       dist = merged
       frontier = dist.where(col("dist") === k).select("node")
-      val f = Observe.metric(obs, "f").getOrElse(-1L)
+      // a late observation falls back to counting the checkpoint just built
+      val f = Observe.metric(obs, "f").getOrElse(merged.where(col("dist") === k).count())
       sizes += f
-      frontN = if (f >= 0L) f else Long.MaxValue
-      reachedN = if (f >= 0L) reachedN + f else Long.MaxValue
+      frontN = f
+      reachedN += f
       // frontier-exhaustion early-exit (r17): an empty frontier makes every
       // remaining round a no-op (empty join → empty next → dist unchanged,
       // size 0). Skip those rounds and pad the trace with the zeros they

@@ -1103,7 +1103,7 @@ object LlmQueries {
     // into an actual tokenizer — train 50 merges on the corpus word-
     // frequency table (the only collect, vocab-bounded; the merge loop is
     // driver work on that bounded table, the published algorithm), then
-    // count subwords per doc via the BpeCountExpression codegen
+    // count subwords per doc via the BpeModel.tokenCount codegen
     // kernel — ONE shuffle-free scan, the corpus never explodes into
     // words. The oracle pins the SQL-computable facts exactly: n_words /
     // n_chars per doc AND the FIRST learned merge (argmax of weighted
@@ -1424,7 +1424,7 @@ object LlmQueries {
 
     // envelope-contract oracle, same shape as q_ann_lsh: IVF with
     // nprobe/nlist = 1/4 must hold recall ≥ 0.4 vs brute force (measured
-    // 0.64-0.72 across SFs). Cell assignment is the IvfCellsExpression
+    // 0.64-0.72 across SFs). Cell assignment is the IvfModel.cells
     // codegen kernel; search is an equi-join on the cell id (no crossJoin).
     "q_ann_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")

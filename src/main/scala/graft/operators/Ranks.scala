@@ -344,7 +344,7 @@ object Ranks {
     array((1 until buckets).map(i => lit(i.toDouble / buckets)): _*)
 
   /** Monotone bucket index: `#{boundary < v}` (0 when boundaries NULL —
-    * the empty-input row), via the [[BucketOfExpression]] binary-search
+    * the empty-input row), via the [[BucketOf]] binary-search
     * kernel — the declarative `size(filter(bnds, b => b < v))` runs an
     * interpreted lambda per boundary per row, recomputed in BOTH passes
     * that share the bucketing subtree.

@@ -21,12 +21,13 @@ import graft.functions.ColumnOps.r6
   *    sets at 100 TB; recall tuned by (L, H).
   *
   * All vector math routes through the native codegen dot product
-  * (DotProductExpression) — no UDF, no interpreted lambdas, no driver loop.
+  * (`vec_dot`, [[VecOps.dot]]) — no UDF, no interpreted lambdas, no
+  * driver loop.
   */
 object Ann {
 
   /** Elementwise dot product of two array columns via the native codegen
-    * expression (DotProductExpression — registered as `vec_dot`); the HOF
+    * kernel ([[VecOps.dot]] — registered as `vec_dot`); the HOF
     * form it replaces paid an interpreted lambda per element. Resolves in
     * any session built with `spark.sql.extensions=graft.GraftExtensions`
     * (as [[graft.Sessions.local]] builds them).
@@ -167,7 +168,7 @@ object Ann {
     * Plan shape: centroids are FIT once (driver-local Lloyd on a bounded
     * content-addressed sample — at 100 TB you fit on a ≤16k-row sample,
     * never the full corpus), then ship once inside the plan as an
-    * [[IvfModel]]. Cell assignment is the [[IvfCellsExpression]] codegen
+    * [[IvfModel]]. Cell assignment is the [[IvfModel.cells]] codegen
     * kernel — nearest-in-L2 via dot(v,c) − ‖c‖²/2, no per-row norm, equal
     * scores to the larger cell id — at any `nlist` (a 100 TB deployment
     * runs tens of thousands of cells). The search is a plain equi-join on
@@ -205,7 +206,7 @@ object Ann {
     *
     * Plan shape: m driver-local Lloyd fits on ONE collected bounded sample;
     * encoding + reconstruction is a shuffle-free projection (per-subspace
-    * [[IvfCellsExpression]] kernels + codeword lookup from nested
+    * [[IvfModel.cells]] kernels + codeword lookup from nested
     * literals); scoring is the brute shape — bounded probe batch broadcast
     * against one corpus scan, per-probe bounded window. Returns
     * (probe_id, vec_id, cos, rank) like the other top-k paths.
@@ -360,7 +361,7 @@ object Ann {
   }
 
   /** The PQ encode→decode column: per-subspace nearest codeword via the
-    * [[IvfCellsExpression]] kernel, codeword lookup from nested literals,
+    * [[IvfModel.cells]] kernel, codeword lookup from nested literals,
     * concat — a pure whole-stage-codegen projection.
     */
   private def pqRecon(codebooks: Array[Array[Array[Double]]]): Column = {
@@ -387,7 +388,7 @@ object Ann {
     * cluster-based curation (SemDeDup / DSIR-style domain discovery) run
     * Spark-first.
     *
-    * Per iteration: (1) assignment — the [[IvfCellsExpression]] codegen
+    * Per iteration: (1) assignment — the [[IvfModel.cells]] codegen
     * kernel (nearest-in-L2 argmax, deterministic larger-cid tie-break), a
     * shuffle-free projection; (2) recompute — posexplode to (cell, dim)
     * partial sums with map-side combine, so each task emits ≤ k·dim rows
@@ -445,7 +446,7 @@ object Ann {
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic dedup at
     * corpus scale: cluster the embedding space (KMeans centroids fit on a
     * seeded SAMPLE, never the corpus), assign every vector to its nearest
-    * cell with the broadcast [[IvfCellsExpression]] kernel, and search
+    * cell with the plan-shipped [[IvfModel.cells]] kernel, and search
     * duplicates ONLY within a cell. A vector is dropped iff some
     * lower-id vector in its cell has cosine ≥ threshold — the greedy
     * min-id-representative rule, deterministic and seedless given the
@@ -460,7 +461,8 @@ object Ann {
     * the embedding space collapses.
     *
     * Returns (assigned, dropped): the cell-annotated corpus and the
-    * dropped ids — callers wanting just the survivors use [[semDedup]].
+    * dropped ids; the survivors are `corpus` left-anti-joined with
+    * `dropped` on `vec_id`.
     * `assigned` is localCheckpointed (three readers); harness sweeps
     * release the blocks (the SparkEntry block-manager contract).
     */
@@ -482,14 +484,6 @@ object Ann {
       .where(col("cos") >= threshold)
       .select("vec_id").distinct()
     (assigned, dropped)
-  }
-
-  /** The surviving rows of `corpus` under [[semDedupParts]]' drop rule. */
-  def semDedup(corpus: DataFrame, nlist: Int = 16, threshold: Double = 0.99,
-      seed: Long = 42L, sampleFraction: Double = 1.0, maxIter: Int = 10): DataFrame = {
-    val (_, dropped) = semDedupParts(corpus, nlist, threshold, seed,
-      sampleFraction, maxIter)
-    corpus.join(dropped, Seq("vec_id"), "left_anti")
   }
 
   /** Embedding-cosine near-duplicate pairs (cos ≥ threshold) via the same
@@ -547,7 +541,7 @@ object Ann {
     // previous HOF tower (nested transform(sequence) lambdas, 8 probe +
     // 64 candidate `slice` array copies per pair, array_max, aggregate
     // fold) allocated ~72 arrays per scored pair. Same double sequence
-    // bit-for-bit: see MaxSimExpression scaladoc.
+    // bit-for-bit: see the VecOps.maxsim scaladoc.
     val scored = c.join(broadcast(p), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         call_function("vec_maxsim", col("pvec"), col("embedding"),

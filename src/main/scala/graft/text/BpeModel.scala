@@ -1,12 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.ColumnOps.kernel
+import graft.functions.ColumnOps.invoke
 
 /** A trained byte-pair-encoding merge table (Sennrich–Haddow–Birch 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") and its
@@ -81,39 +78,8 @@ final class BpeModel(val merges: Array[(String, String)]) extends Serializable {
     total
   }
 
-  /** The subword count of the text column `text`. */
-  def column(text: Column): Column = kernel(text)(BpeCountExpression(_, this))
-}
-
-/** Subword count of a text column under a broadcast [[BpeModel]] — pure
-  * projection, whole-stage codegen, zero shuffle: the corpus is never
-  * exploded into words or symbols on the cluster.
-  */
-case class BpeCountExpression(child: org.apache.spark.sql.catalyst.expressions.Expression,
-    model: BpeModel) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(text: Any): Any =
-    model.tokenCount(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeModel", model, classOf[BpeModel].getName)
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = ${childGen.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = $ref.tokenCount(${childGen.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): BpeCountExpression =
-    copy(child = newChild)
+  /** The subword count of the text column `text`: a shuffle-free
+    * projection inside whole-stage codegen; the corpus is never exploded
+    * into words or symbols on the cluster. */
+  def column(text: Column): Column = invoke(this, "tokenCount", LongType)(text -> StringType)
 }

@@ -1,12 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.ColumnOps.kernel
+import graft.functions.ColumnOps.invoke
 
 /** Trained trigram language model: the per-(language, trigram) log-
   * probabilities collected off the (bounded) profile aggregate, packed for
@@ -67,41 +64,11 @@ final class LangModel(val langs: Array[String],
     if (best < 0) null else UTF8String.fromString(langs(best))
   }
 
-  /** The predicted language of the text column `text`. */
-  def column(text: Column): Column = kernel(text)(LangScoreExpression(_, this))
-}
-
-/** Scores a text column against a [[LangModel]] — pure projection, whole-
-  * stage codegen, zero shuffle: the scale-correct replacement for
-  * exploding the corpus into trigrams and shuffling them through a
-  * broadcast join + two aggregations.
-  */
-case class LangScoreExpression(child: org.apache.spark.sql.catalyst.expressions.Expression,
-    model: LangModel) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(text: Any): Any =
-    model.predict(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("langModel", model, classOf[LangModel].getName)
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        UTF8String ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = $ref.predict(${childGen.value});
-          ${ev.isNull} = (${ev.value} == null);
-        }
-      """)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): LangScoreExpression =
-    copy(child = newChild)
+  /** The predicted language of the text column `text` (null where
+    * [[predict]] is): a shuffle-free projection inside whole-stage
+    * codegen, the scale-correct replacement for exploding the corpus into
+    * trigrams and shuffling them through a broadcast join + two
+    * aggregations. */
+  def column(text: Column): Column =
+    invoke(this, "predict", StringType, returnNullable = true)(text -> StringType)
 }

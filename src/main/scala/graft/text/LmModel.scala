@@ -1,12 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.ColumnOps.kernel
+import graft.functions.ColumnOps.invoke
 
 /** Trained character-n-gram language model for PERPLEXITY scoring (the
   * CCNet-style quality filter: score every document's likelihood under a
@@ -56,39 +53,8 @@ final class LmModel(table: java.util.HashMap[String, java.lang.Long],
     s
   }
 
-  /** Σ ln(c_g + 1) of the text column `text`. */
-  def column(text: Column): Column = kernel(text)(LmScoreExpression(_, this))
-}
-
-/** Σ ln(c_g + 1) of a text column under a broadcast [[LmModel]] — pure
-  * projection, whole-stage codegen, zero shuffle: the corpus never
-  * explodes into grams on the cluster.
-  */
-case class LmScoreExpression(child: org.apache.spark.sql.catalyst.expressions.Expression,
-    model: LmModel) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(text: Any): Any =
-    model.logCountSum(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lmModel", model, classOf[LmModel].getName)
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = ${childGen.isNull};
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = $ref.logCountSum(${childGen.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): LmScoreExpression =
-    copy(child = newChild)
+  /** Σ ln(c_g + 1) of the text column `text`: a shuffle-free projection
+    * inside whole-stage codegen; the corpus never explodes into grams on
+    * the cluster. */
+  def column(text: Column): Column = invoke(this, "logCountSum", DoubleType)(text -> StringType)
 }

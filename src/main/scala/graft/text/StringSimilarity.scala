@@ -1,11 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Jaro–Winkler similarity as a native codegen kernel — the fuzzy-match
+/** Jaro–Winkler similarity (`jaro_winkler`) and banded Levenshtein
+  * (`lev_banded`) as static kernels. Jaro–Winkler is the fuzzy-match
   * scorer of a record-linkage stage (blocked candidate pairs → per-pair
   * similarity → threshold). Published definition (Winkler 1990): Jaro
   * similarity from the match-window/transposition counts, plus the common-
@@ -84,7 +82,7 @@ object StringSimilarity {
     } else j
   }
 
-  /** Banded Levenshtein with common-prefix/suffix pruning (r17): the same
+  /** Banded Levenshtein with common-prefix/suffix pruning: the same
     * contract as Spark's `levenshtein(l, r, threshold)` — the exact edit
     * distance when ≤ band, −1 otherwise — but the DP runs only on the
     * strings' DIFFERING core. Stripping a shared prefix (first DP
@@ -138,55 +136,4 @@ object StringSimilarity {
     }
     if (prev(m) <= band) prev(m) else -1
   }
-}
-
-case class JaroWinklerExpression(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    StringSimilarity.jaroWinkler(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.text.StringSimilarity.jaroWinkler($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): Expression = copy(left = l, right = r)
-}
-
-case class LevBandedExpression(first: Expression, second: Expression,
-    third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullIntolerant: Boolean = true
-
-  // r18 (ADVICE): reject non-string/int inputs at analysis (the eval casts
-  // would CCE at runtime); the BMP caveat stays documented at registration
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = first.dataType == org.apache.spark.sql.types.StringType &&
-      second.dataType == org.apache.spark.sql.types.StringType &&
-      third.dataType == org.apache.spark.sql.types.IntegerType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "lev_banded(a: string, b: string, band: int) — BMP code units; " +
-        "supplementary-plane strings diverge from levenshtein()")
-  }
-
-  override def nullSafeEval(a: Any, b: Any, band: Any): Any =
-    StringSimilarity.levBanded(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[UTF8String], band.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, band) =>
-      s"graft.text.StringSimilarity.levBanded($a, $b, $band)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
 }

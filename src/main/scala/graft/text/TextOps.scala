@@ -266,7 +266,7 @@ object TextOps {
     * log-probability and take the argmax language.
     *
     * The profile is a MODEL, not a table — so scoring ships it inside a
-    * native codegen expression ([[LangScoreExpression]]) and runs as a
+    * codegen kernel call ([[LangModel.column]]) and runs as a
     * shuffle-free projection over the corpus: one scan, no explode, no
     * join, no aggregation. (The previous join-based formulation shuffled
     * every exploded trigram through a broadcast join + two groupBys —

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 
 /** The extensions hook must make every native function SQL-callable. */
 class GraftExtensionsSpec extends SparkSpec {
@@ -32,6 +33,26 @@ class GraftExtensionsSpec extends SparkSpec {
           s"$name with $wrong args: ${e.getMessage}")
       }
     }
+  }
+
+  test("every table entry builds a StaticInvoke of its kernel method") {
+    for ((name, usage, builder) <- GraftExtensions.functions) {
+      val arity = usage.takeWhile(_ != ')').count(_ == ',') + 1
+      assert(builder(Seq.fill(arity)(Literal(1L))).isInstanceOf[StaticInvoke], name)
+    }
+  }
+
+  test("IvfCellsExpression is the one src/main *aryExpression class") {
+    import scala.jdk.CollectionConverters._
+    val shell = ("""class\s+(\w+)(?:(?!class\b)[^{])*?extends\s+[\w.]*\b""" +
+      """(?:Unary|Binary|Ternary|Quaternary)Expression\b""").r
+    val files = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    assert(files.nonEmpty, "scan found no sources")
+    val classes = files.flatMap(f =>
+      shell.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
+    assert(classes == List("IvfCellsExpression"), s"hand-written expression classes: $classes")
   }
 
   test("jaro_winkler and minhash_from_hashes resolve in a fresh session") {

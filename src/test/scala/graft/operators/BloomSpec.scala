@@ -74,9 +74,9 @@ class BloomSpec extends SparkSpec {
     // df's OWN execution finalizes it (a write/count clones the plan)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    // executedPlan prints the expression's prettyName, not the SQL alias
+    // executedPlan prints the kernel as its Invoke node on the filter
     val filterLine = p.linesIterator.indexWhere(l =>
-      l.contains("bloomcontainsexpression") && l.contains("Filter"))
+      l.contains("invoke(graft.operators.BloomBits@") && l.contains("Filter"))
     val joinLine = p.linesIterator.indexWhere(l =>
       l.contains("Join LeftSemi") || l.contains("BroadcastHashJoin"))
     assert(filterLine >= 0, s"bloom filter missing from plan:\n$p")
